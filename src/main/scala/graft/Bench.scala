@@ -186,9 +186,9 @@ object Bench {
         String.format(java.util.Locale.ROOT, "\"%s\":%.3f", kq,
           Double.box(s)) }
       .mkString("{", ",", "}")
-    // Per-query detail goes to disk only; stdout gets a short
-    // total-only line (the harness tails stdout with a bounded buffer,
-    // so the final line must stay well under that bound).
+    // The full record (jvm block, artifact builds) goes to disk only;
+    // stdout lines stay short (the harness tails stdout with a bounded
+    // buffer, so the final line must stay well under that bound).
     val fileJson =
       s"""{"metric":"total","value":$total,"unit":"sec","iters":$iters,"queries":$qs,"sf":"$sfDir","jvm":{"code_cache_used_mb":$ccUsedMb,"code_cache_max_mb":$ccMaxMb,"gc_ms":$gcMs},"builds":$builds}"""
     try {
@@ -198,26 +198,15 @@ object Bench {
     } catch { case _: Throwable => }
     spark.stop()
     // Driver-facing telemetry (additions only; the timed loop above is
-    // untouched). The r15 judge's PERF block had per_query: {} and a
-    // null geomean because stdout carried only the total line, so the
-    // round-over-round regression check was totals-only. Emit the
-    // total line, then one compact {"metric":"query",...} line per
-    // query (the format the r15 verdict prescribes), then the SAME
-    // total line again as the final line: the harness historically
-    // tailed stdout with a bounded buffer (BENCH_r01/r02 lost a >2000
-    // char combined line), so the total — the metric every round's
-    // contract depends on — must sit within any tail window, while a
-    // parser that reads further back picks up the per-query lines.
-    // Both total lines are byte-identical, so first-match and
-    // last-match parsers agree.
-    val totalLine =
-      s"""{"metric":"total","value":$totalR,"unit":"sec","n_queries":${results.size},"iters":$iters,"sf":"$sfDir"}"""
-    println(totalLine)
+    // untouched): one compact {"metric":"query",...} line per query,
+    // then the total line exactly once, as the final line, so it sits
+    // inside any bounded tail window of stdout.
     results.foreach { case (name, runs) =>
       println(String.format(java.util.Locale.ROOT,
         """{"metric":"query","name":"%s","median":%.4f,"min":%.4f}""",
         name, Double.box(median(runs)), Double.box(runs.min)))
     }
-    println(totalLine)
+    println(
+      s"""{"metric":"total","value":$totalR,"unit":"sec","n_queries":${results.size},"iters":$iters,"sf":"$sfDir"}""")
   }
 }

@@ -74,20 +74,11 @@ object BenchSinks {
         Map("ignoreNullFields" -> "false")).as("body"))
       .select(col("pkg"), col("test"), col("body"))
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val conf = new org.apache.hadoop.conf.Configuration()
         val root = new org.apache.hadoop.fs.Path(outDir)
-        // raw (non-checksumming) local FS for file:// roots — the
-        // deploy dir must hold exactly the reference's files, no .crc
-        // sidecars. A fresh instance, not FileSystem.get: the FS cache
-        // would hand back the checksummed LocalFileSystem.
-        val fs = {
-          val cached = root.getFileSystem(conf)
-          if (cached.getScheme == "file") {
-            val raw = new org.apache.hadoop.fs.RawLocalFileSystem
-            raw.initialize(java.net.URI.create("file:///"), conf)
-            raw
-          } else cached
-        }
+        // raw local FS for file:// roots: the deploy dir must hold
+        // exactly the reference's files, no .crc sidecars.
+        val fs = graft.sources.HadoopFs.forPath(
+          root, new org.apache.hadoop.conf.Configuration())
         rows.foreach { r =>
           val p = new org.apache.hadoop.fs.Path(
             new org.apache.hadoop.fs.Path(root, r.getString(0)),

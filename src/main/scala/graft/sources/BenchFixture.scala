@@ -57,8 +57,9 @@ object BenchFixture {
     root
   }
 
-  /** Default fixture location (inside the build dir, never committed). */
-  def defaultRoot: String = "/root/repo/target/bench_fixture"
+  /** Default fixture location: `target/` under the working directory
+    * (the build dir, never committed). */
+  def defaultRoot: String = Paths.get("target", "bench_fixture").toAbsolutePath.toString
 
   /** Write-once default tree, shared by queries and tests. */
   lazy val shared: String = write(defaultRoot)

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{GlobFilter, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,11 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Reference semantics re-expressed declaratively (cites into
   * /root/reference/filegenerator/file_generator.go):
-  *  - S2/S3: date-dir scan + `*test.stdout` glob (:131-157) → one text
-  *    scan with `pathGlobFilter` + partition keys recovered from
-  *    `input_file_name()`; invalid date dirs and unknown pkgs are
-  *    pruned by filters on those derived columns (partition pruning at
-  *    a real date-partitioned layout).
+  *  - S2/S3: date-dir scan + `*test.stdout` glob (:131-157) → one
+  *    driver-side walk of the tree + partition keys recovered from the
+  *    file path; invalid date dirs and unknown pkgs are pruned by
+  *    filters on those derived columns.
   *  - P1: benchmark-line predicate (:72-77) — prefix `Benchmark` and no
   *    `FAIL` substring.
   *  - P3: 4 regex metric extracts with **zero (not null) defaults**
@@ -30,12 +31,16 @@ import org.apache.spark.sql.functions._
   *    used as an unparseable date string; the engine anchors the match
   *    and types the date (`to_date`, SURVEY §7.5 risk 3).
   *
-  * Scale notes: files are read `wholetext` so line numbers exist for
-  * the A1 tie-break — benchmark stdout files are KB-sized, so one row
-  * per file is the *better* distribution unit at 100 TB (millions of
-  * small files → combine via `spark.sql.files.maxPartitionBytes`); the
-  * dedup window shuffles once on (pkg,test,date), which is also the
-  * natural output partitioning for every downstream series query.
+  * Scale notes: the tree is many KB-sized files (the reference syncs
+  * it to local disk and walks it on one thread, :121-152), so the
+  * batch read is a file list, not a file-source scan. The driver walks
+  * the tree with `listStatus` — no listing job, which Spark's file
+  * index launches above 32 subdirs — and executors read whole files in
+  * `defaultParallelism` slices of that list, numbering lines for the
+  * A1 tie-break. The list lives on the driver and rides in the tasks,
+  * about 100 bytes per file. The dedup window shuffles once on
+  * (pkg,test,date), which is also the natural output partitioning for
+  * every downstream series query.
   */
 object BenchIngest {
 
@@ -45,18 +50,53 @@ object BenchIngest {
     "util/cache", "util/caller", "util/decimal", "util/encoding",
     "util/interval", "util/log")
 
-  /** Raw (file, line_no, line) rows for `*test.stdout` under valid
-    * date dirs. One input row per file (wholetext), exploded to lines.
+  /** Raw (file, line_no, line) rows for every `*test.stdout` file
+    * under `root`. The driver lists the tree ([[listStdout]]); executors
+    * read each file whole through the Hadoop FileSystem and number its
+    * lines from 0, split on `\n` keeping trailing empty strings — the
+    * rows `posexplode(split(value, "\n"))` makes of a `wholetext` scan.
     */
   def rawLines(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    spark.read
-      .option("wholetext", "true")
-      .option("pathGlobFilter", "*test.stdout")
-      .option("recursiveFileLookup", "true")
-      .text(root)
-      .select(input_file_name().as("file"), $"value")
-      .select($"file", posexplode(split($"value", "\n")).as(Seq("line_no", "line")))
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf())
+    val sc = spark.sparkContext
+    sc.parallelize(listStdout(root, conf.value), sc.defaultParallelism)
+      .mapPartitions { files =>
+        val fs = HadoopFs.forPath(new Path(root), conf.value)
+        files.flatMap { f =>
+          val in = fs.open(f)
+          val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+          val file = f.toString
+          text.split("\n", -1).iterator.zipWithIndex
+            .map { case (line, i) => (file, i, line) }
+        }
+      }
+      .toDF("file", "line_no", "line")
+  }
+
+  /** Every `*test.stdout` file under `root`, sorted, by a recursive
+    * `listStatus` walk on the driver. Like Spark's file source it skips
+    * names that start with `_` or `.` and empty files (a `wholetext`
+    * scan makes no row of them); like `pathGlobFilter` the glob matches
+    * file names only. A missing root throws
+    * FileNotFoundException. (`listFiles(root, true)` is no substitute:
+    * its LocatedFileStatus reads permissions, which on the local FS
+    * forks a shell per file.)
+    */
+  private def listStdout(root: String, conf: Configuration): Seq[Path] = {
+    val rootPath = new Path(root)
+    val fs = HadoopFs.forPath(rootPath, conf)
+    val glob = new GlobFilter("*test.stdout")
+    def walk(dir: Path): Seq[Path] =
+      fs.listStatus(dir).toSeq
+        .filterNot { s => val n = s.getPath.getName; n.startsWith("_") || n.startsWith(".") }
+        .flatMap { s =>
+          if (s.isDirectory) walk(s.getPath)
+          else if (s.getLen > 0 && glob.accept(s.getPath)) Seq(s.getPath)
+          else Nil
+        }
+    walk(rootPath).sortBy(_.toString)
   }
 
   /** Scan→derive→filter→extract stages (S2-S4, P1, P3), shared by the

@@ -11,7 +11,7 @@ import graft.operators.{BenchQueries, BenchSinks}
 class BenchSinksSpec extends SparkSpec {
 
   test("series JSON sink round-trips the golden series (S5)") {
-    val out = "/root/repo/target/test_sink_series"
+    val out = tempDir("test_sink_series")
     val fact = BenchQueries.fact(spark)
     BenchSinks.writeSeriesJson(fact, out)
     val back = spark.read.json(out)
@@ -29,7 +29,7 @@ class BenchSinksSpec extends SparkSpec {
   }
 
   test("exact-layout sink writes <out>/<pkg>/<test>.json per test (S5)") {
-    val out = "/root/repo/target/test_sink_exact"
+    val out = tempDir("test_sink_exact")
     BenchSinks.writeSeriesJsonExact(BenchQueries.fact(spark), out)
     // reference layout: one file per test, named <pkg>/<test>.json
     val f = new java.io.File(s"$out/sql/BenchmarkBank2_Cockroach-8.json")
@@ -59,14 +59,13 @@ class BenchSinksSpec extends SparkSpec {
   }
 
   test("static assets copy into the deploy root (S7), URI-agnostic") {
-    val srcDir = new java.io.File("/root/repo/target/test_assets_src")
-    srcDir.mkdirs()
+    val srcDir = new java.io.File(tempDir("test_assets_src"))
     val names = Seq("index.html", "common.js")
     names.foreach { n =>
       java.nio.file.Files.writeString(
         new java.io.File(srcDir, n).toPath, s"content-of-$n")
     }
-    val out = "/root/repo/target/test_assets_deploy"
+    val out = tempDir("test_assets_deploy")
     // file:// URIs on both sides — the same call takes s3a://
     BenchSinks.copyStaticAssets(
       names.map(n => s"file://$srcDir/$n"), s"file://$out")
@@ -82,15 +81,14 @@ class BenchSinksSpec extends SparkSpec {
     // remote deploy root: the sink must resolve the scheme's FileSystem
     // and write through it — the branch an s3a:// root takes — rather
     // than the raw-local fallback reserved for file://.
-    val out = "/root/repo/target/test_sink_scheme"
+    val out = tempDir("test_sink_scheme")
     BenchSinks.writeSeriesJsonExact(BenchQueries.fact(spark), s"graftfs://$out")
     val f = new java.io.File(s"$out/sql/BenchmarkBank2_Cockroach-8.json")
     assert(f.isFile, s"graftfs:// write did not land at ${f.getPath}")
     val body = new String(java.nio.file.Files.readAllBytes(f.toPath))
     assert(body.startsWith("{\"01-01-2015\":{\"N\":"))
     // and the copy step through the same second scheme, both directions
-    val srcDir = new java.io.File("/root/repo/target/test_assets_src2")
-    srcDir.mkdirs()
+    val srcDir = new java.io.File(tempDir("test_assets_src2"))
     java.nio.file.Files.writeString(
       new java.io.File(srcDir, "plot.html").toPath, "asset-body")
     BenchSinks.copyStaticAssets(
@@ -108,12 +106,11 @@ class BenchSinksSpec extends SparkSpec {
     // the exact-layout deploy write, and the asset copy (S8 publish).
     // graftfs:// resolves through core-site.xml exactly like an
     // object-store connector; file:// shortcuts never apply.
-    val src = "/root/repo/target/test_e2e_scheme_src"
+    val src = tempDir("test_e2e_scheme_src")
     graft.sources.BenchFixture.write(src)
-    val out = "/root/repo/target/test_e2e_scheme_out"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    val out = tempDir("test_e2e_scheme_out")
 
-    // S1: ingest THROUGH the scheme (input_file_name carries graftfs://
+    // S1: ingest THROUGH the scheme (the file column carries graftfs:
     // paths; the date/pkg regexes must be scheme-agnostic)
     val fact = graft.sources.BenchIngest.ingest(spark, s"graftfs://$src",
       Seq("sql", "sql/parser", "util/cache"))
@@ -128,8 +125,7 @@ class BenchSinksSpec extends SparkSpec {
     BenchSinks.writeCatalogJson(fact, s"graftfs://$out/catalog")
     // S5 exact layout + S7 assets: manual FS writes through the scheme
     BenchSinks.writeSeriesJsonExact(fact, s"graftfs://$out/deploy")
-    val assetDir = new java.io.File("/root/repo/target/test_e2e_scheme_assets")
-    assetDir.mkdirs()
+    val assetDir = new java.io.File(tempDir("test_e2e_scheme_assets"))
     java.nio.file.Files.writeString(
       new java.io.File(assetDir, "index.html").toPath, "dash-body")
     BenchSinks.copyStaticAssets(
@@ -162,7 +158,7 @@ class BenchSinksSpec extends SparkSpec {
         100L, 1L, 64L, Option.empty[Double]))
       .toDF("pkg", "test", "date", "ns_per_op", "allocs_per_op",
         "bytes_per_op", "mb_per_s")
-    val out = "/root/repo/target/test_sink_nulls"
+    val out = tempDir("test_sink_nulls")
     BenchSinks.writeSeriesJsonExact(fact, out)
     val body = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(s"$out/sql/BenchmarkNullM-8.json").toPath))
@@ -170,7 +166,7 @@ class BenchSinksSpec extends SparkSpec {
     Seq("\"N\":", "\"A\":", "\"B\":", "\"M\":").foreach(k =>
       assert(body.contains(k), s"missing key $k in $body"))
     // the partitioned-idiom sink honors the same contract
-    val out2 = "/root/repo/target/test_sink_nulls_idiom"
+    val out2 = tempDir("test_sink_nulls_idiom")
     BenchSinks.writeSeriesJson(fact, out2)
     def walk(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) walk(f) else Seq(f))
@@ -189,7 +185,7 @@ class BenchSinksSpec extends SparkSpec {
   }
 
   test("catalog JSON sink writes {pkg, tests} rows (S6)") {
-    val out = "/root/repo/target/test_sink_catalog"
+    val out = tempDir("test_sink_catalog")
     BenchSinks.writeCatalogJson(BenchQueries.fact(spark), out)
     val back = spark.read.json(out)
     assert(back.columns.sorted.toSeq == Seq("pkg", "tests"))

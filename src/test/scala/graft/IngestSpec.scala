@@ -68,6 +68,77 @@ class IngestSpec extends SparkSpec {
     assert(dates.toSeq == Seq("2015-01-01", "2015-01-02", "2015-03-15"))
   }
 
+  /** `rawLines` rows as (path below `root`, line_no, line). */
+  private def rows(df: org.apache.spark.sql.DataFrame, root: String) =
+    df.collect().map { r =>
+      val f = r.getAs[String]("file")
+      (f.substring(f.indexOf(root) + root.length), r.getAs[Int]("line_no"),
+        r.getAs[String]("line"))
+    }.toSeq.sorted
+
+  /** The rows Spark's `wholetext` text source makes of the same tree. */
+  private def viaTextSource(root: String) = {
+    import org.apache.spark.sql.functions._
+    rows(spark.read
+      .option("wholetext", "true")
+      .option("pathGlobFilter", "*test.stdout")
+      .option("recursiveFileLookup", "true")
+      .text(root)
+      .select(input_file_name().as("file"),
+        posexplode(split(col("value"), "\n")).as(Seq("line_no", "line"))), root)
+  }
+
+  private def writeTree(files: (String, String)*): String = {
+    val root = tempDir("graft_rawlines")
+    files.foreach { case (rel, body) =>
+      val p = java.nio.file.Paths.get(root, rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, body.getBytes("UTF-8"))
+    }
+    root
+  }
+
+  private def assertSameAsTextSource(root: String, expected: Int): Unit = {
+    val got = rows(BenchIngest.rawLines(spark, root), root)
+    assert(got.size == expected, got)
+    assert(got == viaTextSource(root))
+  }
+
+  test("rawLines equals the wholetext text source on the fixture tree") {
+    // 8 of its 9 files pass the glob (notes.txt does not)
+    assertSameAsTextSource(BenchFixture.shared, 15)
+  }
+
+  test("rawLines equals the wholetext text source past 32 date dirs") {
+    // Spark's file index lists with a Spark job above 32 subdirs
+    val root = writeTree((1 to 40).map { d =>
+      f"$d%02d-01-2015/cockroach/kv/kv.test.stdout" ->
+        s"BenchmarkPut-8 \t 10 \t $d ns/op\nPASS"
+    }: _*)
+    assertSameAsTextSource(root, 80)
+  }
+
+  test("rawLines equals the wholetext text source on nested, hidden and odd files") {
+    val root = writeTree(
+      "01-01-2015/cockroach/sql/sql.test.stdout" -> "BenchmarkA-8 \t 1 \t 5 ns/op",
+      "01-01-2015/cockroach/sql/parser/parser.test.stdout" -> "BenchmarkP-8 \t 1 \t 6 ns/op",
+      "01-01-2015/cockroach/sql/_tmp/x.test.stdout" -> "BenchmarkTmp-8",
+      "01-01-2015/cockroach/sql/.hidden/x.test.stdout" -> "BenchmarkHidden-8",
+      "01-01-2015/cockroach/sql/_x.test.stdout" -> "BenchmarkTmpFile-8",
+      "01-01-2015/cockroach/sql/.x.test.stdout" -> "BenchmarkHiddenFile-8",
+      "_tmp/cockroach/sql/a.test.stdout" -> "BenchmarkTmpDate-8",
+      ".hidden/cockroach/sql/a.test.stdout" -> "BenchmarkHiddenDate-8",
+      "01-01-2015/cockroach/kv/empty.test.stdout" -> "",
+      "01-01-2015/cockroach/kv/trailing.test.stdout" -> "BenchmarkT-8 \t 1 \t 7 ns/op\n")
+    // sql 1 + parser 1 + trailing 2 (line, ""); the empty file makes no row
+    assertSameAsTextSource(root, 4)
+  }
+
+  test("rawLines fails loudly on a missing root") {
+    val missing = s"${tempDir("graft_missing")}/nope"
+    intercept[java.io.FileNotFoundException](BenchIngest.rawLines(spark, missing))
+  }
+
   test("snapshot-stamped fact cache sees files added DEEP in the stdout tree") {
     import graft.sources.Tables
     // The live incremental-ingest shape: a new day's stdout lands
