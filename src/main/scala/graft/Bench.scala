@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // warm-data mode (default): base tables localCheckpoint once per
@@ -14,13 +13,7 @@ object Bench {
     if (!cold && !sys.props.contains("graft.tableCache"))
       sys.props("graft.tableCache") = "checkpoint"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     // Untimed warmup: a small-SF pass compiles every query's codegen,
     // then one pass at the bench SF itself JITs the hot loops at real
     // data shapes — the timed pass below measures steady-state

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local profiling aid (not part of the driver contract): run selected
   * queries N times each in one JVM and print per-iteration seconds, so
   * JIT/warmup effects are visible. Usage:
@@ -14,14 +12,7 @@ object Profile {
     val iters = args.lift(1).map(_.toInt).getOrElse(2)
     val names = args.lift(2).map(_.split(",").toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       if (sys.env.contains("EXPLAIN")) fn(spark, sfDir).explain("formatted")

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -48,19 +46,5 @@ object H60Impl {
     var i = 0
     while (i < 7) { v = (v << 8) | (d(i) & 0xFFL); i += 1 }
     (v << 4) | ((d(7) & 0xF0L) >>> 4)
-  }
-}
-
-object H60 {
-  /** Idempotently register `h60` as a temp SQL function (same pattern
-    * as [[VecDot.register]]); cluster deployments get it via
-    * [[GraftExtensions]]. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("h60"))) {
-      registry.createOrReplaceTempFunction("h60",
-        (args: Seq[Expression]) => H60(args.head), "built-in")
-    }
   }
 }

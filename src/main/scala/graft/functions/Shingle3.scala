@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -66,19 +64,5 @@ object Shingle3Impl {
     var j = 0
     while (it.hasNext) { out(j) = UTF8String.fromString(it.next()); j += 1 }
     new GenericArrayData(out)
-  }
-}
-
-object Shingle3 {
-  /** Idempotently register `shingle3` as a temp SQL function (same
-    * pattern as [[VecDot.register]]); cluster deployments get it via
-    * [[GraftExtensions]]. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("shingle3"))) {
-      registry.createOrReplaceTempFunction("shingle3",
-        (args: Seq[Expression]) => Shingle3(args.head), "built-in")
-    }
   }
 }

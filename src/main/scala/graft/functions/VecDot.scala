@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -57,17 +55,4 @@ case class VecDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object VecDot {
-  /** Idempotently register `vec_dot` as a temp SQL function so query
-    * builders can use it via expr("vec_dot(a, b)"). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("vec_dot"))) {
-      registry.createOrReplaceTempFunction("vec_dot",
-        (args: Seq[Expression]) => VecDot(args(0), args(1)), "built-in")
-    }
-  }
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -83,19 +81,5 @@ object Winnow4Impl {
       sPos += 1
     }
     new GenericArrayData(out)
-  }
-}
-
-object Winnow4 {
-  /** Idempotently register `winnow4` as a temp SQL function (same
-    * pattern as [[VecDot.register]]); cluster deployments get it via
-    * [[GraftExtensions]]. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("winnow4"))) {
-      registry.createOrReplaceTempFunction("winnow4",
-        (args: Seq[Expression]) => Winnow4(args.head), "built-in")
-    }
   }
 }

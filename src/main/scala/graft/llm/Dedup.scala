@@ -55,15 +55,14 @@ object Dedup {
     * snapshot and every dedup stage reads). */
   private def rawClassesFor(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val classInfo = Tables.sessionCached(spark, Tables.stamped(spark, dir, "dd_classInfo")) {
-      Tables.materialize(rawClasses(Tables.documents(spark, dir).select(
-        col("doc_id"), col("text")))._1)
+    val classInfo = Tables.artifact(spark, dir, "dd_classInfo") {
+      rawClasses(Tables.documents(spark, dir).select(col("doc_id"), col("text")))._1
     }
-    val members = Tables.sessionCached(spark, Tables.stamped(spark, dir, "dd_members")) {
-      Tables.materialize(Tables.documents(spark, dir)
+    val members = Tables.artifact(spark, dir, "dd_members") {
+      Tables.documents(spark, dir)
         .select(col("doc_id"), md5(col("text")).as("fp"))
         .join(classInfo, "fp")
-        .select(col("rep"), col("doc_id")))
+        .select(col("rep"), col("doc_id"))
     }
     (classInfo, members)
   }
@@ -79,15 +78,14 @@ object Dedup {
     * analogue is the materialized shingle table a pipeline writes next
     * to the fingerprint table, once per corpus snapshot). */
   private def repShinglesFor(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "dd_repShingles")) {
-      graft.functions.Shingle3.register(spark)
+    Tables.artifact(spark, dir, "dd_repShingles") {
       val (classInfo, _) = rawClassesFor(spark, dir)
-      Tables.materialize(Tables.documents(spark, dir)
+      Tables.documents(spark, dir)
         .select(col("doc_id"), expr("shingle3(text)").as("shingles"))
         .join(classInfo.select(col("rep"), col("w")),
           col("doc_id") === col("rep"))
         .select(col("rep"), col("w"),
-          size(col("shingles")).as("n_sh"), col("shingles")))
+          size(col("shingles")).as("n_sh"), col("shingles"))
     }
 
   // Oracle-side shingling, equivalent to the codegen shingle3 pass:
@@ -170,9 +168,7 @@ object Dedup {
     // ~10⁹ at 64× — the r13 heartbeat-death artifact this gate exists
     // to never re-materialize).
     if (pairExpansionRows(spark, dir) <= ExpandCacheMaxRows)
-      Tables.sessionCached(spark, Tables.stamped(spark, dir, "dd_ngramPairs")) {
-        Tables.materialize(expandRepGrain(members, rg))
-      }
+      Tables.artifact(spark, dir, "dd_ngramPairs")(expandRepGrain(members, rg))
     else expandRepGrain(members, rg)
   }
 
@@ -181,11 +177,9 @@ object Dedup {
     * (session, dir) via the cached 1-row frame. The routing fact both
     * [[ngramPairsFor]] and the top-k consumers branch on. */
   private[graft] def pairExpansionRows(spark: SparkSession, dir: String): Long =
-    Tables.sessionCached(spark,
-        Tables.stamped(spark, dir, "dd_pairExpansionCount")) {
-      Tables.materialize(
-        withPairMult(repGrainFor(spark, dir)._2, repWeightsFor(spark, dir))
-          .agg(coalesce(sum(col("mult")), lit(0L)).as("n")))
+    Tables.artifact(spark, dir, "dd_pairExpansionCount") {
+      withPairMult(repGrainFor(spark, dir)._2, repWeightsFor(spark, dir))
+        .agg(coalesce(sum(col("mult")), lit(0L)).as("n"))
     }.head().getLong(0)
 
   /** Doc-pair source for a top-k-by-`metric` consumer (`metric` must
@@ -233,8 +227,7 @@ object Dedup {
   private[graft] def repGrainFor(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val (_, members) = rawClassesFor(spark, dir)
-    val rg = Tables.sessionCached(spark,
-        Tables.stamped(spark, dir, "dd_repGrain")) {
+    val rg = Tables.artifact(spark, dir, "dd_repGrain") {
       val sh = repShinglesFor(spark, dir)
       val (repPairs, keptCnt) = repPairCoreFor(spark, dir)
       // repartition(4) before the checkpoint: the cross∪intra union
@@ -247,8 +240,7 @@ object Dedup {
       // class — ~25k rows at bench SF and identical at 64×), so a
       // handful of partitions is right at every scale; downstream
       // fan-out joins re-parallelize through their own shuffles.
-      Tables.materialize(
-        repGrainPairs(sh, repPairs, keptCnt).repartition(4))
+      repGrainPairs(sh, repPairs, keptCnt).repartition(4)
     }
     (members, rg)
   }
@@ -285,26 +277,22 @@ object Dedup {
   /** Session-cached rep-level pair core: candidate rep pairs and
     * per-rep kept-shingle counts from [[repPairsAndKept]], each
     * materialized at CLASS grain (dim-sized at any replication). ONE
-    * repPairsAndKept call materializes both outputs — the first key's
-    * build registers the second under its own key — so the shared
+    * repPairsAndKept call materializes both outputs — the pair build
+    * fills the kept-count artifact from the same call — so the shared
     * explode + hot-shingle anti-join lineage is derived once per
     * session (the two materialization jobs still run separately; the
-    * second closure is the fallback if the kept-count key is somehow
-    * resolved first). */
+    * kept-count's own build is the fallback if it is somehow resolved
+    * first). */
   private def repPairCoreFor(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val keyK = Tables.stamped(spark, dir, "dd_ngramKeptCnt")
-    val repPairs = Tables.sessionCached(spark,
-        Tables.stamped(spark, dir, "dd_ngramRepPairs")) {
-      val (p, k) = repPairsAndKept(spark, repShinglesFor(spark, dir), MaxBucketDf)
-      Tables.sessionCached(spark, keyK)(Tables.materialize(k))
-      Tables.materialize(p)
+    def pairsAndKept = repPairsAndKept(spark, repShinglesFor(spark, dir), MaxBucketDf)
+    def keptCnt(k: => DataFrame) = Tables.artifact(spark, dir, "dd_ngramKeptCnt")(k)
+    val repPairs = Tables.artifact(spark, dir, "dd_ngramRepPairs") {
+      val (p, k) = pairsAndKept
+      keptCnt(k)
+      p
     }
-    val keptCnt = Tables.sessionCached(spark, keyK) {
-      Tables.materialize(
-        repPairsAndKept(spark, repShinglesFor(spark, dir), MaxBucketDf)._2)
-    }
-    (repPairs, keptCnt)
+    (repPairs, keptCnt(pairsAndKept._2))
   }
 
   /** Core of [[ddNgramJaccard]] over an arbitrary (doc_id, text)
@@ -381,7 +369,6 @@ object Dedup {
       classesIn: Option[(DataFrame, DataFrame)] = None,
       shIn: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    graft.functions.Shingle3.register(spark)
     // TWO-LEVEL, like ddSimhashPairs: collapse exact-duplicate classes
     // first ([[rawClasses]]), run ALL shingle work on representatives
     // (D ≪ N on duplicate-heavy corpora — a 16×-replicated corpus
@@ -564,7 +551,7 @@ object Dedup {
     * and the rep-grain LSH candidate generator ([[repLshCandsFor]])
     * both read it. */
   private def repSigsFor(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "dd_repSigs")) {
+    Tables.artifact(spark, dir, "dd_repSigs") {
       val ex = repShinglesFor(spark, dir)
         .select(col("rep"), col("w"), explode(col("shingles")).as("shingle"))
         .withColumn("x31", h60(col("shingle")) % P31)
@@ -572,8 +559,7 @@ object Dedup {
         case ((a, b), i) =>
           min((col("x31") * a + b) % P31).as(s"sig$i")
       }
-      Tables.materialize(
-        ex.groupBy(col("rep"), col("w")).agg(sigCols.head, sigCols.tail: _*))
+      ex.groupBy(col("rep"), col("w")).agg(sigCols.head, sigCols.tail: _*)
     }
 
   def ddMinhashSigs(spark: SparkSession, dir: String): DataFrame = {
@@ -618,15 +604,15 @@ object Dedup {
   private def bandsFor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val sigCols = (0 until 8).map(i => col(s"sig$i"))
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "dd_bands")) {
-      Tables.materialize(ddMinhashSigs(spark, dir)
+    Tables.artifact(spark, dir, "dd_bands") {
+      ddMinhashSigs(spark, dir)
         .select($"doc_id" +: array((0 until 4).map(j =>
           struct(lit(j).as("band"),
             concat_ws(":", col(s"sig${2 * j}"), col(s"sig${2 * j + 1}"))
               .as("key"))): _*).as("bks") +: sigCols: _*)
         .select($"doc_id" +: explode($"bks").as("bk") +: sigCols: _*)
         .select($"doc_id", $"bk.band", $"bk.key",
-          array(sigCols: _*).as("sigs")))
+          array(sigCols: _*).as("sigs"))
     }
   }
 
@@ -650,7 +636,7 @@ object Dedup {
     * rep grain with multiplicity weights instead of shuffling the
     * ~10⁹-row doc-pair expansion (the r13 64× UnsafeRow.copy wedge). */
   private def repLshCandsFor(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "dd_repLshCands")) {
+    Tables.artifact(spark, dir, "dd_repLshCands") {
       import spark.implicits._
       val sigCols = (0 until 8).map(i => col(s"sig$i"))
       val repBands = repSigsFor(spark, dir)
@@ -683,7 +669,7 @@ object Dedup {
       val intra = inB.filter($"w" >= 2).select($"rep").distinct()
         .select($"rep".as("rep_a"), $"rep".as("rep_b"),
           lit(1.0).as("est_jaccard"))
-      Tables.materialize(cross.union(intra).repartition(4))
+      cross.union(intra).repartition(4)
     }
 
   /** Session-cached CALIBRATION table — the rep-grain LSH candidates
@@ -701,20 +687,19 @@ object Dedup {
     * materializes next to its band index to decide whether est_jaccard
     * can be trusted as a dedup threshold. */
   private def repCalibFor(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "dd_repCalib")) {
+    Tables.artifact(spark, dir, "dd_repCalib") {
       import spark.implicits._
       val (_, rg) = repGrainFor(spark, dir)
       val sigCols = (0 until 8).map(i => col(s"sig$i"))
       val sigs = repSigsFor(spark, dir)
         .select($"rep", array(sigCols: _*).as("sigs"))
-      Tables.materialize(
-        withPairMult(repLshCandsFor(spark, dir), repWeightsFor(spark, dir))
-          .join(sigs.select($"rep".as("rep_a"), $"sigs".as("sa")), "rep_a")
-          .join(sigs.select($"rep".as("rep_b"), $"sigs".as("sb")), "rep_b")
-          .join(rg.select($"rep_a", $"rep_b", $"jaccard"),
-            Seq("rep_a", "rep_b"), "left")
-          .withColumn("tj", coalesce($"jaccard", lit(0.0)))
-          .repartition(4))
+      withPairMult(repLshCandsFor(spark, dir), repWeightsFor(spark, dir))
+        .join(sigs.select($"rep".as("rep_a"), $"sigs".as("sa")), "rep_a")
+        .join(sigs.select($"rep".as("rep_b"), $"sigs".as("sb")), "rep_b")
+        .join(rg.select($"rep_a", $"rep_b", $"jaccard"),
+          Seq("rep_a", "rep_b"), "left")
+        .withColumn("tj", coalesce($"jaccard", lit(0.0)))
+        .repartition(4)
     }
 
   // --------------------------------------------------------------------
@@ -819,7 +804,6 @@ object Dedup {
   // exactly what the sketch replaces at 100 TB.
   def ddSourceSketchOverlap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Shingle3.register(spark)
     val ex = Tables.materialize(Tables.documents(spark, dir)
       .select($"source", explode(expr("shingle3(text)")).as("shingle"))
       .distinct())
@@ -1054,6 +1038,14 @@ object Dedup {
       .orderBy($"doc_id")
   }
 
+  /** [[ddSimhash]] as a session artifact: the (doc_id, simhash) table
+    * feeds six join branches of [[ddSimhashPairs]] and the detector
+    * agreement panel; materializing it once per (session, dir) replaces
+    * every rerun of the explode+32-sum aggregation. N rows × 16 bytes —
+    * tiny relative to the corpus at any scale. */
+  private def simhashFor(spark: SparkSession, dir: String): DataFrame =
+    Tables.artifact(spark, dir, "dd_simhash")(ddSimhash(spark, dir))
+
   val ddSimhashSql: String = {
     val bitSums = (0 until 32).map(b =>
       s"SUM(CASE WHEN (h // ${1L << b}) % 2 = 1 THEN 1 ELSE -1 END) AS v$b")
@@ -1110,14 +1102,7 @@ object Dedup {
     // instead of O(N-bucket²), and because every doc has exactly one
     // value, the expansion emits each doc pair exactly once: the 2M-row
     // distinct() of the doc-level form disappears entirely.
-    // Session-cached localCheckpoint: the (doc_id, simhash) table
-    // feeds six join branches here and the standalone simhash query;
-    // materializing it once per (session, dir) replaces every rerun of
-    // the explode+32-sum aggregation. It is N rows × 16 bytes — tiny
-    // relative to the corpus at any scale.
-    val sh = Tables.sessionCached(spark, Tables.stamped(spark, dir, "dd_simhash")) {
-      Tables.materialize(ddSimhash(spark, dir))
-    }
+    val sh = simhashFor(spark, dir)
     val vbands = sh.select($"simhash").distinct()
       .select($"simhash", explode(array(
         (0 until 4).map(j => struct(lit(j).as("band"),
@@ -1194,7 +1179,6 @@ object Dedup {
   private def ddEmbeddingNearPairs(
       spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
     val e = Similarity.withNorm(spark, dir).drop("label")
     if (!sys.env.contains("SPARK_GRAFT_ALLOW_ALLPAIRS")) {
       val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
@@ -1273,7 +1257,6 @@ object Dedup {
     * in-place. Shared by the pair generator, the recall panel, and
     * the incremental batch probe. */
   private def embeddingBanded(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecDot.register(spark)
     Similarity.withNorm(spark, dir)
       .select(col("vec_id"), col("v"), col("nrm"), explode(expr(
         s"""transform(sequence(0, ${EmbLshBands - 1}), j -> named_struct(
@@ -1326,10 +1309,7 @@ object Dedup {
     // the registered ddEmbeddingLsh query, the recall panel's n_pairs
     // count AND its truth-pass membership mark, and keep/cluster-style
     // downstream use — so it builds once per (session, dir snapshot).
-    Tables.sessionCached(spark,
-        Tables.stamped(spark, dir, "dd_embLshVerified")) {
-      Tables.materialize(embeddingLshVerifiedBuild(spark, dir))
-    }
+    Tables.artifact(spark, dir, "dd_embLshVerified")(embeddingLshVerifiedBuild(spark, dir))
 
   private[graft] def embeddingLshVerifiedBuild(
       spark: SparkSession, dir: String): DataFrame = {
@@ -1575,14 +1555,14 @@ object Dedup {
   // two copies of the (doc_id, label) table at any time.
   // The driver-side propagation loop runs EAGERLY at DataFrame-build
   // time, so the memo also keeps the loop from re-running for each of
-  // the three consumers (the cluster query, curate, split); the
-  // returned plan reads the final round's checkpointed labels. The
-  // (doc → cluster) assignment is THE artifact a dedup pipeline
-  // persists, so a per-corpus materialization is the production shape.
+  // the three consumers (the cluster query, curate, split); the loop
+  // ends in a checkpoint of the (doc_id, cluster_id, cluster_size)
+  // table, which is the artifact itself. The (doc → cluster)
+  // assignment is THE artifact a dedup pipeline persists, so a
+  // per-corpus materialization is the production shape.
   def ddCluster(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "dd_cluster")) {
-      Tables.persistArtifact(ddClusterImpl(spark, dir))
-    }
+    Tables.artifact(spark, dir, "dd_cluster")(ddClusterImpl(spark, dir))
+      .orderBy(col("doc_id"))
 
   private def ddClusterImpl(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1613,11 +1593,13 @@ object Dedup {
       pinned = updated
       labels = updated.select($"doc_id", $"next".as("label"))
     }
-    freeCheckpoint(edges) // loop-only input; the result reads `pinned`
+    freeCheckpoint(edges) // loop-only input
     val sizes = labels.groupBy($"label").agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "label")
+    val clusters = labels.join(sizes, "label")
       .select($"doc_id", $"label".as("cluster_id"), $"cluster_size")
-      .orderBy($"doc_id")
+      .localCheckpoint()
+    freeCheckpoint(pinned) // superseded by `clusters`
+    clusters
   }
 
   /** Release the blocks behind a `localCheckpoint()`-ed DataFrame.
@@ -1873,7 +1855,6 @@ object Dedup {
   private[graft] def ddDecontaminateDocGrain(
       spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Shingle3.register(spark)
     // repartition BEFORE the explode: the scan's parallelism is the
     // parquet row-group count (single digits for the documents table
     // at any one-file fixture scale), and without the exchange the
@@ -2005,10 +1986,9 @@ object Dedup {
     * it feeds three consumers (per-rep counts, df pre-count, the pair
     * buckets) and Spark does not dedupe common subplans. */
   private def substrWinsFor(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "dd_substrWins")) {
+    Tables.artifact(spark, dir, "dd_substrWins") {
       val (classInfo, _) = rawClassesFor(spark, dir)
-      Tables.materialize(substrWins(
-        Tables.documents(spark, dir).selectExpr("doc_id", "text"), classInfo))
+      substrWins(Tables.documents(spark, dir).selectExpr("doc_id", "text"), classInfo)
     }
 
   /** Two-level core of [[ddSubstring]], mirroring [[ngramJaccardPairs]]:
@@ -2025,7 +2005,6 @@ object Dedup {
       classesIn: Option[(DataFrame, DataFrame)] = None,
       winsIn: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    graft.functions.H60.register(spark)
     val docs = docsIn.select($"doc_id", $"text")
     val (classInfo, members) = classesIn.getOrElse(rawClasses(docs))
     val wins = winsIn.getOrElse(substrWins(docs, classInfo).localCheckpoint())
@@ -2243,7 +2222,6 @@ object Dedup {
   private[graft] def ddSemanticOn(
       spark: SparkSession, dir: String, k: Int): DataFrame = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
     val e = Similarity.withNorm(spark, dir).drop("label", "nrm")
     val c0 = e.filter($"vec_id" < k).select($"vec_id".as("cid"), $"v".as("cv"))
     val c1 = Similarity.kmUpdate(Similarity.kmAssign(e, c0))
@@ -3191,7 +3169,6 @@ object Dedup {
   // broadcast total.
   def ddNoveltyCurve(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Shingle3.register(spark)
     val ex = Tables.materialize(Tables.documents(spark, dir)
       .select($"doc_id", explode(expr("shingle3(text)")).as("s")))
     val fo = ex.groupBy($"s").agg(min($"doc_id").as("md"))
@@ -3246,7 +3223,6 @@ object Dedup {
   // collapses to ≤10 buckets. All-integer until two divisions.
   def ddDfSpectrum(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Shingle3.register(spark)
     val df = Tables.materialize(Tables.documents(spark, dir)
       .select(explode(expr("shingle3(text)")).as("s"))
       .groupBy($"s").agg(count(lit(1)).as("df")))
@@ -3300,10 +3276,7 @@ object Dedup {
   // it survives only as the oracle's definition.
   def ddDetectorAgreement(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sh = Tables.sessionCached(spark,
-        Tables.stamped(spark, dir, "dd_simhash")) {
-      Tables.materialize(ddSimhash(spark, dir))
-    }
+    val sh = simhashFor(spark, dir)
     val mh = Tables.materialize(
       ddMinhashLsh(spark, dir).select($"doc_a", $"doc_b"))
     val nM = mh.count()

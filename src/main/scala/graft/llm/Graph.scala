@@ -62,7 +62,7 @@ object Graph {
     * a pinned in-memory partitioning.
     */
   private def edgesWithDeg(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "graph_edges")) {
+    Tables.artifact(spark, dir, "graph_edges") {
       import spark.implicits._
       val pairs = Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey")
         .join(Tables.lineitem(spark, dir).select($"l_orderkey", $"l_suppkey"),
@@ -72,7 +72,7 @@ object Graph {
       val edges = pairs.select($"c".as("src"), $"s".as("dst"))
         .unionAll(pairs.select($"s".as("src"), $"c".as("dst")))
       val deg = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-      Tables.materialize(edges.join(deg, "src"))
+      edges.join(deg, "src")
     }
 
   /** Session-cached `(node, outdeg)` table — the distinct-over-edges
@@ -86,9 +86,8 @@ object Graph {
     * edge list itself; at cluster scale this is the degree dimension
     * you'd co-write with the bucketed edge table. */
   private def nodeDeg(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "graph_node_deg")) {
-      Tables.materialize(edgesWithDeg(spark, dir)
-        .select(col("src").as("node"), col("outdeg")).distinct())
+    Tables.artifact(spark, dir, "graph_node_deg") {
+      edgesWithDeg(spark, dir).select(col("src").as("node"), col("outdeg")).distinct()
     }
 
   // --------------------------------------------------------------------
@@ -284,7 +283,7 @@ object Graph {
     * backbone, so the pair expansion must not replay per query (the
     * dd_bands convention; cold mode prices the build). */
   private[graft] def triSupport(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "graph_tri_support")) {
+    Tables.artifact(spark, dir, "graph_tri_support") {
       import spark.implicits._
       // materialized: the distinct (order, supplier) table feeds the
       // occupancy audit AND the pair join's kept side — the fact-scan
@@ -297,9 +296,8 @@ object Graph {
         so.join(occ.filter($"n_supp" <= TriOrderCap).select($"ok"), "ok")
       val a = keptSo.select($"ok", $"sk".as("s1"))
       val b = keptSo.select($"ok".as("ok2"), $"sk".as("s2"))
-      Tables.materialize(
-        a.join(b, $"ok" === $"ok2" && $"s1" < $"s2")
-          .groupBy($"s1", $"s2").agg(count(lit(1)).as("support")))
+      a.join(b, $"ok" === $"ok2" && $"s1" < $"s2")
+        .groupBy($"s1", $"s2").agg(count(lit(1)).as("support"))
     }
 
   /** Session-cached 1-row census meta: how many orders the occupancy
@@ -308,14 +306,13 @@ object Graph {
     * subtree once per session rather than widening [[triSupport]]'s
     * schema with a constant column. */
   private[graft] def triExcluded(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "graph_tri_excl")) {
+    Tables.artifact(spark, dir, "graph_tri_excl") {
       import spark.implicits._
-      Tables.materialize(
-        Tables.lineitem(spark, dir)
-          .select($"l_orderkey".as("ok"), $"l_suppkey".as("sk")).distinct()
-          .groupBy($"ok").agg(count(lit(1)).as("n_supp"))
-          .filter($"n_supp" > TriOrderCap)
-          .agg(count(lit(1)).as("n_excluded_orders")))
+      Tables.lineitem(spark, dir)
+        .select($"l_orderkey".as("ok"), $"l_suppkey".as("sk")).distinct()
+        .groupBy($"ok").agg(count(lit(1)).as("n_supp"))
+        .filter($"n_supp" > TriOrderCap)
+        .agg(count(lit(1)).as("n_excluded_orders"))
     }
 
   def triangles(spark: SparkSession, dir: String): DataFrame = {
@@ -616,7 +613,7 @@ object Graph {
   private[graft] def ccItersForSpec: Int = CcIters
 
   private def regionEdges(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "graph_region_edges")) {
+    Tables.artifact(spark, dir, "graph_region_edges") {
       import spark.implicits._
       val nat = Tables.nation(spark, dir).select($"n_nationkey", $"n_regionkey")
       val cn = Tables.customer(spark, dir)
@@ -635,10 +632,9 @@ object Graph {
         .distinct()
       val nodes = pairs.select($"c".as("n"))
         .unionAll(pairs.select($"s".as("n"))).distinct()
-      Tables.materialize(
-        pairs.select($"c".as("src"), $"s".as("dst"))
-          .unionAll(pairs.select($"s".as("src"), $"c".as("dst")))
-          .unionAll(nodes.select($"n".as("src"), $"n".as("dst"))))
+      pairs.select($"c".as("src"), $"s".as("dst"))
+        .unionAll(pairs.select($"s".as("src"), $"c".as("dst")))
+        .unionAll(nodes.select($"n".as("src"), $"n".as("dst")))
     }
 
   /** Label table after `iters` propagation steps — exposed so the

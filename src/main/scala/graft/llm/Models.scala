@@ -197,10 +197,9 @@ object Models {
     * dd_repCalib: snapshot-stamped, built once per (session, dir),
     * cold mode bills the build to the first toucher. */
   private[graft] def lrBase(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark,
-        Tables.stamped(spark, dir, "models_lr_base")) {
+    Tables.artifact(spark, dir, "models_lr_base") {
       import spark.implicits._
-      Tables.materialize(Tables.documents(spark, dir)
+      Tables.documents(spark, dir)
         .select($"doc_id", $"source", $"lang",
           ($"n_chars" / 1000.0).as("x1"),
           ((length($"text") - length(expr("replace(text, ' ', '')")) + 1)
@@ -208,7 +207,7 @@ object Models {
         .join(TextAnalysis.taQuality(spark, dir)
           .select($"doc_id", $"quality"), "doc_id")
         .select($"doc_id", $"source", $"lang", $"x1", $"x2", $"quality",
-          when($"quality" >= 0.5, 1.0).otherwise(0.0).as("y")))
+          when($"quality" >= 0.5, 1.0).otherwise(0.0).as("y"))
     }
 
   /** Session-cached full-corpus logreg weights (w1, w2, b): the SAME
@@ -222,11 +221,9 @@ object Models {
   private def lrWeights(spark: SparkSession,
                         dir: String): (Double, Double, Double) = {
     import spark.implicits._
-    val row = Tables.sessionCached(spark,
-        Tables.stamped(spark, dir, "models_lr_weights")) {
+    val row = Tables.artifact(spark, dir, "models_lr_weights") {
       val (w1, w2, b) = fitOn(lrBase(spark, dir).select($"x1", $"x2", $"y"))
-      Tables.materialize(
-        spark.createDataFrame(Seq((w1, w2, b))).toDF("w1", "w2", "b"))
+      spark.createDataFrame(Seq((w1, w2, b))).toDF("w1", "w2", "b")
     }.head()
     (row.getDouble(0), row.getDouble(1), row.getDouble(2))
   }

@@ -249,7 +249,6 @@ object Multimodal {
   // corpus shuffle beyond the alignment join itself.
   def mmClipFilter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val prompt = e.filter($"vec_id" < 4)
@@ -514,24 +513,23 @@ object Multimodal {
   /** (doc_id, phash) — session-cached like dd_simhash: the hash table
     * feeds both join branches and the same-value pair join. */
   private def phashes(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "mm_phash")) {
+    Tables.artifact(spark, dir, "mm_phash") {
       import spark.implicits._
-      Tables.materialize(
-        Tables.documents(spark, dir)
-          .select($"doc_id",
-            rpad(substring($"text", 1, PhashBytes), PhashBytes, " ")
-              .as("pfx"))
-          .withColumn("bs",
-            expr(s"transform(sequence(0, ${PhashBlocks - 1}), b -> " +
-              "ascii(substring(pfx, b*4+1, 1)) + ascii(substring(pfx, b*4+2, 1)) " +
-              "+ ascii(substring(pfx, b*4+3, 1)) + ascii(substring(pfx, b*4+4, 1)))"))
-          .withColumn("mn",
-            expr("aggregate(bs, 0, (a, x) -> a + x)").cast("double")
-              / PhashBlocks.toDouble)
-          .select($"doc_id",
-            expr(s"aggregate(transform(sequence(0, ${PhashBlocks - 1}), " +
-              "b -> IF(element_at(bs, b+1) > mn, shiftleft(1L, b), 0L)), " +
-              "0L, (a, x) -> a + x)").as("phash")))
+      Tables.documents(spark, dir)
+        .select($"doc_id",
+          rpad(substring($"text", 1, PhashBytes), PhashBytes, " ")
+            .as("pfx"))
+        .withColumn("bs",
+          expr(s"transform(sequence(0, ${PhashBlocks - 1}), b -> " +
+            "ascii(substring(pfx, b*4+1, 1)) + ascii(substring(pfx, b*4+2, 1)) " +
+            "+ ascii(substring(pfx, b*4+3, 1)) + ascii(substring(pfx, b*4+4, 1)))"))
+        .withColumn("mn",
+          expr("aggregate(bs, 0, (a, x) -> a + x)").cast("double")
+            / PhashBlocks.toDouble)
+        .select($"doc_id",
+          expr(s"aggregate(transform(sequence(0, ${PhashBlocks - 1}), " +
+            "b -> IF(element_at(bs, b+1) > mn, shiftleft(1L, b), 0L)), " +
+            "0L, (a, x) -> a + x)").as("phash"))
     }
 
   def mmPhash(spark: SparkSession, dir: String): DataFrame = {

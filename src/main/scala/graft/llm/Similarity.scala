@@ -31,7 +31,6 @@ object Similarity {
 
   private[llm] def withNorm(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
     Tables.embeddings(spark, dir)
       .select($"vec_id", $"label",
         $"embedding".cast("array<double>").as("v"))
@@ -885,7 +884,6 @@ object Similarity {
 
   def ssKmeans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val c0 = e.filter($"vec_id" < 4).select($"vec_id".as("cid"), $"v".as("cv"))
@@ -938,9 +936,8 @@ object Similarity {
     * like the PQ codebooks). */
   private[graft] def kmTrainedCents(spark: SparkSession,
                                     dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "km_cents")) {
+    Tables.artifact(spark, dir, "km_cents") {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val e = Tables.embeddings(spark, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       var cents = e.filter($"vec_id" < 4)
@@ -950,12 +947,11 @@ object Similarity {
         Dedup.freeCheckpoint(cents)
         cents = next
       }
-      Tables.persistArtifact(cents)
+      cents
     }
 
   def ssKmeansIter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     kmAssign(e, kmTrainedCents(spark, dir))
@@ -1015,7 +1011,6 @@ object Similarity {
   // from the n·Σx²−(Σx)² form on DECIMAL(28,12) sums.
   def ssDimAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
     def d12(c: org.apache.spark.sql.Column) =
       sum(c.cast(DecimalType(28, 12))).cast("double")
     val ex = Tables.embeddings(spark, dir)
@@ -1149,7 +1144,6 @@ object Similarity {
   private[graft] def ariAssignments(spark: SparkSession,
                                     dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val seeds = e.filter($"vec_id" < 4)
@@ -1370,7 +1364,6 @@ object Similarity {
   // sums.
   def ssPqDistortion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
     val e = withNorm(spark, dir).select($"vec_id", $"v")
     val cbs = pqCodebook(e).groupBy(col("s"))
       .agg(collect_list(struct(col("cid"), col("cv"))).as("cbs"))
@@ -1442,29 +1435,21 @@ object Similarity {
        |FROM codes_long GROUP BY vec_id ORDER BY vec_id""".stripMargin
   }
 
-  /** ADC search against codebook `cb` and the session-cached wide code
-    * table keyed `codesKey` (built by `encode` on miss). Shared by the
-    * seeded and Lloyd-trained variants — identical plan, different
-    * codebook quality. */
-  private def pqSearchWith(spark: SparkSession, dir: String, cb: DataFrame,
-      codesKey: String)(encode: => DataFrame): DataFrame = {
+  def ssPqSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = withNorm(spark, dir).select($"vec_id", $"v")
     // ADC table: d2 from each query's subvector to every centroid —
     // n_queries × 8 × 4 rows, broadcast
     val adc = e.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"v".as("qv"))
-      .crossJoin(cb)
+      .crossJoin(pqCodebook(e))
       .select($"q_id", $"s", $"cid", expr(
         s"""vec_dot(slice(qv, s * $PqDim + 1, $PqDim), slice(qv, s * $PqDim + 1, $PqDim))
            | - 2.0d * vec_dot(slice(qv, s * $PqDim + 1, $PqDim), cv)
            | + vec_dot(cv, cv)""".stripMargin).as("d2"))
     // corpus side: unpivot the session-cached code table and look up —
     // integer codes only, no raw vectors
-    val codes = Tables.sessionCached(spark, Tables.stamped(spark, dir, codesKey)) {
-      Tables.materialize(encode)
-    }
-    val codeLong = codes
+    val codeLong = Tables.artifact(spark, dir, "pq_codes")(ssPqEncode(spark, dir))
       .select($"vec_id", explode(array((0 until PqSub).map(i =>
         struct(lit(i).as("s"), col(s"c$i").as("cid"))): _*)).as("x"))
       .select($"vec_id", $"x.s".as("s"), $"x.cid".as("cid"))
@@ -1480,12 +1465,6 @@ object Similarity {
       .filter($"rank" <= 5)
       .select($"q_id", $"rank", $"vec_id".as("neighbor_id"), $"est_d2")
       .orderBy($"q_id", $"rank")
-  }
-
-  def ssPqSearch(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = withNorm(spark, dir).select($"vec_id", $"v")
-    pqSearchWith(spark, dir, pqCodebook(e), "pq_codes")(ssPqEncode(spark, dir))
   }
 
   // --------------------------------------------------------------------
@@ -1526,9 +1505,8 @@ object Similarity {
   private val PqTrainRounds = 3
 
   private def pqTrainedCb(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "pq_cb_trained")) {
+    Tables.artifact(spark, dir, "pq_cb_trained") {
       import spark.implicits._
-      graft.functions.VecDot.register(spark)
       val sub = pqSubvectors(withNorm(spark, dir).select($"vec_id", $"v"),
         PqTSub, PqTDim).localCheckpoint()
       var cb = sub.filter($"vec_id" < PqTK)
@@ -1554,7 +1532,7 @@ object Similarity {
         cb = next
       }
       Dedup.freeCheckpoint(sub)
-      Tables.persistArtifact(cb)
+      cb
     }
 
   /** llm_ss_pq_train: the trained codebooks in long form (subspace,
@@ -1575,6 +1553,11 @@ object Similarity {
     pqWide(pqCodesWith(e, pqTrainedCb(spark, dir), PqTSub, PqTDim), PqTSub)
   }
 
+  /** [[ssPqEncodeTrained]] as a session artifact, shared by the trained
+    * ADC search and the IVF-PQ probe. */
+  private def pqCodesTrained(spark: SparkSession, dir: String): DataFrame =
+    Tables.artifact(spark, dir, "pq_codes_trained")(ssPqEncodeTrained(spark, dir))
+
   /** Cosine-metric ADC against the trained codebooks: the lookup table
     * is Σ_s dot(q_sub, centroid) per (query, subspace, centroid) —
     * n_queries × 32 × 16 rows, broadcast; the corpus side touches only
@@ -1588,10 +1571,7 @@ object Similarity {
       .crossJoin(pqTrainedCb(spark, dir))
       .select($"q_id", $"qn", $"s", $"cid",
         expr(s"vec_dot(slice(qv, s * $PqTDim + 1, $PqTDim), cv)").as("dp"))
-    val codes = Tables.sessionCached(spark,
-        Tables.stamped(spark, dir, "pq_codes_trained")) {
-      Tables.materialize(ssPqEncodeTrained(spark, dir))
-    }
+    val codes = pqCodesTrained(spark, dir)
     val codeLong = codes
       .select($"vec_id", explode(array((0 until PqTSub).map(i =>
         struct(lit(i).as("s"), col(s"c$i").as("cid"))): _*)).as("x"))
@@ -1745,10 +1725,7 @@ object Similarity {
     val adc = q.crossJoin(pqTrainedCb(spark, dir))
       .select($"q_id", $"qn", $"s", $"cid",
         expr(s"vec_dot(slice(qv, s * $PqTDim + 1, $PqTDim), cv)").as("dp"))
-    val codes = Tables.sessionCached(spark,
-        Tables.stamped(spark, dir, "pq_codes_trained")) {
-      Tables.materialize(ssPqEncodeTrained(spark, dir))
-    }
+    val codes = pqCodesTrained(spark, dir)
     val candCodes = cand.join(codes, "vec_id")
       .select($"q_id", $"vec_id", $"nrm",
         explode(array((0 until PqTSub).map(i =>
@@ -2029,11 +2006,11 @@ object Similarity {
     * corpus range scan per session, not one per consumer). */
   private def sq8RangesFor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "ss_sq8Ranges")) {
-      Tables.materialize(withNorm(spark, dir).select($"v")
+    Tables.artifact(spark, dir, "ss_sq8Ranges") {
+      withNorm(spark, dir).select($"v")
         .select(posexplode($"v").as(Seq("pos", "x")))
         .groupBy($"pos")
-        .agg(min($"x").as("mn"), max($"x").as("mx")))
+        .agg(min($"x").as("mn"), max($"x").as("mx"))
     }
   }
 
@@ -2654,7 +2631,7 @@ object Similarity {
   /** Session-cached k-NN neighbor graph (src, dst), top-[[AnnNbrK]]
     * in-bucket neighbors by cosine. */
   private def nbrGraph(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "ss_nbr_graph")) {
+    Tables.artifact(spark, dir, "ss_nbr_graph") {
       import spark.implicits._
       val b = withNorm(spark, dir).withColumn("bucket", lshBucketCol)
       val occ = b.groupBy($"bucket").agg(count(lit(1)).as("n_b"))
@@ -2666,9 +2643,8 @@ object Similarity {
         .select($"a.vec_id".as("src"), $"c.vec_id".as("dst"),
           expr("round(vec_dot(a.v, c.v) / (a.nrm * c.nrm), 6)").as("w"))
       val wnd = Window.partitionBy($"src").orderBy($"w".desc, $"dst".asc)
-      Tables.materialize(
-        edges.withColumn("rk", row_number().over(wnd))
-          .filter($"rk" <= AnnNbrK).select($"src", $"dst"))
+      edges.withColumn("rk", row_number().over(wnd))
+        .filter($"rk" <= AnnNbrK).select($"src", $"dst")
     }
 
   def ssGraphAnn(spark: SparkSession, dir: String): DataFrame = {
@@ -3026,7 +3002,6 @@ object Similarity {
   // route into the cluster sums; a == b == 0 reports s = 0.
   def ssSilhouette(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VecDot.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     if (e.isEmpty)

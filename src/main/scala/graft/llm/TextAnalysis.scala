@@ -2540,9 +2540,7 @@ object TextAnalysis {
     * so the artifact's row count is replication-invariant — only the
     * counts grow. */
   private def taBigramC2For(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "ta_bigramC2")) {
-      Tables.materialize(taBigramTypeTable(spark, dir))
-    }
+    Tables.artifact(spark, dir, "ta_bigramC2")(taBigramTypeTable(spark, dir))
 
   /** Session-cached corpus-wide term-count table — (term, freq), the
     * unigram twin of [[taBigramC2For]]: vocab-sized (Heaps-bounded) at
@@ -2551,11 +2549,11 @@ object TextAnalysis {
     * lm_bigram_backoff's unigram backoff model) and before r16 each
     * re-ran the corpus token explode + term shuffle per invocation. */
   private def taTermCountsFor(spark: SparkSession, dir: String): DataFrame =
-    Tables.sessionCached(spark, Tables.stamped(spark, dir, "ta_termCounts")) {
+    Tables.artifact(spark, dir, "ta_termCounts") {
       import spark.implicits._
-      Tables.materialize(Tables.documents(spark, dir)
+      Tables.documents(spark, dir)
         .select(explode(split($"text", " ")).as("term"))
-        .groupBy($"term").agg(count(lit(1)).as("freq")))
+        .groupBy($"term").agg(count(lit(1)).as("freq"))
     }
 
   /** The un-checkpointed bigram-type builder (one exploding corpus

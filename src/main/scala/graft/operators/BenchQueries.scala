@@ -42,13 +42,11 @@ object BenchQueries {
     * session: nine queries share it, and the fixture is a constant —
     * the same dim-table caching a deployment would use. Ingest itself
     * is exercised uncached in IngestSpec and the streaming-ingest
-    * tests. Session-scoped via [[graft.sources.Tables.sessionCached]],
+    * tests. Session-scoped via [[graft.sources.Tables.artifact]],
     * which evicts on application end (no pinned stopped sessions). */
   def fact(spark: SparkSession): DataFrame =
-    graft.sources.Tables.sessionCached(spark,
-        graft.sources.Tables.stamped(spark, BenchFixture.shared, "bench_fact")) {
-      graft.sources.Tables.materialize(
-        BenchIngest.ingest(spark, BenchFixture.shared, pkgs))
+    graft.sources.Tables.artifact(spark, BenchFixture.shared, "bench_fact") {
+      BenchIngest.ingest(spark, BenchFixture.shared, pkgs)
     }
 
   def ingestGolden(spark: SparkSession, dir: String): DataFrame =

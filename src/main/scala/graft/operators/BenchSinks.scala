@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's JSON sinks (SURVEY.md §2.1 S5/S6) as partitioned
@@ -61,7 +61,11 @@ object BenchSinks {
     * read via a bucket policy (the AWS-recommended replacement for
     * object ACLs) instead.
     */
-  def writeSeriesJsonExact(fact: DataFrame, outDir: String): Unit =
+  def writeSeriesJsonExact(fact: DataFrame, outDir: String): Unit = {
+    // the session's Hadoop conf (every `spark.hadoop.*` and session
+    // setting, e.g. object-store credentials), shipped to executors
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      fact.sparkSession.sessionState.newHadoopConf())
     fact
       .groupBy(col("pkg"), col("test"))
       .agg(to_json(map_from_entries(array_sort(collect_list(struct(
@@ -77,8 +81,7 @@ object BenchSinks {
         val root = new org.apache.hadoop.fs.Path(outDir)
         // raw local FS for file:// roots: the deploy dir must hold
         // exactly the reference's files, no .crc sidecars.
-        val fs = graft.sources.HadoopFs.forPath(
-          root, new org.apache.hadoop.conf.Configuration())
+        val fs = graft.sources.HadoopFs.forPath(root, conf.value)
         rows.foreach { r =>
           val p = new org.apache.hadoop.fs.Path(
             new org.apache.hadoop.fs.Path(root, r.getString(0)),
@@ -89,6 +92,7 @@ object BenchSinks {
           finally out.close()
         }
       }
+  }
 
   /** S7 (file_generator.go:229-238 CopyWWW): copy the frontend's
     * static assets into the deploy root. A driver-side file copy by
@@ -101,8 +105,8 @@ object BenchSinks {
     * staging-then-sync hop needed in an engine that writes remote URIs
     * natively).
     */
-  def copyStaticAssets(files: Seq[String], outDir: String): Unit = {
-    val conf = new org.apache.hadoop.conf.Configuration()
+  def copyStaticAssets(spark: SparkSession, files: Seq[String], outDir: String): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
     val dst = new org.apache.hadoop.fs.Path(outDir)
     val dstFs = dst.getFileSystem(conf)
     files.foreach { f =>
@@ -115,13 +119,15 @@ object BenchSinks {
   }
 
   /** S6 (file_generator.go:192-208): the `test_names.json` catalog —
-    * `{pkg: [test...]}`. Single small file by contract (`coalesce(1)`
-    * is correct here: the catalog is distinct (pkg,test) pairs, tiny
-    * at any scale).
+    * `{pkg: [test...]}`. Single small file by contract, rows in pkg
+    * order: the catalog is one row per pkg, tiny at any scale, so one
+    * partition sorted in place writes it without the range-sampling
+    * job and extra exchange a global `orderBy` costs.
     */
   def writeCatalogJson(fact: DataFrame, outDir: String): Unit =
-    SeriesOps.catalog(fact)
+    SeriesOps.catalogRows(fact)
       .coalesce(1)
+      .sortWithinPartitions(col("pkg"))
       .write.mode(SaveMode.Overwrite)
       .json(outDir)
 }

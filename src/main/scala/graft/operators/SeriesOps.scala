@@ -20,14 +20,17 @@ object SeriesOps {
       .orderBy(col("date"))
 
   /** A3/S6 (file_generator.go:194-208): the catalog — per pkg, the
-    * sorted distinct test list. `array_sort(collect_set)` keeps the
-    * output deterministic (the reference sorts client-side, list.js:22).
+    * sorted distinct test list, in pkg order. `array_sort(collect_set)`
+    * dedups and keeps the output deterministic (the reference sorts
+    * client-side, list.js:22).
     */
   def catalog(fact: DataFrame): DataFrame =
-    fact.select(col("pkg"), col("test")).distinct()
-      .groupBy(col("pkg"))
+    catalogRows(fact).orderBy(col("pkg"))
+
+  /** [[catalog]]'s rows in no particular order. */
+  private[operators] def catalogRows(fact: DataFrame): DataFrame =
+    fact.groupBy(col("pkg"))
       .agg(array_sort(collect_set(col("test"))).as("tests"))
-      .orderBy(col("pkg"))
 
   /** A4 (file_generator.go:210-224, dead code in the reference but part
     * of its declared surface): global distinct dates.

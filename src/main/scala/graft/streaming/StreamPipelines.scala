@@ -168,9 +168,10 @@ object StreamPipelines {
     * MATCHED (doc, eval) pair — bounded by true contamination volume,
     * not corpus size — emitted in Update mode as a pair's shared-count
     * grows. A production run would filter `n_shared >= K` at the sink.
+    * `shingle3` resolves once the session has read any engine table
+    * (see `GraftExtensions.register`).
     */
   def decontaminateStream(docs: DataFrame, evalShingles: DataFrame): DataFrame = {
-    graft.functions.Shingle3.register(docs.sparkSession)
     docs
       .select(col("doc_id"), explode(expr("shingle3(text)")).as("shingle"))
       .join(broadcast(evalShingles), "shingle")

@@ -67,7 +67,7 @@ class BenchSinksSpec extends SparkSpec {
     }
     val out = tempDir("test_assets_deploy")
     // file:// URIs on both sides — the same call takes s3a://
-    BenchSinks.copyStaticAssets(
+    BenchSinks.copyStaticAssets(spark,
       names.map(n => s"file://$srcDir/$n"), s"file://$out")
     names.foreach { n =>
       val got = new String(java.nio.file.Files.readAllBytes(
@@ -91,7 +91,7 @@ class BenchSinksSpec extends SparkSpec {
     val srcDir = new java.io.File(tempDir("test_assets_src2"))
     java.nio.file.Files.writeString(
       new java.io.File(srcDir, "plot.html").toPath, "asset-body")
-    BenchSinks.copyStaticAssets(
+    BenchSinks.copyStaticAssets(spark,
       Seq(s"graftfs://$srcDir/plot.html"), s"graftfs://$out")
     assert(new String(java.nio.file.Files.readAllBytes(
       new java.io.File(out, "plot.html").toPath)) == "asset-body")
@@ -128,7 +128,7 @@ class BenchSinksSpec extends SparkSpec {
     val assetDir = new java.io.File(tempDir("test_e2e_scheme_assets"))
     java.nio.file.Files.writeString(
       new java.io.File(assetDir, "index.html").toPath, "dash-body")
-    BenchSinks.copyStaticAssets(
+    BenchSinks.copyStaticAssets(spark,
       Seq(s"graftfs://$assetDir/index.html"), s"graftfs://$out/deploy")
 
     // read everything back THROUGH the scheme and check content
@@ -184,6 +184,41 @@ class BenchSinksSpec extends SparkSpec {
     assert(viaUri.count() == viaPath.count())
   }
 
+  test("publish writes reach a file system set only in the session conf (S8)") {
+    // sessfs:// is unknown to core-site.xml: only the session conf maps
+    // it, the way a session carries object-store settings (a builder's
+    // `spark.hadoop.*`, or a runtime `spark.conf.set` like this one).
+    // The executors' deploy write and the asset copy must both see it.
+    val key = "fs.sessfs.impl"
+    spark.conf.set(key, classOf[SessionOnlyTestFs].getName)
+    try {
+      val out = tempDir("test_sink_session_fs")
+      BenchSinks.writeSeriesJsonExact(BenchQueries.fact(spark), s"sessfs://$out")
+      val f = new java.io.File(s"$out/sql/BenchmarkBank2_Cockroach-8.json")
+      assert(f.isFile, s"sessfs:// write did not land at ${f.getPath}")
+      val srcDir = new java.io.File(tempDir("test_assets_session_fs"))
+      java.nio.file.Files.writeString(
+        new java.io.File(srcDir, "index.html").toPath, "dash-body")
+      BenchSinks.copyStaticAssets(spark,
+        Seq(s"sessfs://$srcDir/index.html"), s"sessfs://$out")
+      assert(new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(out, "index.html").toPath)) == "dash-body")
+    } finally spark.conf.unset(key)
+  }
+
+  test("catalog JSON sink writes one pkg-ordered file without a global sort") {
+    // a global orderBy + coalesce(1) cost 4 jobs (range sampling and an
+    // extra exchange) for a catalog of a few rows
+    val fact = BenchQueries.fact(spark) // checkpointed, like the publish op's
+    val out = tempDir("test_sink_catalog_jobs")
+    val jobs = jobsOf(BenchSinks.writeCatalogJson(fact, out))
+    assert(jobs < 4, s"catalog sink ran $jobs jobs")
+    val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length == 1, s"expected one part file, got ${parts.map(_.getName).toSeq}")
+    val pkgs = spark.read.json(parts.head.getPath).select("pkg").collect().map(_.getString(0))
+    assert(pkgs.toSeq == Seq("sql", "sql/parser", "util/cache"))
+  }
+
   test("catalog JSON sink writes {pkg, tests} rows (S6)") {
     val out = tempDir("test_sink_catalog")
     BenchSinks.writeCatalogJson(BenchQueries.fact(spark), out)
@@ -193,4 +228,11 @@ class BenchSinksSpec extends SparkSpec {
     val sqlTests = back.filter("pkg = 'sql'").select("tests").collect()(0).getSeq[String](0)
     assert(sqlTests == Seq("BenchmarkBank2_Cockroach-8", "BenchmarkDup-8"))
   }
+}
+
+/** A file system scheme that only a session conf entry maps, standing
+  * in for an object store configured through `spark.hadoop.*`. */
+class SessionOnlyTestFs extends GraftTestFs {
+  override def getScheme: String = "sessfs"
+  override def getUri: java.net.URI = java.net.URI.create("sessfs:///")
 }

@@ -10,7 +10,7 @@ class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("h60 equals the conv(substr(md5)) chain it replaces") {
-    graft.functions.H60.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val rnd = new scala.util.Random(3)
     val strs = Seq("", " ", "a", "hello world", "日本語テキスト",
       "emoji 🎉 mix", "\ttabs\nnewlines") ++
@@ -33,7 +33,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("vec_dot matches a sequential fold, codegen and interpreted") {
-    graft.functions.VecDot.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val df = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
       (Seq(0.1, 0.2), Seq(0.3, 0.4))).toDF("a", "b")
@@ -53,13 +53,13 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("vec_dot is null-safe") {
-    graft.functions.VecDot.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val row = spark.sql("SELECT vec_dot(NULL, array(1.0d))").collect()(0)
     assert(row.isNullAt(0))
   }
 
   test("shingle3 equals the zip_with/slice chain it replaces") {
-    graft.functions.Shingle3.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val rnd = new scala.util.Random(7)
     val words = Vector("a", "bb", "ccc", "the", "of", "x9", "")
     val strs = Seq("", "one", "one two", "one two three",
@@ -88,7 +88,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("shingle3 is null-safe and empty below 3 tokens") {
-    graft.functions.Shingle3.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val rows = spark.sql(
       "SELECT shingle3(NULL), shingle3(''), shingle3('a b'), shingle3('a b c')")
       .collect()(0)

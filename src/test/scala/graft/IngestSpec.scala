@@ -148,9 +148,8 @@ class IngestSpec extends SparkSpec {
     // session-cached fact silently serves the stale pre-drop answer
     // (the r6 verdict's top finding).
     val root = Files.createTempDirectory("graft_deepsnap").toString
-    def fact() = Tables.sessionCached(spark,
-        Tables.stamped(spark, root, "deep_fact")) {
-      BenchIngest.ingest(spark, root, Seq("sql")).localCheckpoint()
+    def fact() = Tables.artifact(spark, root, "deep_fact") {
+      BenchIngest.ingest(spark, root, Seq("sql"))
     }
     val d1 = java.nio.file.Paths.get(root, "01-01-2015", "cockroach", "sql")
     Files.createDirectories(d1)

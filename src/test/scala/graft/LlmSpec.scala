@@ -60,6 +60,8 @@ class LlmSpec extends SparkSpec {
       (a, b, inter.toLong, j)
     }).sortBy { case (a, b, _, j) => (-j, a, b) }.take(100)
 
+    // an in-memory corpus reads no engine table, so register explicitly
+    graft.functions.GraftExtensions.register(spark)
     val got = Dedup.ngramJaccardOn(spark, docs.toDF("doc_id", "text"), cap)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -236,6 +238,7 @@ class LlmSpec extends SparkSpec {
     assert(naive.nonEmpty && naive.exists(_._4 < 1.0),
       "corpus must exercise non-trivial pairs")
 
+    graft.functions.GraftExtensions.register(spark)
     val got = Dedup.substringPairs(spark, docs.toDF("doc_id", "text"), cap)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))

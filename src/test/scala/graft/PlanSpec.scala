@@ -30,6 +30,7 @@ class PlanSpec extends SparkSpec {
     // guard the plan of the BUILD itself (the uncached path)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .selectExpr("doc_id", "text")
+    graft.functions.GraftExtensions.register(spark) // raw scan, not Tables
     val plan = planOf(Dedup.ngramJaccardOn(spark, docs, Dedup.MaxBucketDf))
     val antiLine = plan.split("\n").exists(l =>
       l.contains("Broadcast") && l.contains("Join") && l.contains("LeftAnti"))
@@ -92,6 +93,7 @@ class PlanSpec extends SparkSpec {
   test("substring hot-window cap is a broadcast anti-join") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .selectExpr("doc_id", "text")
+    graft.functions.GraftExtensions.register(spark) // raw scan, not Tables
     val plan = planOf(Dedup.substringPairs(spark, docs, Dedup.MaxBucketDf))
     val antiLine = plan.split("\n").exists(l =>
       l.contains("Broadcast") && l.contains("Join") && l.contains("LeftAnti"))

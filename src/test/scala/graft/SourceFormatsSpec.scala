@@ -54,29 +54,69 @@ class SourceFormatsSpec extends SparkSpec {
       sample.collect().toSeq)
   }
 
-  test("sessionCached memoizes and supports nested builds") {
+  private def checkpointRdds(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+
+  test("artifact memoizes and supports nested builds") {
     import graft.sources.Tables
-    // nested: a cached build may itself resolve cached inputs (the LSH
+    // nested: an artifact build may itself resolve artifacts (the LSH
     // band table builds from the class/shingle tables) — this used to
     // trip ConcurrentHashMap's recursive-update check
+    val dir = tempDir("graft_artifact")
     var outerBuilds, innerBuilds = 0
-    val outer = Tables.sessionCached(spark, "spec#outer") {
+    val outer = Tables.artifact(spark, dir, "outer") {
       outerBuilds += 1
-      val inner = Tables.sessionCached(spark, "spec#inner") {
+      val inner = Tables.artifact(spark, dir, "inner") {
         innerBuilds += 1; spark.range(3).toDF()
       }
       inner.withColumn("x", org.apache.spark.sql.functions.lit(1))
     }
     assert(outer.count() == 3)
-    val again = Tables.sessionCached(spark, "spec#outer") {
+    assert(outer.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      "the artifact must be materialized")
+    val again = Tables.artifact(spark, dir, "outer") {
       outerBuilds += 1; spark.range(99).toDF()
     }
     assert(again eq outer, "second lookup must return the memoized frame")
     assert(outerBuilds == 1 && innerBuilds == 1)
-    assert(Tables.sessionCached(spark, "spec#inner") {
+    assert(Tables.artifact(spark, dir, "inner") {
       innerBuilds += 1; spark.range(99).toDF()
     }.count() == 3)
     assert(innerBuilds == 1)
+  }
+
+  test("artifact over a build that ends in a local checkpoint runs no extra job") {
+    import graft.sources.Tables
+    // the iterative loops (k-means centroids, PQ codebooks, dedup
+    // clusters) checkpoint every round; in the default mode the last
+    // round's checkpoint is the artifact, with no second copy
+    val dir = tempDir("graft_artifact_loop")
+    def loop() = spark.range(40).toDF("x").withColumn("y", col("x") % 7).localCheckpoint()
+    val bare = jobsOf(loop())
+    var built: org.apache.spark.sql.DataFrame = null
+    val viaArtifact = jobsOf(Tables.artifact(spark, dir, "loop") { built = loop(); built })
+    assert(viaArtifact == bare, s"artifact ran $viaArtifact jobs, the bare build $bare")
+    assert(Tables.artifact(spark, dir, "loop")(loop()) eq built,
+      "the build's own checkpoint must be the artifact")
+    assert(built.count() == 40)
+  }
+
+  test("releaseTransients leaves an artifact's blocks alone") {
+    import graft.sources.Tables
+    val dir = tempDir("graft_artifact_pin")
+    val art = Tables.artifact(spark, dir, "pinned")(spark.range(50).toDF("x"))
+    val transient = spark.range(7).toDF("y").localCheckpoint()
+    val (artIds, transientIds) =
+      (checkpointRdds(art).map(_.id), checkpointRdds(transient).map(_.id))
+    assert(artIds.nonEmpty && transientIds.nonEmpty)
+    Tables.releaseTransients(spark)
+    val live = spark.sparkContext.getPersistentRDDs
+    assert(artIds.forall(live.contains), "releaseTransients dropped an artifact")
+    assert(!transientIds.exists(live.contains), "the transient was not released")
+    assert(art.count() == 50)
   }
 
   test("reliable cache mode writes artifacts to disk and survives block loss") {
@@ -89,7 +129,8 @@ class SourceFormatsSpec extends SparkSpec {
     // every cached block the frame still answers from those files.
     sys.props("graft.tableCache") = "reliable"
     try {
-      val df = Tables.materialize(
+      val dir = tempDir("graft_artifact_reliable")
+      val df = Tables.artifact(spark, dir, "plain")(
         spark.range(10).toDF("x").withColumn("y", col("x") * 2))
       val ckDir = spark.sparkContext.getCheckpointDir
       assert(ckDir.isDefined, "reliable mode must set a checkpoint dir")
@@ -101,14 +142,20 @@ class SourceFormatsSpec extends SparkSpec {
       assert(walk(local).nonEmpty,
         s"no checkpoint files under ${local.getPath}")
       // simulate executor loss: unpersist every block behind the plan
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = true)
-        case _ => ()
-      }
+      def loseBlocks(d: org.apache.spark.sql.DataFrame): Unit =
+        checkpointRdds(d).foreach(_.unpersist(blocking = true))
+      loseBlocks(df)
       assert(df.count() == 10, "reliable artifact unreadable after block loss")
-      // and the no-op path for already-materialized loop artifacts
-      assert(Tables.persistArtifact(df).count() == 10)
+      // a build that already ends in a local checkpoint (an iterative
+      // loop) gets the durable copy too, not its executor blocks
+      var inner: org.apache.spark.sql.DataFrame = null
+      val loop = Tables.artifact(spark, dir, "loop") {
+        inner = spark.range(5).toDF("x").localCheckpoint(); inner
+      }
+      assert(!(loop eq inner), "reliable mode must re-checkpoint a checkpointed build")
+      loseBlocks(inner)
+      loseBlocks(loop)
+      assert(loop.count() == 5, "reliable loop artifact unreadable after block loss")
     } finally sys.props.remove("graft.tableCache")
   }
 

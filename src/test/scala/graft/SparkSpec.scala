@@ -16,6 +16,21 @@ trait SparkSpec extends AnyFunSuite {
     sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d))
     d.getPath
   }
+
+  /** How many Spark jobs `body` starts. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftBusShim.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.GraftBusShim.drain(sc) }
+    finally sc.removeSparkListener(l)
+    jobs.get
+  }
 }
 
 object SparkSpec {

@@ -174,7 +174,7 @@ class StreamingSpec extends SparkSpec {
   test("stream-static decontamination joins the broadcast eval table per batch") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.{explode, expr}
-    graft.functions.Shingle3.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     // eval doc 10 shingles: {abc bcd cde def efg}
     val evalSh = Seq((10L, "a b c d e f g")).toDF("eval_id", "text")
       .select($"eval_id", explode(expr("shingle3(text)")).as("shingle"))

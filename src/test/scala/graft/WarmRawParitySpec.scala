@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * identical rows, so a future order-sensitive query can't silently
   * report warm timings for different results.
   *
-  * Mechanics: sessionCached keys are dir-stamped, not mode-stamped, so
-  * the warm pass reads a COPY of the fixture dir — fresh keys, fresh
-  * checkpointed builds — while the raw pass reads the original.
+  * Mechanics: table and artifact keys are dir-stamped, not
+  * mode-stamped, so the warm pass reads a COPY of the fixture dir —
+  * fresh keys, fresh checkpointed builds — while the raw pass reads
+  * the original.
   */
 class WarmRawParitySpec extends SparkSpec {
 

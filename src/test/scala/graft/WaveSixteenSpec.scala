@@ -11,7 +11,7 @@ class WaveSixteenSpec extends SparkSpec {
   import spark.implicits._
 
   test("mips ranking equals brute-force inner-product ranking (the reduction is order-preserving)") {
-    graft.functions.VecDot.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val got = llm.Similarity.ssMips(spark, sf0001)
       .select($"q_id", $"rank", $"neighbor_id")
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap

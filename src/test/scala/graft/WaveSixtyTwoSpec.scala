@@ -93,7 +93,7 @@ class WaveSixtyTwoSpec extends SparkSpec {
     // draw), and no repartition band-aid needed for parallelism. The
     // query's own plan reads the checkpointed fingerprints (Scan
     // ExistingRDD), so guard the plan of the BUILD projection itself.
-    graft.functions.Winnow4.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val buildPlan = graft.sources.Tables.documents(spark, sf0001)
       .select($"doc_id", explode(expr("winnow4(text)")).as("h"))
       .distinct()
@@ -111,8 +111,7 @@ class WaveSixtyTwoSpec extends SparkSpec {
   }
 
   test("winnow4 expression equals the composed HOF spec on the fixture corpus") {
-    graft.functions.H60.register(spark)
-    graft.functions.Winnow4.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val docs = graft.sources.Tables.documents(spark, sf0001)
       .select($"doc_id", $"text")
     // the composed transform/slice reference (the oracle's algebra,
@@ -142,7 +141,7 @@ class WaveSixtyTwoSpec extends SparkSpec {
     // DuckDB oracle's list_transform composition — return an empty
     // fingerprint set. The fused behavior is the correct one; this
     // test pins it at the boundary the fixture corpus never reaches.
-    graft.functions.Winnow4.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val edge = Seq(
       (1L, ""), (2L, "one"), (3L, "one two"),
       (4L, "   "), (5L, "one two three"))
@@ -171,7 +170,7 @@ class WaveSixtyTwoSpec extends SparkSpec {
       (2L, s"one two three $run four five six"),
       (3L, "totally different words without the shared span at all"))
       .toDF("doc_id", "text")
-    graft.functions.Winnow4.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val fp = docs
       .select($"doc_id", explode(expr("winnow4(text)")).as("h"))
       .distinct().collect().map(r => (r.getLong(0), r.getLong(1)))

@@ -500,7 +500,7 @@ class WaveTenSpec extends SparkSpec {
     val rows = Dedup.ddNoveltyCurve(spark, sf0001)
       .collect().sortBy(_.getAs[Int]("decile"))
     assert(rows.nonEmpty)
-    graft.functions.Shingle3.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val ex = graft.sources.Tables.documents(spark, sf0001)
       .select($"doc_id", explode(expr("shingle3(text)")).as("s"))
     // every distinct shingle first-occurs in exactly one document, so

@@ -82,7 +82,7 @@ class WaveTwentySpec extends SparkSpec {
   }
 
   test("filtered ann returns only same-label neighbors, ranked 1..3") {
-    graft.functions.VecDot.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val rows = llm.Similarity.ssFilteredAnn(spark, sf0001).collect()
     assert(rows.nonEmpty)
     val labels = spark.read.parquet(s"$sf0001/embeddings.parquet")
