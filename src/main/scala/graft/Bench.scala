@@ -26,7 +26,7 @@ object Bench {
     val selected = SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // Between queries, drop per-query transient checkpoint blocks
-    // (session-cached artifacts stay pinned — see Tables.pinned).
+    // (session-cached artifacts stay pinned — see Tables.releaseTransients).
     // Without this, ~12k block sets accumulate across 190 queries ×
     // (warm + timed) passes and block-manager/GC pressure inflates
     // late-suite medians up to 16× their isolated cost (round-7
@@ -59,9 +59,13 @@ object Bench {
     // draws bill a whole session-cached family's build to whichever
     // query touches it first (llm_dd_jaccard_est "578 s" at 64x cold
     // was mostly the dd class/shingle/band bootstrap). Journaling each
-    // build by key makes cold regressions diffable per artifact.
-    graft.sources.Tables.onArtifactBuild = (key, sec) =>
+    // build by key makes cold regressions diffable per artifact; the
+    // same entries fill bench_last.json's `builds` table.
+    val buildTimes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
+    graft.sources.Tables.onArtifactBuild = { (key, sec) =>
+      buildTimes.add(key -> sec)
       logProgress("build", key.replace(' ', '_'), sec)
+    }
     // A FAIL line that records only wall-time is unattributable after
     // the fact (the r13 64x attempt-1 journal has seven ~400s dd FAILs
     // with no way to tell an intentional fail-fast fence from an OOM):
@@ -165,8 +169,7 @@ object Bench {
     // Artifact-build table: key shortened to dir-basename#suffix (the
     // snapshot stamp is session noise); repeated keys (per-dir scans)
     // keep their max observed build time.
-    import scala.jdk.CollectionConverters.IterableHasAsScala
-    val builds = graft.sources.Tables.buildLog.asScala.toSeq
+    val builds = buildTimes.asScala.toSeq
       .map { case (k, s) =>
         val short = k.replaceAll("@[^#]*#", "#")
           .reverse.takeWhile(_ != '/').reverse

@@ -1564,14 +1564,21 @@ object Dedup {
     Tables.artifact(spark, dir, "dd_cluster")(ddClusterImpl(spark, dir))
       .orderBy(col("doc_id"))
 
+  /** The near-dup graph's edges in both directions: MinHash-LSH pairs
+    * with est_jaccard >= 0.75 and their mirror, checkpointed because
+    * every round joins them. The caller frees them after its loop. */
+  private def lshEdges(spark: SparkSession, dir: String): DataFrame = {
+    val lshPairs = ddMinhashLsh(spark, dir)
+      .filter(col("est_jaccard") >= 0.75)
+      .select(col("doc_a"), col("doc_b"))
+    lshPairs
+      .union(lshPairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      .localCheckpoint()
+  }
+
   private def ddClusterImpl(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val lshPairs = ddMinhashLsh(spark, dir)
-      .filter($"est_jaccard" >= 0.75)
-      .select($"doc_a", $"doc_b")
-    val edges = lshPairs
-      .union(lshPairs.select($"doc_b".as("doc_a"), $"doc_a".as("doc_b")))
-      .localCheckpoint() // computed once, joined every round
+    val edges = lshEdges(spark, dir)
     var pinned = Tables.documents(spark, dir)
       .select($"doc_id", $"doc_id".as("label")).localCheckpoint()
     var labels = pinned
@@ -1589,30 +1596,18 @@ object Dedup {
           least($"label", coalesce($"nbr_min", $"label")).as("next"))
         .localCheckpoint()
       converged = updated.filter($"next" < $"label").isEmpty
-      freeCheckpoint(pinned) // superseded by `updated`, never read again
+      Tables.freeCheckpoint(pinned) // superseded by `updated`, never read again
       pinned = updated
       labels = updated.select($"doc_id", $"next".as("label"))
     }
-    freeCheckpoint(edges) // loop-only input
+    Tables.freeCheckpoint(edges) // loop-only input
     val sizes = labels.groupBy($"label").agg(count(lit(1)).as("cluster_size"))
     val clusters = labels.join(sizes, "label")
       .select($"doc_id", $"label".as("cluster_id"), $"cluster_size")
       .localCheckpoint()
-    freeCheckpoint(pinned) // superseded by `clusters`
+    Tables.freeCheckpoint(pinned) // superseded by `clusters`
     clusters
   }
-
-  /** Release the blocks behind a `localCheckpoint()`-ed DataFrame.
-    * `Dataset.unpersist` only talks to the CacheManager; checkpoint
-    * blocks belong to the internal RDD, reachable through the
-    * `LogicalRDD` leaf the checkpoint call returned. No-op on
-    * non-checkpointed plans. */
-  private[graft] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   // The oracle states the SPEC, not the algorithm: transitive closure
   // by recursive CTE, then MIN(reachable label) per doc — any correct
@@ -3447,27 +3442,16 @@ object Dedup {
     if (clusters.isEmpty)
       return spark.createDataFrame(Seq.empty[(Int, Long, Double)])
         .toDF("hop", "n_docs", "share")
-    val lshPairs = ddMinhashLsh(spark, dir)
-      .filter($"est_jaccard" >= 0.75)
-      .select($"doc_a", $"doc_b")
-    val edges = lshPairs
-      .union(lshPairs.select($"doc_b".as("doc_a"), $"doc_a".as("doc_b")))
-      .localCheckpoint()
-    var visited = clusters.filter($"doc_id" === $"cluster_id")
-      .select($"doc_id", lit(0).as("hop")).localCheckpoint()
-    var frontier = visited.select($"doc_id")
-    for (h <- 1 to DepthHops) {
-      val nf = edges
-        .join(frontier.select($"doc_id".as("doc_a")), "doc_a")
+    val edges = lshEdges(spark, dir)
+    val visited = Tables.rounds(clusters.filter($"doc_id" === $"cluster_id")
+        .select($"doc_id", lit(0).as("hop")), DepthHops) { (h, visited) =>
+      visited.unionAll(edges
+        .join(visited.filter($"hop" === h - 1).select($"doc_id".as("doc_a")), "doc_a")
         .select($"doc_b".as("doc_id")).distinct()
         .join(visited.select($"doc_id"), Seq("doc_id"), "left_anti")
-        .select($"doc_id", lit(h).as("hop"))
-      val nextVisited = visited.unionAll(nf).localCheckpoint()
-      frontier = nextVisited.filter($"hop" === h).select($"doc_id")
-      freeCheckpoint(visited)
-      visited = nextVisited
+        .select($"doc_id", lit(h).as("hop")))
     }
-    freeCheckpoint(edges)
+    Tables.freeCheckpoint(edges)
     val tot = clusters.agg(count(lit(1)).as("n"))
     clusters.join(visited, Seq("doc_id"), "left")
       .select(coalesce($"hop", lit(-1)).as("hop"))

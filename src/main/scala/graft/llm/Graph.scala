@@ -1377,18 +1377,14 @@ object Graph {
     val edges = e.select($"src", $"dst")
     val seed = nodeDeg(spark, dir)
       .orderBy($"outdeg".desc, $"node").limit(1).select($"node")
-    var visited = seed.select($"node", lit(0).as("hop")).localCheckpoint()
-    var frontier = visited.select($"node")
-    for (h <- 1 to BfsHops) {
-      val nf = edges
-        .join(broadcast(frontier.select($"node".as("src"))), "src")
-        .select($"dst".as("node")).distinct()
-        .join(visited.select($"node"), Seq("node"), "left_anti")
-        .select($"node", lit(h).as("hop"))
-      val nextVisited = visited.unionAll(nf).localCheckpoint()
-      frontier = nextVisited.filter($"hop" === h).select($"node")
-      Dedup.freeCheckpoint(visited)
-      visited = nextVisited
+    val visited = Tables.rounds(seed.select($"node", lit(0).as("hop")), BfsHops) {
+      (h, visited) =>
+        visited.unionAll(edges
+          .join(broadcast(visited.filter($"hop" === h - 1)
+            .select($"node".as("src"))), "src")
+          .select($"dst".as("node")).distinct()
+          .join(visited.select($"node"), Seq("node"), "left_anti")
+          .select($"node", lit(h).as("hop")))
     }
     val tot = nodeDeg(spark, dir).agg(count(lit(1)).as("n_nodes"))
     import org.apache.spark.sql.expressions.Window
@@ -1551,21 +1547,16 @@ object Graph {
     val seeds = nodeDeg(spark, dir)
       .orderBy($"outdeg".desc, $"node").limit(EffDiamSources)
       .select($"node".as("root"))
-    var visited = seeds
-      .select($"root", $"root".as("node"), lit(0).as("hop"))
-      .localCheckpoint()
-    var frontier = visited.select($"root", $"node")
-    for (h <- 1 to EffDiamHops) {
-      val nf = edges
-        .join(frontier.select($"node".as("src"), $"root"), "src")
-        .select($"root", $"dst".as("node")).distinct()
-        .join(visited.select($"root", $"node"),
-          Seq("root", "node"), "left_anti")
-        .select($"root", $"node", lit(h).as("hop"))
-      val nextVisited = visited.unionAll(nf).localCheckpoint()
-      frontier = nextVisited.filter($"hop" === h).select($"root", $"node")
-      Dedup.freeCheckpoint(visited)
-      visited = nextVisited
+    val visited = Tables.rounds(
+        seeds.select($"root", $"root".as("node"), lit(0).as("hop")), EffDiamHops) {
+      (h, visited) =>
+        visited.unionAll(edges
+          .join(visited.filter($"hop" === h - 1)
+            .select($"node".as("src"), $"root"), "src")
+          .select($"root", $"dst".as("node")).distinct()
+          .join(visited.select($"root", $"node"),
+            Seq("root", "node"), "left_anti")
+          .select($"root", $"node", lit(h).as("hop")))
     }
     val tot = broadcast(visited.agg(count(lit(1)).as("n_pairs_total")))
     import org.apache.spark.sql.expressions.Window

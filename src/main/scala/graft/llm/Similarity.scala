@@ -940,14 +940,10 @@ object Similarity {
       import spark.implicits._
       val e = Tables.embeddings(spark, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      var cents = e.filter($"vec_id" < 4)
-        .select($"vec_id".as("cid"), $"v".as("cv")).localCheckpoint()
-      (1 to 3).foreach { _ =>
-        val next = kmUpdate(kmAssign(e, cents)).localCheckpoint()
-        Dedup.freeCheckpoint(cents)
-        cents = next
+      Tables.rounds(e.filter($"vec_id" < 4)
+        .select($"vec_id".as("cid"), $"v".as("cv")), 3) { (_, cents) =>
+        kmUpdate(kmAssign(e, cents))
       }
-      cents
     }
 
   def ssKmeansIter(spark: SparkSession, dir: String): DataFrame = {
@@ -1509,12 +1505,11 @@ object Similarity {
       import spark.implicits._
       val sub = pqSubvectors(withNorm(spark, dir).select($"vec_id", $"v"),
         PqTSub, PqTDim).localCheckpoint()
-      var cb = sub.filter($"vec_id" < PqTK)
-        .select($"s", $"vec_id".as("cid"), $"sub".as("cv")).localCheckpoint()
-      (1 to PqTrainRounds).foreach { _ =>
-        val cbs = cb.groupBy($"s")
+      val cb = Tables.rounds(sub.filter($"vec_id" < PqTK)
+        .select($"s", $"vec_id".as("cid"), $"sub".as("cv")), PqTrainRounds) { (_, cur) =>
+        val cbs = cur.groupBy($"s")
           .agg(collect_list(struct($"cid", $"cv")).as("cbs"))
-        val next = sub.join(broadcast(cbs), "s")
+        sub.join(broadcast(cbs), "s")
           .select($"s", expr(
             """array_min(transform(cbs, c -> named_struct(
               |  'd2', vec_dot(sub, sub) - 2.0d * vec_dot(sub, c.cv) + vec_dot(c.cv, c.cv),
@@ -1527,11 +1522,8 @@ object Similarity {
           .groupBy($"s", $"cid")
           .agg(expr("transform(array_sort(collect_list(struct(pos, m))), x -> x.m)")
             .as("cv"))
-          .localCheckpoint()
-        Dedup.freeCheckpoint(cb)
-        cb = next
       }
-      Dedup.freeCheckpoint(sub)
+      Tables.freeCheckpoint(sub)
       cb
     }
 

@@ -1253,7 +1253,7 @@ object TextAnalysis {
             |  concat('·', replace(bp, '·', ''), '·'))""".stripMargin).as("sym"),
           $"freq")
         .localCheckpoint()
-      Dedup.freeCheckpoint(cur)
+      Tables.freeCheckpoint(cur)
       cur = next
       best.select(lit(k).as("step"), $"pair",
         expr("replace(pair, '·', '')").as("merged"), $"n")
@@ -1264,7 +1264,7 @@ object TextAnalysis {
   def taBpeTrain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (log, finalSyms) = bpeLoop(spark, dir)
-    Dedup.freeCheckpoint(finalSyms)
+    Tables.freeCheckpoint(finalSyms)
     log.reduce(_.unionAll(_)).orderBy($"step")
   }
 
@@ -1283,7 +1283,7 @@ object TextAnalysis {
   def taBpeEncode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (log, finalSyms) = bpeLoop(spark, dir)
-    log.foreach(Dedup.freeCheckpoint)
+    log.foreach(Tables.freeCheckpoint)
     val wordToks = finalSyms.select(
       expr("replace(sym, '·', '')").as("w"),
       size(expr("split(trim(BOTH '·' FROM sym), '·')")).cast("long").as("n_syms"))

@@ -1,12 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's JSON sinks (SURVEY.md §2.1 S5/S6) as partitioned
   * Spark writes.
   */
 object BenchSinks {
+
+  /** One (pkg, test) group's date-keyed series, the aggregate both
+    * series sinks write: `{DD-MM-YYYY: {N, A, B, M}}`, dates sorted. */
+  private def series: Column =
+    map_from_entries(array_sort(collect_list(struct(
+      date_format(col("date"), "dd-MM-yyyy").as("date"),
+      struct(
+        col("ns_per_op").as("N"),
+        col("allocs_per_op").as("A"),
+        col("bytes_per_op").as("B"),
+        col("mb_per_s").as("M")).as("stats")))))
 
   /** S5 (file_generator.go:177-190): per-(pkg,test) series JSON. The
     * reference writes `{date: {N,A,B,M}}` per test file; the engine
@@ -19,13 +30,7 @@ object BenchSinks {
   def writeSeriesJson(fact: DataFrame, outDir: String): Unit =
     fact
       .groupBy(col("pkg"), col("test"))
-      .agg(map_from_entries(array_sort(collect_list(struct(
-        date_format(col("date"), "dd-MM-yyyy").as("date"),
-        struct(
-          col("ns_per_op").as("N"),
-          col("allocs_per_op").as("A"),
-          col("bytes_per_op").as("B"),
-          col("mb_per_s").as("M")).as("stats"))))).as("series"))
+      .agg(series.as("series"))
       .write.mode(SaveMode.Overwrite)
       // keep null stats as explicit JSON nulls (Go marshals all keys)
       .option("ignoreNullFields", "false")
@@ -68,14 +73,7 @@ object BenchSinks {
       fact.sparkSession.sessionState.newHadoopConf())
     fact
       .groupBy(col("pkg"), col("test"))
-      .agg(to_json(map_from_entries(array_sort(collect_list(struct(
-        date_format(col("date"), "dd-MM-yyyy").as("date"),
-        struct(
-          col("ns_per_op").as("N"),
-          col("allocs_per_op").as("A"),
-          col("bytes_per_op").as("B"),
-          col("mb_per_s").as("M")).as("stats"))))),
-        Map("ignoreNullFields" -> "false")).as("body"))
+      .agg(to_json(series, Map("ignoreNullFields" -> "false")).as("body"))
       .select(col("pkg"), col("test"), col("body"))
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         val root = new org.apache.hadoop.fs.Path(outDir)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Distributed exact NTILE — the bucketed prefix-sum decomposition of a
   * global ordered window, generalized from the llm_pipeline_budget
   * pattern (Pipeline.scala `budget`) to exact global RANKS.
@@ -58,35 +60,27 @@ import org.apache.spark.sql.functions._
   * The input is localCheckpointed (narrow rank-grain rows, referenced
   * by both the bucket-count aggregate and the rank join — without
   * materialization Catalyst re-derives the upstream fact collapse
-  * twice); callers release it with the per-query transient sweep.
+  * twice); callers release it with the per-query transient sweep. An
+  * input that already is a checkpoint is used as it is, so a caller
+  * that checkpoints its rank-grain table to fold its own grand totals
+  * off it pays no second job. Job economy matters here: every
+  * localCheckpoint is a separate eager job, and the first cut of this
+  * helper (input + range-table + caller-side decile-table checkpoints)
+  * tripled the three callers' bench medians on pure job-launch
+  * overhead. The range and bucket tables therefore stay INLINE
+  * broadcast subtrees of the caller's single action — bounded (1-row /
+  * ≤B-row) single-partition aggregates are two cheap stages, not jobs.
   */
 object BucketedRank {
 
-  /** Append `out` = NTILE(`k`) OVER (ORDER BY `valueCol` DESC,
-    * `tieCol` ASC) to `df`, computed distributed-exactly as described
-    * above. `tieCol` must be unique per row (the queries use the
-    * customer key), so the order is total and the result deterministic.
-    *
-    * `materialized = true` skips the internal localCheckpoint — for
-    * callers that already checkpointed `df` (so they can fold their
-    * own grand totals off the same narrow table without a second
-    * derivation). Job economy matters here: every localCheckpoint is
-    * a separate eager job, and the first cut of this helper (input +
-    * range-table + caller-side decile-table checkpoints) tripled the
-    * three callers' bench medians on pure job-launch overhead. The
-    * range and bucket tables therefore stay INLINE broadcast subtrees
-    * of the caller's single action — bounded (1-row / ≤B-row)
-    * single-partition aggregates are two cheap stages, not jobs.
-    */
   /** The bucketing stage of [[ntileDesc]] alone: `df` plus the
     * (possibly hot-refined) composite `gnt_bkt` column — split out so
     * the spec can MEASURE per-bucket occupancy on adversarial inputs
     * instead of trusting the refinement argument. */
   private[graft] def bucketIds(df: DataFrame, valueCol: String,
                                tieCol: String, buckets: Int,
-                               occupancyCap: Long, refineLevels: Int,
-                               materialized: Boolean): DataFrame = {
-    val base = if (materialized) df else df.localCheckpoint()
+                               occupancyCap: Long, refineLevels: Int): DataFrame = {
+    val base = if (Tables.isCheckpoint(df)) df else df.localCheckpoint()
     val v: Column = col(valueCol).cast("double")
     val mm = base.agg(min(v).as("gnt_vmin"), max(v).as("gnt_vmax"))
     var withB = base.crossJoin(broadcast(mm))
@@ -132,13 +126,17 @@ object BucketedRank {
     withB
   }
 
+  /** Append `out` = NTILE(`k`) OVER (ORDER BY `valueCol` DESC,
+    * `tieCol` ASC) to `df`, computed distributed-exactly as described
+    * above. `tieCol` must be unique per row (the queries use the
+    * customer key), so the order is total and the result deterministic.
+    */
   def ntileDesc(df: DataFrame, valueCol: String, tieCol: String, k: Int,
                 out: String, buckets: Int = 1024,
-                materialized: Boolean = false,
                 occupancyCap: Long = Long.MaxValue,
                 refineLevels: Int = 2): DataFrame = {
     val withB = bucketIds(df, valueCol, tieCol, buckets, occupancyCap,
-      refineLevels, materialized)
+      refineLevels)
     // bounded bucket table: counts → exclusive prefix offsets, total n,
     // and the tile-arithmetic constants (all functions of n alone)
     val wOff = Window.orderBy(col("gnt_bkt"))

@@ -1116,8 +1116,7 @@ object RelationalQueries {
       .groupBy($"o_custkey")
       .agg(sum($"o_totalprice".cast(DecimalType(18, 2))).as("rev"))
       .localCheckpoint()
-    val deciled = BucketedRank.ntileDesc(perCust, "rev", "o_custkey", 10,
-      "decile", materialized = true)
+    val deciled = BucketedRank.ntileDesc(perCust, "rev", "o_custkey", 10, "decile")
     val byDecile = deciled.groupBy($"decile")
       .agg(count(lit(1)).as("n_customers"), sum($"rev").as("decile_rev"))
     val tot = broadcast(perCust.agg(sum($"rev").as("total_rev")))
@@ -1759,8 +1758,7 @@ object RelationalQueries {
       .select($"o_custkey", $"early_rev",
         coalesce($"late_rev", lit(0.0)).as("late_rev"))
       .localCheckpoint()
-    val deciled = BucketedRank.ntileDesc(joined, "early_rev", "o_custkey", 10,
-      "decile", materialized = true)
+    val deciled = BucketedRank.ntileDesc(joined, "early_rev", "o_custkey", 10, "decile")
     val totals = broadcast(joined.agg(
       sum($"early_rev".cast(DecimalType(28, 6))).cast("double").as("te"),
       sum($"late_rev".cast(DecimalType(28, 6))).cast("double").as("tl")))

@@ -129,14 +129,17 @@ object BenchIngest {
     * A1 last-write-wins dedup.
     */
   def ingest(spark: SparkSession, root: String,
-             packages: Seq[String] = DefaultPackages): DataFrame = {
-    import spark.implicits._
-    // A1 dedup: last (file, line) wins per (pkg,test,date).
-    val w = Window.partitionBy($"pkg", $"test", $"date")
-      .orderBy($"file".desc, $"line_no".desc)
-    parse(rawLines(spark, root), packages)
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
+             packages: Seq[String] = DefaultPackages): DataFrame =
+    lastWriteWins(parse(rawLines(spark, root), packages))
+
+  /** A1 dedup of parsed rows: the last (file, line_no) wins per
+    * (pkg, test, date), and both tie-break columns are dropped. Batch
+    * ingest and the streaming sink's upsert share this one rule. */
+  def lastWriteWins(df: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("pkg"), col("test"), col("date"))
+      .orderBy(col("file").desc, col("line_no").desc)
+    df.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
       .drop("rn", "file", "line_no")
   }
 

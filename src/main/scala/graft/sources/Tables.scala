@@ -1,6 +1,9 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Loaders for the driver-generated star schema at `/root/testdata/<sf>/`
   * (TESTDATA.md / FIXTURES.md §2). One parquet file per table.
@@ -12,14 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val cleanupHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  /** RDD ids persisted DURING a session-cached build — the artifact
-    * family (checkpointed base tables, band indexes, trained
-    * centroids/codebooks) plus any per-round transients the build
+  /** A session-cached DataFrame and the RDD ids its build persisted:
+    * the artifact itself plus any per-round transients the build
     * created (bounded: builds run once per (session, key)). Everything
     * persisted OUTSIDE a cached build is a per-query transient whose
     * DataFrame dies with the query invocation; [[releaseTransients]]
@@ -30,34 +27,20 @@ object Tables {
     * their isolated cost (measured round 7: llm_pipeline_budget 31.8 s
     * in-suite vs 2.0 s isolated).
     */
-  private val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  private final case class Entry(df: DataFrame, ids: Set[Int])
 
-  /** Which pinned RDD ids each sessionCached key's build persisted —
-    * the reverse index that makes [[releaseScope]] possible. Ids are
-    * only ever added here together with [[pinned]] (same diff, same
-    * call site), so removing a key's ids from both keeps the two views
-    * consistent. */
-  private val pinnedByKey =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Set[Int]]()
-
-  /** Wall-time of every [[sessionCached]] artifact build this JVM ran,
-    * in completion order (key, seconds). Nested builds appear BEFORE
-    * their outer key and their time is included in the outer entry.
-    * graft.Bench drains this into bench_last.json's `builds` table so
-    * a cold draw's first-touch query cost decomposes into named
-    * artifact builds (round-12 verdict: a 578 s cold-64× query was
-    * mostly un-attributed family bootstrap). Bounded by the number of
-    * distinct artifact keys a session touches (hundreds), not by
-    * query volume. */
-  val buildLog =
-    new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
+  private val entries =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Entry]()
+  private val cleanupHooked =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
 
   /** Observer invoked after each artifact build completes, with the
-    * cache key and build seconds — graft.Bench points this at its
-    * per-query progress journal so an IN-FLIGHT build is attributable
-    * from outside the JVM (the completion entry lands next to the
-    * journal's `-1` in-flight marker of whichever query triggered it).
-    * Default no-op; exceptions are swallowed at the call site. */
+    * cache key and build seconds. graft.Bench journals each build (so
+    * an IN-FLIGHT build is attributable from outside the JVM) and
+    * collects them into bench_last.json's `builds` table. Nested
+    * builds complete BEFORE their outer key and their time is included
+    * in the outer entry. Default no-op; exceptions are swallowed at the
+    * call site. */
   @volatile var onArtifactBuild: (String, Double) => Unit = (_, _) => ()
 
   /** Per-SparkContext build lock: the persistent-RDD id diff in
@@ -69,17 +52,51 @@ object Tables {
   private val buildLocks =
     new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext, Object]()
 
-  /** Unpersist every persistent RDD of `spark`'s context that is NOT
-    * pinned by a session-cached artifact build. Safe between query
-    * invocations: localCheckpoint truncates lineage, so blocks must
-    * not be dropped while a DataFrame still expects re-execution — but
-    * per-query transients are rebuilt fresh by each invocation, and
-    * the long-lived artifact family is pinned. Non-blocking: block
-    * removal proceeds async while the next query runs.
+  /** Unpersist every persistent RDD of `spark`'s context that no
+    * session-cached build pinned. Safe between query invocations:
+    * localCheckpoint truncates lineage, so blocks must not be dropped
+    * while a DataFrame still expects re-execution — but per-query
+    * transients are rebuilt fresh by each invocation, and the
+    * long-lived artifact family is pinned. Non-blocking: block removal
+    * proceeds async while the next query runs.
     */
-  def releaseTransients(spark: SparkSession): Unit =
+  def releaseTransients(spark: SparkSession): Unit = {
+    val kept = entries.values.asScala.flatMap(_.ids).toSet
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinned.contains(id)) rdd.unpersist(blocking = false)
+      if (!kept(id)) rdd.unpersist(blocking = false)
+    }
+  }
+
+  /** Release the blocks behind a `localCheckpoint()`-ed DataFrame.
+    * `Dataset.unpersist` only talks to the CacheManager; checkpoint
+    * blocks belong to the internal RDD, reachable through the
+    * `LogicalRDD` leaf the checkpoint call returned. No-op on
+    * non-checkpointed plans. */
+  def freeCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
+  /** True iff `df`'s plan IS a checkpoint: a `LogicalRDD` over a
+    * checkpointed RDD, as `localCheckpoint()` / `checkpoint()` return. */
+  private[graft] def isCheckpoint(df: DataFrame): Boolean =
+    df.queryExecution.logical match {
+      case lr: LogicalRDD => lr.rdd.isCheckpointed
+      case _ => false
+    }
+
+  /** `n` rounds of an iterative build: round r maps the current table
+    * to the next with `step(r, cur)`. The seed and every round are
+    * localCheckpointed, so round r's plan never replays rounds 1..r-1,
+    * and each round's checkpoint is freed once the next one is
+    * materialized: block storage holds at most two rounds at a time,
+    * and only the returned round's blocks outlive the call. */
+  def rounds(seed: DataFrame, n: Int)(step: (Int, DataFrame) => DataFrame): DataFrame =
+    (1 to n).foldLeft(seed.localCheckpoint()) { (cur, r) =>
+      val next = step(r, cur).localCheckpoint()
+      freeCheckpoint(cur)
+      next
     }
 
   /** Evict every sessionCached artifact of `spark` whose key is
@@ -98,16 +115,12 @@ object Tables {
   def releaseScope(spark: SparkSession, dir: String): Unit = {
     val prefix = s"$dir@"
     val live = spark.sparkContext.getPersistentRDDs
-    val it = cache.keySet.iterator()
+    val it = entries.entrySet.iterator()
     while (it.hasNext) {
-      val k = it.next()
-      if ((k._1 eq spark) && k._2.startsWith(prefix)) {
+      val e = it.next()
+      if ((e.getKey._1 eq spark) && e.getKey._2.startsWith(prefix)) {
         it.remove()
-        val ids = pinnedByKey.remove(k)
-        if (ids != null) ids.foreach { id =>
-          pinned.remove(id)
-          live.get(id).foreach(_.unpersist(blocking = false))
-        }
+        e.getValue.ids.foreach(live.get(_).foreach(_.unpersist(blocking = false)))
       }
     }
   }
@@ -126,21 +139,17 @@ object Tables {
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          val it = cache.keySet.iterator()
-          while (it.hasNext) if (it.next()._1 eq spark) it.remove()
+          entries.keySet.removeIf(_._1 eq spark)
           cleanupHooked.remove(spark)
         }
       })
-    // get-then-putIfAbsent rather than computeIfAbsent: a build may
-    // itself call sessionCached for its inputs (e.g. the LSH band
-    // table builds from the cached class + shingle tables), and a
-    // nested computeIfAbsent on the same map throws "Recursive
-    // update". The benign race (two threads building the same key
-    // once) is acceptable — the driver is effectively single-threaded
-    // per session and the loser's build is discarded.
+    // get, then build under the lock, rather than computeIfAbsent: a
+    // build may itself call sessionCached for its inputs (e.g. the LSH
+    // band table builds from the cached class + shingle tables), and a
+    // nested computeIfAbsent on the same map throws "Recursive update".
     val k = (spark, key)
-    val existing = cache.get(k)
-    if (existing != null) existing
+    val hit = entries.get(k)
+    if (hit != null) hit.df
     else {
       // pin every RDD the build persists (localCheckpoint is eager, so
       // blocks exist by the time `build` returns): the id-set diff
@@ -151,10 +160,9 @@ object Tables {
       // concurrent build for another dir can no longer interleave its
       // persists into this key's diff window.
       val sc = spark.sparkContext
-      val lock = buildLocks.computeIfAbsent(sc, _ => new Object)
-      lock.synchronized {
-        val again = cache.get(k) // a racer may have built while we waited
-        if (again != null) again
+      buildLocks.computeIfAbsent(sc, _ => new Object).synchronized {
+        val again = entries.get(k) // a racer may have built while we waited
+        if (again != null) again.df
         else {
           val before = sc.getPersistentRDDs.keySet
           val t0 = System.nanoTime()
@@ -166,21 +174,14 @@ object Tables {
           // between its start and end. Observer failures never fail
           // a build.
           val buildSec = (System.nanoTime() - t0) / 1e9
-          buildLog.add(key -> buildSec)
           try onArtifactBuild(key, buildSec) catch { case _: Throwable => }
           // Nested builds (an outer artifact building its cached inputs)
           // attribute the inner key's ids to the OUTER key's diff as well;
           // that is why [[releaseScope]] is dir-granular — every key of a
           // dir releases together, so a doubly-attributed id can never be
           // unpersisted while its own key survives.
-          val fresh = sc.getPersistentRDDs.keySet.diff(before)
-          fresh.foreach(pinned.add(_))
-          // merge, never replace: if this key somehow has ids already
-          // (a prior partial build), union them — a lost race must not
-          // orphan the surviving build's blocks from the reverse index.
-          pinnedByKey.merge(k, fresh.toSet, (a: Set[Int], b: Set[Int]) => a ++ b)
-          val prev = cache.putIfAbsent(k, built)
-          if (prev != null) prev else built
+          entries.put(k, Entry(built, sc.getPersistentRDDs.keySet.diff(before).toSet))
+          built
         }
       }
     }
@@ -272,16 +273,14 @@ object Tables {
   private def stamped(spark: SparkSession, dir: String, suffix: String): String =
     s"$dir@${snapshot(spark, dir)}#$suffix"
 
-  private def cacheMode: Option[String] =
-    sys.env.get("SPARK_GRAFT_TABLE_CACHE").orElse(sys.props.get("graft.tableCache"))
+  private def cacheMode: Option[String] = sys.props.get("graft.tableCache")
 
   /** Materialization for session-cached DERIVED artifacts (the ingest
     * fact, the dedup class collapse and band index, trained centroids /
     * codebooks, SQ8 ranges): `localCheckpoint` by default — executor
     * block storage with TRUNCATED lineage, free on local[*] and the
     * right warm-mode trade there — or a RELIABLE `checkpoint` when
-    * `SPARK_GRAFT_TABLE_CACHE=reliable` (or
-    * `-Dgraft.tableCache=reliable`). The distinction only matters on a
+    * `-Dgraft.tableCache=reliable`. The distinction only matters on a
     * real cluster: a localCheckpointed artifact's blocks die with any
     * executor that held them, and truncated lineage means they are
     * UNRECOVERABLE mid-job — an executor loss hours into a long warm
@@ -316,11 +315,7 @@ object Tables {
       build: => DataFrame): DataFrame =
     sessionCached(spark, stamped(spark, dir, name)) {
       val df = build
-      df.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD
-            if lr.rdd.isCheckpointed && !cacheMode.contains("reliable") => df
-        case _ => materialize(df)
-      }
+      if (isCheckpoint(df) && !cacheMode.contains("reliable")) df else materialize(df)
     }
 
   /** UNCOMPRESSED bytes per partition for a warm-mode checkpointed
@@ -339,9 +334,7 @@ object Tables {
     * keeps every sf0.1 table within 1 partition of its natural scan
     * (r12 shape, zero added scheduling) while 16×/64× documents and
     * events checkpoint 13–32-way. */
-  val WarmBytesPerPartition =
-    sys.props.get("graft.warmBytesPerPartition").map(_.toLong)
-      .getOrElse(2L << 20)
+  val WarmBytesPerPartition = 2L << 20
 
   /** Warm-mode partition target for a parquet table: total uncompressed
     * row-group bytes from footer metadata, one partition per
@@ -378,10 +371,8 @@ object Tables {
 
   /** Σ row-group `totalByteSize` (uncompressed) over a parquet file or
     * dir of part files. */
-  def parquetUncompressedBytes(spark: SparkSession, path: String): Long = {
-    import scala.jdk.CollectionConverters._
+  def parquetUncompressedBytes(spark: SparkSession, path: String): Long =
     parquetFooters(spark, path)(_.getFooter.getBlocks.asScala.map(_.getTotalByteSize).sum).sum
-  }
 
   /** Row count of a parquet file (or dir of part files) from its
     * footers. Parquet footers carry exact record counts, so this equals
@@ -418,7 +409,7 @@ object Tables {
     * parquet scan, so per-query column pruning and filter pushdown
     * still reach the source.
     *
-    * `SPARK_GRAFT_TABLE_CACHE=checkpoint` additionally materializes the
+    * `-Dgraft.tableCache=checkpoint` additionally materializes the
     * table via localCheckpoint — warm-data mode for repeated-query
     * benchmarking (graft.Bench sets it). Deliberately NOT the default:
     * a checkpointed table is all columns in block storage, which hides

@@ -341,8 +341,8 @@ object StreamPipelines {
         // cut lineage before appending to the path the plan reads
         val out = fresh.localCheckpoint()
         out.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(alertDir)
-        graft.llm.Dedup.freeCheckpoint(b)
-        graft.llm.Dedup.freeCheckpoint(out)
+        graft.sources.Tables.freeCheckpoint(b)
+        graft.sources.Tables.freeCheckpoint(out)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -361,18 +361,10 @@ object StreamPipelines {
     val spark = batch.sparkSession
     // Within-batch A1 dedup: duplicate (pkg,test,date) keys CAN land
     // in one micro-batch (two stdout files for the same day discovered
-    // together); without this window both rows would survive the union
-    // and sit as duplicate keys in the sink. Same tie-break as batch
-    // ingest: last (file, line) wins. The window partitions on the
+    // together); without it both rows would survive the union and sit
+    // as duplicate keys in the sink. The window partitions on the
     // merge key — micro-batch-sized input, bounded state.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pkg"), col("test"), col("date"))
-      .orderBy(col("file").desc, col("line_no").desc)
-    val b = batch
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn", "file", "line_no")
-      .localCheckpoint()
+    val b = graft.sources.BenchIngest.lastWriteWins(batch).localCheckpoint()
     val existing =
       try Some(spark.read.parquet(outDir))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
@@ -389,8 +381,8 @@ object StreamPipelines {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("date")
       .parquet(outDir)
-    graft.llm.Dedup.freeCheckpoint(b)
-    if (merged ne b) graft.llm.Dedup.freeCheckpoint(merged)
+    graft.sources.Tables.freeCheckpoint(b)
+    if (merged ne b) graft.sources.Tables.freeCheckpoint(merged)
   }
 
   /** File-source -> parquet-sink incremental pipeline: the streaming

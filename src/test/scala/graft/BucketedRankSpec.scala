@@ -72,8 +72,7 @@ class BucketedRankSpec extends SparkSpec {
     val e = expect.orderBy($"tie").collect().map(r => (r.getLong(0), r.getInt(2)))
     val g = got.orderBy($"tie").collect().map(r => (r.getLong(0), r.getInt(2)))
     assert(g.toSeq == e.toSeq, s"skewed n=$n k=$k diverged")
-    val occ = BucketedRank.bucketIds(df, "v", "tie", 16, cap, levels,
-        materialized = false)
+    val occ = BucketedRank.bucketIds(df, "v", "tie", 16, cap, levels)
       .groupBy("gnt_bkt").count().agg(max("count")).head.getLong(0)
     assert(occ <= cap,
       s"hot bucket survived refinement: max occupancy $occ > cap $cap")
@@ -103,6 +102,23 @@ class BucketedRankSpec extends SparkSpec {
         occupancyCap = 50, refineLevels = 2)
       .orderBy($"tie").collect().map(_.getInt(2)).toSeq
     assert(a == b)
+  }
+
+  test("a checkpointed input adds no checkpoint job of its own") {
+    // q61/q72 checkpoint their rank-grain table to fold grand totals
+    // off it; the helper must read that checkpoint, not copy it
+    val df = spark.range(300L).select(
+      $"id".as("tie"), (($"id" * 37) % 101).cast("double").as("v"))
+    val ck = df.localCheckpoint()
+    def tiles(in: org.apache.spark.sql.DataFrame) =
+      BucketedRank.ntileDesc(in, "v", "tie", 10, "t", buckets = 16)
+        .orderBy($"tie").collect().map(_.getInt(2)).toSeq
+    var (onCk, onPlan) = (Seq.empty[Int], Seq.empty[Int])
+    val ckJobs = jobsOf { onCk = tiles(ck) }
+    val planJobs = jobsOf { onPlan = tiles(df) }
+    assert(ckJobs < planJobs,
+      s"checkpointed input ran $ckJobs jobs, the bare plan $planJobs")
+    assert(onCk == onPlan)
   }
 
   test("plan: no global NTILE window; ranks partition by the bucket") {

@@ -119,9 +119,65 @@ class SourceFormatsSpec extends SparkSpec {
     assert(art.count() == 50)
   }
 
+  test("releaseScope frees one dir's artifacts and keeps another's") {
+    import graft.sources.Tables
+    val (dirA, dirB) = (tempDir("graft_scope_a"), tempDir("graft_scope_b"))
+    val a = Tables.artifact(spark, dirA, "t")(spark.range(30).toDF("x"))
+    val b = Tables.artifact(spark, dirB, "t")(spark.range(40).toDF("x"))
+    val (aIds, bIds) = (checkpointRdds(a).map(_.id), checkpointRdds(b).map(_.id))
+    assert(aIds.nonEmpty && bIds.nonEmpty)
+    Tables.releaseScope(spark, dirA)
+    Tables.releaseTransients(spark)
+    val live = spark.sparkContext.getPersistentRDDs
+    assert(!aIds.exists(live.contains), "dirA's artifact blocks survived its scope")
+    assert(bIds.forall(live.contains), "releasing dirA dropped dirB's artifact")
+    assert(b.count() == 40)
+    var rebuilt = false
+    Tables.artifact(spark, dirA, "t") { rebuilt = true; spark.range(30).toDF("x") }
+    assert(rebuilt, "a released key must build again")
+  }
+
+  /** One breadth-first round over a small graph, in the shape of the
+    * engine's BFS loops: the nodes one hop past the last level. */
+  private def bfsEdges = Seq((0L, 1L), (1L, 2L), (1L, 3L), (3L, 4L), (4L, 0L),
+    (2L, 5L), (5L, 6L), (7L, 8L)).toDF("src", "dst")
+
+  private def bfsRound(h: Int, visited: org.apache.spark.sql.DataFrame) =
+    visited.unionAll(bfsEdges
+      .join(visited.filter($"hop" === h - 1).select($"node".as("src")), "src")
+      .select($"dst".as("node")).distinct()
+      .join(visited.select($"node"), Seq("node"), "left_anti")
+      .select($"node", lit(h).as("hop")))
+
+  test("rounds gives the rows of the same loop written by hand") {
+    import graft.sources.Tables
+    val seed = Seq(0L).toDF("node").select($"node", lit(0).as("hop"))
+    var byHand = seed
+    for (h <- 1 to 4) byHand = bfsRound(h, byHand)
+    val got = Tables.rounds(seed, 4)(bfsRound)
+    val rows = (d: org.apache.spark.sql.DataFrame) =>
+      d.orderBy($"hop", $"node").collect().toSeq
+    assert(rows(got) == rows(byHand))
+    assert(rows(got).map(_.getInt(1)) == Seq(0, 1, 2, 2, 3, 3, 4))
+    assert(Tables.rounds(seed, 0)(bfsRound).count() == 1)
+  }
+
+  test("after rounds returns only the result's checkpoint is persisted") {
+    import graft.sources.Tables
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val seed = Seq(0L).toDF("node").select($"node", lit(0).as("hop"))
+    val out = Tables.rounds(seed, 4)(bfsRound)
+    val fresh = sc.getPersistentRDDs.keySet -- before
+    assert(fresh == checkpointRdds(out).map(_.id).toSet,
+      s"persisted after rounds: $fresh, result's checkpoint: " +
+        checkpointRdds(out).map(_.id))
+    assert(out.count() == 7)
+  }
+
   test("reliable cache mode writes artifacts to disk and survives block loss") {
     import graft.sources.Tables
-    // SPARK_GRAFT_TABLE_CACHE=reliable (here via the sys-prop alias):
+    // -Dgraft.tableCache=reliable:
     // derived artifacts checkpoint to the reliable checkpoint FS
     // instead of executor block storage, so on a real cluster an
     // executor loss doesn't strand a warm pipeline mid-job. Local

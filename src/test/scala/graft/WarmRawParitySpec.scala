@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Warm-mode (checkpointed-table) results must equal raw-scan results.
   *
   * Why this is load-bearing (r13 advice): graft.Bench times every query
-  * against `SPARK_GRAFT_TABLE_CACHE=checkpoint` tables, which are
+  * against `-Dgraft.tableCache=checkpoint` tables, which are
   * repartitioned size-aware before `localCheckpoint` — a partitioning /
   * row order the Verify gate (raw scans) never executes. That is safe
   * only while every registry query is partition-order-insensitive
@@ -21,15 +21,6 @@ import org.apache.spark.sql.functions._
   * the original.
   */
 class WarmRawParitySpec extends SparkSpec {
-
-  // Tables.cacheMode prefers the SPARK_GRAFT_TABLE_CACHE env var over
-  // the graft.tableCache sys.prop this spec toggles: under that env
-  // var the "raw" pass would silently run warm too and every parity
-  // assertion would pass vacuously (warm compared to warm). Cancel —
-  // never pretend the contrast was tested.
-  private def requireModeControl(): Unit =
-    assume(sys.env.get("SPARK_GRAFT_TABLE_CACHE").isEmpty,
-      "SPARK_GRAFT_TABLE_CACHE is set; this spec cannot contrast warm vs raw")
 
   private def copyFixture(): String = {
     val out = java.nio.file.Files.createTempDirectory("graft_warm").toString
@@ -59,7 +50,6 @@ class WarmRawParitySpec extends SparkSpec {
       "llm_dd_containment", "llm_dd_ngram_jaccard")
 
   test("warm-mode results are row-identical to raw-scan results") {
-    requireModeControl()
     val warmDir = copyFixture()
     try {
       val qs = SparkEntry.queries
@@ -86,7 +76,6 @@ class WarmRawParitySpec extends SparkSpec {
   }
 
   test("warm partition target is size-aware: dims stay narrow, big single-file tables widen") {
-    requireModeControl()
     import graft.sources.Tables
     import org.apache.spark.sql.functions._
     // region: 5 rows / a few hundred uncompressed bytes — target 1, so

@@ -5,6 +5,16 @@
 # the combined stdout is split per query on Profile's trailing timing
 # line. Plans are taken with raw scans (no warm-mode checkpoint), so
 # PushedFilters / ReadSchema at the parquet scan stay auditable.
+# Session counters are normalised away: expression ids (`#123`), RDD
+# ids and call sites (`MapPartitionsRDD[45] at localCheckpoint at
+# Graph.scala:1388` becomes `MapPartitionsRDD[] at localCheckpoint`),
+# exchange plan ids (`plan_id=7`) and random temp-dir suffixes, so
+# `diff -r` of a before and an after dump is empty for a change that
+# leaves the plans alone. Dump each side into its own outDir with the
+# same suffix, so the file names match:
+#   tools/dump_plans.sh <parentCheckout> /tmp/plans/before p q1,q2
+#   tools/dump_plans.sh .                /tmp/plans/after  p q1,q2
+#   diff -r /tmp/plans/before /tmp/plans/after
 set -e
 REPO=${1:?repo dir}
 OUT=${2:?out dir}
@@ -23,6 +33,11 @@ import re, sys, os
 out, suffix, queries = sys.argv[1], sys.argv[2], sys.argv[3].split(',')
 text = open(os.path.join(out, f"_combined_{suffix}.txt")).read().splitlines()
 cur, buf = 0, []
+def norm(line):
+    line = re.sub(r"#\d+", "#", line)
+    line = re.sub(r"RDD\[\d+\]( at \w+)?( at \S+\.scala:\d+)?", r"RDD[]\1", line)
+    line = re.sub(r"plan_id=\d+", "plan_id=", line)
+    return re.sub(r"(/tmp/[^/\s\]]*?)\d{6,}", r"\1", line)
 for line in text:
     # Profile ends each query with "<name><spaces><seconds...>"
     if cur < len(queries) and re.match(rf"^{re.escape(queries[cur])}\s+[0-9 .]+$", line):
@@ -30,7 +45,7 @@ for line in text:
         print(f"wrote {queries[cur]}_{suffix}.txt ({len(buf)} lines)")
         cur, buf = cur + 1, []
     else:
-        buf.append(line)
+        buf.append(norm(line))
 assert cur == len(queries), f"split found {cur} of {len(queries)} sections"
 EOF
 rm -f "$OUT/_combined_$SUFFIX.txt"
