@@ -18,13 +18,10 @@ object Bench {
     // then one pass at the bench SF itself JITs the hot loops at real
     // data shapes — the timed pass below measures steady-state
     // throughput, not classloading or interpreter-tier execution.
-    // Optional comma-separated name filter (same contract as Verify's)
-    // for isolating one query's timing during plan work — applied to
+    // The SPARK_GRAFT_ONLY name filter (shared with Verify) applies to
     // the warm passes too, so an isolated run never pays a full-suite
     // warm pass at the bench SF.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = SparkEntry.selectedQueries
     // Between queries, drop per-query transient checkpoint blocks
     // (session-cached artifacts stay pinned — see Tables.releaseTransients).
     // Without this, ~12k block sets accumulate across 190 queries ×
@@ -45,13 +42,11 @@ object Bench {
     } catch { case _: Throwable => }
     // Locale.ROOT: the f interpolator is default-locale-sensitive — on
     // a comma-decimal locale the journal would write "1,23" and break
-    // every downstream parse. A query that THROWS logs a distinct
-    // "FAIL" tag (still with its wall-time), so a fast failure is
-    // never mistaken for a fast pass in the progress record.
-    def logProgress(tag: String, name: String, sec: Double): Unit =
+    // every downstream parse. One line: `tag name sec[ Root: msg]`.
+    def journal(tag: String, name: String, sec: Double, note: String = ""): Unit =
       try java.nio.file.Files.writeString(progressPath,
-        String.format(java.util.Locale.ROOT, "%s %s %.2f%n", tag, name,
-          Double.box(sec)),
+        String.format(java.util.Locale.ROOT, "%s %s %.2f%s%n", tag, name,
+          Double.box(sec), note),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
       catch { case _: Throwable => }
@@ -64,7 +59,7 @@ object Bench {
     val buildTimes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
     graft.sources.Tables.onArtifactBuild = { (key, sec) =>
       buildTimes.add(key -> sec)
-      logProgress("build", key.replace(' ', '_'), sec)
+      journal("build", key.replace(' ', '_'), sec)
     }
     // A FAIL line that records only wall-time is unattributable after
     // the fact (the r13 64x attempt-1 journal has seven ~400s dd FAILs
@@ -77,25 +72,22 @@ object Bench {
         .takeWhile(_ != '\n').take(160).replaceAll("\\s+", " ")
       s" ${root.getClass.getSimpleName}: $msg"
     }
-    def logFail(tag: String, name: String, sec: Double, e: Throwable): Unit =
-      try java.nio.file.Files.writeString(progressPath,
-        String.format(java.util.Locale.ROOT, "%s %s %.2f%s%n", tag, name,
-          Double.box(sec), errSummary(e)),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      catch { case _: Throwable => }
-    def timed1(tag: String, name: String, f: => Unit): Unit = {
+    // One timed call: an in-flight marker (-1.00, names a wedge), then
+    // the wall seconds under `tag`, or under `tag-FAIL` with the root
+    // cause if `f` throws, so a fast failure is never mistaken for a
+    // fast pass. Returns the seconds either way.
+    def timed(tag: String, name: String)(f: => Unit): Double = {
       val t0 = System.nanoTime()
-      logProgress(tag, name, -1.0) // in-flight marker: names a wedge
-      try { f; logProgress(tag, name, (System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable =>
-        logFail(s"$tag-FAIL", name, (System.nanoTime() - t0) / 1e9, e)
-      }
+      journal(tag, name, -1.0)
+      val err = try { f; None } catch { case e: Throwable => Some(e) }
+      val sec = (System.nanoTime() - t0) / 1e9
+      err.fold(journal(tag, name, sec))(e => journal(s"$tag-FAIL", name, sec, errSummary(e)))
+      sec
     }
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) {
       selected.foreach { case (name, fn) =>
-        timed1("warm-sf0.001", name, fn(spark, warmDir).count())
+        timed("warm-sf0.001", name)(fn(spark, warmDir).count())
         release()
       }
       // The sf0.001 pass exists only to compile codegen; its
@@ -109,7 +101,7 @@ object Bench {
     }
     if (!cold)
       selected.foreach { case (name, fn) =>
-        timed1("warm-bench-sf", name, fn(spark, sfDir).count())
+        timed("warm-bench-sf", name)(fn(spark, sfDir).count())
         release()
       }
     // Timed pass: N draws per query (median reported). The sandbox
@@ -121,18 +113,7 @@ object Bench {
     val iters = sys.env.get("SPARK_GRAFT_BENCH_ITERS").map(_.toInt)
       .getOrElse(if (cold) 1 else 3)
     val results = selected.map { case (name, fn) =>
-      val runs = (1 to iters).map { i =>
-        val t0 = System.nanoTime()
-        logProgress(s"timed-$i", name, -1.0)
-        val err = try { fn(spark, sfDir).count(); None }
-                  catch { case e: Throwable => Some(e) }
-        val s = (System.nanoTime() - t0) / 1e9
-        err match {
-          case None    => logProgress(s"timed-$i", name, s)
-          case Some(e) => logFail(s"timed-$i-FAIL", name, s, e)
-        }
-        s
-      }
+      val runs = (1 to iters).map(i => timed(s"timed-$i", name)(fn(spark, sfDir).count()))
       release()
       name -> runs
     }

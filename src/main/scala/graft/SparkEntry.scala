@@ -19,33 +19,32 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     operators.RelationalQueries.q01PricingSummary(spark, "/root/testdata/sf0.001")
+  /** A registry query: (session, SF dir) => result. */
+  type Query = (SparkSession, String) => DataFrame
+  /** Every query module's table, each module named once, merged. A
+    * table maps a query's name to its plan and to the equivalent ANSI SQL
+    * that DuckDB runs on the same parquet tables, so no query lacks an oracle. */
+  private lazy val table: Map[String, (Query, String)] = Seq(
+    operators.RelationalQueries.queryTable,
+    operators.BenchQueries.queryTable,
+    operators.FunctionQueries.queryTable,
+    llm.TextAnalysis.queryTable,
+    llm.Dedup.queryTable,
+    llm.Sampling.queryTable,
+    llm.Similarity.queryTable,
+    llm.Multimodal.queryTable,
+    llm.Pipeline.queryTable,
+    llm.Graph.queryTable,
+    llm.Models.queryTable,
+    streaming.WindowQueries.queryTable).flatten.toMap
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.RelationalQueries.registry ++
-      operators.BenchQueries.registry ++
-      operators.FunctionQueries.registry ++
-      llm.TextAnalysis.registry ++
-      llm.Dedup.registry ++
-      llm.Sampling.registry ++
-      llm.Similarity.registry ++
-      llm.Multimodal.registry ++
-      llm.Pipeline.registry ++
-      llm.Graph.registry ++
-      llm.Models.registry ++
-      streaming.WindowQueries.registry
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    operators.RelationalQueries.oracles ++
-      operators.BenchQueries.oracles ++
-      operators.FunctionQueries.oracles ++
-      llm.TextAnalysis.oracles ++
-      llm.Dedup.oracles ++
-      llm.Sampling.oracles ++
-      llm.Similarity.oracles ++
-      llm.Multimodal.oracles ++
-      llm.Pipeline.oracles ++
-      llm.Graph.oracles ++
-      llm.Models.oracles ++
-      streaming.WindowQueries.oracles
+  lazy val queries: Map[String, Query] = table.view.mapValues(_._1).toMap
+  /** The queries a run keeps: those named in the comma-separated
+    * `SPARK_GRAFT_ONLY` (a filter for isolating a few), or all if unset. */
+  def selectedQueries: Map[String, Query] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    queries.filter { case (n, _) => only.forall(_.contains(n)) }
+  }
+  /** For each key in queries, the DuckDB oracle SQL. */
+  lazy val oracleSql: Map[String, String] = table.view.mapValues(_._2).toMap
 }

@@ -7,12 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated name filter for fast local iteration.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.contains(n))
-    }
-    selected.foreach { case (name, fn) =>
+    SparkEntry.selectedQueries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -3593,95 +3593,51 @@ object Dedup {
        |  n_hot_classes
        |FROM d CROSS JOIN c""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_dd_winnow" -> (ddWinnow _),
-    "llm_dd_cluster_depth" -> (ddClusterDepth _),
-    "llm_dd_shingle_sweep" -> (ddShingleSweep _),
-    "llm_dd_detector_agreement" -> (ddDetectorAgreement _),
-    "llm_dd_df_spectrum" -> (ddDfSpectrum _),
-    "llm_dd_policy_mix_shift" -> (ddPolicyMixShift _),
-    "llm_dd_novelty_curve" -> (ddNoveltyCurve _),
-    "llm_dd_minhash_precision" -> (ddMinhashPrecision _),
-    "llm_dd_cluster_purity" -> (ddClusterPurity _),
-    "llm_dd_dup_length_bias" -> (ddDupLengthBias _),
-    "llm_dd_editdist" -> (ddEditDist _),
-    "llm_dd_soft_weights" -> (ddSoftWeights _),
-    "llm_dd_quality_prop" -> (ddQualityProp _),
-    "llm_dd_exact" -> (ddExact _),
-    "llm_dd_ngram_jaccard" -> (ddNgramJaccard _),
-    "llm_dd_minhash_sigs" -> (ddMinhashSigs _),
-    "llm_dd_minhash_lsh" -> (ddMinhashLsh _),
-    "llm_dd_lsh_tuning" -> (ddLshTuning _),
-    "llm_dd_source_sketch_overlap" -> (ddSourceSketchOverlap _),
-    "llm_dd_hash_collision_audit" -> (ddHashCollisionAudit _),
-    "llm_dd_threshold_sweep" -> (ddThresholdSweep _),
-    "llm_dd_simhash" -> (ddSimhash _),
-    "llm_dd_simhash_pairs" -> (ddSimhashPairs _),
-    "llm_dd_embedding_near" -> (ddEmbeddingNear _),
-    "llm_dd_embedding_lsh" -> (ddEmbeddingLsh _),
-    "llm_dd_embedding_lsh_recall" -> (ddEmbeddingLshRecall _),
-    "llm_dd_incremental_embedding" -> (ddIncrementalEmbedding _),
-    "llm_dd_cluster" -> (ddCluster _),
-    "llm_dd_cluster_sizes" -> (ddClusterSizes _),
-    "llm_dd_keep_best" -> (ddKeepBest _),
-    "llm_dd_lsh_recall" -> (ddLshRecall _),
-    "llm_dd_jaccard_est" -> (ddJaccardEst _),
-    "llm_dd_containment" -> (ddContainment _),
-    "llm_dd_incremental_near" -> (ddIncrementalNear _),
-    "llm_dd_minhash_k" -> (ddMinhashK _),
-    "llm_dd_boilerplate" -> (ddBoilerplate _),
-    "llm_dd_novelty" -> (ddNovelty _),
-    "llm_dd_decontaminate" -> (ddDecontaminate _),
-    "llm_dd_paragraphs" -> (ddParagraphs _),
-    "llm_dd_substring" -> (ddSubstring _),
-    "llm_dd_semantic" -> (ddSemantic _),
-    "llm_dd_incremental" -> (ddIncremental _),
-    "llm_dd_bloom_prefilter" -> (ddBloomPrefilter _),
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "llm_dd_winnow" -> (ddWinnow _, ddWinnowSql),
+    "llm_dd_cluster_depth" -> (ddClusterDepth _, ddClusterDepthSql),
+    "llm_dd_shingle_sweep" -> (ddShingleSweep _, ddShingleSweepSql),
+    "llm_dd_detector_agreement" -> (ddDetectorAgreement _, ddDetectorAgreementSql),
+    "llm_dd_df_spectrum" -> (ddDfSpectrum _, ddDfSpectrumSql),
+    "llm_dd_policy_mix_shift" -> (ddPolicyMixShift _, ddPolicyMixShiftSql),
+    "llm_dd_novelty_curve" -> (ddNoveltyCurve _, ddNoveltyCurveSql),
+    "llm_dd_minhash_precision" -> (ddMinhashPrecision _, ddMinhashPrecisionSql),
+    "llm_dd_cluster_purity" -> (ddClusterPurity _, ddClusterPuritySql),
+    "llm_dd_dup_length_bias" -> (ddDupLengthBias _, ddDupLengthBiasSql),
+    "llm_dd_editdist" -> (ddEditDist _, ddEditDistSql),
+    "llm_dd_soft_weights" -> (ddSoftWeights _, ddSoftWeightsSql),
+    "llm_dd_quality_prop" -> (ddQualityProp _, ddQualityPropSql),
+    "llm_dd_exact" -> (ddExact _, ddExactSql),
+    "llm_dd_ngram_jaccard" -> (ddNgramJaccard _, ddNgramJaccardSql),
+    "llm_dd_minhash_sigs" -> (ddMinhashSigs _, ddMinhashSigsSql),
+    "llm_dd_minhash_lsh" -> (ddMinhashLsh _, ddMinhashLshSql),
+    "llm_dd_lsh_tuning" -> (ddLshTuning _, ddLshTuningSql),
+    "llm_dd_source_sketch_overlap" -> (ddSourceSketchOverlap _, ddSourceSketchOverlapSql),
+    "llm_dd_hash_collision_audit" -> (ddHashCollisionAudit _, ddHashCollisionAuditSql),
+    "llm_dd_threshold_sweep" -> (ddThresholdSweep _, ddThresholdSweepSql),
+    "llm_dd_simhash" -> (ddSimhash _, ddSimhashSql),
+    "llm_dd_simhash_pairs" -> (ddSimhashPairs _, ddSimhashPairsSql),
+    "llm_dd_embedding_near" -> (ddEmbeddingNear _, ddEmbeddingNearSql),
+    "llm_dd_embedding_lsh" -> (ddEmbeddingLsh _, ddEmbeddingLshSql),
+    "llm_dd_embedding_lsh_recall" -> (ddEmbeddingLshRecall _, ddEmbeddingLshRecallSql),
+    "llm_dd_incremental_embedding" -> (ddIncrementalEmbedding _, ddIncrementalEmbeddingSql),
+    "llm_dd_cluster" -> (ddCluster _, ddClusterSql),
+    "llm_dd_cluster_sizes" -> (ddClusterSizes _, ddClusterSizesSql),
+    "llm_dd_keep_best" -> (ddKeepBest _, ddKeepBestSql),
+    "llm_dd_lsh_recall" -> (ddLshRecall _, ddLshRecallSql),
+    "llm_dd_jaccard_est" -> (ddJaccardEst _, ddJaccardEstSql),
+    "llm_dd_containment" -> (ddContainment _, ddContainmentSql),
+    "llm_dd_incremental_near" -> (ddIncrementalNear _, ddIncrementalNearSql),
+    "llm_dd_minhash_k" -> (ddMinhashK _, ddMinhashKSql),
+    "llm_dd_boilerplate" -> (ddBoilerplate _, ddBoilerplateSql),
+    "llm_dd_novelty" -> (ddNovelty _, ddNoveltySql),
+    "llm_dd_decontaminate" -> (ddDecontaminate _, ddDecontaminateSql),
+    "llm_dd_paragraphs" -> (ddParagraphs _, ddParagraphsSql),
+    "llm_dd_substring" -> (ddSubstring _, ddSubstringSql),
+    "llm_dd_semantic" -> (ddSemantic _, ddSemanticSql),
+    "llm_dd_incremental" -> (ddIncremental _, ddIncrementalSql),
+    "llm_dd_bloom_prefilter" -> (ddBloomPrefilter _, ddBloomPrefilterSql),
   )
-
-  val oracles: Map[String, String] = Map(
-    "llm_dd_winnow" -> ddWinnowSql,
-    "llm_dd_cluster_depth" -> ddClusterDepthSql,
-    "llm_dd_shingle_sweep" -> ddShingleSweepSql,
-    "llm_dd_detector_agreement" -> ddDetectorAgreementSql,
-    "llm_dd_df_spectrum" -> ddDfSpectrumSql,
-    "llm_dd_policy_mix_shift" -> ddPolicyMixShiftSql,
-    "llm_dd_novelty_curve" -> ddNoveltyCurveSql,
-    "llm_dd_minhash_precision" -> ddMinhashPrecisionSql,
-    "llm_dd_cluster_purity" -> ddClusterPuritySql,
-    "llm_dd_dup_length_bias" -> ddDupLengthBiasSql,
-    "llm_dd_soft_weights" -> ddSoftWeightsSql,
-    "llm_dd_quality_prop" -> ddQualityPropSql,
-    "llm_dd_exact" -> ddExactSql,
-    "llm_dd_ngram_jaccard" -> ddNgramJaccardSql,
-    "llm_dd_minhash_sigs" -> ddMinhashSigsSql,
-    "llm_dd_minhash_lsh" -> ddMinhashLshSql,
-    "llm_dd_lsh_tuning" -> ddLshTuningSql,
-    "llm_dd_source_sketch_overlap" -> ddSourceSketchOverlapSql,
-    "llm_dd_hash_collision_audit" -> ddHashCollisionAuditSql,
-    "llm_dd_threshold_sweep" -> ddThresholdSweepSql,
-    "llm_dd_simhash" -> ddSimhashSql,
-    "llm_dd_simhash_pairs" -> ddSimhashPairsSql,
-    "llm_dd_embedding_near" -> ddEmbeddingNearSql,
-    "llm_dd_embedding_lsh" -> ddEmbeddingLshSql,
-    "llm_dd_embedding_lsh_recall" -> ddEmbeddingLshRecallSql,
-    "llm_dd_incremental_embedding" -> ddIncrementalEmbeddingSql,
-    "llm_dd_cluster" -> ddClusterSql,
-    "llm_dd_cluster_sizes" -> ddClusterSizesSql,
-    "llm_dd_keep_best" -> ddKeepBestSql,
-    "llm_dd_lsh_recall" -> ddLshRecallSql,
-    "llm_dd_jaccard_est" -> ddJaccardEstSql,
-    "llm_dd_containment" -> ddContainmentSql,
-    "llm_dd_incremental_near" -> ddIncrementalNearSql,
-    "llm_dd_minhash_k" -> ddMinhashKSql,
-    "llm_dd_boilerplate" -> ddBoilerplateSql,
-    "llm_dd_novelty" -> ddNoveltySql,
-    "llm_dd_decontaminate" -> ddDecontaminateSql,
-    "llm_dd_paragraphs" -> ddParagraphsSql,
-    "llm_dd_substring" -> ddSubstringSql,
-    "llm_dd_semantic" -> ddSemanticSql,
-    "llm_dd_incremental" -> ddIncrementalSql,
-    "llm_dd_bloom_prefilter" -> ddBloomPrefilterSql,
-    "llm_dd_editdist" -> ddEditDistSql,
-  )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

@@ -1708,45 +1708,26 @@ object Graph {
        |ORDER BY n_members DESC, community_id""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_graph_lpa" -> (lpa _),
-    "llm_graph_eff_diameter" -> (effDiameter _),
-    "llm_graph_degree_gini" -> (degreeGini _),
-    "llm_graph_bfs_hops" -> (bfsHops _),
-    "llm_graph_powerlaw_alpha" -> (powerlawAlpha _),
-    "llm_graph_reciprocity" -> (reciprocity _),
-    "llm_graph_link_pred" -> (linkPred _),
-    "llm_graph_assortativity" -> (assortativity _),
-    "llm_graph_kcore" -> (kcore _),
-    "llm_graph_cc" -> (cc _),
-    "llm_graph_pagerank" -> (pagerank _),
-    "llm_graph_degree" -> (degree _),
-    "llm_graph_triangles" -> (triangles _),
-    "llm_graph_local_cc" -> (localClusteringCoeff _),
-    "llm_graph_edge_weights" -> (edgeWeights _),
-    "llm_graph_hits" -> (hits _),
-    "llm_graph_rich_club" -> (richClub _),
-    "llm_graph_modularity" -> (modularity _),
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "llm_graph_lpa" -> (lpa _, lpaSql),
+    "llm_graph_eff_diameter" -> (effDiameter _, effDiameterSql),
+    "llm_graph_degree_gini" -> (degreeGini _, degreeGiniSql),
+    "llm_graph_bfs_hops" -> (bfsHops _, bfsHopsSql),
+    "llm_graph_powerlaw_alpha" -> (powerlawAlpha _, powerlawAlphaSql),
+    "llm_graph_reciprocity" -> (reciprocity _, reciprocitySql),
+    "llm_graph_link_pred" -> (linkPred _, linkPredSql),
+    "llm_graph_assortativity" -> (assortativity _, assortativitySql),
+    "llm_graph_kcore" -> (kcore _, kcoreSql),
+    "llm_graph_cc" -> (cc _, ccSql),
+    "llm_graph_pagerank" -> (pagerank _, pagerankSql),
+    "llm_graph_degree" -> (degree _, degreeSql),
+    "llm_graph_triangles" -> (triangles _, trianglesSql),
+    "llm_graph_local_cc" -> (localClusteringCoeff _, localCcSql),
+    "llm_graph_edge_weights" -> (edgeWeights _, edgeWeightsSql),
+    "llm_graph_hits" -> (hits _, hitsSql),
+    "llm_graph_rich_club" -> (richClub _, richClubSql),
+    "llm_graph_modularity" -> (modularity _, modularitySql),
   )
-
-  val oracles: Map[String, String] = Map(
-    "llm_graph_lpa" -> lpaSql,
-    "llm_graph_eff_diameter" -> effDiameterSql,
-    "llm_graph_degree_gini" -> degreeGiniSql,
-    "llm_graph_bfs_hops" -> bfsHopsSql,
-    "llm_graph_powerlaw_alpha" -> powerlawAlphaSql,
-    "llm_graph_reciprocity" -> reciprocitySql,
-    "llm_graph_link_pred" -> linkPredSql,
-    "llm_graph_assortativity" -> assortativitySql,
-    "llm_graph_kcore" -> kcoreSql,
-    "llm_graph_cc" -> ccSql,
-    "llm_graph_pagerank" -> pagerankSql,
-    "llm_graph_degree" -> degreeSql,
-    "llm_graph_triangles" -> trianglesSql,
-    "llm_graph_local_cc" -> localCcSql,
-    "llm_graph_edge_weights" -> edgeWeightsSql,
-    "llm_graph_hits" -> hitsSql,
-    "llm_graph_rich_club" -> richClubSql,
-    "llm_graph_modularity" -> modularitySql,
-  )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

@@ -1930,47 +1930,27 @@ object Models {
        |FROM a""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_models_ece" -> (ece _),
-    "llm_models_cost_curve" -> (costCurve _),
-    "llm_models_bootstrap_auc" -> (bootstrapAuc _),
-    "llm_models_gains" -> (gains _),
-    "llm_models_hosmer" -> (hosmer _),
-    "llm_models_psi" -> (psi _),
-    "llm_models_mcnemar" -> (mcnemar _),
-    "llm_models_fairness_audit" -> (fairnessAudit _),
-    "llm_models_auc" -> (auc _),
-    "llm_ta_ridge" -> (ridge _),
-    "llm_ta_logreg" -> (logreg _),
-    "llm_models_calibration" -> (calibration _),
-    "llm_models_pr" -> (prSummary _),
-    "llm_models_brier" -> (brier _),
-    "llm_models_ks" -> (ks _),
-    "llm_models_confusion" -> (confusion _),
-    "llm_models_youden" -> (youden _),
-    "llm_models_learning_curve" -> (learningCurve _),
-    "llm_models_threshold_sweep" -> (thresholdSweep _),
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "llm_models_ece" -> (ece _, eceSql),
+    "llm_models_cost_curve" -> (costCurve _, costCurveSql),
+    "llm_models_bootstrap_auc" -> (bootstrapAuc _, bootstrapAucSql),
+    "llm_models_gains" -> (gains _, gainsSql),
+    "llm_models_hosmer" -> (hosmer _, hosmerSql),
+    "llm_models_psi" -> (psi _, psiSql),
+    "llm_models_mcnemar" -> (mcnemar _, mcnemarSql),
+    "llm_models_fairness_audit" -> (fairnessAudit _, fairnessAuditSql),
+    "llm_models_auc" -> (auc _, aucSql),
+    "llm_ta_ridge" -> (ridge _, ridgeSql),
+    "llm_ta_logreg" -> (logreg _, logregSql),
+    "llm_models_calibration" -> (calibration _, calibrationSql),
+    "llm_models_pr" -> (prSummary _, prSummarySql),
+    "llm_models_brier" -> (brier _, brierSql),
+    "llm_models_ks" -> (ks _, ksSql),
+    "llm_models_confusion" -> (confusion _, confusionSql),
+    "llm_models_youden" -> (youden _, youdenSql),
+    "llm_models_learning_curve" -> (learningCurve _, learningCurveSql),
+    "llm_models_threshold_sweep" -> (thresholdSweep _, thresholdSweepSql),
   )
-
-  val oracles: Map[String, String] = Map(
-    "llm_models_cost_curve" -> costCurveSql,
-    "llm_models_youden" -> youdenSql,
-    "llm_models_bootstrap_auc" -> bootstrapAucSql,
-    "llm_models_gains" -> gainsSql,
-    "llm_models_hosmer" -> hosmerSql,
-    "llm_models_psi" -> psiSql,
-    "llm_models_mcnemar" -> mcnemarSql,
-    "llm_models_fairness_audit" -> fairnessAuditSql,
-    "llm_models_ece" -> eceSql,
-    "llm_ta_ridge" -> ridgeSql,
-    "llm_ta_logreg" -> logregSql,
-    "llm_models_calibration" -> calibrationSql,
-    "llm_models_auc" -> aucSql,
-    "llm_models_pr" -> prSummarySql,
-    "llm_models_brier" -> brierSql,
-    "llm_models_ks" -> ksSql,
-    "llm_models_confusion" -> confusionSql,
-    "llm_models_learning_curve" -> learningCurveSql,
-    "llm_models_threshold_sweep" -> thresholdSweepSql,
-  )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

@@ -1216,49 +1216,28 @@ object Multimodal {
        |FROM (SELECT * FROM sm UNION ALL SELECT * FROM ch)
        |ORDER BY hamming""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_mm_hamming_hist" -> (mmHammingHist _),
-    "llm_mm_resolution_tiers" -> (mmResolutionTiers _),
-    "llm_mm_caption_stats" -> (mmCaptionStats _),
-    "llm_mm_duration_mix" -> (mmDurationMix _),
-    "llm_mm_band_occupancy" -> (mmBandOccupancy _),
-    "llm_mm_scene_segments" -> (mmSceneSegments _),
-    "llm_mm_frame_dedup" -> (mmFrameDedup _),
-    "llm_mm_magic_router" -> (mmMagicRouter _),
-    "llm_mm_phash" -> (mmPhash _),
-    "llm_mm_aspect_buckets" -> (mmAspectBuckets _),
-    "llm_mm_source_mix" -> (mmSourceMix _),
-    "llm_mm_size_percentiles" -> (mmSizePercentiles _),
-    "llm_mm_metadata" -> (mmMetadata _),
-    "llm_mm_chunk_dedup" -> (mmChunkDedup _),
-    "llm_mm_dedup" -> (mmDedup _),
-    "llm_mm_frames" -> (mmFrames _),
-    "llm_mm_resize" -> (mmResize _),
-    "llm_mm_audio" -> (mmAudio _),
-    "llm_mm_clip_filter" -> (mmClipFilter _),
-    "llm_mm_byte_stats" -> (mmByteStats _),
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "llm_mm_hamming_hist" -> (mmHammingHist _, mmHammingHistSql),
+    "llm_mm_resolution_tiers" -> (mmResolutionTiers _, mmResolutionTiersSql),
+    "llm_mm_caption_stats" -> (mmCaptionStats _, mmCaptionStatsSql),
+    "llm_mm_duration_mix" -> (mmDurationMix _, mmDurationMixSql),
+    "llm_mm_band_occupancy" -> (mmBandOccupancy _, mmBandOccupancySql),
+    "llm_mm_scene_segments" -> (mmSceneSegments _, mmSceneSegmentsSql),
+    "llm_mm_frame_dedup" -> (mmFrameDedup _, mmFrameDedupSql),
+    "llm_mm_magic_router" -> (mmMagicRouter _, mmMagicRouterSql),
+    "llm_mm_phash" -> (mmPhash _, mmPhashSql),
+    "llm_mm_aspect_buckets" -> (mmAspectBuckets _, mmAspectBucketsSql),
+    "llm_mm_source_mix" -> (mmSourceMix _, mmSourceMixSql),
+    "llm_mm_size_percentiles" -> (mmSizePercentiles _, mmSizePercentilesSql),
+    "llm_mm_metadata" -> (mmMetadata _, mmMetadataSql),
+    "llm_mm_chunk_dedup" -> (mmChunkDedup _, mmChunkDedupSql),
+    "llm_mm_dedup" -> (mmDedup _, mmDedupSql),
+    "llm_mm_frames" -> (mmFrames _, mmFramesSql),
+    "llm_mm_resize" -> (mmResize _, mmResizeSql),
+    "llm_mm_audio" -> (mmAudio _, mmAudioSql),
+    "llm_mm_clip_filter" -> (mmClipFilter _, mmClipFilterSql),
+    "llm_mm_byte_stats" -> (mmByteStats _, mmByteStatsSql),
   )
-
-  val oracles: Map[String, String] = Map(
-    "llm_mm_resolution_tiers" -> mmResolutionTiersSql,
-    "llm_mm_caption_stats" -> mmCaptionStatsSql,
-    "llm_mm_duration_mix" -> mmDurationMixSql,
-    "llm_mm_band_occupancy" -> mmBandOccupancySql,
-    "llm_mm_hamming_hist" -> mmHammingHistSql,
-    "llm_mm_scene_segments" -> mmSceneSegmentsSql,
-    "llm_mm_frame_dedup" -> mmFrameDedupSql,
-    "llm_mm_magic_router" -> mmMagicRouterSql,
-    "llm_mm_phash" -> mmPhashSql,
-    "llm_mm_aspect_buckets" -> mmAspectBucketsSql,
-    "llm_mm_source_mix" -> mmSourceMixSql,
-    "llm_mm_size_percentiles" -> mmSizePercentilesSql,
-    "llm_mm_metadata" -> mmMetadataSql,
-    "llm_mm_chunk_dedup" -> mmChunkDedupSql,
-    "llm_mm_dedup" -> mmDedupSql,
-    "llm_mm_frames" -> mmFramesSql,
-    "llm_mm_resize" -> mmResizeSql,
-    "llm_mm_audio" -> mmAudioSql,
-    "llm_mm_clip_filter" -> mmClipFilterSql,
-    "llm_mm_byte_stats" -> mmByteStatsSql,
-  )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

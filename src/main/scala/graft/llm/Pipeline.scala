@@ -1809,69 +1809,38 @@ object Pipeline {
       |    AS inc_share
       |FROM c ORDER BY day_start_us""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_pipeline_ivm_cost" -> (ivmCost _),
-    "llm_pipeline_shard_affinity" -> (shardAffinity _),
-    "llm_pipeline_quota_fill" -> (quotaFill _),
-    "llm_pipeline_retention" -> (retention _),
-    "llm_pipeline_embedding_coverage" -> (embeddingCoverage _),
-    "llm_pipeline_dedup_ledger" -> (dedupLedger _),
-    "llm_pipeline_eff_tokens" -> (effTokens _),
-    "llm_pipeline_snapshot_diff" -> (snapshotDiff _),
-    "llm_pipeline_validate" -> (validate _),
-    "llm_pipeline_curriculum" -> (curriculum _),
-    "llm_pipeline_curate" -> (curate _),
-    "llm_pipeline_dup_sources" -> (dupSources _),
-    "llm_pipeline_attrition" -> (attrition _),
-    "llm_pipeline_shard_sizes" -> (shardSizes _),
-    "llm_pipeline_pack" -> (pack _),
-    "llm_pipeline_split" -> (leakageSafeSplit _),
-    "llm_pipeline_e2e" -> (e2e _),
-    "llm_pipeline_shuffle" -> (shuffleOrder _),
-    "llm_pipeline_drift" -> (drift _),
-    "llm_pipeline_budget" -> (budget _),
-    "llm_pipeline_epoch_plan" -> (epochPlan _),
-    "llm_pipeline_source_overlap" -> (sourceOverlap _),
-    "llm_pipeline_split_audit" -> (splitAudit _),
-    "llm_pipeline_zorder" -> (zorder _),
-    "llm_pipeline_compaction" -> (compaction _),
-    "llm_pipeline_skipping" -> (skipping _),
-    "llm_pipeline_manifest" -> (manifest _),
-    "llm_pipeline_cdc_merge" -> (cdcMerge _),
-    "llm_pipeline_dataset_card" -> (datasetCard _),
-    "llm_pipeline_manifest_diff" -> (manifestDiff _),
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "llm_pipeline_ivm_cost" -> (ivmCost _, ivmCostSql),
+    "llm_pipeline_shard_affinity" -> (shardAffinity _, shardAffinitySql),
+    "llm_pipeline_quota_fill" -> (quotaFill _, quotaFillSql),
+    "llm_pipeline_retention" -> (retention _, retentionSql),
+    "llm_pipeline_embedding_coverage" -> (embeddingCoverage _, embeddingCoverageSql),
+    "llm_pipeline_dedup_ledger" -> (dedupLedger _, dedupLedgerSql),
+    "llm_pipeline_eff_tokens" -> (effTokens _, effTokensSql),
+    "llm_pipeline_snapshot_diff" -> (snapshotDiff _, snapshotDiffSql),
+    "llm_pipeline_validate" -> (validate _, validateSql),
+    "llm_pipeline_curriculum" -> (curriculum _, curriculumSql),
+    "llm_pipeline_curate" -> (curate _, curateSql),
+    "llm_pipeline_dup_sources" -> (dupSources _, dupSourcesSql),
+    "llm_pipeline_attrition" -> (attrition _, attritionSql),
+    "llm_pipeline_shard_sizes" -> (shardSizes _, shardSizesSql),
+    "llm_pipeline_pack" -> (pack _, packSql),
+    "llm_pipeline_split" -> (leakageSafeSplit _, splitSql),
+    "llm_pipeline_e2e" -> (e2e _, e2eSql),
+    "llm_pipeline_shuffle" -> (shuffleOrder _, shuffleOrderSql),
+    "llm_pipeline_drift" -> (drift _, driftSql),
+    "llm_pipeline_budget" -> (budget _, budgetSql),
+    "llm_pipeline_epoch_plan" -> (epochPlan _, epochPlanSql),
+    "llm_pipeline_source_overlap" -> (sourceOverlap _, sourceOverlapSql),
+    "llm_pipeline_split_audit" -> (splitAudit _, splitAuditSql),
+    "llm_pipeline_zorder" -> (zorder _, zorderSql),
+    "llm_pipeline_compaction" -> (compaction _, compactionSql),
+    "llm_pipeline_skipping" -> (skipping _, skippingSql),
+    "llm_pipeline_manifest" -> (manifest _, manifestSql),
+    "llm_pipeline_cdc_merge" -> (cdcMerge _, cdcMergeSql),
+    "llm_pipeline_dataset_card" -> (datasetCard _, datasetCardSql),
+    "llm_pipeline_manifest_diff" -> (manifestDiff _, manifestDiffSql),
   )
-
-  val oracles: Map[String, String] = Map(
-    "llm_pipeline_ivm_cost" -> ivmCostSql,
-    "llm_pipeline_shard_affinity" -> shardAffinitySql,
-    "llm_pipeline_quota_fill" -> quotaFillSql,
-    "llm_pipeline_retention" -> retentionSql,
-    "llm_pipeline_curriculum" -> curriculumSql,
-    "llm_pipeline_curate" -> curateSql,
-    "llm_pipeline_dup_sources" -> dupSourcesSql,
-    "llm_pipeline_attrition" -> attritionSql,
-    "llm_pipeline_shard_sizes" -> shardSizesSql,
-    "llm_pipeline_pack" -> packSql,
-    "llm_pipeline_split" -> splitSql,
-    "llm_pipeline_e2e" -> e2eSql,
-    "llm_pipeline_shuffle" -> shuffleOrderSql,
-    "llm_pipeline_drift" -> driftSql,
-    "llm_pipeline_budget" -> budgetSql,
-    "llm_pipeline_epoch_plan" -> epochPlanSql,
-    "llm_pipeline_source_overlap" -> sourceOverlapSql,
-    "llm_pipeline_split_audit" -> splitAuditSql,
-    "llm_pipeline_snapshot_diff" -> snapshotDiffSql,
-    "llm_pipeline_eff_tokens" -> effTokensSql,
-    "llm_pipeline_dedup_ledger" -> dedupLedgerSql,
-    "llm_pipeline_validate" -> validateSql,
-    "llm_pipeline_zorder" -> zorderSql,
-    "llm_pipeline_compaction" -> compactionSql,
-    "llm_pipeline_skipping" -> skippingSql,
-    "llm_pipeline_manifest" -> manifestSql,
-    "llm_pipeline_cdc_merge" -> cdcMergeSql,
-    "llm_pipeline_dataset_card" -> datasetCardSql,
-    "llm_pipeline_manifest_diff" -> manifestDiffSql,
-    "llm_pipeline_embedding_coverage" -> embeddingCoverageSql,
-  )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

@@ -1462,53 +1462,30 @@ object Sampling {
        |  k.min_quality_kept
        |FROM t JOIN k ON t.lang = k.lang ORDER BY t.lang""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_sample_group_kfold" -> (sampleGroupKfold _),
-    "llm_sample_lang_quota" -> (sampleLangQuota _),
-    "llm_sample_coverage_audit" -> (sampleCoverageAudit _),
-    "llm_sample_temperature_sweep" -> (sampleTemperatureSweep _),
-    "llm_sample_ht" -> (sampleHt _),
-    "llm_sample_alloc_variance" -> (sampleAllocVariance _),
-    "llm_sample_deff" -> (sampleDeff _),
-    "llm_sample_pps" -> (samplePps _),
-    "llm_sample_ess" -> (sampleEss _),
-    "llm_sample_clip_sweep" -> (sampleClipSweep _),
-    "llm_sample_dedup_weights" -> (sampleDedupWeights _),
-    "llm_sample_kfold" -> (sampleKfold _),
-    "llm_sample_bootstrap" -> (sampleBootstrap _),
-    "llm_sample_es_topk" -> (sampleEsTopK _),
-    "llm_sample_hash" -> (sampleHash _),
-    "llm_sample_stratified" -> (sampleStratified _),
-    "llm_sample_weighted" -> (sampleWeighted _),
-    "llm_sample_mixture" -> (sampleMixture _),
-    "llm_sample_resample" -> (sampleResample _),
-    "llm_sample_lang_balance" -> (sampleLangBalance _),
-    "llm_sample_dsir" -> (sampleDsir _),
-    "llm_sample_neyman" -> (sampleNeyman _),
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "llm_sample_group_kfold" -> (sampleGroupKfold _, sampleGroupKfoldSql),
+    "llm_sample_lang_quota" -> (sampleLangQuota _, sampleLangQuotaSql),
+    "llm_sample_coverage_audit" -> (sampleCoverageAudit _, sampleCoverageAuditSql),
+    "llm_sample_temperature_sweep" -> (sampleTemperatureSweep _, sampleTemperatureSweepSql),
+    "llm_sample_ht" -> (sampleHt _, sampleHtSql),
+    "llm_sample_alloc_variance" -> (sampleAllocVariance _, sampleAllocVarianceSql),
+    "llm_sample_deff" -> (sampleDeff _, sampleDeffSql),
+    "llm_sample_pps" -> (samplePps _, samplePpsSql),
+    "llm_sample_ess" -> (sampleEss _, sampleEssSql),
+    "llm_sample_clip_sweep" -> (sampleClipSweep _, sampleClipSweepSql),
+    "llm_sample_dedup_weights" -> (sampleDedupWeights _, sampleDedupWeightsSql),
+    "llm_sample_kfold" -> (sampleKfold _, sampleKfoldSql),
+    "llm_sample_bootstrap" -> (sampleBootstrap _, sampleBootstrapSql),
+    "llm_sample_es_topk" -> (sampleEsTopK _, sampleEsTopKSql),
+    "llm_sample_hash" -> (sampleHash _, sampleHashSql),
+    "llm_sample_stratified" -> (sampleStratified _, sampleStratifiedSql),
+    "llm_sample_weighted" -> (sampleWeighted _, sampleWeightedSql),
+    "llm_sample_mixture" -> (sampleMixture _, sampleMixtureSql),
+    "llm_sample_resample" -> (sampleResample _, sampleResampleSql),
+    "llm_sample_lang_balance" -> (sampleLangBalance _, sampleLangBalanceSql),
+    "llm_sample_dsir" -> (sampleDsir _, sampleDsirSql),
+    "llm_sample_neyman" -> (sampleNeyman _, sampleNeymanSql),
   )
-
-  val oracles: Map[String, String] = Map(
-    "llm_sample_group_kfold" -> sampleGroupKfoldSql,
-    "llm_sample_lang_quota" -> sampleLangQuotaSql,
-    "llm_sample_coverage_audit" -> sampleCoverageAuditSql,
-    "llm_sample_temperature_sweep" -> sampleTemperatureSweepSql,
-    "llm_sample_ht" -> sampleHtSql,
-    "llm_sample_alloc_variance" -> sampleAllocVarianceSql,
-    "llm_sample_deff" -> sampleDeffSql,
-    "llm_sample_pps" -> samplePpsSql,
-    "llm_sample_ess" -> sampleEssSql,
-    "llm_sample_clip_sweep" -> sampleClipSweepSql,
-    "llm_sample_dedup_weights" -> sampleDedupWeightsSql,
-    "llm_sample_kfold" -> sampleKfoldSql,
-    "llm_sample_bootstrap" -> sampleBootstrapSql,
-    "llm_sample_es_topk" -> sampleEsTopKSql,
-    "llm_sample_hash" -> sampleHashSql,
-    "llm_sample_stratified" -> sampleStratifiedSql,
-    "llm_sample_weighted" -> sampleWeightedSql,
-    "llm_sample_mixture" -> sampleMixtureSql,
-    "llm_sample_resample" -> sampleResampleSql,
-    "llm_sample_lang_balance" -> sampleLangBalanceSql,
-    "llm_sample_dsir" -> sampleDsirSql,
-    "llm_sample_neyman" -> sampleNeymanSql,
-  )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

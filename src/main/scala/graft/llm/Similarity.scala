@@ -3131,97 +3131,52 @@ object Similarity {
        |    ELSE -CAST(k AS DOUBLE) / lsum END, 6) AS lid
        |FROM a ORDER BY q_id""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_ss_query_hardness" -> (ssQueryHardness _),
-    "llm_ss_silhouette" -> (ssSilhouette _),
-    "llm_ss_cosine_histogram" -> (ssCosineHistogram _),
-    "llm_ss_ndcg" -> (ssNdcg _),
-    "llm_ss_range_search" -> (ssRangeSearch _),
-    "llm_ss_mips" -> (ssMips _),
-    "llm_ss_rerank" -> (ssRerank _),
-    "llm_ss_filtered_ann" -> (ssFilteredAnn _),
-    "llm_ss_graph_ann" -> (ssGraphAnn _),
-    "llm_ss_mmr" -> (ssMmr _),
-    "llm_ss_binary_hamming" -> (ssBinaryHamming _),
-    "llm_ss_centroid_shift" -> (ssCentroidShift _),
-    "llm_ss_pca" -> (ssPca _),
-    "llm_ss_knn_join" -> (ssKnnJoin _),
-    "llm_ss_topk" -> (ssTopk _),
-    "llm_ss_margin" -> (ssMargin _),
-    "llm_ss_knn_purity" -> (ssKnnPurity _),
-    "llm_ss_hard_negatives" -> (ssHardNegatives _),
-    "llm_ss_lsh_bucket" -> (ssLshBucket _),
-    "llm_ss_lsh_probe" -> (ssLshProbe _),
-    "llm_ss_ivf_index" -> (ssIvfIndex _),
-    "llm_ss_ivf_search" -> (ssIvfSearch _),
-    "llm_ss_ivf_probe" -> (ssIvfProbe _),
-    "llm_ss_ivf_balance" -> (ssIvfBalance _),
-    "llm_ss_sq8" -> (ssSq8 _),
-    "llm_ss_sq8_search" -> (ssSq8Search _),
-    "llm_ss_recall" -> (ssRecall _),
-    "llm_ss_ivf_nprobe_sweep" -> (ssIvfNprobeSweep _),
-    "llm_ss_kmeans" -> (ssKmeans _),
-    "llm_ss_kmeans_iter" -> (ssKmeansIter _),
-    "llm_ss_kmeans_ari" -> (ssKmeansAri _),
-    "llm_ss_dim_audit" -> (ssDimAudit _),
-    "llm_ss_norm_audit" -> (ssNormAudit _),
-    "llm_ss_pq_distortion" -> (ssPqDistortion _),
-    "llm_ss_pq_encode" -> (ssPqEncode _),
-    "llm_ss_pq_search" -> (ssPqSearch _),
-    "llm_ss_pq_train" -> (ssPqTrain _),
-    "llm_ss_pq_encode_trained" -> (ssPqEncodeTrained _),
-    "llm_ss_pq_search_trained" -> (ssPqSearchTrained _),
-    "llm_ss_ivfpq" -> (ssIvfPq _),
-    "llm_ss_ivf_kmeans" -> (ssIvfKmeans _),
-    "llm_ss_outliers" -> (ssOutliers _),
-    "llm_ss_dim_stats" -> (ssDimStats _),
-    "llm_ss_anisotropy" -> (ssAnisotropy _),
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "llm_ss_query_hardness" -> (ssQueryHardness _, ssQueryHardnessSql),
+    "llm_ss_silhouette" -> (ssSilhouette _, ssSilhouetteSql),
+    "llm_ss_cosine_histogram" -> (ssCosineHistogram _, ssCosineHistogramSql),
+    "llm_ss_ndcg" -> (ssNdcg _, ssNdcgSql),
+    "llm_ss_range_search" -> (ssRangeSearch _, ssRangeSearchSql),
+    "llm_ss_mips" -> (ssMips _, ssMipsSql),
+    "llm_ss_rerank" -> (ssRerank _, ssRerankSql),
+    "llm_ss_filtered_ann" -> (ssFilteredAnn _, ssFilteredAnnSql),
+    "llm_ss_graph_ann" -> (ssGraphAnn _, ssGraphAnnSql),
+    "llm_ss_mmr" -> (ssMmr _, ssMmrSql),
+    "llm_ss_binary_hamming" -> (ssBinaryHamming _, ssBinaryHammingSql),
+    "llm_ss_centroid_shift" -> (ssCentroidShift _, ssCentroidShiftSql),
+    "llm_ss_pca" -> (ssPca _, ssPcaSql),
+    "llm_ss_knn_join" -> (ssKnnJoin _, ssKnnJoinSql),
+    "llm_ss_topk" -> (ssTopk _, ssTopkSql),
+    "llm_ss_margin" -> (ssMargin _, ssMarginSql),
+    "llm_ss_knn_purity" -> (ssKnnPurity _, ssKnnPuritySql),
+    "llm_ss_hard_negatives" -> (ssHardNegatives _, ssHardNegativesSql),
+    "llm_ss_lsh_bucket" -> (ssLshBucket _, ssLshBucketSql),
+    "llm_ss_lsh_probe" -> (ssLshProbe _, ssLshProbeSql),
+    "llm_ss_ivf_index" -> (ssIvfIndex _, ssIvfIndexSql),
+    "llm_ss_ivf_search" -> (ssIvfSearch _, ssIvfSearchSql),
+    "llm_ss_ivf_probe" -> (ssIvfProbe _, ssIvfProbeSql),
+    "llm_ss_ivf_balance" -> (ssIvfBalance _, ssIvfBalanceSql),
+    "llm_ss_sq8" -> (ssSq8 _, ssSq8Sql),
+    "llm_ss_sq8_search" -> (ssSq8Search _, ssSq8SearchSql),
+    "llm_ss_recall" -> (ssRecall _, ssRecallSql),
+    "llm_ss_ivf_nprobe_sweep" -> (ssIvfNprobeSweep _, ssIvfNprobeSweepSql),
+    "llm_ss_kmeans" -> (ssKmeans _, ssKmeansSql),
+    "llm_ss_kmeans_iter" -> (ssKmeansIter _, ssKmeansIterSql),
+    "llm_ss_kmeans_ari" -> (ssKmeansAri _, ssKmeansAriSql),
+    "llm_ss_dim_audit" -> (ssDimAudit _, ssDimAuditSql),
+    "llm_ss_norm_audit" -> (ssNormAudit _, ssNormAuditSql),
+    "llm_ss_pq_distortion" -> (ssPqDistortion _, ssPqDistortionSql),
+    "llm_ss_pq_encode" -> (ssPqEncode _, ssPqEncodeSql),
+    "llm_ss_pq_search" -> (ssPqSearch _, ssPqSearchSql),
+    "llm_ss_pq_train" -> (ssPqTrain _, ssPqTrainSql),
+    "llm_ss_pq_encode_trained" -> (ssPqEncodeTrained _, ssPqEncodeTrainedSql),
+    "llm_ss_pq_search_trained" -> (ssPqSearchTrained _, ssPqSearchTrainedSql),
+    "llm_ss_ivfpq" -> (ssIvfPq _, ssIvfPqSql),
+    "llm_ss_ivf_kmeans" -> (ssIvfKmeans _, ssIvfKmeansSql),
+    "llm_ss_outliers" -> (ssOutliers _, ssOutliersSql),
+    "llm_ss_dim_stats" -> (ssDimStats _, ssDimStatsSql),
+    "llm_ss_anisotropy" -> (ssAnisotropy _, ssAnisotropySql),
   )
-
-  val oracles: Map[String, String] = Map(
-    "llm_ss_query_hardness" -> ssQueryHardnessSql,
-    "llm_ss_silhouette" -> ssSilhouetteSql,
-    "llm_ss_cosine_histogram" -> ssCosineHistogramSql,
-    "llm_ss_ndcg" -> ssNdcgSql,
-    "llm_ss_range_search" -> ssRangeSearchSql,
-    "llm_ss_mips" -> ssMipsSql,
-    "llm_ss_rerank" -> ssRerankSql,
-    "llm_ss_filtered_ann" -> ssFilteredAnnSql,
-    "llm_ss_graph_ann" -> ssGraphAnnSql,
-    "llm_ss_mmr" -> ssMmrSql,
-    "llm_ss_binary_hamming" -> ssBinaryHammingSql,
-    "llm_ss_pca" -> ssPcaSql,
-    "llm_ss_knn_join" -> ssKnnJoinSql,
-    "llm_ss_topk" -> ssTopkSql,
-    "llm_ss_margin" -> ssMarginSql,
-    "llm_ss_knn_purity" -> ssKnnPuritySql,
-    "llm_ss_hard_negatives" -> ssHardNegativesSql,
-    "llm_ss_lsh_bucket" -> ssLshBucketSql,
-    "llm_ss_lsh_probe" -> ssLshProbeSql,
-    "llm_ss_ivf_index" -> ssIvfIndexSql,
-    "llm_ss_ivf_search" -> ssIvfSearchSql,
-    "llm_ss_ivf_probe" -> ssIvfProbeSql,
-    "llm_ss_ivf_balance" -> ssIvfBalanceSql,
-    "llm_ss_sq8" -> ssSq8Sql,
-    "llm_ss_sq8_search" -> ssSq8SearchSql,
-    "llm_ss_recall" -> ssRecallSql,
-    "llm_ss_ivf_nprobe_sweep" -> ssIvfNprobeSweepSql,
-    "llm_ss_kmeans" -> ssKmeansSql,
-    "llm_ss_kmeans_iter" -> ssKmeansIterSql,
-    "llm_ss_kmeans_ari" -> ssKmeansAriSql,
-    "llm_ss_dim_audit" -> ssDimAuditSql,
-    "llm_ss_norm_audit" -> ssNormAuditSql,
-    "llm_ss_pq_distortion" -> ssPqDistortionSql,
-    "llm_ss_pq_encode" -> ssPqEncodeSql,
-    "llm_ss_pq_search" -> ssPqSearchSql,
-    "llm_ss_pq_train" -> ssPqTrainSql,
-    "llm_ss_pq_encode_trained" -> ssPqEncodeTrainedSql,
-    "llm_ss_pq_search_trained" -> ssPqSearchTrainedSql,
-    "llm_ss_ivfpq" -> ssIvfPqSql,
-    "llm_ss_ivf_kmeans" -> ssIvfKmeansSql,
-    "llm_ss_outliers" -> ssOutliersSql,
-    "llm_ss_dim_stats" -> ssDimStatsSql,
-    "llm_ss_centroid_shift" -> ssCentroidShiftSql,
-    "llm_ss_anisotropy" -> ssAnisotropySql,
-  )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

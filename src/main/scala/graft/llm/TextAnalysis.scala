@@ -2783,105 +2783,57 @@ object TextAnalysis {
       |  ROUND(CAST(a.n_long AS DOUBLE) / a.n_sent, 6) AS share_long
       |FROM pd JOIN a USING (lang) ORDER BY lang""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_ta_sentence_stats" -> (taSentenceStats _),
-    "llm_ta_ppl_buckets" -> (taPplBuckets _),
-    "llm_ta_bigram_entropy" -> (taBigramEntropy _),
-    "llm_ta_source_lexical_health" -> (taSourceLexicalHealth _),
-    "llm_ta_source_similarity" -> (taSourceSimilarity _),
-    "llm_ta_simpson" -> (taSimpson _),
-    "llm_ta_source_keywords" -> (taSourceKeywords _),
-    "llm_ta_vocab_growth" -> (taVocabGrowth _),
-    "llm_ta_char_classes" -> (taCharClasses _),
-    "llm_ta_burstiness" -> (taBurstiness _),
-    "llm_ta_rater_agreement" -> (taRaterAgreement _),
-    "llm_ta_inverted_index" -> (taInvertedIndex _),
-    "llm_ta_heavy_hitters" -> (taHeavyHitters _),
-    "llm_ta_code_detect" -> (taCodeDetect _),
-    "llm_ta_js_drift" -> (taJsDrift _),
-    "llm_ta_entropy" -> (taEntropy _),
-    "llm_ta_coverage" -> (taCoverage _),
-    "llm_ta_readability" -> (taReadability _),
-    "llm_ta_tokens" -> (taTokens _),
-    "llm_ta_fertility" -> (taFertility _),
-    "llm_ta_lang_id" -> (taLangId _),
-    "llm_ta_quality" -> (taQuality _),
-    "llm_ta_quality_calib" -> (taQualityCalib _),
-    "llm_ta_gopher_rules" -> (taGopherRules _),
-    "llm_ta_langid_confusion" -> (taLangIdConfusion _),
-    "llm_ta_feature_hash" -> (taFeatureHash _),
-    "llm_ta_fingerprint" -> (taFingerprint _),
-    "llm_ta_tfidf" -> (taTfidf _),
-    "llm_ta_bm25" -> (taBm25 _),
-    "llm_ta_redact" -> (taRedact _),
-    "llm_ta_repetition" -> (taRepetition _),
-    "llm_ta_vocab" -> (taVocab _),
-    "llm_ta_corpus_stats" -> (taCorpusStats _),
-    "llm_ta_zipf" -> (taZipf _),
-    "llm_ta_source_report" -> (taSourceReport _),
-    "llm_ta_oov" -> (taOov _),
-    "llm_ta_collocations" -> (taCollocations _),
-    "llm_ta_chunk" -> (taChunk _),
-    "llm_ta_length_hist" -> (taLengthHist _),
-    "llm_ta_lm_score" -> (taLmScore _),
-    "llm_ta_lm_filter" -> (taLmFilter _),
-    "llm_ta_lm_bigram" -> (taLmBigram _),
-    "llm_ta_lm_bigram_join" -> (taLmBigramJoin _),
-    "llm_ta_lm_bigram_backoff" -> (taLmBigramBackoff _),
-    "llm_ta_bpe_pairs" -> (taBpePairs _),
-    "llm_ta_bpe_train" -> (taBpeTrain _),
-    "llm_ta_bpe_encode" -> (taBpeEncode _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "llm_ta_sentence_stats" -> taSentenceStatsSql,
-    "llm_ta_ppl_buckets" -> taPplBucketsSql,
-    "llm_ta_bigram_entropy" -> taBigramEntropySql,
-    "llm_ta_source_lexical_health" -> taSourceLexicalHealthSql,
-    "llm_ta_source_similarity" -> taSourceSimilaritySql,
-    "llm_ta_simpson" -> taSimpsonSql,
-    "llm_ta_source_keywords" -> taSourceKeywordsSql,
-    "llm_ta_vocab_growth" -> taVocabGrowthSql,
-    "llm_ta_char_classes" -> taCharClassesSql,
-    "llm_ta_burstiness" -> taBurstinessSql,
-    "llm_ta_rater_agreement" -> taRaterAgreementSql,
-    "llm_ta_inverted_index" -> taInvertedIndexSql,
-    "llm_ta_heavy_hitters" -> taHeavyHittersSql,
-    "llm_ta_code_detect" -> taCodeDetectSql,
-    "llm_ta_js_drift" -> taJsDriftSql,
-    "llm_ta_entropy" -> taEntropySql,
-    "llm_ta_coverage" -> taCoverageSql,
-    "llm_ta_readability" -> taReadabilitySql,
-    "llm_ta_tokens" -> taTokensSql,
-    "llm_ta_fertility" -> taFertilitySql,
-    "llm_ta_lang_id" -> taLangIdSql,
-    "llm_ta_quality" -> taQualitySql,
-    "llm_ta_quality_calib" -> taQualityCalibSql,
-    "llm_ta_gopher_rules" -> taGopherRulesSql,
-    "llm_ta_langid_confusion" -> taLangIdConfusionSql,
-    "llm_ta_feature_hash" -> taFeatureHashSql,
-    "llm_ta_fingerprint" -> taFingerprintSql,
-    "llm_ta_tfidf" -> taTfidfSql,
-    "llm_ta_bm25" -> taBm25Sql,
-    "llm_ta_redact" -> taRedactSql,
-    "llm_ta_repetition" -> taRepetitionSql,
-    "llm_ta_vocab" -> taVocabSql,
-    "llm_ta_corpus_stats" -> taCorpusStatsSql,
-    "llm_ta_zipf" -> taZipfSql,
-    "llm_ta_source_report" -> taSourceReportSql,
-    "llm_ta_oov" -> taOovSql,
-    "llm_ta_collocations" -> taCollocationsSql,
-    "llm_ta_chunk" -> taChunkSql,
-    "llm_ta_length_hist" -> taLengthHistSql,
-    "llm_ta_lm_score" -> taLmScoreSql,
-    "llm_ta_lm_filter" -> taLmFilterSql,
-    "llm_ta_lm_bigram" -> taLmBigramSql,
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "llm_ta_sentence_stats" -> (taSentenceStats _, taSentenceStatsSql),
+    "llm_ta_ppl_buckets" -> (taPplBuckets _, taPplBucketsSql),
+    "llm_ta_bigram_entropy" -> (taBigramEntropy _, taBigramEntropySql),
+    "llm_ta_source_lexical_health" -> (taSourceLexicalHealth _, taSourceLexicalHealthSql),
+    "llm_ta_source_similarity" -> (taSourceSimilarity _, taSourceSimilaritySql),
+    "llm_ta_simpson" -> (taSimpson _, taSimpsonSql),
+    "llm_ta_source_keywords" -> (taSourceKeywords _, taSourceKeywordsSql),
+    "llm_ta_vocab_growth" -> (taVocabGrowth _, taVocabGrowthSql),
+    "llm_ta_char_classes" -> (taCharClasses _, taCharClassesSql),
+    "llm_ta_burstiness" -> (taBurstiness _, taBurstinessSql),
+    "llm_ta_rater_agreement" -> (taRaterAgreement _, taRaterAgreementSql),
+    "llm_ta_inverted_index" -> (taInvertedIndex _, taInvertedIndexSql),
+    "llm_ta_heavy_hitters" -> (taHeavyHitters _, taHeavyHittersSql),
+    "llm_ta_code_detect" -> (taCodeDetect _, taCodeDetectSql),
+    "llm_ta_js_drift" -> (taJsDrift _, taJsDriftSql),
+    "llm_ta_entropy" -> (taEntropy _, taEntropySql),
+    "llm_ta_coverage" -> (taCoverage _, taCoverageSql),
+    "llm_ta_readability" -> (taReadability _, taReadabilitySql),
+    "llm_ta_tokens" -> (taTokens _, taTokensSql),
+    "llm_ta_fertility" -> (taFertility _, taFertilitySql),
+    "llm_ta_lang_id" -> (taLangId _, taLangIdSql),
+    "llm_ta_quality" -> (taQuality _, taQualitySql),
+    "llm_ta_quality_calib" -> (taQualityCalib _, taQualityCalibSql),
+    "llm_ta_gopher_rules" -> (taGopherRules _, taGopherRulesSql),
+    "llm_ta_langid_confusion" -> (taLangIdConfusion _, taLangIdConfusionSql),
+    "llm_ta_feature_hash" -> (taFeatureHash _, taFeatureHashSql),
+    "llm_ta_fingerprint" -> (taFingerprint _, taFingerprintSql),
+    "llm_ta_tfidf" -> (taTfidf _, taTfidfSql),
+    "llm_ta_bm25" -> (taBm25 _, taBm25Sql),
+    "llm_ta_redact" -> (taRedact _, taRedactSql),
+    "llm_ta_repetition" -> (taRepetition _, taRepetitionSql),
+    "llm_ta_vocab" -> (taVocab _, taVocabSql),
+    "llm_ta_corpus_stats" -> (taCorpusStats _, taCorpusStatsSql),
+    "llm_ta_zipf" -> (taZipf _, taZipfSql),
+    "llm_ta_source_report" -> (taSourceReport _, taSourceReportSql),
+    "llm_ta_oov" -> (taOov _, taOovSql),
+    "llm_ta_collocations" -> (taCollocations _, taCollocationsSql),
+    "llm_ta_chunk" -> (taChunk _, taChunkSql),
+    "llm_ta_length_hist" -> (taLengthHist _, taLengthHistSql),
+    "llm_ta_lm_score" -> (taLmScore _, taLmScoreSql),
+    "llm_ta_lm_filter" -> (taLmFilter _, taLmFilterSql),
+    "llm_ta_lm_bigram" -> (taLmBigram _, taLmBigramSql),
     // the salted join computes the SAME function as the broadcast
     // form — identical oracle, different (no-broadcast) plan shape
-    "llm_ta_lm_bigram_join" -> taLmBigramSql,
-    "llm_ta_lm_bigram_backoff" -> taLmBigramBackoffSql,
-    "llm_ta_bpe_pairs" -> taBpePairsSql,
-    "llm_ta_bpe_train" -> taBpeTrainSql,
-    "llm_ta_bpe_encode" -> taBpeEncodeSql,
+    "llm_ta_lm_bigram_join" -> (taLmBigramJoin _, taLmBigramSql),
+    "llm_ta_lm_bigram_backoff" -> (taLmBigramBackoff _, taLmBigramBackoffSql),
+    "llm_ta_bpe_pairs" -> (taBpePairs _, taBpePairsSql),
+    "llm_ta_bpe_train" -> (taBpeTrain _, taBpeTrainSql),
+    "llm_ta_bpe_encode" -> (taBpeEncode _, taBpeEncodeSql),
   )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

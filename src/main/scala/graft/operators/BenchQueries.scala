@@ -891,57 +891,32 @@ object BenchQueries {
        |FROM ($changepointSql) WHERE is_shift)
        |ORDER BY alert_type, pkg, test, date""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bench_ingest_golden" -> (ingestGolden _),
-    "bench_series_sorted" -> (seriesSorted _),
-    "bench_catalog" -> (catalogQ _),
-    "bench_catalog_flat" -> (flattenQ _),
-    "bench_distinct_dates" -> (distinctDatesQ _),
-    "bench_unpivot_metrics" -> (unpivotQ _),
-    "bench_align_fullouter" -> (alignQ _),
-    "bench_pivot_wide" -> (pivotWideQ _),
-    "bench_series_ratio" -> (seriesRatioQ _),
-    "bench_priority_order" -> (priorityQ _),
-    "bench_priority_phantoms" -> (priorityPhantomsQ _),
-    "bench_date_spine" -> (dateSpine _),
-    "bench_moving_avg" -> (movingAvg _),
-    "bench_ewma" -> (ewma _),
-    "bench_regression_flags" -> (regressionFlags _),
-    "bench_anomaly_mad" -> (anomalyMad _),
-    "bench_history_ranges" -> (historyRanges _),
-    "bench_asof_lookup" -> (asofLookup _),
-    "bench_pctile_band" -> (pctileBand _),
-    "bench_changepoint" -> (changepoint _),
-    "bench_series_norm" -> (seriesNorm _),
-    "bench_gap_audit" -> (gapAudit _),
-    "bench_alerts" -> (alerts _),
-    "bench_sink_roundtrip" -> (sinkRoundtrip _),
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "bench_ingest_golden" -> (ingestGolden _, ingestGoldenSql),
+    "bench_series_sorted" -> (seriesSorted _, seriesSortedSql),
+    "bench_catalog" -> (catalogQ _, catalogSql),
+    "bench_catalog_flat" -> (flattenQ _, flattenSql),
+    "bench_distinct_dates" -> (distinctDatesQ _, distinctDatesSql),
+    "bench_unpivot_metrics" -> (unpivotQ _, unpivotSql),
+    "bench_align_fullouter" -> (alignQ _, alignSql),
+    "bench_pivot_wide" -> (pivotWideQ _, pivotWideSql),
+    "bench_series_ratio" -> (seriesRatioQ _, seriesRatioSql),
+    "bench_priority_order" -> (priorityQ _, prioritySql),
+    "bench_priority_phantoms" -> (priorityPhantomsQ _, priorityPhantomsSql),
+    "bench_date_spine" -> (dateSpine _, dateSpineSql),
+    "bench_moving_avg" -> (movingAvg _, movingAvgSql),
+    "bench_ewma" -> (ewma _, ewmaSql),
+    "bench_regression_flags" -> (regressionFlags _, regressionFlagsSql),
+    "bench_anomaly_mad" -> (anomalyMad _, anomalyMadSql),
+    "bench_history_ranges" -> (historyRanges _, historyRangesSql),
+    "bench_asof_lookup" -> (asofLookup _, asofLookupSql),
+    "bench_pctile_band" -> (pctileBand _, pctileBandSql),
+    "bench_changepoint" -> (changepoint _, changepointSql),
+    "bench_series_norm" -> (seriesNorm _, seriesNormSql),
+    "bench_gap_audit" -> (gapAudit _, gapAuditSql),
+    "bench_alerts" -> (alerts _, alertsSql),
+    "bench_sink_roundtrip" -> (sinkRoundtrip _, sinkRoundtripSql),
   )
-
-  val oracles: Map[String, String] = Map(
-    "bench_ingest_golden" -> ingestGoldenSql,
-    "bench_series_sorted" -> seriesSortedSql,
-    "bench_catalog" -> catalogSql,
-    "bench_catalog_flat" -> flattenSql,
-    "bench_distinct_dates" -> distinctDatesSql,
-    "bench_unpivot_metrics" -> unpivotSql,
-    "bench_align_fullouter" -> alignSql,
-    "bench_pivot_wide" -> pivotWideSql,
-    "bench_series_ratio" -> seriesRatioSql,
-    "bench_priority_order" -> prioritySql,
-    "bench_priority_phantoms" -> priorityPhantomsSql,
-    "bench_date_spine" -> dateSpineSql,
-    "bench_moving_avg" -> movingAvgSql,
-    "bench_ewma" -> ewmaSql,
-    "bench_regression_flags" -> regressionFlagsSql,
-    "bench_anomaly_mad" -> anomalyMadSql,
-    "bench_history_ranges" -> historyRangesSql,
-    "bench_asof_lookup" -> asofLookupSql,
-    "bench_pctile_band" -> pctileBandSql,
-    "bench_changepoint" -> changepointSql,
-    "bench_series_norm" -> seriesNormSql,
-    "bench_gap_audit" -> gapAuditSql,
-    "bench_alerts" -> alertsSql,
-    "bench_sink_roundtrip" -> sinkRoundtripSql,
-  )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

@@ -895,61 +895,34 @@ object FunctionQueries {
       |    THEN 1 ELSE 0 END AS BIGINT) AS all_positive
       |FROM g ORDER BY l_orderkey""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q90_higher_order_funcs" -> (q90HigherOrderFuncs _),
-    "q14_string_funcs" -> (q14StringFuncs _),
-    "q15_datetime_funcs" -> (q15DatetimeFuncs _),
-    "q16_math_funcs" -> (q16MathFuncs _),
-    "q17_array_funcs" -> (q17ArrayFuncs _),
-    "q18_json_funcs" -> (q18JsonFuncs _),
-    "q19_range_join" -> (q19RangeJoin _),
-    "q20_asof_join" -> (q20AsofJoin _),
-    "q21_grouping_sets" -> (q21GroupingSets _),
-    "q22_udaf_topk" -> (q22UdafTopk _),
-    "q23_salted_agg" -> (q23SaltedAgg _),
-    "q24_correlated_subq" -> (q24CorrelatedSubquery _),
-    "q25_percentiles" -> (q25Percentiles _),
-    "q26_window_family" -> (q26WindowFamily _),
-    "q27_map_funcs" -> (q27MapFuncs _),
-    "q28_window_range" -> (q28WindowRange _),
-    "q29_exists_subq" -> (q29ExistsSubq _),
-    "q30_lateral_explode" -> (q30LateralExplode _),
-    "q31_having_subq" -> (q31HavingSubq _),
-    "q33_null_funcs" -> (q33NullFuncs _),
-    "q34_approx_distinct" -> (q34ApproxDistinct _),
-    "q35_datetime_arith" -> (q35DatetimeArith _),
-    "q36_bitwise" -> (q36Bitwise _),
-    "q37_string_extras" -> (q37StringExtras _),
-    "q40_fk_integrity" -> (q40FkIntegrity _),
-    "q41_skew_audit" -> (q41SkewAudit _),
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "q90_higher_order_funcs" -> (q90HigherOrderFuncs _, q90Sql),
+    "q14_string_funcs" -> (q14StringFuncs _, q14Sql),
+    "q15_datetime_funcs" -> (q15DatetimeFuncs _, q15Sql),
+    "q16_math_funcs" -> (q16MathFuncs _, q16Sql),
+    "q17_array_funcs" -> (q17ArrayFuncs _, q17Sql),
+    "q18_json_funcs" -> (q18JsonFuncs _, q18Sql),
+    "q19_range_join" -> (q19RangeJoin _, q19Sql),
+    "q20_asof_join" -> (q20AsofJoin _, q20Sql),
+    "q21_grouping_sets" -> (q21GroupingSets _, q21Sql),
+    "q22_udaf_topk" -> (q22UdafTopk _, q22Sql),
+    "q23_salted_agg" -> (q23SaltedAgg _, q23Sql),
+    "q24_correlated_subq" -> (q24CorrelatedSubquery _, q24Sql),
+    "q25_percentiles" -> (q25Percentiles _, q25Sql),
+    "q26_window_family" -> (q26WindowFamily _, q26Sql),
+    "q27_map_funcs" -> (q27MapFuncs _, q27Sql),
+    "q28_window_range" -> (q28WindowRange _, q28Sql),
+    "q29_exists_subq" -> (q29ExistsSubq _, q29Sql),
+    "q30_lateral_explode" -> (q30LateralExplode _, q30Sql),
+    "q31_having_subq" -> (q31HavingSubq _, q31Sql),
+    "q33_null_funcs" -> (q33NullFuncs _, q33Sql),
+    "q34_approx_distinct" -> (q34ApproxDistinct _, q34Sql),
+    "q35_datetime_arith" -> (q35DatetimeArith _, q35Sql),
+    "q36_bitwise" -> (q36Bitwise _, q36Sql),
+    "q37_string_extras" -> (q37StringExtras _, q37Sql),
+    "q40_fk_integrity" -> (q40FkIntegrity _, q40Sql),
+    "q41_skew_audit" -> (q41SkewAudit _, q41Sql),
   )
-
-  val oracles: Map[String, String] = Map(
-    "q90_higher_order_funcs" -> q90Sql,
-    "q14_string_funcs" -> q14Sql,
-    "q15_datetime_funcs" -> q15Sql,
-    "q16_math_funcs" -> q16Sql,
-    "q17_array_funcs" -> q17Sql,
-    "q18_json_funcs" -> q18Sql,
-    "q19_range_join" -> q19Sql,
-    "q20_asof_join" -> q20Sql,
-    "q21_grouping_sets" -> q21Sql,
-    "q22_udaf_topk" -> q22Sql,
-    "q23_salted_agg" -> q23Sql,
-    "q24_correlated_subq" -> q24Sql,
-    "q25_percentiles" -> q25Sql,
-    "q26_window_family" -> q26Sql,
-    "q27_map_funcs" -> q27Sql,
-    "q28_window_range" -> q28Sql,
-    "q29_exists_subq" -> q29Sql,
-    "q30_lateral_explode" -> q30Sql,
-    "q31_having_subq" -> q31Sql,
-    "q33_null_funcs" -> q33Sql,
-    "q34_approx_distinct" -> q34Sql,
-    "q35_datetime_arith" -> q35Sql,
-    "q36_bitwise" -> q36Sql,
-    "q37_string_extras" -> q37Sql,
-    "q40_fk_integrity" -> q40Sql,
-    "q41_skew_audit" -> q41Sql,
-  )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

@@ -3690,147 +3690,77 @@ object RelationalQueries {
       |    AS backlog
       |FROM months ORDER BY year, month""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q101_order_backlog" -> (q101OrderBacklog _),
-    "q100_nation_trade_balance" -> (q100NationTradeBalance _),
-    "q99_purchase_episodes" -> (q99PurchaseEpisodes _),
-    "q97_status_transitions" -> (q97StatusTransitions _),
-    "q98_dow_priority_chi2" -> (q98DowPriorityChi2 _),
-    "q91_priority_late_ships" -> (q91PriorityLateShips _),
-    "q92_forecast_revenue" -> (q92ForecastRevenue _),
-    "q93_part_value_concentration" -> (q93PartValueConcentration _),
-    "q94_brand_supplier_breadth" -> (q94BrandSupplierBreadth _),
-    "q95_disjunctive_promo" -> (q95DisjunctivePromo _),
-    "q96_dominant_suppliers" -> (q96DominantSuppliers _),
-    "q89_sales_opportunity" -> (q89SalesOpportunity _),
-    "q88_repeat_business" -> (q88RepeatBusiness _),
-    "q87_column_profile" -> (q87ColumnProfile _),
-    "q86_anova" -> (q86Anova _),
-    "q85_gini" -> (q85Gini _),
-    "q84_benford_audit" -> (q84BenfordAudit _),
-    "q83_price_dispersion" -> (q83PriceDispersion _),
-    "q82_return_repurchase" -> (q82ReturnRepurchase _),
-    "q81_discount_mix" -> (q81DiscountMix _),
-    "q80_fulfillment_spread" -> (q80FulfillmentSpread _),
-    "q79_quarter_growth" -> (q79QuarterGrowth _),
-    "q78_seasonal_index" -> (q78SeasonalIndex _),
-    "q77_wilson_returns" -> (q77WilsonReturns _),
-    "q68_min_cost_supplier" -> (q68MinCostSupplier _),
-    "q69_blocking_suppliers" -> (q69BlockingSuppliers _),
-    "q70_dormant_capital" -> (q70DormantCapital _),
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q02_topk_per_group" -> (q02TopKPerGroup _),
-    "q03_customer_revenue" -> (q03CustomerRevenue _),
-    "q04_broadcast_dim_join" -> (q04BroadcastDimJoin _),
-    "q05_semi_join" -> (q05SemiJoin _),
-    "q06_anti_join" -> (q06AntiJoin _),
-    "q07_rollup" -> (q07Rollup _),
-    "q08_cube" -> (q08Cube _),
-    "q09_distinct_agg" -> (q09DistinctAgg _),
-    "q10_set_ops" -> (q10SetOps _),
-    "q11_window_lag" -> (q11WindowLag _),
-    "q12_pivot_wide" -> (q12PivotWide _),
-    "q13_unpivot" -> (q13Unpivot _),
-    "q32_setops_all" -> (q32SetopsAll _),
-    "q46_promo_effect" -> (q46PromoEffect _),
-    "q47_small_qty_revenue" -> (q47SmallQtyRevenue _),
-    "q48_top_supplier" -> (q48TopSupplier _),
-    "q49_market_share" -> (q49MarketShare _),
-    "q50_order_histogram" -> (q50OrderHistogram _),
-    "q51_priority_mix" -> (q51PriorityMix _),
-    "q52_large_volume" -> (q52LargeVolume _),
-    "q53_sole_supplier" -> (q53SoleSupplier _),
-    "q54_idle_capital" -> (q54IdleCapital _),
-    "q55_local_supplier" -> (q55LocalSupplier _),
-    "q56_trade_volume" -> (q56TradeVolume _),
-    "q57_product_profit" -> (q57ProductProfit _),
-    "q58_returned_items" -> (q58ReturnedItems _),
-    "q59_segment_priority_chisq" -> (q59SegmentPriorityChisq _),
-    "q60_supplier_hhi" -> (q60SupplierHhi _),
-    "q61_pareto_curve" -> (q61ParetoCurve _),
-    "q62_cohort_revenue" -> (q62CohortRevenue _),
-    "q63_market_basket" -> (q63MarketBasket _),
-    "q64_supplier_reliability" -> (q64SupplierReliability _),
-    "q65_discount_elasticity" -> (q65DiscountElasticity _),
-    "q66_quartile_migration" -> (q66QuartileMigration _),
-    "q67_repeat_intervals" -> (q67RepeatIntervals _),
-    "q71_ship_latency" -> (q71ShipLatency _),
-    "q74_price_index" -> (q74PriceIndex _),
-    "q75_paasche_index" -> (q75PaascheIndex _),
-    "q76_supplier_churn" -> (q76SupplierChurn _),
-    "q72_decile_lift" -> (q72DecileLift _),
-    "q73_trade_balance" -> (q73TradeBalance _),
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "q101_order_backlog" -> (q101OrderBacklog _, q101Sql),
+    "q100_nation_trade_balance" -> (q100NationTradeBalance _, q100Sql),
+    "q99_purchase_episodes" -> (q99PurchaseEpisodes _, q99Sql),
+    "q97_status_transitions" -> (q97StatusTransitions _, q97Sql),
+    "q98_dow_priority_chi2" -> (q98DowPriorityChi2 _, q98Sql),
+    "q91_priority_late_ships" -> (q91PriorityLateShips _, q91Sql),
+    "q92_forecast_revenue" -> (q92ForecastRevenue _, q92Sql),
+    "q93_part_value_concentration" -> (q93PartValueConcentration _, q93Sql),
+    "q94_brand_supplier_breadth" -> (q94BrandSupplierBreadth _, q94Sql),
+    "q95_disjunctive_promo" -> (q95DisjunctivePromo _, q95Sql),
+    "q96_dominant_suppliers" -> (q96DominantSuppliers _, q96Sql),
+    "q89_sales_opportunity" -> (q89SalesOpportunity _, q89Sql),
+    "q88_repeat_business" -> (q88RepeatBusiness _, q88Sql),
+    "q87_column_profile" -> (q87ColumnProfile _, q87Sql),
+    "q86_anova" -> (q86Anova _, q86Sql),
+    "q85_gini" -> (q85Gini _, q85Sql),
+    "q84_benford_audit" -> (q84BenfordAudit _, q84Sql),
+    "q83_price_dispersion" -> (q83PriceDispersion _, q83Sql),
+    "q82_return_repurchase" -> (q82ReturnRepurchase _, q82Sql),
+    "q81_discount_mix" -> (q81DiscountMix _, q81Sql),
+    "q80_fulfillment_spread" -> (q80FulfillmentSpread _, q80Sql),
+    "q79_quarter_growth" -> (q79QuarterGrowth _, q79Sql),
+    "q78_seasonal_index" -> (q78SeasonalIndex _, q78Sql),
+    "q77_wilson_returns" -> (q77WilsonReturns _, q77Sql),
+    "q68_min_cost_supplier" -> (q68MinCostSupplier _, q68Sql),
+    "q69_blocking_suppliers" -> (q69BlockingSuppliers _, q69Sql),
+    "q70_dormant_capital" -> (q70DormantCapital _, q70Sql),
+    "q01_pricing_summary" -> (q01PricingSummary _, q01Sql),
+    "q02_topk_per_group" -> (q02TopKPerGroup _, q02Sql),
+    "q03_customer_revenue" -> (q03CustomerRevenue _, q03Sql),
+    "q04_broadcast_dim_join" -> (q04BroadcastDimJoin _, q04Sql),
+    "q05_semi_join" -> (q05SemiJoin _, q05Sql),
+    "q06_anti_join" -> (q06AntiJoin _, q06Sql),
+    "q07_rollup" -> (q07Rollup _, q07Sql),
+    "q08_cube" -> (q08Cube _, q08Sql),
+    "q09_distinct_agg" -> (q09DistinctAgg _, q09Sql),
+    "q10_set_ops" -> (q10SetOps _, q10Sql),
+    "q11_window_lag" -> (q11WindowLag _, q11Sql),
+    "q12_pivot_wide" -> (q12PivotWide _, q12Sql),
+    "q13_unpivot" -> (q13Unpivot _, q13Sql),
+    "q32_setops_all" -> (q32SetopsAll _, q32Sql),
+    "q46_promo_effect" -> (q46PromoEffect _, q46Sql),
+    "q47_small_qty_revenue" -> (q47SmallQtyRevenue _, q47Sql),
+    "q48_top_supplier" -> (q48TopSupplier _, q48Sql),
+    "q49_market_share" -> (q49MarketShare _, q49Sql),
+    "q50_order_histogram" -> (q50OrderHistogram _, q50Sql),
+    "q51_priority_mix" -> (q51PriorityMix _, q51Sql),
+    "q52_large_volume" -> (q52LargeVolume _, q52Sql),
+    "q53_sole_supplier" -> (q53SoleSupplier _, q53Sql),
+    "q54_idle_capital" -> (q54IdleCapital _, q54Sql),
+    "q55_local_supplier" -> (q55LocalSupplier _, q55Sql),
+    "q56_trade_volume" -> (q56TradeVolume _, q56Sql),
+    "q57_product_profit" -> (q57ProductProfit _, q57Sql),
+    "q58_returned_items" -> (q58ReturnedItems _, q58Sql),
+    "q59_segment_priority_chisq" -> (q59SegmentPriorityChisq _, q59Sql),
+    "q60_supplier_hhi" -> (q60SupplierHhi _, q60Sql),
+    "q61_pareto_curve" -> (q61ParetoCurve _, q61Sql),
+    "q62_cohort_revenue" -> (q62CohortRevenue _, q62Sql),
+    "q63_market_basket" -> (q63MarketBasket _, q63Sql),
+    "q64_supplier_reliability" -> (q64SupplierReliability _, q64Sql),
+    "q65_discount_elasticity" -> (q65DiscountElasticity _, q65Sql),
+    "q66_quartile_migration" -> (q66QuartileMigration _, q66Sql),
+    "q67_repeat_intervals" -> (q67RepeatIntervals _, q67Sql),
+    "q71_ship_latency" -> (q71ShipLatency _, q71Sql),
+    "q74_price_index" -> (q74PriceIndex _, q74Sql),
+    "q75_paasche_index" -> (q75PaascheIndex _, q75Sql),
+    "q76_supplier_churn" -> (q76SupplierChurn _, q76Sql),
+    "q72_decile_lift" -> (q72DecileLift _, q72Sql),
+    "q73_trade_balance" -> (q73TradeBalance _, q73Sql),
   )
-
-  val oracles: Map[String, String] = Map(
-    "q101_order_backlog" -> q101Sql,
-    "q100_nation_trade_balance" -> q100Sql,
-    "q99_purchase_episodes" -> q99Sql,
-    "q97_status_transitions" -> q97Sql,
-    "q98_dow_priority_chi2" -> q98Sql,
-    "q91_priority_late_ships" -> q91Sql,
-    "q92_forecast_revenue" -> q92Sql,
-    "q93_part_value_concentration" -> q93Sql,
-    "q94_brand_supplier_breadth" -> q94Sql,
-    "q95_disjunctive_promo" -> q95Sql,
-    "q96_dominant_suppliers" -> q96Sql,
-    "q89_sales_opportunity" -> q89Sql,
-    "q88_repeat_business" -> q88Sql,
-    "q87_column_profile" -> q87Sql,
-    "q86_anova" -> q86Sql,
-    "q85_gini" -> q85Sql,
-    "q84_benford_audit" -> q84Sql,
-    "q83_price_dispersion" -> q83Sql,
-    "q82_return_repurchase" -> q82Sql,
-    "q81_discount_mix" -> q81Sql,
-    "q80_fulfillment_spread" -> q80Sql,
-    "q79_quarter_growth" -> q79Sql,
-    "q78_seasonal_index" -> q78Sql,
-    "q77_wilson_returns" -> q77Sql,
-    "q71_ship_latency" -> q71Sql,
-    "q74_price_index" -> q74Sql,
-    "q75_paasche_index" -> q75Sql,
-    "q76_supplier_churn" -> q76Sql,
-    "q72_decile_lift" -> q72Sql,
-    "q73_trade_balance" -> q73Sql,
-    "q68_min_cost_supplier" -> q68Sql,
-    "q69_blocking_suppliers" -> q69Sql,
-    "q70_dormant_capital" -> q70Sql,
-    "q01_pricing_summary" -> q01Sql,
-    "q02_topk_per_group" -> q02Sql,
-    "q03_customer_revenue" -> q03Sql,
-    "q04_broadcast_dim_join" -> q04Sql,
-    "q05_semi_join" -> q05Sql,
-    "q06_anti_join" -> q06Sql,
-    "q07_rollup" -> q07Sql,
-    "q08_cube" -> q08Sql,
-    "q09_distinct_agg" -> q09Sql,
-    "q10_set_ops" -> q10Sql,
-    "q11_window_lag" -> q11Sql,
-    "q12_pivot_wide" -> q12Sql,
-    "q13_unpivot" -> q13Sql,
-    "q32_setops_all" -> q32Sql,
-    "q46_promo_effect" -> q46Sql,
-    "q47_small_qty_revenue" -> q47Sql,
-    "q48_top_supplier" -> q48Sql,
-    "q49_market_share" -> q49Sql,
-    "q50_order_histogram" -> q50Sql,
-    "q51_priority_mix" -> q51Sql,
-    "q52_large_volume" -> q52Sql,
-    "q53_sole_supplier" -> q53Sql,
-    "q54_idle_capital" -> q54Sql,
-    "q55_local_supplier" -> q55Sql,
-    "q56_trade_volume" -> q56Sql,
-    "q57_product_profit" -> q57Sql,
-    "q58_returned_items" -> q58Sql,
-    "q59_segment_priority_chisq" -> q59Sql,
-    "q60_supplier_hhi" -> q60Sql,
-    "q61_pareto_curve" -> q61Sql,
-    "q62_cohort_revenue" -> q62Sql,
-    "q63_market_basket" -> q63Sql,
-    "q64_supplier_reliability" -> q64Sql,
-    "q65_discount_elasticity" -> q65Sql,
-    "q66_quartile_migration" -> q66Sql,
-    "q67_repeat_intervals" -> q67Sql,
-  )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

@@ -2152,79 +2152,43 @@ object WindowQueries {
       |    AS stickiness
       |FROM dd JOIN w USING (week) ORDER BY week""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st_stickiness" -> (stStickiness _),
-    "st_retention_matrix" -> (stRetentionMatrix _),
-    "st_reident_risk" -> (stReidentRisk _),
-    "st_gap_sensitivity" -> (stGapSensitivity _),
-    "st_interarrival" -> (stInterarrival _),
-    "st_user_lifespan" -> (stUserLifespan _),
-    "st_type_mix_drift" -> (stTypeMixDrift _),
-    "st_new_vs_returning" -> (stNewVsReturning _),
-    "st_value_drift" -> (stValueDrift _),
-    "st_whale_mass" -> (stWhaleMass _),
-    "st_dispersion" -> (stDispersion _),
-    "st_session_type_lift" -> (stSessionTypeLift _),
-    "st_concurrency" -> (stConcurrency _),
-    "st_burst_episodes" -> (stBurstEpisodes _),
-    "st_value_percentiles" -> (stValuePercentiles _),
-    "st_cusum_drift" -> (stCusumDrift _),
-    "st_dow_anomaly" -> (stDowAnomaly _),
-    "st_hourly_profile" -> (stHourlyProfile _),
-    "st_arrival_rate" -> (stArrivalRate _),
-    "st_acf" -> (stAcf _),
-    "st_top_users" -> (stTopUsers _),
-    "st_windowed_distinct" -> (stWindowedDistinct _),
-    "st_lateness_audit" -> (stLatenessAudit _),
-    "st_static_enrich" -> (stStaticEnrich _),
-    "q45_rfm" -> (q45Rfm _),
-    "q44_transitions" -> (q44Transitions _),
-    "q43_session_stats" -> (q43SessionStats _),
-    "st_tumbling" -> (stTumbling _),
-    "st_sliding" -> (stSliding _),
-    "st_session" -> (stSession _),
-    "q38_funnel" -> (q38Funnel _),
-    "q39_retention" -> (q39Retention _),
-    "st_interval_join" -> (stIntervalJoin _),
-    "st_dedup_first" -> (stDedupFirst _),
-    "q42_active_users" -> (q42ActiveUsers _),
+  /** Each query: name -> (plan, the ANSI SQL DuckDB checks it with). */
+  val queryTable: Map[String, (graft.SparkEntry.Query, String)] = Map(
+    "st_stickiness" -> (stStickiness _, stStickinessSql),
+    "st_retention_matrix" -> (stRetentionMatrix _, stRetentionMatrixSql),
+    "st_reident_risk" -> (stReidentRisk _, stReidentRiskSql),
+    "st_gap_sensitivity" -> (stGapSensitivity _, stGapSensitivitySql),
+    "st_interarrival" -> (stInterarrival _, stInterarrivalSql),
+    "st_user_lifespan" -> (stUserLifespan _, stUserLifespanSql),
+    "st_type_mix_drift" -> (stTypeMixDrift _, stTypeMixDriftSql),
+    "st_new_vs_returning" -> (stNewVsReturning _, stNewVsReturningSql),
+    "st_value_drift" -> (stValueDrift _, stValueDriftSql),
+    "st_whale_mass" -> (stWhaleMass _, stWhaleMassSql),
+    "st_dispersion" -> (stDispersion _, stDispersionSql),
+    "st_session_type_lift" -> (stSessionTypeLift _, stSessionTypeLiftSql),
+    "st_concurrency" -> (stConcurrency _, stConcurrencySql),
+    "st_burst_episodes" -> (stBurstEpisodes _, stBurstEpisodesSql),
+    "st_value_percentiles" -> (stValuePercentiles _, stValuePercentilesSql),
+    "st_cusum_drift" -> (stCusumDrift _, stCusumDriftSql),
+    "st_dow_anomaly" -> (stDowAnomaly _, stDowAnomalySql),
+    "st_hourly_profile" -> (stHourlyProfile _, stHourlyProfileSql),
+    "st_arrival_rate" -> (stArrivalRate _, stArrivalRateSql),
+    "st_acf" -> (stAcf _, stAcfSql),
+    "st_top_users" -> (stTopUsers _, stTopUsersSql),
+    "st_windowed_distinct" -> (stWindowedDistinct _, stWindowedDistinctSql),
+    "st_lateness_audit" -> (stLatenessAudit _, stLatenessAuditSql),
+    "st_static_enrich" -> (stStaticEnrich _, stStaticEnrichSql),
+    "q45_rfm" -> (q45Rfm _, q45RfmSql),
+    "q44_transitions" -> (q44Transitions _, q44TransitionsSql),
+    "q43_session_stats" -> (q43SessionStats _, q43SessionStatsSql),
+    "st_tumbling" -> (stTumbling _, stTumblingSql),
+    "st_sliding" -> (stSliding _, stSlidingSql),
+    "st_session" -> (stSession _, stSessionSql),
+    "q38_funnel" -> (q38Funnel _, q38FunnelSql),
+    "q39_retention" -> (q39Retention _, q39RetentionSql),
+    "st_interval_join" -> (stIntervalJoin _, stIntervalJoinSql),
+    "st_dedup_first" -> (stDedupFirst _, stDedupFirstSql),
+    "q42_active_users" -> (q42ActiveUsers _, q42ActiveUsersSql),
   )
-
-  val oracles: Map[String, String] = Map(
-    "st_stickiness" -> stStickinessSql,
-    "st_retention_matrix" -> stRetentionMatrixSql,
-    "st_reident_risk" -> stReidentRiskSql,
-    "st_gap_sensitivity" -> stGapSensitivitySql,
-    "st_interarrival" -> stInterarrivalSql,
-    "st_user_lifespan" -> stUserLifespanSql,
-    "st_type_mix_drift" -> stTypeMixDriftSql,
-    "st_new_vs_returning" -> stNewVsReturningSql,
-    "st_value_drift" -> stValueDriftSql,
-    "st_whale_mass" -> stWhaleMassSql,
-    "st_dispersion" -> stDispersionSql,
-    "st_session_type_lift" -> stSessionTypeLiftSql,
-    "st_concurrency" -> stConcurrencySql,
-    "st_burst_episodes" -> stBurstEpisodesSql,
-    "st_value_percentiles" -> stValuePercentilesSql,
-    "st_cusum_drift" -> stCusumDriftSql,
-    "st_dow_anomaly" -> stDowAnomalySql,
-    "st_hourly_profile" -> stHourlyProfileSql,
-    "st_arrival_rate" -> stArrivalRateSql,
-    "st_acf" -> stAcfSql,
-    "st_top_users" -> stTopUsersSql,
-    "st_windowed_distinct" -> stWindowedDistinctSql,
-    "st_lateness_audit" -> stLatenessAuditSql,
-    "st_static_enrich" -> stStaticEnrichSql,
-    "q45_rfm" -> q45RfmSql,
-    "q44_transitions" -> q44TransitionsSql,
-    "q43_session_stats" -> q43SessionStatsSql,
-    "st_tumbling" -> stTumblingSql,
-    "st_sliding" -> stSlidingSql,
-    "st_session" -> stSessionSql,
-    "q38_funnel" -> q38FunnelSql,
-    "q39_retention" -> q39RetentionSql,
-    "st_interval_join" -> stIntervalJoinSql,
-    "st_dedup_first" -> stDedupFirstSql,
-    "q42_active_users" -> q42ActiveUsersSql,
-  )
+  val registry: Map[String, graft.SparkEntry.Query] = queryTable.view.mapValues(_._1).toMap
 }

@@ -1027,6 +1027,79 @@ class LlmSpec extends SparkSpec {
     }
   }
 
+  /** Occupancy of each (cx, cy) grid cell of `dir`'s embeddings, the
+    * cell key ssKnnJoin homes and probes by. */
+  private def knnCells(dir: String): Map[(Long, Long), Long] =
+    spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(floor(element_at($"embedding", 1).cast("double") * 4).cast("long"),
+        floor(element_at($"embedding", 2).cast("double") * 4).cast("long"))
+      .as[(Long, Long)].collect().groupBy(identity).map { case (c, vs) => c -> vs.length.toLong }
+
+  /** The served 3x3 load of a home cell: its under-cap neighbours' sizes. */
+  private def servedLoad(cells: Map[(Long, Long), Long], h: (Long, Long)): Long =
+    (for { dx <- -1 to 1; dy <- -1 to 1 }
+      yield cells.getOrElse((h._1 + dx, h._2 + dy), 0L))
+      .filter(_ <= Similarity.KnnCellCap).sum
+
+  test("knn join: the probe budget drops over-budget home cells, keeps the rest exact") {
+    // Three adjacent under-cap cells of 1,500 vectors and a small fourth
+    // in one row: the middle cell serves 4,500 > KnnProbeBudget, its
+    // neighbours 3,000 and 3,040, the small cell 1,540.
+    val rnd = new scala.util.Random(7)
+    val sizes = Seq(0L -> 1500, 1L -> 1500, 2L -> 1500, 3L -> 40)
+    val vecs = for { (cx, n) <- sizes; _ <- 0 until n } yield {
+      val x = (cx + 0.05 + 0.9 * rnd.nextDouble()) / 4
+      val y = (0.05 + 0.9 * rnd.nextDouble()) / 4
+      Array(x.toFloat, y.toFloat) ++ Array.fill(2)((rnd.nextDouble() * 2 - 1).toFloat)
+    }
+    val rows = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v, i % 3) }
+    val tmp = tempDir("graft_knn_budget")
+    rows.toDF("vec_id", "embedding", "label").write.parquet(s"$tmp/embeddings.parquet")
+    val cells = knnCells(tmp)
+    assert(cells.values.forall(_ <= Similarity.KnnCellCap))
+    val over = cells.keySet.filter(servedLoad(cells, _) > Similarity.KnnProbeBudget)
+    assert(over == Set((1L, 0L)), s"fixture must put exactly the middle cell over budget: $over")
+
+    val got = Similarity.ssKnnJoin(spark, tmp)
+      .select("q_id", "neighbor_id", "cosine", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSeq
+    def home(v: Array[Float]) = (math.floor(v(0) * 4.0).toLong, math.floor(v(1) * 4.0).toLong)
+    val byHome = rows.groupBy { case (_, v, _) => home(v) }
+    assert(!got.exists { case (q, _, _, _) => home(vecs(q.toInt)) == (1L, 0L) },
+      "queries homed in the over-budget cell must return no rows")
+
+    // Brute force: each surviving query's top 3 over its 3x3 probe cells
+    // by cosine (Spark's round to 6 places, HALF_UP), ties by lower id.
+    def dot(a: Array[Double], b: Array[Double]) = a.indices.foldLeft(0.0)((s, i) => s + a(i) * b(i))
+    def round6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val want = for {
+      (q, qv, _) <- rows if q % 10 == 0 && home(qv) != ((1L, 0L))
+      qd = qv.map(_.toDouble)
+      cands = for {
+        dx <- -1L to 1L; dy <- -1L to 1L
+        (n, nv, _) <- byHome.getOrElse((home(qv)._1 + dx, home(qv)._2 + dy), Nil) if n != q
+      } yield {
+        val nd = nv.map(_.toDouble)
+        (n, round6(dot(qd, nd) / (math.sqrt(dot(qd, qd)) * math.sqrt(dot(nd, nd)))))
+      }
+      ((n, c), r) <- cands.sortBy { case (n, c) => (-c, n) }.take(3).zipWithIndex
+    } yield (q, n, c, r + 1)
+    assert(want.map(_._1).distinct.size == 150 + 150 + 4)
+    assert(got.map(r => (r._1, r._2, r._4)).sorted == want.map(r => (r._1, r._2, r._4)).sorted)
+    got.sortBy(r => (r._1, r._4)).zip(want.sortBy(r => (r._1, r._4))).foreach { case (g, w) =>
+      assert(math.abs(g._3 - w._3) < 1e-6, s"cosine $g vs brute force $w")
+    }
+  }
+
+  test("knn join: no home cell of the sf0.01 or sf0.1 fixture serves over the probe budget") {
+    val testdata = new java.io.File(sf0001).getParent
+    for (dir <- Seq(s"$testdata/sf0.01", s"$testdata/sf0.1")) {
+      val cells = knnCells(dir)
+      val worst = cells.keys.map(servedLoad(cells, _)).max
+      assert(worst <= Similarity.KnnProbeBudget, s"$dir: a home cell serves $worst vectors")
+    }
+  }
+
   test("curriculum: pos is an exact permutation, easy stages first") {
     val rows = graft.llm.Pipeline.curriculum(spark, sf0001)
       .select("doc_id", "stage", "pos")

@@ -1,7 +1,7 @@
 package graft
 
 /** Every registered query must run and return rows at sf0.001, and
-  * every oracle key must have a matching query (driver contract).
+  * every query must have an oracle and every oracle a query.
   * Value-level correctness is the driver's DuckDB gate (tools/verify.sh
   * locally); this suite guards wiring and non-emptiness.
   */
@@ -11,9 +11,10 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracleSql keys are a subset of queries keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
+  test("oracleSql and queries have the same keys") {
+    val (oracles, queries) = (SparkEntry.oracleSql.keySet, SparkEntry.queries.keySet)
+    assert(oracles -- queries == Set.empty, "oracles without queries")
+    assert(queries -- oracles == Set.empty, "queries without oracles")
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

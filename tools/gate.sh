@@ -10,7 +10,8 @@
 #        scale64/cold/isolated-subset draws are at a different SF or
 #        query set, so gating against them would be meaningless)
 set -e
-cd /root/repo
+# Work in the checkout this script belongs to, wherever it is run from.
+cd "$(dirname "$0")/.."
 BASE=${1:-$(ls -t docs/bench/r*_final*.json docs/bench/r*_full*.json 2>/dev/null | grep -v scale | grep -v cold | head -1)}
 # the ls|grep|head pipeline's exit status is head's, so set -e never
 # trips on "no baseline found" — guard explicitly instead of letting

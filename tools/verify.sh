@@ -1,11 +1,12 @@
 #!/bin/bash
 # Local verify loop: compile, run graft.Verify on sf0.01, DuckDB-compare.
 set -e
-cd /root/repo
+# Work in the checkout this script belongs to, wherever it is run from.
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 # Default outDir is per-PID so concurrent verify runs can't clobber each
 # other (pass an explicit second arg to pin a location instead).
-OUT=${2:-/root/repo/target/verify_out_$$}
+OUT=${2:-$PWD/target/verify_out_$$}
 trap '[ -z "${2:-}" ] && rm -rf "$OUT"' EXIT
 sbt -batch compile -warn
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
