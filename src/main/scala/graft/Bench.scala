@@ -75,14 +75,14 @@ object Bench {
     // One timed call: an in-flight marker (-1.00, names a wedge), then
     // the wall seconds under `tag`, or under `tag-FAIL` with the root
     // cause if `f` throws, so a fast failure is never mistaken for a
-    // fast pass. Returns the seconds either way.
-    def timed(tag: String, name: String)(f: => Unit): Double = {
+    // fast pass. Returns the seconds of a pass, None for a failure.
+    def timed(tag: String, name: String)(f: => Unit): Option[Double] = {
       val t0 = System.nanoTime()
       journal(tag, name, -1.0)
       val err = try { f; None } catch { case e: Throwable => Some(e) }
       val sec = (System.nanoTime() - t0) / 1e9
       err.fold(journal(tag, name, sec))(e => journal(s"$tag-FAIL", name, sec, errSummary(e)))
-      sec
+      if (err.isEmpty) Some(sec) else None
     }
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) {
@@ -112,20 +112,28 @@ object Bench {
     // cost, which later same-session draws no longer pay.
     val iters = sys.env.get("SPARK_GRAFT_BENCH_ITERS").map(_.toInt)
       .getOrElse(if (cold) 1 else 3)
+    // A failed draw's seconds time a throw, not the query: only passing
+    // draws enter the median, the min and the total. `failed` counts the
+    // rest; a query with no passing draw reports null seconds.
+    final case class Draws(runs: Seq[Double], failed: Int) {
+      def median: Option[Double] = if (runs.isEmpty) None else {
+        val s = runs.sorted
+        Some(if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2)
+      }
+    }
     val results = selected.map { case (name, fn) =>
       val runs = (1 to iters).map(i => timed(s"timed-$i", name)(fn(spark, sfDir).count()))
       release()
-      name -> runs
+      name -> Draws(runs.flatten, runs.count(_.isEmpty))
     }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    val qs = results.map { case (k, runs) =>
-      val rs = runs.map(r => f"$r%.4f").mkString("[", ",", "]")
-      f""""$k":{"median":${median(runs)}%.4f,"min":${runs.min}%.4f,"runs":$rs}"""
+    def sec(x: Option[Double]): String =
+      x.fold("null")(v => String.format(java.util.Locale.ROOT, "%.4f", Double.box(v)))
+    val qs = results.map { case (k, d) =>
+      val rs = d.runs.map(r => sec(Some(r))).mkString("[", ",", "]")
+      s""""$k":{"median":${sec(d.median)},"min":${sec(d.runs.minOption)},"runs":$rs,"failed":${d.failed}}"""
     }.mkString("{", ",", "}")
-    val total = results.values.map(median).sum
+    val total = results.values.flatMap(_.median).sum
+    val failed = results.values.map(_.failed).sum
     val totalR = math.round(total * 1000) / 1000.0
     // JVM session-state telemetry: the q12 lesson (r8/r11/r12) — a
     // cheap query flagging in SOME full-suite sessions with tight
@@ -167,7 +175,7 @@ object Bench {
     // stdout lines stay short (the harness tails stdout with a bounded
     // buffer, so the final line must stay well under that bound).
     val fileJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","iters":$iters,"queries":$qs,"sf":"$sfDir","jvm":{"code_cache_used_mb":$ccUsedMb,"code_cache_max_mb":$ccMaxMb,"gc_ms":$gcMs},"builds":$builds}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","iters":$iters,"failed":$failed,"queries":$qs,"sf":"$sfDir","jvm":{"code_cache_used_mb":$ccUsedMb,"code_cache_max_mb":$ccMaxMb,"gc_ms":$gcMs},"builds":$builds}"""
     try {
       val p = java.nio.file.Paths.get("target", "bench_last.json")
       java.nio.file.Files.createDirectories(p.getParent)
@@ -178,12 +186,11 @@ object Bench {
     // untouched): one compact {"metric":"query",...} line per query,
     // then the total line exactly once, as the final line, so it sits
     // inside any bounded tail window of stdout.
-    results.foreach { case (name, runs) =>
-      println(String.format(java.util.Locale.ROOT,
-        """{"metric":"query","name":"%s","median":%.4f,"min":%.4f}""",
-        name, Double.box(median(runs)), Double.box(runs.min)))
+    results.foreach { case (name, d) =>
+      println(
+        s"""{"metric":"query","name":"$name","median":${sec(d.median)},"min":${sec(d.runs.minOption)},"failed":${d.failed}}""")
     }
     println(
-      s"""{"metric":"total","value":$totalR,"unit":"sec","n_queries":${results.size},"iters":$iters,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":$totalR,"unit":"sec","n_queries":${results.size},"iters":$iters,"failed":$failed,"sf":"$sfDir"}""")
   }
 }

@@ -106,13 +106,14 @@ object BenchSinks {
   def copyStaticAssets(spark: SparkSession, files: Seq[String], outDir: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val dst = new org.apache.hadoop.fs.Path(outDir)
-    val dstFs = dst.getFileSystem(conf)
+    // raw local FS on both sides for file://: no `.crc` sidecar lands
+    // in the deploy root, and no chmod fork per asset
+    val dstFs = graft.sources.HadoopFs.forPath(dst, conf)
     files.foreach { f =>
       val src = new org.apache.hadoop.fs.Path(f)
-      val srcFs = src.getFileSystem(conf)
-      org.apache.hadoop.fs.FileUtil.copy(
-        srcFs, src, dstFs, new org.apache.hadoop.fs.Path(dst, src.getName),
-        false /* keep source */, true /* overwrite */, conf)
+      val in = graft.sources.HadoopFs.forPath(src, conf).open(src)
+      val out = dstFs.create(new org.apache.hadoop.fs.Path(dst, src.getName), true)
+      org.apache.hadoop.io.IOUtils.copyBytes(in, out, conf, true /* close both */)
     }
   }
 

@@ -39,8 +39,9 @@ import org.apache.spark.sql.functions._
   * `defaultParallelism` slices of that list, numbering lines for the
   * A1 tie-break. The list lives on the driver and rides in the tasks,
   * about 100 bytes per file. The dedup window shuffles once on
-  * (pkg,test,date), which is also the natural output partitioning for
-  * every downstream series query.
+  * (pkg,test,date); the checkpoint of its result keeps no partitioning
+  * (a `LogicalRDD` under AQE reports none), so each series query plans
+  * its own exchange.
   */
 object BenchIngest {
 
@@ -126,11 +127,19 @@ object BenchIngest {
   }
 
   /** Full ingest: scan → derive (date, pkg) → P1 filter → P3 extract →
-    * A1 last-write-wins dedup.
+    * A1 last-write-wins dedup, run once, eagerly, into a local
+    * checkpoint (file_generator.go:131-175 builds its cube once too).
+    * Both sinks read the returned fact, so a publish lists, reads,
+    * parses and windows the tree once, not once per sink, and the
+    * fact no longer needs the tree. The blocks live in the session's
+    * block manager until the DataFrame is garbage collected; a
+    * long-lived caller frees them with `Tables.freeCheckpoint` once
+    * its sinks are written. (`Tables.artifact` keeps the checkpoint as
+    * it is.)
     */
   def ingest(spark: SparkSession, root: String,
              packages: Seq[String] = DefaultPackages): DataFrame =
-    lastWriteWins(parse(rawLines(spark, root), packages))
+    lastWriteWins(parse(rawLines(spark, root), packages)).localCheckpoint()
 
   /** A1 dedup of parsed rows: the last (file, line_no) wins per
     * (pkg, test, date), and both tie-break columns are dropped. Batch

@@ -76,6 +76,51 @@ class BenchSinksSpec extends SparkSpec {
     }
   }
 
+  test("static assets land in the deploy root with no .crc sidecars") {
+    // file:// through the checksumming LocalFileSystem wrote a
+    // `.index.html.crc` beside every asset
+    val srcDir = tempDir("test_assets_crc_src")
+    val names = Seq("common.js", "index.html")
+    names.foreach(n => java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(srcDir, n), s"body-of-$n"))
+    val out = tempDir("test_assets_crc_deploy")
+    BenchSinks.copyStaticAssets(spark, names.map(n => s"file://$srcDir/$n"), s"file://$out")
+    assert(new java.io.File(out).list().toSeq.sorted == names)
+  }
+
+  test("ingest is one checkpoint both sinks read after the stdout tree is gone") {
+    import graft.sources.{BenchFixture, BenchIngest, Tables}
+    val src = tempDir("test_fact_once_src")
+    BenchFixture.write(src)
+    val fact = BenchIngest.ingest(spark, src, Seq("sql", "sql/parser", "util/cache"))
+    assert(Tables.isCheckpoint(fact))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
+
+    def files(root: String): Map[String, Seq[Byte]] = {
+      def walk(d: java.io.File): Seq[java.io.File] =
+        d.listFiles().toSeq.flatMap(f => if (f.isDirectory) walk(f) else Seq(f))
+      walk(new java.io.File(root))
+        .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+        .map(f => f.getPath.stripPrefix(root) ->
+          java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+        .toMap
+    }
+    val (got, golden) = (tempDir("test_fact_once_got"), tempDir("test_fact_once_golden"))
+    BenchSinks.writeSeriesJsonExact(fact, s"$got/deploy")
+    BenchSinks.writeSeriesJsonExact(BenchQueries.fact(spark), s"$golden/deploy")
+    val jobs = jobsOf(BenchSinks.writeCatalogJson(fact, s"$got/catalog"))
+    val goldenJobs = jobsOf(
+      BenchSinks.writeCatalogJson(BenchQueries.fact(spark), s"$golden/catalog"))
+    val (a, b) = (files(s"$got/deploy"), files(s"$golden/deploy"))
+    assert(a.keySet.size == 4 && a == b)
+    assert(new String(b("/sql/BenchmarkDup-8.json").toArray, "UTF-8") ==
+      """{"01-01-2015":{"N":200,"A":0,"B":0,"M":0.0}}""")
+    val catalog = (d: String) =>
+      files(s"$d/catalog").filter(_._1.contains("part-")).values.toSeq
+    assert(catalog(got).size == 1 && catalog(got) == catalog(golden))
+    assert(jobs == goldenJobs, s"catalog sink ran $jobs jobs on ingest's fact, $goldenJobs on bench_fact")
+  }
+
   test("exact-layout sink dispatches through a second FS scheme (S8 path shape)") {
     // graftfs:// (GraftTestFs via test core-site.xml) stands in for a
     // remote deploy root: the sink must resolve the scheme's FileSystem

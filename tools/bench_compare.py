@@ -6,7 +6,9 @@ Usage: python3 tools/bench_compare.py <old.json> <new.json> [threshold]
 
 Accepts either format found under docs/bench/:
   - the per-query file graft.Bench writes to target/bench_last.json
-    ({"queries": {name: {"median": s, "min": s, "runs": [...]}}}), or
+    ({"queries": {name: {"median": s, "min": s, "runs": [...],
+    "failed": n}}}; `runs` holds passing draws only, and a query with no
+    passing draw has null seconds and is skipped), or
   - the driver's BENCH_rNN.json wrapper (totals only, per-query data
     in the embedded stdout tail) — wrapper inputs degrade to a
     total-level compare.
@@ -34,6 +36,8 @@ def load(path):
         qs, mins = {}, {}
         for k, v in d["queries"].items():
             if isinstance(v, dict):
+                if v.get("median", 0) is None:
+                    continue  # every timed draw failed: no time to compare
                 qs[k] = v.get("median", v)
                 if "min" in v:
                     mins[k] = v["min"]

@@ -30,8 +30,10 @@ def fam(name):
 
 def load(path):
     d = json.load(open(path))
+    # a query whose every timed draw failed has a null median: skip it
     return {k: v["median"] if isinstance(v, dict) else v
-            for k, v in d["queries"].items()}, d
+            for k, v in d["queries"].items()
+            if not (isinstance(v, dict) and v["median"] is None)}, d
 
 
 def main():
