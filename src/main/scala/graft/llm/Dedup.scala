@@ -720,7 +720,7 @@ object Dedup {
 
   def ddLshTuning(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sigs = Tables.materialize(ddMinhashSigs(spark, dir))
+    val sigs = ddMinhashSigs(spark, dir).localCheckpoint()
     val perConfig = LshConfigs.map { case (b, r) =>
       val bandStructs = (0 until b).map { j =>
         val key = concat_ws(":",
@@ -804,9 +804,9 @@ object Dedup {
   // exactly what the sketch replaces at 100 TB.
   def ddSourceSketchOverlap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ex = Tables.materialize(Tables.documents(spark, dir)
+    val ex = Tables.documents(spark, dir)
       .select($"source", explode(expr("shingle3(text)")).as("shingle"))
-      .distinct())
+      .distinct().localCheckpoint()
     val hx = ex.withColumn("x31", h60($"shingle") % P31)
     val sigCols = minhashA.zip(minhashB).zipWithIndex.map {
       case ((a, b), i) => min((col("x31") * a + b) % P31).as(s"sig$i")
@@ -921,8 +921,8 @@ object Dedup {
 
   def ddThresholdSweep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val pairs = Tables.materialize(ddMinhashLsh(spark, dir)
-      .select($"doc_a", $"doc_b", $"est_jaccard"))
+    val pairs = ddMinhashLsh(spark, dir)
+      .select($"doc_a", $"doc_b", $"est_jaccard").localCheckpoint()
     SweepThresholds.map { t =>
       val kept = pairs.filter($"est_jaccard" >= t)
       val affected = kept.select($"doc_a".as("d"))
@@ -1207,7 +1207,7 @@ object Dedup {
     // bench's count() action plans the sort away, so this shows in
     // noop/collect consumption, not bench medians). Survivors are the
     // declared output (59 rows at sf0.1).
-    Tables.materialize(ddEmbeddingNearPairs(spark, dir))
+    ddEmbeddingNearPairs(spark, dir).localCheckpoint()
       .orderBy($"cosine".desc, $"vec_a", $"vec_b")
   }
 
@@ -1716,14 +1716,13 @@ object Dedup {
     import spark.implicits._
     val q = TextAnalysis.taQuality(spark, dir).select($"doc_id", $"quality")
     val src = Tables.documents(spark, dir).select($"doc_id", $"source")
-    val winners = Tables.materialize(
-      ddCluster(spark, dir)
-        .join(q, "doc_id").join(src, "doc_id")
-        .groupBy($"cluster_id")
-        .agg(
-          min(struct($"doc_id", $"source")).as("f"),
-          max(struct($"quality", (-$"doc_id").as("neg_id"), $"source"))
-            .as("b")))
+    val winners = ddCluster(spark, dir)
+      .join(q, "doc_id").join(src, "doc_id")
+      .groupBy($"cluster_id")
+      .agg(
+        min(struct($"doc_id", $"source")).as("f"),
+        max(struct($"quality", (-$"doc_id").as("neg_id"), $"source"))
+          .as("b")).localCheckpoint()
     val kf = winners.groupBy($"f.source".as("source"))
       .agg(count(lit(1)).as("keep_first"))
     val kb = winners.groupBy($"b.source".as("source"))
@@ -2896,8 +2895,7 @@ object Dedup {
     // document scan + explode + occupancy join — measured at sf0.1,
     // pair generation was 1.4 s of the op's 2.2 s against ~0.15 s for
     // the 151k-pair join itself once the index is a table.
-    val inBlk = Tables.materialize(
-      indexed.join(occ.select($"lang", $"bkt"), Seq("lang", "bkt")))
+    val inBlk = indexed.join(occ.select($"lang", $"bkt"), Seq("lang", "bkt")).localCheckpoint()
     val pairs = inBlk.select($"lang", $"bkt", $"doc_id".as("doc_a"),
         $"nat".as("nat_a"))
       .join(inBlk.select($"lang", $"bkt", $"doc_id".as("doc_b"),
@@ -2925,7 +2923,7 @@ object Dedup {
     // sorted 4.5-5.1 s, i.e. the sort DOUBLED the query. Survivors are
     // the declared output (6 rows at sf0.1), so the checkpoint is
     // byte-sized and the sort's sampling reads rows, not DP.
-    Tables.materialize(survivors).orderBy($"doc_a", $"doc_b")
+    survivors.localCheckpoint().orderBy($"doc_a", $"doc_b")
   }
 
   val ddEditDistSql: String =
@@ -3164,8 +3162,8 @@ object Dedup {
   // broadcast total.
   def ddNoveltyCurve(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ex = Tables.materialize(Tables.documents(spark, dir)
-      .select($"doc_id", explode(expr("shingle3(text)")).as("s")))
+    val ex = Tables.documents(spark, dir)
+      .select($"doc_id", explode(expr("shingle3(text)")).as("s")).localCheckpoint()
     val fo = ex.groupBy($"s").agg(min($"doc_id").as("md"))
     val novel = fo.groupBy($"md").agg(count(lit(1)).as("nov"))
       .select($"md".as("doc_id"), $"nov")
@@ -3218,9 +3216,9 @@ object Dedup {
   // collapses to ≤10 buckets. All-integer until two divisions.
   def ddDfSpectrum(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val df = Tables.materialize(Tables.documents(spark, dir)
+    val df = Tables.documents(spark, dir)
       .select(explode(expr("shingle3(text)")).as("s"))
-      .groupBy($"s").agg(count(lit(1)).as("df")))
+      .groupBy($"s").agg(count(lit(1)).as("df")).localCheckpoint()
     val tot = broadcast(df.agg(count(lit(1)).as("n_sh"),
       sum($"df").as("n_occ")))
     df.select(least($"df", lit(10L)).as("df_bucket"), $"df")
@@ -3272,16 +3270,14 @@ object Dedup {
   def ddDetectorAgreement(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val sh = simhashFor(spark, dir)
-    val mh = Tables.materialize(
-      ddMinhashLsh(spark, dir).select($"doc_a", $"doc_b"))
+    val mh = ddMinhashLsh(spark, dir).select($"doc_a", $"doc_b").localCheckpoint()
     val nM = mh.count()
     val nBoth = mh
       .join(sh.select($"doc_id".as("doc_a"), $"simhash".as("ha")), "doc_a")
       .join(sh.select($"doc_id".as("doc_b"), $"simhash".as("hb")), "doc_b")
       .filter(expr("bit_count(int(ha) ^ int(hb)) <= 3"))
       .count()
-    val classes = Tables.materialize(
-      sh.groupBy($"simhash").agg(count(lit(1)).as("sz")))
+    val classes = sh.groupBy($"simhash").agg(count(lit(1)).as("sz")).localCheckpoint()
     val sameP2 = classes
       .agg(sum(($"sz" * ($"sz" - 1L)).cast("decimal(38,0)")).as("p2"))
       .head().getDecimal(0)

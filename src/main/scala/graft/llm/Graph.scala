@@ -288,9 +288,8 @@ object Graph {
       // materialized: the distinct (order, supplier) table feeds the
       // occupancy audit AND the pair join's kept side — the fact-scan
       // + distinct shuffle runs once, not per consumer
-      val so = Tables.materialize(
-        Tables.lineitem(spark, dir)
-          .select($"l_orderkey".as("ok"), $"l_suppkey".as("sk")).distinct())
+      val so = Tables.lineitem(spark, dir)
+        .select($"l_orderkey".as("ok"), $"l_suppkey".as("sk")).distinct().localCheckpoint()
       val occ = so.groupBy($"ok").agg(count(lit(1)).as("n_supp"))
       val keptSo =
         so.join(occ.filter($"n_supp" <= TriOrderCap).select($"ok"), "ok")
@@ -321,23 +320,22 @@ object Graph {
     val nExcluded = broadcast(triExcluded(spark, dir))
     val nCand = broadcast(
       support.agg(count(lit(1)).as("n_candidate_edges")))
-    val edges = Tables.materialize(backbone(support))
+    val edges = backbone(support).localCheckpoint()
     val deg = edges.select($"s1".as("v")).unionAll(edges.select($"s2".as("v")))
       .groupBy($"v").agg(count(lit(1)).as("d"))
     // orient each edge from the (degree, id)-smaller endpoint; keep the
     // dst's (degree, id) on the edge so wedge pairs can be ordered in
     // the SAME total order without re-joining degrees
-    val oriented = Tables.materialize(
-      edges
-        .join(deg.select($"v".as("s1"), $"d".as("d1")), "s1")
-        .join(deg.select($"v".as("s2"), $"d".as("d2")), "s2")
-        .select(
-          when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"s1")
-            .otherwise($"s2").as("src"),
-          when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"s2")
-            .otherwise($"s1").as("dst"),
-          when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"d2")
-            .otherwise($"d1").as("ddeg")))
+    val oriented = edges
+      .join(deg.select($"v".as("s1"), $"d".as("d1")), "s1")
+      .join(deg.select($"v".as("s2"), $"d".as("d2")), "s2")
+      .select(
+        when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"s1")
+          .otherwise($"s2").as("src"),
+        when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"s2")
+          .otherwise($"s1").as("dst"),
+        when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"d2")
+          .otherwise($"d1").as("ddeg")).localCheckpoint()
     val x = oriented.select($"src", $"dst".as("b"), $"ddeg".as("bd"))
     val y = oriented.select($"src".as("src2"), $"dst".as("c"), $"ddeg".as("cd"))
     val wedges = x.join(y, $"src" === $"src2"
@@ -429,13 +427,13 @@ object Graph {
       .select($"s1".as("b1"), $"s2".as("b2"), lit(1L).as("kept"))
     val tagged = support.join(broadcast(bb),
         $"s1" === $"b1" && $"s2" === $"b2", "left")
-    val hist = Tables.materialize(tagged
+    val hist = tagged
       .groupBy(when($"support" <= 3, $"support")
         .otherwise(expr(
           "shiftleft(1L, cast(length(bin(support)) - 1 as int))"))
         .as("support_bucket"))
       .agg(count(lit(1)).as("n_edges"),
-        sum(coalesce($"kept", lit(0L))).as("n_in_backbone")))
+        sum(coalesce($"kept", lit(0L))).as("n_in_backbone")).localCheckpoint()
     val tot = hist.agg(sum($"n_edges").as("ne")).filter($"ne" > 0)
     hist.crossJoin(broadcast(tot))
       .select($"support_bucket", $"n_edges", $"n_in_backbone",
@@ -488,21 +486,19 @@ object Graph {
   // applies to identical doubles; mean routes through DECIMAL(15,9).
   def localClusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val edges = Tables.materialize(backbone(triSupport(spark, dir)))
-    val deg = Tables.materialize(
-      edges.select($"s1".as("v")).unionAll(edges.select($"s2".as("v")))
-        .groupBy($"v").agg(count(lit(1)).as("d")))
-    val oriented = Tables.materialize(
-      edges
-        .join(deg.select($"v".as("s1"), $"d".as("d1")), "s1")
-        .join(deg.select($"v".as("s2"), $"d".as("d2")), "s2")
-        .select(
-          when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"s1")
-            .otherwise($"s2").as("src"),
-          when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"s2")
-            .otherwise($"s1").as("dst"),
-          when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"d2")
-            .otherwise($"d1").as("ddeg")))
+    val edges = backbone(triSupport(spark, dir)).localCheckpoint()
+    val deg = edges.select($"s1".as("v")).unionAll(edges.select($"s2".as("v")))
+      .groupBy($"v").agg(count(lit(1)).as("d")).localCheckpoint()
+    val oriented = edges
+      .join(deg.select($"v".as("s1"), $"d".as("d1")), "s1")
+      .join(deg.select($"v".as("s2"), $"d".as("d2")), "s2")
+      .select(
+        when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"s1")
+          .otherwise($"s2").as("src"),
+        when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"s2")
+          .otherwise($"s1").as("dst"),
+        when($"d1" < $"d2" || ($"d1" === $"d2" && $"s1" < $"s2"), $"d2")
+          .otherwise($"d1").as("ddeg")).localCheckpoint()
     val x = oriented.select($"src", $"dst".as("b"), $"ddeg".as("bd"))
     val y = oriented.select($"src".as("src2"), $"dst".as("c"), $"ddeg".as("cd"))
     val closing = oriented.select($"src".as("cb"), $"dst".as("cc"))
@@ -518,12 +514,12 @@ object Graph {
             / ($"d" * ($"d" - 1L))).as("lcc"),
         ($"d" >= 2).as("eligible"))
     // ≤12-row histogram + 1-row totals off one node-grain table
-    val hist = Tables.materialize(lcc
+    val hist = lcc
       .groupBy(when(!$"eligible", lit(-1L))
         .otherwise(floor($"lcc" * 10.0)).as("lcc_decile"))
       .agg(count(lit(1)).as("n_nodes"),
         sum(when($"eligible", $"lcc".cast(DecimalType(15, 9)))
-          .otherwise(lit(null))).as("lcc_sum")))
+          .otherwise(lit(null))).as("lcc_sum")).localCheckpoint()
     val tot = hist.agg(sum($"n_nodes").as("nt"),
       sum(when($"lcc_decile" >= 0, $"n_nodes").otherwise(0L)).as("ne"),
       sum($"lcc_sum").cast("double").as("ls")).filter($"nt" > 0)
@@ -733,12 +729,11 @@ object Graph {
     val e = regionEdges(spark, dir).filter($"src" =!= $"dst")
     var alive = e.select($"src".as("node")).distinct()
     for (_ <- 1 to iters)
-      alive = Tables.materialize(
-        e.join(alive.select($"node".as("sn")), $"src" === $"sn")
-          .join(alive.select($"node".as("dn")), $"dst" === $"dn")
-          .groupBy($"src").agg(count(lit(1)).as("deg"))
-          .filter($"deg" >= KcoreK)
-          .select($"src".as("node")))
+      alive = e.join(alive.select($"node".as("sn")), $"src" === $"sn")
+        .join(alive.select($"node".as("dn")), $"dst" === $"dn")
+        .groupBy($"src").agg(count(lit(1)).as("deg"))
+        .filter($"deg" >= KcoreK)
+        .select($"src".as("node")).localCheckpoint()
     alive
   }
 
@@ -751,12 +746,11 @@ object Graph {
         .select(lit(iter.toLong).as("iter"), $"n_nodes")
     var stats = statsOf(0, alive)
     for (k <- 1 to KcoreIters) {
-      alive = Tables.materialize(
-        e.join(alive.select($"node".as("sn")), $"src" === $"sn")
-          .join(alive.select($"node".as("dn")), $"dst" === $"dn")
-          .groupBy($"src").agg(count(lit(1)).as("deg"))
-          .filter($"deg" >= KcoreK)
-          .select($"src".as("node")))
+      alive = e.join(alive.select($"node".as("sn")), $"src" === $"sn")
+        .join(alive.select($"node".as("dn")), $"dst" === $"dn")
+        .groupBy($"src").agg(count(lit(1)).as("deg"))
+        .filter($"deg" >= KcoreK)
+        .select($"src".as("node")).localCheckpoint()
       stats = stats.unionByName(statsOf(k, alive))
     }
     stats.orderBy($"iter")
@@ -767,8 +761,8 @@ object Graph {
     // times (both sides of the next peel + its stats row); DuckDB may
     // inline CTEs per reference, which re-evaluates the whole chain
     // 3^K times — at sf0.1 that exhausted temp-spill disk. The hint
-    // pins one evaluation per level (the Spark side checkpoints the
-    // same way via Tables.materialize).
+    // pins one evaluation per level (the Spark side localCheckpoints
+    // each level the same way).
     def peel(prev: String, k: Int): String =
       s"""e$k AS MATERIALIZED (
          |  SELECT src, dst FROM edges
@@ -907,12 +901,10 @@ object Graph {
     // support table)
     val lpCut = math.min(TriMaxEdges.toLong,
       (support.count() + 1L) / 2L).toInt
-    val edges = Tables.materialize(
-      support.orderBy($"support".desc, $"s1".asc, $"s2".asc)
-        .limit(lpCut).select($"s1", $"s2"))
-    val adj = Tables.materialize(
-      edges.select($"s1".as("u"), $"s2".as("v"))
-        .unionAll(edges.select($"s2".as("u"), $"s1".as("v"))))
+    val edges = support.orderBy($"support".desc, $"s1".asc, $"s2".asc)
+      .limit(lpCut).select($"s1", $"s2").localCheckpoint()
+    val adj = edges.select($"s1".as("u"), $"s2".as("v"))
+      .unionAll(edges.select($"s2".as("u"), $"s1".as("v"))).localCheckpoint()
     val deg = adj.groupBy($"u").agg(count(lit(1)).as("d"))
     val cn = adj.select($"u".as("a"), $"v".as("z"))
       .join(adj.select($"u".as("b"), $"v".as("z2")),
@@ -982,14 +974,14 @@ object Graph {
       .select($"s_suppkey", $"s_nationkey".as("sn")))
     val cn = broadcast(Tables.customer(spark, dir)
       .select($"c_custkey", $"c_nationkey".as("cn")))
-    val w = Tables.materialize(Tables.lineitem(spark, dir)
+    val w = Tables.lineitem(spark, dir)
       .join(Tables.orders(spark, dir), $"l_orderkey" === $"o_orderkey")
       .join(sn, $"l_suppkey" === $"s_suppkey")
       .join(cn, $"o_custkey" === $"c_custkey")
       .select($"sn", $"cn",
         ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev"))
       .groupBy($"sn", $"cn")
-      .agg(sum($"rev".cast(DecimalType(18, 6))).cast("double").as("w")))
+      .agg(sum($"rev".cast(DecimalType(18, 6))).cast("double").as("w")).localCheckpoint()
     val off = w.filter($"sn" =!= $"cn")
     val rec = off.join(
       broadcast(off.select($"sn".as("tn"), $"cn".as("tc"), $"w".as("wt"))),
@@ -1082,10 +1074,8 @@ object Graph {
     val h1 = pairs.join(a1, "s").groupBy($"c").agg(dsum0($"w").as("w"))
     val a2 = pairs.join(h1, "c").groupBy($"s").agg(dsum0($"w").as("w"))
     val h2 = pairs.join(a2, "s").groupBy($"c").agg(dsum0($"w").as("w"))
-    val a3 = Tables.materialize(
-      pairs.join(h2, "c").groupBy($"s").agg(dsum0($"w").as("w")))
-    val h3 = Tables.materialize(
-      pairs.join(a3, "s").groupBy($"c").agg(dsum0($"w").as("w")))
+    val a3 = pairs.join(h2, "c").groupBy($"s").agg(dsum0($"w").as("w")).localCheckpoint()
+    val h3 = pairs.join(a3, "s").groupBy($"c").agg(dsum0($"w").as("w")).localCheckpoint()
     (a3, h3)
   }
 
@@ -1226,7 +1216,7 @@ object Graph {
         .withColumnRenamed("nation", "src_nation"), "src")
       .join(broadcast(nat).withColumnRenamed("node", "dst")
         .withColumnRenamed("nation", "dst_nation"), "dst")
-    val eMat = Tables.materialize(e.select($"src_nation", $"dst_nation"))
+    val eMat = e.select($"src_nation", $"dst_nation").localCheckpoint()
     val m = eMat.count() // directed edge count (symmetric graph)
     val internal = eMat.filter($"src_nation" === $"dst_nation")
       .groupBy($"src_nation".as("nation"))

@@ -549,7 +549,7 @@ object Models {
     import spark.implicits._
     // ONE scoring scan: the histogram is materialized and every
     // downstream consumer (totals, windows, argmax filter) reads it
-    val hist = Tables.materialize(scoreHist(spark, dir))
+    val hist = scoreHist(spark, dir).localCheckpoint()
     val (np, nn) = histTotals(hist)
     // PR metrics are undefined without both classes — empty, never NaN
     if (np == 0L || nn == 0L)
@@ -644,7 +644,7 @@ object Models {
     import spark.implicits._
     val (f, w1, w2, b) = logregFit(spark, dir)
     val p = sig(lit(b) + lit(w1) * $"x1" + lit(w2) * $"x2")
-    val scored = Tables.materialize(f.select(p.as("p"), $"y"))
+    val scored = f.select(p.as("p"), $"y").localCheckpoint()
     val m = scored.agg(count(lit(1)).as("n"),
       sum(when($"y" === 1.0, 1L).otherwise(0L)).as("npos"),
       dsum12(($"p" - $"y") * ($"p" - $"y")).as("sse")).head()
@@ -736,7 +736,7 @@ object Models {
     import org.apache.spark.sql.expressions.Window
     // ONE scoring scan (same discipline as [[prSummary]]): totals and
     // the cumulative both read the materialized histogram
-    val hist = Tables.materialize(scoreHist(spark, dir))
+    val hist = scoreHist(spark, dir).localCheckpoint()
     val (np, nn) = histTotals(hist)
     if (np == 0L || nn == 0L)
       return spark.createDataFrame(Seq.empty[(Long, Long, Long, Double, Double)])
@@ -803,7 +803,7 @@ object Models {
   // convention, never NaN.
   def confusion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val hist = Tables.materialize(scoreHist(spark, dir))
+    val hist = scoreHist(spark, dir).localCheckpoint()
     val (np, nn) = histTotals(hist)
     if (np == 0L || nn == 0L)
       return spark.createDataFrame(
@@ -885,7 +885,7 @@ object Models {
   def youden(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val hist = Tables.materialize(scoreHist(spark, dir))
+    val hist = scoreHist(spark, dir).localCheckpoint()
     val (np, nn) = histTotals(hist)
     if (np == 0L || nn == 0L)
       return spark.createDataFrame(
@@ -972,9 +972,9 @@ object Models {
     // below each re-read their input, and reading a checkpointed
     // 4-column table beats re-projecting h60 buckets from the base per
     // action (measured: dropping it cost 1.32 -> 1.84 s isolated).
-    val f = Tables.materialize(lrBase(spark, dir)
+    val f = lrBase(spark, dir)
       .select((TextAnalysis.h60($"doc_id".cast("string")) % 100).as("bucket"),
-        $"x1", $"x2", $"y"))
+        $"x1", $"x2", $"y").localCheckpoint()
     val nFull = f.count()
     if (nFull == 0L)
       return spark.createDataFrame(
@@ -1071,7 +1071,7 @@ object Models {
   // threshold that predicts nothing reports 0, never NaN.
   def thresholdSweep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val hist = Tables.materialize(scoreHist(spark, dir))
+    val hist = scoreHist(spark, dir).localCheckpoint()
     val (np, nn) = histTotals(hist)
     if (np == 0L || nn == 0L)
       return spark.createDataFrame(
@@ -1152,7 +1152,7 @@ object Models {
       .join(TextAnalysis.taGopherRules(spark, dir)
         .select($"doc_id", $"keep".as("keep_g")), "doc_id")
       .select($"x1", $"x2", $"y", $"keep_g")
-    val f = Tables.materialize(feats)
+    val f = feats.localCheckpoint()
     if (f.isEmpty)
       return spark.createDataFrame(
         Seq.empty[(Long, Long, Long, Long, Long, Double, Double, Double, Long)])
@@ -1459,7 +1459,7 @@ object Models {
   def gains(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val hist = Tables.materialize(scoreHist(spark, dir))
+    val hist = scoreHist(spark, dir).localCheckpoint()
     if (hist.isEmpty)
       return spark.createDataFrame(
         Seq.empty[(Long, Long, Long, Long, Double, Double, Double, Double)])
@@ -1720,7 +1720,7 @@ object Models {
   def costCurve(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val hist = Tables.materialize(scoreHist(spark, dir))
+    val hist = scoreHist(spark, dir).localCheckpoint()
     val (np, nn) = histTotals(hist)
     if (np == 0L || nn == 0L)
       return spark.createDataFrame(
@@ -1816,14 +1816,13 @@ object Models {
     val f = lrBase(spark, dir).select($"lang", $"x1", $"x2", $"y")
     val (w1, w2, b) = lrWeights(spark, dir)
     val z = lit(b) + lit(w1) * $"x1" + lit(w2) * $"x2"
-    val g = Tables.materialize(
-      f.select($"lang", $"y", when(z >= 0.0, 1L).otherwise(0L).as("yhat"))
-        .groupBy($"lang")
-        .agg(count(lit(1)).as("n"),
-          sum(when($"y" === 1.0, 1L).otherwise(0L)).as("n_pos"),
-          sum($"yhat").as("n_sel"),
-          sum(when($"yhat" === 1L && $"y" === 1.0, 1L).otherwise(0L)).as("tp"),
-          sum(when($"yhat" === 1L && $"y" === 0.0, 1L).otherwise(0L)).as("fp")))
+    val g = f.select($"lang", $"y", when(z >= 0.0, 1L).otherwise(0L).as("yhat"))
+      .groupBy($"lang")
+      .agg(count(lit(1)).as("n"),
+        sum(when($"y" === 1.0, 1L).otherwise(0L)).as("n_pos"),
+        sum($"yhat").as("n_sel"),
+        sum(when($"yhat" === 1L && $"y" === 1.0, 1L).otherwise(0L)).as("tp"),
+        sum(when($"yhat" === 1L && $"y" === 0.0, 1L).otherwise(0L)).as("fp")).localCheckpoint()
     val t = g.agg(sum($"n").as("tn"), sum($"n_sel").as("ts")).head()
     val overallSel = t.getAs[Long]("ts").toDouble / t.getAs[Long]("tn")
     g.select($"lang", $"n", $"n_pos", $"n_sel",

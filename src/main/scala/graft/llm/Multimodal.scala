@@ -598,14 +598,14 @@ object Multimodal {
   def mmSourceMix(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val magics = array(lit("GIF8"), lit("%PDF"), lit("RIFF"), lit("OggS"))
-    val cont = Tables.materialize(Tables.documents(spark, dir)
+    val cont = Tables.documents(spark, dir)
       .select($"source",
         element_at(magics, (h60($"text") % 4 + 1).cast("int")).as("magic"))
       .select($"source",
         when($"magic" === "GIF8", "gif").when($"magic" === "%PDF", "pdf")
           .when($"magic" === "RIFF", "wav").otherwise("ogg")
           .as("media_type"))
-      .groupBy($"source", $"media_type").agg(count(lit(1)).as("n")))
+      .groupBy($"source", $"media_type").agg(count(lit(1)).as("n")).localCheckpoint()
     val rowT = cont.groupBy($"source").agg(sum($"n").as("rt"))
     val colT = cont.groupBy($"media_type").agg(sum($"n").as("ct"))
     val tot = broadcast(cont.agg(sum($"n").as("nt")))
@@ -680,8 +680,7 @@ object Multimodal {
           .cast("long").as("n_bytes"))
     // materialized: the histogram feeds the per-type totals AND the
     // cumulative join-back
-    val hist = Tables.materialize(
-      sized.groupBy($"media_type", $"n_bytes").agg(count(lit(1)).as("c")))
+    val hist = sized.groupBy($"media_type", $"n_bytes").agg(count(lit(1)).as("c")).localCheckpoint()
     val tot = hist.groupBy($"media_type").agg(sum($"c").as("n"))
     val w = Window.partitionBy($"media_type").orderBy($"n_bytes")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -804,7 +803,7 @@ object Multimodal {
   // partial-aggregable.
   def mmFrameDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val frames = Tables.materialize(Tables.documents(spark, dir)
+    val frames = Tables.documents(spark, dir)
       .select($"doc_id",
         least(expr("n_chars div 10") + 1, lit(50L)).cast("long")
           .as("n_frames"))
@@ -813,7 +812,7 @@ object Multimodal {
       .filter($"frame_idx" % 5 === 0)
       .select($"doc_id",
         (h60(concat($"doc_id".cast("string"), lit(":"),
-          $"frame_idx".cast("string"))) % 1000).as("digest")))
+          $"frame_idx".cast("string"))) % 1000).as("digest")).localCheckpoint()
     val perVideo = frames.groupBy($"doc_id")
       .agg(count(lit(1)).as("nf"),
         countDistinct($"digest").as("nd"))

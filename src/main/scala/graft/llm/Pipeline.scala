@@ -1709,10 +1709,10 @@ object Pipeline {
     val asg = pack(spark, dir).select($"doc_id", $"bucket", $"shard")
     val cl = Dedup.ddCluster(spark, dir)
       .filter($"cluster_size" > 1).select($"doc_id", $"cluster_id")
-    val per = Tables.materialize(cl.join(asg, "doc_id")
+    val per = cl.join(asg, "doc_id")
       .groupBy($"cluster_id")
       .agg(count(lit(1)).as("n_docs"),
-        countDistinct($"bucket", $"shard").as("n_cells")))
+        countDistinct($"bucket", $"shard").as("n_cells")).localCheckpoint()
     val tot = broadcast(per.agg(count(lit(1)).as("n_cl"),
       sum($"n_docs").as("n_dc")))
     per.select(least($"n_cells", lit(3L)).as("spread_bucket"),

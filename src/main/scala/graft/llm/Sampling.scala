@@ -724,8 +724,8 @@ object Sampling {
     import spark.implicits._
     // materialized: the rate table feeds the totals aggregate AND the
     // sweep cross join — one corpus scan, not two
-    val ps = Tables.materialize(Tables.documents(spark, dir)
-      .groupBy($"source").agg(count(lit(1)).as("n_docs")))
+    val ps = Tables.documents(spark, dir)
+      .groupBy($"source").agg(count(lit(1)).as("n_docs")).localCheckpoint()
     val tot = broadcast(ps.agg(sum($"n_docs").as("n_total"),
       count(lit(1)).as("n_sources")))
     val raw = $"n_total".cast("double") /
@@ -1012,12 +1012,11 @@ object Sampling {
     def dsum(c: org.apache.spark.sql.Column) =
       sum(c.cast("decimal(28,12)")).cast("double")
     val q = TextAnalysis.taQuality(spark, dir).select($"doc_id", $"quality")
-    val src = Tables.materialize(
-      Tables.documents(spark, dir).select($"doc_id", $"source")
-        .join(q, "doc_id")
-        .groupBy($"source")
-        .agg(count(lit(1)).as("ns"), dsum($"quality").as("sy"),
-          dsum($"quality" * $"quality").as("syy")))
+    val src = Tables.documents(spark, dir).select($"doc_id", $"source")
+      .join(q, "doc_id")
+      .groupBy($"source")
+      .agg(count(lit(1)).as("ns"), dsum($"quality").as("sy"),
+        dsum($"quality" * $"quality").as("syy")).localCheckpoint()
     val g = src.agg(sum($"ns").as("n"), dsum($"sy").as("gy"),
       dsum($"syy").as("gyy"), count(lit(1)).as("k")).head()
     val n = g.getAs[Long]("n")
@@ -1137,14 +1136,13 @@ object Sampling {
         .as("y_true"))
     // k-row table, three consumers (est, se, final) — materialized so
     // the PPS bucketed-cumsum pass runs once
-    val s = Tables.materialize(
-      samplePps(spark, dir).select($"doc_id", $"weight", $"n_hits")
-        .join(q, "doc_id")
-        .crossJoin(broadcast(totals))
-        // yp = y_i / p_i with p_i = w_i / W
-        .select($"doc_id", $"n_hits",
-          ($"quality" * $"tw".cast("double") / $"weight".cast("double"))
-            .as("yp")))
+    val s = samplePps(spark, dir).select($"doc_id", $"weight", $"n_hits")
+      .join(q, "doc_id")
+      .crossJoin(broadcast(totals))
+      // yp = y_i / p_i with p_i = w_i / W
+      .select($"doc_id", $"n_hits",
+        ($"quality" * $"tw".cast("double") / $"weight".cast("double"))
+          .as("yp")).localCheckpoint()
     val est = s.agg(
       sum($"n_hits").as("n_draws"),
       count(lit(1)).as("n_sampled_docs"),
@@ -1219,9 +1217,9 @@ object Sampling {
     val ps = Tables.documents(spark, dir)
       .groupBy($"source").agg(count(lit(1)).as("n_docs"))
     val tt = ps.agg(sum($"n_docs").as("n_total")).filter($"n_total" > 0)
-    val base = Tables.materialize(ps.crossJoin(broadcast(tt))
+    val base = ps.crossJoin(broadcast(tt))
       .select($"source",
-        ($"n_docs".cast("double") / $"n_total").as("p")))
+        ($"n_docs".cast("double") / $"n_total").as("p")).localCheckpoint()
     type C = org.apache.spark.sql.Column
     val alphas: Seq[(Double, C => C)] = Seq(
       0.25 -> ((p: C) => sqrt(sqrt(p))),
@@ -1305,12 +1303,11 @@ object Sampling {
   // DECIMAL-quantized; verdict gates the RAW total.
   def sampleCoverageAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bySource = Tables.materialize(
-      Tables.documents(spark, dir)
-        .groupBy($"source")
-        .agg(count(lit(1)).as("n_full"),
-          sum(when(h60($"text") % 100 < 5, 1L).otherwise(0L))
-            .as("n_samp")))
+    val bySource = Tables.documents(spark, dir)
+      .groupBy($"source")
+      .agg(count(lit(1)).as("n_full"),
+        sum(when(h60($"text") % 100 < 5, 1L).otherwise(0L))
+          .as("n_samp")).localCheckpoint()
     val tot = bySource.agg(sum($"n_full").as("nf"), sum($"n_samp").as("ns"))
       .filter($"nf" > 0 && $"ns" > 0)
     val terms = bySource.crossJoin(broadcast(tot))

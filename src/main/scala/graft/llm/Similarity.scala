@@ -1012,7 +1012,7 @@ object Similarity {
     val ex = Tables.embeddings(spark, dir)
       .select($"vec_id", posexplode($"embedding".cast("array<double>"))
         .as(Seq("dim", "x")))
-    val stats = Tables.materialize(ex.groupBy($"dim")
+    val stats = ex.groupBy($"dim")
       .agg(count(lit(1)).as("n"), d12($"x").as("sx"),
         d12($"x" * $"x").as("sxx"),
         min($"x").as("mn"), max($"x").as("mx"))
@@ -1020,7 +1020,7 @@ object Similarity {
         ($"sx" / $"n").as("mean"),
         (($"n".cast("double") * $"sxx" - $"sx" * $"sx")
           / ($"n".cast("double") * $"n".cast("double"))).as("variance"),
-        $"mn", $"mx"))
+        $"mn", $"mx").localCheckpoint()
     val tot = broadcast(stats.agg(
       sum($"variance".cast(DecimalType(28, 12))).cast("double").as("tv")))
     stats.crossJoin(tot)
@@ -1159,9 +1159,8 @@ object Similarity {
 
   def ssKmeansAri(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cont = Tables.materialize(
-      ariAssignments(spark, dir)
-        .groupBy($"cid_seed", $"cid_tr").agg(count(lit(1)).as("nij")))
+    val cont = ariAssignments(spark, dir)
+      .groupBy($"cid_seed", $"cid_tr").agg(count(lit(1)).as("nij")).localCheckpoint()
     val m = cont.agg(
       sum($"nij").as("n"),
       sum(expr("nij * (nij - 1) div 2")).as("sum_comb"),
@@ -1369,10 +1368,10 @@ object Similarity {
         """array_min(transform(cbs, c -> named_struct(
           |  'd2', vec_dot(sub, sub) - 2.0d * vec_dot(sub, c.cv) + vec_dot(c.cv, c.cv),
           |  'cid', c.cid))).d2""".stripMargin).as("d2"))
-    val stats = Tables.materialize(d2.groupBy($"s")
+    val stats = d2.groupBy($"s")
       .agg(count(lit(1)).as("n_vectors"),
         sum($"d2".cast(DecimalType(28, 12))).cast("double").as("sd"),
-        max($"d2").as("max_d2")))
+        max($"d2").as("max_d2")).localCheckpoint()
     val tot = broadcast(stats.agg(
       sum($"sd".cast(DecimalType(28, 12))).cast("double").as("td")))
     stats.crossJoin(tot)
@@ -2492,15 +2491,13 @@ object Similarity {
     val wRel = Window.partitionBy($"q_id").orderBy($"rel".desc, $"nid".asc)
     // the shortlist is queries×8 rows; materialize so the greedy's
     // repeated self-joins don't replay the corpus-wide scoring scan
-    val cands = Tables.materialize(
-      scored.withColumn("rk", row_number().over(wRel))
-        .filter($"rk" <= MmrShortlist))
-    val sims = Tables.materialize(
-      cands.as("a").join(cands.as("b"),
-          $"a.q_id" === $"b.q_id" && $"a.nid" =!= $"b.nid")
-        .select($"a.q_id".as("q_id"), $"a.nid".as("nid_a"),
-          $"b.nid".as("nid_b"),
-          expr("round(vec_dot(a.v, b.v) / (a.nrm * b.nrm), 6)").as("sim")))
+    val cands = scored.withColumn("rk", row_number().over(wRel))
+      .filter($"rk" <= MmrShortlist).localCheckpoint()
+    val sims = cands.as("a").join(cands.as("b"),
+        $"a.q_id" === $"b.q_id" && $"a.nid" =!= $"b.nid")
+      .select($"a.q_id".as("q_id"), $"a.nid".as("nid_a"),
+        $"b.nid".as("nid_b"),
+        expr("round(vec_dot(a.v, b.v) / (a.nrm * b.nrm), 6)").as("sim")).localCheckpoint()
     val c = cands.select($"q_id", $"nid", $"rel")
 
     var selected = cands.filter($"rk" === 1)
@@ -3017,11 +3014,11 @@ object Similarity {
           .otherwise(($"b" - $"a") / greatest($"a", $"b")).as("s"))
     // k-row table, two consumers (global mean + final projection) —
     // materialized so the corpus-scan rollup runs once
-    val per = Tables.materialize(rows.groupBy($"cid")
+    val per = rows.groupBy($"cid")
       .agg(count(lit(1)).as("n"),
         (sum($"a".cast(DecimalType(28, 12))).cast("double")
           / count(lit(1))).as("ma"),
-        sum($"s".cast(DecimalType(28, 12))).cast("double").as("ssum")))
+        sum($"s".cast(DecimalType(28, 12))).cast("double").as("ssum")).localCheckpoint()
     val glob = per.agg(
       (sum($"ssum".cast(DecimalType(28, 12))).cast("double")
         / sum($"n")).as("gs"))
@@ -3082,9 +3079,9 @@ object Similarity {
     import spark.implicits._
     // (5 x queries)-row table, two consumers (per-query aggregates +
     // the term join) — materialized so the brute pass runs once
-    val top = Tables.materialize(ssTopk(spark, dir)
+    val top = ssTopk(spark, dir)
       .select($"q_id", $"rank", $"cosine",
-        greatest(lit(1.0) - $"cosine", lit(1e-9)).as("d")))
+        greatest(lit(1.0) - $"cosine", lit(1e-9)).as("d")).localCheckpoint()
     val perQ = top.groupBy($"q_id")
       .agg(count(lit(1)).as("k"),
         max(when($"rank" === 1, $"cosine")).as("c1"),

@@ -2215,8 +2215,7 @@ object TextAnalysis {
     // first (partial-aggregable), then both downstream aggregates read
     // the vocab×10-bounded table — which is materialized because two
     // consumers would otherwise replay the tokenizing scan.
-    val tc = Tables.materialize(
-      toks.groupBy($"term", $"bucket").agg(count(lit(1)).as("c")))
+    val tc = toks.groupBy($"term", $"bucket").agg(count(lit(1)).as("c")).localCheckpoint()
     val toksPerBucket = tc.groupBy($"bucket")
       .agg(sum($"c").as("n_tokens"))
     val newTypes = tc.groupBy($"term")
@@ -2275,9 +2274,9 @@ object TextAnalysis {
   def taSourceKeywords(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val st = Tables.materialize(Tables.documents(spark, dir)
+    val st = Tables.documents(spark, dir)
       .select($"source", explode(split(trim($"text"), "\\s+")).as("term"))
-      .groupBy($"source", $"term").agg(count(lit(1)).as("tf")))
+      .groupBy($"source", $"term").agg(count(lit(1)).as("tf")).localCheckpoint()
     val srcLen = st.groupBy($"source").agg(sum($"tf").as("src_len"))
     val termTot = st.groupBy($"term").agg(sum($"tf").as("ctf"))
     val corpusLen = broadcast(st.agg(sum($"tf").as("corpus_len")))
@@ -2397,8 +2396,8 @@ object TextAnalysis {
     // top-50 corpus terms, deterministic (freq desc, term asc) cut
     val vocab = terms.groupBy($"term").agg(count(lit(1)).as("freq"))
       .orderBy($"freq".desc, $"term".asc).limit(50).select($"term")
-    val st = Tables.materialize(terms.join(broadcast(vocab), "term")
-      .groupBy($"source", $"term").agg(count(lit(1)).as("c")))
+    val st = terms.join(broadcast(vocab), "term")
+      .groupBy($"source", $"term").agg(count(lit(1)).as("c")).localCheckpoint()
     val norms = st.groupBy($"source")
       .agg(sum($"c" * $"c").as("n2"))
       .select($"source", sqrt($"n2".cast("double")).as("nrm"))

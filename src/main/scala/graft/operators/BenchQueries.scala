@@ -275,8 +275,8 @@ object BenchQueries {
        |ORDER BY s.date""".stripMargin
 
   /** S5+S6 sink round-trip, ORACLE-CHECKED end to end: write the
-    * reference-exact `<pkg>/<test>.json` deploy tree (S5), the
-    * Spark-idiom partitioned series sink, and the catalog (S6), then
+    * reference-exact `<pkg>/<test>.json` deploy tree (S5) and the
+    * catalog (S6), then
     * read the deploy tree's ACTUAL bytes back (wholetext — the files
     * on disk, not the pre-write frame) and reduce each file to a
     * summary row: relative path, date-key count, lexical first/last
@@ -297,7 +297,6 @@ object BenchQueries {
     val out = BenchQueries.sinkScratchDir
     val f = fact(spark)
     BenchSinks.writeSeriesJsonExact(f, s"$out/deploy")
-    BenchSinks.writeSeriesJson(f, s"$out/series")
     BenchSinks.writeCatalogJson(f, s"$out/catalog")
     val bodyType = "MAP<STRING, STRUCT<N: BIGINT, A: BIGINT, B: BIGINT, M: DOUBLE>>"
     spark.read

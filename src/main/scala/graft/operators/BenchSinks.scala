@@ -3,13 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The reference's JSON sinks (SURVEY.md §2.1 S5/S6) as partitioned
+/** The reference's JSON sinks (SURVEY.md §2.1 S5/S6) as distributed
   * Spark writes.
   */
 object BenchSinks {
 
-  /** One (pkg, test) group's date-keyed series, the aggregate both
-    * series sinks write: `{DD-MM-YYYY: {N, A, B, M}}`, dates sorted. */
+  /** One (pkg, test) group's date-keyed series, the aggregate the
+    * series sink writes: `{DD-MM-YYYY: {N, A, B, M}}`, dates sorted.
+    * Dates render as DD-MM-YYYY strings to preserve the reference's
+    * key contract (README.md:31-33). */
   private def series: Column =
     map_from_entries(array_sort(collect_list(struct(
       date_format(col("date"), "dd-MM-yyyy").as("date"),
@@ -18,24 +20,6 @@ object BenchSinks {
         col("allocs_per_op").as("A"),
         col("bytes_per_op").as("B"),
         col("mb_per_s").as("M")).as("stats")))))
-
-  /** S5 (file_generator.go:177-190): per-(pkg,test) series JSON. The
-    * reference writes `{date: {N,A,B,M}}` per test file; the engine
-    * writes one JSON row per (pkg,test) carrying the same date-keyed
-    * map, partitioned by pkg — same information layout, but a
-    * distributed write (no driver-side materialization of the cube).
-    * Dates render as DD-MM-YYYY strings to preserve the reference's
-    * key contract (README.md:31-33).
-    */
-  def writeSeriesJson(fact: DataFrame, outDir: String): Unit =
-    fact
-      .groupBy(col("pkg"), col("test"))
-      .agg(series.as("series"))
-      .write.mode(SaveMode.Overwrite)
-      // keep null stats as explicit JSON nulls (Go marshals all keys)
-      .option("ignoreNullFields", "false")
-      .partitionBy("pkg")
-      .json(outDir)
 
   /** S5, exact reference layout (file_generator.go:177-190): ONE file
     * per test at `<out>/<pkg>/<test>.json` whose body is the date-keyed
@@ -47,8 +31,8 @@ object BenchSinks {
     * is integral floats: Go renders `0`, Spark `0.0` — the same JSON
     * number.
     *
-    * The write is distributed: the same one-row-per-test series
-    * aggregation as [[writeSeriesJson]], then executors write their
+    * The write is distributed: a one-row-per-test series
+    * aggregation, then executors write their
     * rows' files via the Hadoop FileSystem API (URI-agnostic: file://,
     * hdfs://, s3a:// deploy roots all work, which is the S8 publish
     * path). File count equals test count by CONTRACT — the output is a

@@ -1216,11 +1216,11 @@ object RelationalQueries {
     // marginals, order count); per-order sets are ≤ |type vocabulary|
     // so both the aggregation buffer and the explode² expansion are
     // bounded.
-    val byOrder = Tables.materialize(Tables.lineitem(spark, dir)
+    val byOrder = Tables.lineitem(spark, dir)
       .join(broadcast(Tables.part(spark, dir)
         .select($"p_partkey", $"p_type")), $"l_partkey" === $"p_partkey")
       .groupBy($"l_orderkey")
-      .agg(collect_set($"p_type").as("types")))
+      .agg(collect_set($"p_type").as("types")).localCheckpoint()
     val nOrders = broadcast(byOrder.agg(count(lit(1)).as("n_orders")))
     val typeN = byOrder.select(explode($"types").as("p_type"))
       .groupBy($"p_type").agg(count(lit(1)).as("n_type"))
@@ -1878,11 +1878,11 @@ object RelationalQueries {
   // subplans lesson (q63, q69).
   def q74PriceIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val pp = Tables.materialize(Tables.lineitem(spark, dir)
+    val pp = Tables.lineitem(spark, dir)
       .groupBy(year($"l_shipdate").as("yr"), $"l_partkey")
       .agg(dsum($"l_extendedprice", 6).as("sp"),
         dsum($"l_quantity", 6).as("sq"))
-      .select($"yr", $"l_partkey", ($"sp" / $"sq").as("p"), $"sq"))
+      .select($"yr", $"l_partkey", ($"sp" / $"sq").as("p"), $"sq").localCheckpoint()
     val base = pp.filter($"yr" === 1995)
       .select($"l_partkey".as("bk"), $"p".as("p0"), $"sq".as("q0"))
     pp.join(base, $"l_partkey" === $"bk")
@@ -1928,11 +1928,11 @@ object RelationalQueries {
   // registry-hygiene item.)
   def q75PaascheIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val pp = Tables.materialize(Tables.lineitem(spark, dir)
+    val pp = Tables.lineitem(spark, dir)
       .groupBy(year($"l_shipdate").as("yr"), $"l_partkey")
       .agg(dsum($"l_extendedprice", 6).as("sp"),
         dsum($"l_quantity", 6).as("sq"))
-      .select($"yr", $"l_partkey", ($"sp" / $"sq").as("p"), $"sq"))
+      .select($"yr", $"l_partkey", ($"sp" / $"sq").as("p"), $"sq").localCheckpoint()
     val base = pp.filter($"yr" === 1995)
       .select($"l_partkey".as("bk"), $"p".as("p0"), $"sq".as("q0"))
     pp.join(base, $"l_partkey" === $"bk")
@@ -1983,8 +1983,8 @@ object RelationalQueries {
   // fact is never rescanned.
   def q76SupplierChurn(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ys = Tables.materialize(Tables.lineitem(spark, dir)
-      .select(year($"l_shipdate").as("yr"), $"l_suppkey").distinct())
+    val ys = Tables.lineitem(spark, dir)
+      .select(year($"l_shipdate").as("yr"), $"l_suppkey").distinct().localCheckpoint()
     val maxYr = broadcast(ys.agg(max($"yr").as("max_yr")))
     val next = ys.select(($"yr" - 1).as("prev_yr"),
       $"l_suppkey".as("nk"))
@@ -2087,10 +2087,10 @@ object RelationalQueries {
   // routes through DECIMAL(28,12) (order-insensitive).
   def q78SeasonalIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cells = Tables.materialize(Tables.lineitem(spark, dir)
+    val cells = Tables.lineitem(spark, dir)
       .groupBy(year($"l_shipdate").as("yr"), month($"l_shipdate").as("mo"))
       .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
-        .as("rev")))
+        .as("rev")).localCheckpoint()
     val ym = cells.groupBy($"yr")
       .agg((sum($"rev".cast(DecimalType(28, 12))).cast("double")
         / count(lit(1))).as("ymean"))
@@ -2195,12 +2195,12 @@ object RelationalQueries {
       .groupBy($"l_orderkey")
       .agg(countDistinct(year($"l_shipdate") * 12 + month($"l_shipdate"))
         .as("n_months"))
-    val yearly = Tables.materialize(perOrder
+    val yearly = perOrder
       .join(Tables.orders(spark, dir)
         .select($"o_orderkey", year($"o_orderdate").as("yr")),
         $"l_orderkey" === $"o_orderkey")
       .select($"yr", least($"n_months", lit(3L)).as("spread_bucket"))
-      .groupBy($"yr", $"spread_bucket").agg(count(lit(1)).as("n_orders")))
+      .groupBy($"yr", $"spread_bucket").agg(count(lit(1)).as("n_orders")).localCheckpoint()
     val tot = yearly.groupBy($"yr").agg(sum($"n_orders").as("n_yr"))
     yearly.join(broadcast(tot), "yr")
       .select($"yr", $"spread_bucket", $"n_orders",
@@ -2305,11 +2305,11 @@ object RelationalQueries {
       .select($"o_custkey", $"o_orderkey", $"o_orderdate", $"returned")
     val w = Window.partitionBy($"o_custkey")
       .orderBy($"o_orderdate", $"o_orderkey")
-    val pairs = Tables.materialize(ord
+    val pairs = ord
       .withColumn("next_date", lead($"o_orderdate", 1).over(w))
       .filter($"next_date".isNotNull)
       .select($"returned",
-        datediff($"next_date", $"o_orderdate").as("gap")))
+        datediff($"next_date", $"o_orderdate").as("gap")).localCheckpoint()
     val gapHist = pairs.groupBy($"returned", $"gap")
       .agg(count(lit(1)).as("c"))
     val wc = Window.partitionBy($"returned").orderBy($"gap")
@@ -2482,7 +2482,7 @@ object RelationalQueries {
 
   def q84BenfordAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val obs = Tables.materialize(q84DigitHist(spark, dir))
+    val obs = q84DigitHist(spark, dir).localCheckpoint()
     val expShare = Map(
       1 -> 0.301029995664, 2 -> 0.176091259056, 3 -> 0.124938736608,
       4 -> 0.096910013008, 5 -> 0.079181246048, 6 -> 0.066946789631,
@@ -2674,7 +2674,7 @@ object RelationalQueries {
 
   def q86Anova(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val g = Tables.materialize(q86MomentTable(spark, dir))
+    val g = q86MomentTable(spark, dir).localCheckpoint()
     def dsum(c: org.apache.spark.sql.Column) =
       sum(c.cast("decimal(28,12)")).cast("double")
     val tot = g.agg(sum($"n").as("nt"), count(lit(1)).as("k"),
@@ -2877,9 +2877,9 @@ object RelationalQueries {
       $"n_orders", $"prev")
     // ≤~8-row histogram, two consumers (totals + final) — materialized
     // so the fact cascade runs once
-    val hist = Tables.materialize(bucketed.groupBy($"depth_bucket")
+    val hist = bucketed.groupBy($"depth_bucket")
       .agg(count(lit(1)).as("n_pairs"), sum($"n_orders").as("n_orders"),
-        dsum($"prev").as("rev")))
+        dsum($"prev").as("rev")).localCheckpoint()
     val tot = hist.agg(sum($"n_pairs").as("np"),
       sum(when($"depth_bucket" >= 2, $"n_pairs").otherwise(0L))
         .as("nrep")).filter($"np" > 0)
@@ -3093,12 +3093,11 @@ object RelationalQueries {
     val asiaSupp = Tables.supplier(spark, dir)
       .join(broadcast(asiaNations), $"s_nationkey" === $"n_nationkey")
       .select($"s_suppkey")
-    val byPart = Tables.materialize(
-      Tables.lineitem(spark, dir)
-        .join(broadcast(asiaSupp), $"l_suppkey" === $"s_suppkey", "left_semi")
-        .groupBy($"l_partkey")
-        .agg(d28($"l_extendedprice" * (lit(1.0) - $"l_discount"))
-          .as("value")))
+    val byPart = Tables.lineitem(spark, dir)
+      .join(broadcast(asiaSupp), $"l_suppkey" === $"s_suppkey", "left_semi")
+      .groupBy($"l_partkey")
+      .agg(d28($"l_extendedprice" * (lit(1.0) - $"l_discount"))
+        .as("value")).localCheckpoint()
     val tot = byPart.agg(d28($"value").as("total")).filter($"total" > 0.0)
     byPart.crossJoin(broadcast(tot))
       .filter($"value" > $"total" * 0.001)
@@ -3237,10 +3236,9 @@ object RelationalQueries {
   // before the mean.
   def q96DominantSuppliers(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ps = Tables.materialize(
-      Tables.lineitem(spark, dir)
-        .groupBy($"l_partkey", $"l_suppkey")
-        .agg(sum($"l_quantity").as("qty")))
+    val ps = Tables.lineitem(spark, dir)
+      .groupBy($"l_partkey", $"l_suppkey")
+      .agg(sum($"l_quantity").as("qty")).localCheckpoint()
     val w = Window.partitionBy($"l_partkey")
     val lead = ps
       .withColumn("total_qty", sum($"qty").over(w))
@@ -3317,7 +3315,7 @@ object RelationalQueries {
 
   def q97StatusTransitions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val matrix = Tables.materialize(q97MatrixBuild(spark, dir))
+    val matrix = q97MatrixBuild(spark, dir).localCheckpoint()
     val fromTot = matrix.groupBy($"from_status".as("f"))
       .agg(sum($"n_transitions").as("from_total"))
     matrix.join(broadcast(fromTot), $"from_status" === $"f")
@@ -3363,11 +3361,10 @@ object RelationalQueries {
   // integer-ratio doubles, terms DECIMAL-quantized before the total.
   def q98DowPriorityChi2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cells = Tables.materialize(
-      Tables.orders(spark, dir)
-        .groupBy(weekday($"o_orderdate".cast("timestamp")).as("dow"),
-          $"o_orderpriority".as("priority"))
-        .agg(count(lit(1)).as("n")))
+    val cells = Tables.orders(spark, dir)
+      .groupBy(weekday($"o_orderdate".cast("timestamp")).as("dow"),
+        $"o_orderpriority".as("priority"))
+      .agg(count(lit(1)).as("n")).localCheckpoint()
     val rowTot = cells.groupBy($"dow".as("rd"))
       .agg(sum($"n").as("row_total"))
     val colTot = cells.groupBy($"priority".as("cp"))
@@ -3471,7 +3468,7 @@ object RelationalQueries {
 
   def q99PurchaseEpisodes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val hist = Tables.materialize(q99HistBuild(spark, dir))
+    val hist = q99HistBuild(spark, dir).localCheckpoint()
     val tot = hist.agg(sum($"n_episodes").as("ne"),
       sum($"span_sum").cast("double").as("ss")).filter($"ne" > 0)
     hist.crossJoin(broadcast(tot))

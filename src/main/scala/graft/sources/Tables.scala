@@ -57,8 +57,11 @@ object Tables {
     * localCheckpoint truncates lineage, so blocks must not be dropped
     * while a DataFrame still expects re-execution — but per-query
     * transients are rebuilt fresh by each invocation, and the
-    * long-lived artifact family is pinned. Non-blocking: block removal
-    * proceeds async while the next query runs.
+    * long-lived artifact family is pinned. The transients are the
+    * query modules' plain `localCheckpoint()`s, in executor block
+    * storage in every cache mode: reliable mode covers [[artifact]]s
+    * only. Non-blocking: block removal proceeds async while the next
+    * query runs.
     */
   def releaseTransients(spark: SparkSession): Unit = {
     val kept = entries.values.asScala.flatMap(_.ids).toSet
@@ -275,47 +278,48 @@ object Tables {
 
   private def cacheMode: Option[String] = sys.props.get("graft.tableCache")
 
-  /** Materialization for session-cached DERIVED artifacts (the ingest
-    * fact, the dedup class collapse and band index, trained centroids /
-    * codebooks, SQ8 ranges): `localCheckpoint` by default — executor
-    * block storage with TRUNCATED lineage, free on local[*] and the
-    * right warm-mode trade there — or a RELIABLE `checkpoint` when
-    * `-Dgraft.tableCache=reliable`. The distinction only matters on a
-    * real cluster: a localCheckpointed artifact's blocks die with any
-    * executor that held them, and truncated lineage means they are
-    * UNRECOVERABLE mid-job — an executor loss hours into a long warm
-    * pipeline kills it. Reliable mode writes the blocks to the
-    * checkpoint filesystem instead (defaulted under the session's
-    * warehouse dir — any scheme, so an object-store warehouse gives
-    * durable artifacts), surviving executor loss at the cost of one
-    * write + remote read. Base TABLE scans never route through this:
-    * the source parquet is already durable, and re-copying a 100 TB
-    * input to the checkpoint dir would be the wrong trade in every
-    * mode. */
-  def materialize(df: DataFrame): DataFrame =
-    if (cacheMode.contains("reliable")) {
-      val spark = df.sparkSession
-      val sc = spark.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(
-          spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
-            + "/graft-checkpoints")
-      df.checkpoint()
-    } else df.localCheckpoint()
-
   /** The derived artifact `name` of `dir`'s data (the bench fact, the
     * dedup class, shingle and band tables, graph edges, trained
     * codebooks): built once per (session, dir snapshot), its build time
     * logged, and every block the build persists pinned against
-    * [[releaseTransients]]. The result is [[materialize]]d, except a
-    * build that already ends in a checkpoint (an iterative loop
-    * checkpoints per round): by default that checkpoint IS the artifact,
-    * and only reliable mode re-checkpoints it durably. */
+    * [[releaseTransients]]. This is the one place that decides whether
+    * a table is written durably.
+    *
+    * By default the result is `localCheckpoint`ed: executor block
+    * storage with TRUNCATED lineage, free on local[*] and the right
+    * warm-mode trade there. A build that already ends in a checkpoint
+    * (an iterative loop checkpoints per round) keeps it: that
+    * checkpoint IS the artifact.
+    *
+    * `-Dgraft.tableCache=reliable` writes every artifact with a
+    * RELIABLE `checkpoint` instead. The distinction only matters on a
+    * real cluster: a localCheckpointed artifact's blocks die with any
+    * executor that held them, and truncated lineage makes them
+    * UNRECOVERABLE mid-job, so an executor loss hours into a long warm
+    * pipeline kills it. The checkpoint dir defaults to the session's
+    * warehouse dir (any scheme, so an object-store warehouse gives
+    * durable artifacts). Once the durable copy exists, a build's own
+    * closing local checkpoint is freed rather than pinned. Reliable
+    * mode covers artifacts only: per-query intermediates stay
+    * `localCheckpoint()`s, and base TABLE scans never route through
+    * here (the source parquet is already durable). */
   def artifact(spark: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame =
     sessionCached(spark, stamped(spark, dir, name)) {
       val df = build
-      if (isCheckpoint(df) && !cacheMode.contains("reliable")) df else materialize(df)
+      if (cacheMode.contains("reliable")) {
+        val sc = spark.sparkContext
+        if (sc.getCheckpointDir.isEmpty)
+          sc.setCheckpointDir(
+            spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
+              + "/graft-checkpoints")
+        val durable = df.checkpoint()
+        // a nested artifact returned as is keeps its own pinned blocks
+        if (isCheckpoint(df) && !entries.values.asScala.exists(_.df eq df))
+          freeCheckpoint(df)
+        durable
+      } else if (isCheckpoint(df)) df
+      else df.localCheckpoint()
     }
 
   /** UNCOMPRESSED bytes per partition for a warm-mode checkpointed

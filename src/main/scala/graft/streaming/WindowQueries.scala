@@ -763,10 +763,10 @@ object WindowQueries {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val hourUs = 3600L * 1000000L
-    val hourly = Tables.materialize(Tables.events(spark, dir)
+    val hourly = Tables.events(spark, dir)
       .groupBy($"event_type", window($"ts", "1 hour").as("w"))
       .agg(count(lit(1)).as("n"))
-      .select($"event_type", unix_micros($"w.start").as("h_us"), $"n"))
+      .select($"event_type", unix_micros($"w.start").as("h_us"), $"n").localCheckpoint()
     val spine = hourly.agg(min($"h_us").as("mn"), max($"h_us").as("mx"))
       .select(explode(sequence($"mn", $"mx", lit(hourUs))).as("h_us"))
     val grid = spine
@@ -943,12 +943,12 @@ object WindowQueries {
     // materialized: the hour-grain table feeds the cell stats AND the
     // join-back (Spark never dedupes common subplans; the events scan
     // + hour groupBy would otherwise run twice)
-    val hourly = Tables.materialize(Tables.events(spark, dir)
+    val hourly = Tables.events(spark, dir)
       .select(floor(unix_micros($"ts") / lit(3600000000L)).as("hr_idx"))
       .groupBy($"hr_idx").agg(count(lit(1)).as("n_events"))
       .select($"hr_idx",
         (((floor($"hr_idx" / 24L) + 3) % 7).cast("int")).as("dow"),
-        ($"hr_idx" % 24).cast("int").as("hod"), $"n_events"))
+        ($"hr_idx" % 24).cast("int").as("hod"), $"n_events").localCheckpoint()
     val cells = hourly.groupBy($"dow", $"hod")
       .agg(count(lit(1)).as("n_hours"),
         sum($"n_events").as("sc"),
@@ -1020,13 +1020,13 @@ object WindowQueries {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
-    val daily = Tables.materialize(Tables.events(spark, dir)
+    val daily = Tables.events(spark, dir)
       .select(floor(unix_micros($"ts") / lit(86400000000L)).as("d"),
         $"value")
       .groupBy($"d")
       .agg(count(lit(1)).as("n_events"),
         (sum($"value".cast(DecimalType(28, 12))).cast("double")
-          / count(lit(1))).as("m")))
+          / count(lit(1))).as("m")).localCheckpoint()
     val g = broadcast(daily.agg(
       count(lit(1)).as("nd"),
       sum($"m".cast(DecimalType(28, 12))).cast("double").as("sm"),
@@ -1089,8 +1089,8 @@ object WindowQueries {
   def stValuePercentiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val hist = Tables.materialize(Tables.events(spark, dir)
-      .groupBy($"event_type", $"value").agg(count(lit(1)).as("c")))
+    val hist = Tables.events(spark, dir)
+      .groupBy($"event_type", $"value").agg(count(lit(1)).as("c")).localCheckpoint()
     val tot = hist.groupBy($"event_type").agg(sum($"c").as("n"))
     val w = Window.partitionBy($"event_type").orderBy($"value")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1287,11 +1287,11 @@ object WindowQueries {
     // session boundaries must be PER USER (keying session_window by
     // event_type too would give each type its own session grid);
     // the type set rides the session row and explodes after
-    val st = Tables.materialize(Tables.events(spark, dir)
+    val st = Tables.events(spark, dir)
       .groupBy(session_window($"ts", "30 minutes").as("w"), $"user_id")
       .agg(collect_set($"event_type").as("types"))
       .select($"user_id", unix_micros($"w.start").as("s_us"),
-        explode($"types").as("event_type")))
+        explode($"types").as("event_type")).localCheckpoint()
     val nSessions = st.select($"user_id", $"s_us").distinct().count()
     val perType = st.groupBy($"event_type")
       .agg(count(lit(1)).as("n_sess"))
@@ -1364,10 +1364,10 @@ object WindowQueries {
   // horizon. All-integer sums; the two divisions share one form.
   def stDispersion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val mins = Tables.materialize(Tables.events(spark, dir)
+    val mins = Tables.events(spark, dir)
       .select($"event_type",
         floor(unix_micros($"ts") / lit(60000000L)).as("minute"))
-      .groupBy($"event_type", $"minute").agg(count(lit(1)).as("c")))
+      .groupBy($"event_type", $"minute").agg(count(lit(1)).as("c")).localCheckpoint()
     val horizon = mins.agg(min($"minute").as("lo"), max($"minute").as("hi"))
     mins.groupBy($"event_type")
       .agg(sum($"c").as("n_events"), count(lit(1)).as("n_active_minutes"),
@@ -1439,10 +1439,10 @@ object WindowQueries {
   def stWhaleMass(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val hist = Tables.materialize(Tables.events(spark, dir)
+    val hist = Tables.events(spark, dir)
       .groupBy($"event_type", $"value")
       .agg(count(lit(1)).as("c"),
-        sum($"value".cast("decimal(18,6)")).as("sv")))
+        sum($"value".cast("decimal(18,6)")).as("sv")).localCheckpoint()
     val tot = hist.groupBy($"event_type")
       .agg(sum($"c").as("n_events"), sum($"sv").as("total_value"))
     val w = Window.partitionBy($"event_type").orderBy($"value")
@@ -1536,7 +1536,7 @@ object WindowQueries {
       .filter($"mid".isNotNull)
     // (type × half × bin) histogram — bounded, three consumers below,
     // materialized so the fact scan runs once through it
-    val binned = Tables.materialize(ev
+    val binned = ev
       .join(broadcast(vb.select($"event_type", $"vmn", $"vmx")),
         "event_type")
       .crossJoin(broadcast(bounds))
@@ -1547,7 +1547,7 @@ object WindowQueries {
             / (($"vmx" - $"vmn") / 10.0)), lit(9L)))
           .cast("int").as("bin"))
       .groupBy($"event_type", $"half", $"bin")
-      .agg(count(lit(1)).as("c")))
+      .agg(count(lit(1)).as("c")).localCheckpoint()
     val halves = binned.groupBy($"event_type")
       .agg(sum(when($"half" === 0, $"c").otherwise(0L)).as("n0"),
         sum(when($"half" === 1, $"c").otherwise(0L)).as("n1"))
@@ -1763,10 +1763,10 @@ object WindowQueries {
     val bounds = tb.agg(min($"tmn").as("mn"), max($"tmx").as("mx"))
       .select(expr("(mn + mx) div 2").as("mid"))
       .filter($"mid".isNotNull)
-    val counts = Tables.materialize(ev.crossJoin(broadcast(bounds))
+    val counts = ev.crossJoin(broadcast(bounds))
       .groupBy($"event_type")
       .agg(sum(when($"t_us" <= $"mid", 1L).otherwise(0L)).as("c0"),
-        sum(when($"t_us" > $"mid", 1L).otherwise(0L)).as("c1")))
+        sum(when($"t_us" > $"mid", 1L).otherwise(0L)).as("c1")).localCheckpoint()
     val tot = counts.agg(sum($"c0").as("n0"), sum($"c1").as("n1"))
       .filter($"n0" > 0 && $"n1" > 0)
     val terms = counts.crossJoin(broadcast(tot))
@@ -1851,12 +1851,12 @@ object WindowQueries {
       .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
       .withColumn("gap_us", $"ts_us" - lag($"ts_us", 1).over(w))
       .filter($"gap_us".isNotNull)
-    val hist = Tables.materialize(gaps
+    val hist = gaps
       .groupBy(when($"gap_us" < 1000000L, lit(-1L))
         .otherwise(length(bin($"gap_us" / lit(1000000L))) - 1)
         .as("gap_bucket"))
       .agg(count(lit(1)).as("n_gaps"),
-        sum($"gap_us".cast(DecimalType(28, 0))).as("gap_sum_us")))
+        sum($"gap_us".cast(DecimalType(28, 0))).as("gap_sum_us")).localCheckpoint()
     val tot = hist.agg(sum($"n_gaps").as("nt"),
       sum($"gap_sum_us").cast("double").as("gs")).filter($"nt" > 0)
     hist.crossJoin(broadcast(tot))
@@ -1911,11 +1911,11 @@ object WindowQueries {
       .agg(((max($"ts_us") - min($"ts_us")) / lit(86400000000L))
           .cast("long").as("span_days"),
         count(lit(1)).as("n_events"))
-    val hist = Tables.materialize(spans
+    val hist = spans
       .groupBy($"span_days".as("span_bucket"))
       .agg(count(lit(1)).as("n_users"),
         sum($"n_events").as("n_events"),
-        sum($"span_days".cast(DecimalType(28, 0))).as("span_sum")))
+        sum($"span_days".cast(DecimalType(28, 0))).as("span_sum")).localCheckpoint()
     val tot = hist.agg(sum($"n_users").as("nu"),
       sum($"span_sum").cast("double").as("ss")).filter($"nu" > 0)
     hist.crossJoin(broadcast(tot))
@@ -1967,11 +1967,10 @@ object WindowQueries {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-    val gaps = Tables.materialize(
-      Tables.events(spark, dir)
-        .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
-        .withColumn("gap_us", $"ts_us" - lag($"ts_us", 1).over(w))
-        .select($"gap_us"))
+    val gaps = Tables.events(spark, dir)
+      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
+      .withColumn("gap_us", $"ts_us" - lag($"ts_us", 1).over(w))
+      .select($"gap_us").localCheckpoint()
     val users = Tables.events(spark, dir)
       .agg(countDistinct($"user_id").as("n_users"),
         count(lit(1)).as("n_events"))
@@ -2056,11 +2055,11 @@ object WindowQueries {
       .agg(array_join(sort_array(collect_set($"p")), ",").as("profile"))
     val kTable = profiles.groupBy($"profile")
       .agg(count(lit(1)).as("k"))
-    val hist = Tables.materialize(kTable
+    val hist = kTable
       .groupBy(when($"k" <= 3, $"k")
         .otherwise(expr("shiftleft(1L, cast(length(bin(k)) - 1 as int))"))
         .as("k_bucket"))
-      .agg(count(lit(1)).as("n_profiles"), sum($"k").as("n_users")))
+      .agg(count(lit(1)).as("n_profiles"), sum($"k").as("n_users")).localCheckpoint()
     val tot = hist.agg(sum($"n_users").as("nu"),
       sum(when($"k_bucket" === 1, $"n_users").otherwise(0L)).as("uniq"))
       .filter($"nu" > 0)

@@ -6,26 +6,23 @@ import graft.operators.{BenchQueries, BenchSinks}
 
 /** Sink round-trip (port of TestGenerateJSONFiles,
   * file_generator_test.go:75-93): the written JSON must carry the
-  * date-keyed {N,A,B,M} map per (pkg,test), partitioned by pkg.
+  * date-keyed {N,A,B,M} map per (pkg,test), one file per test.
   */
 class BenchSinksSpec extends SparkSpec {
 
   test("series JSON sink round-trips the golden series (S5)") {
     val out = tempDir("test_sink_series")
-    val fact = BenchQueries.fact(spark)
-    BenchSinks.writeSeriesJson(fact, out)
-    val back = spark.read.json(out)
+    BenchSinks.writeSeriesJsonExact(BenchQueries.fact(spark), out)
+    // read the deploy tree back as Spark JSON: one row per test file
+    val back = spark.read.option("recursiveFileLookup", "true").json(out)
     assert(back.count() == 4) // 4 distinct (pkg,test) series
     val golden = back
-      .filter("pkg = 'sql' AND test = 'BenchmarkBank2_Cockroach-8'")
-      .select(col("series.`01-01-2015`.N"), col("series.`01-01-2015`.A"),
-        col("series.`01-01-2015`.B"), col("series.`01-01-2015`.M"))
+      .filter(input_file_name().endsWith("/sql/BenchmarkBank2_Cockroach-8.json"))
+      .select(col("`01-01-2015`.N"), col("`01-01-2015`.A"),
+        col("`01-01-2015`.B"), col("`01-01-2015`.M"))
       .collect()(0)
     assert((golden.getLong(0), golden.getLong(1), golden.getLong(2), golden.getDouble(3)) ==
       ((1328086L, 2317L, 183965L, 0.0)))
-    // partitioned layout: one dir per pkg (S5's partition contract)
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.exists(_.startsWith("pkg=")))
   }
 
   test("exact-layout sink writes <out>/<pkg>/<test>.json per test (S5)") {
@@ -145,9 +142,9 @@ class BenchSinksSpec extends SparkSpec {
   test("full sync-to-publish loop runs end-to-end over a non-local scheme (S1+S8)") {
     // The complete reference loop — raw stdout tree in, deployed
     // dashboard dir out — with EVERY hop on the second FS scheme:
-    // the source scan (S1 sync read), the Spark-committer partitioned
-    // series write and catalog write (commit-protocol rename behavior,
-    // which the exact-layout sink's manual FS writes don't exercise),
+    // the source scan (S1 sync read), the Spark-committer catalog
+    // write (commit-protocol rename behavior, which the exact-layout
+    // sink's manual FS writes don't exercise),
     // the exact-layout deploy write, and the asset copy (S8 publish).
     // graftfs:// resolves through core-site.xml exactly like an
     // object-store connector; file:// shortcuts never apply.
@@ -164,9 +161,8 @@ class BenchSinksSpec extends SparkSpec {
     assert(fact.count() == factLocal.count(),
       "scheme-read ingest must equal the file:// run")
 
-    // S5 partitioned + S6 catalog: Spark committer (temporary dir +
-    // rename) through the scheme
-    BenchSinks.writeSeriesJson(fact, s"graftfs://$out/series")
+    // S6 catalog: Spark committer (temporary dir + rename) through the
+    // scheme
     BenchSinks.writeCatalogJson(fact, s"graftfs://$out/catalog")
     // S5 exact layout + S7 assets: manual FS writes through the scheme
     BenchSinks.writeSeriesJsonExact(fact, s"graftfs://$out/deploy")
@@ -177,7 +173,8 @@ class BenchSinksSpec extends SparkSpec {
       Seq(s"graftfs://$assetDir/index.html"), s"graftfs://$out/deploy")
 
     // read everything back THROUGH the scheme and check content
-    val series = spark.read.json(s"graftfs://$out/series")
+    val series = spark.read.option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", "*.json").json(s"graftfs://$out/deploy")
     assert(series.count() == 4, "4 (pkg,test) series expected")
     val cat = spark.read.json(s"graftfs://$out/catalog")
     assert(cat.count() == 3)
@@ -210,17 +207,6 @@ class BenchSinksSpec extends SparkSpec {
     assert(body.contains("\"M\":null"), s"null stat dropped from body: $body")
     Seq("\"N\":", "\"A\":", "\"B\":", "\"M\":").foreach(k =>
       assert(body.contains(k), s"missing key $k in $body"))
-    // the partitioned-idiom sink honors the same contract
-    val out2 = tempDir("test_sink_nulls_idiom")
-    BenchSinks.writeSeriesJson(fact, out2)
-    def walk(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) walk(f) else Seq(f))
-    val jsonBody = walk(new java.io.File(out2))
-      .filter(_.getName.endsWith(".json"))
-      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath)))
-      .mkString
-    assert(jsonBody.contains("\"M\":null"),
-      s"partitioned sink dropped the null stat: $jsonBody")
   }
 
   test("ingest reads through explicit file:// URIs (S1 path shape)") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.fs.permission.FsPermission
@@ -9,7 +11,8 @@ import org.apache.hadoop.fs.permission.FsPermission
 import graft.sources.HadoopFs
 
 /** The publish's file system: modes set in-process on `file://`, and
-  * every publish file handle opened through [[HadoopFs.forPath]]. */
+  * every publish file handle opened through [[HadoopFs.forPath]]. Also
+  * the source guard that keeps durable checkpoint writes in `Tables`. */
 class HadoopFsSpec extends SparkSpec {
 
   private val conf = new Configuration()
@@ -47,12 +50,29 @@ class HadoopFsSpec extends SparkSpec {
     // FS and its in-process chmod.
     val banned = Seq("getFileSystem(", "FileUtil.copy(")
     Seq("sources/BenchIngest.scala", "operators/BenchSinks.scala").foreach { f =>
-      val code = Files.readAllLines(Paths.get("src/main/scala/graft", f))
-        .toArray(Array.empty[String]).toSeq
-        .map(_.replaceAll("//.*", ""))
-        .filterNot { l => val t = l.trim; t.startsWith("*") || t.startsWith("/*") }
-      val hits = for (l <- code; b <- banned if l.contains(b)) yield l.trim
+      val hits = for (l <- codeLines(f); b <- banned if l.contains(b)) yield l.trim
       assert(hits.isEmpty, s"$f opens a file system outside HadoopFs.forPath: $hits")
     }
   }
+
+  test("durable checkpoint writes live only in Tables") {
+    // Tables.artifact alone decides what is written durably; a query
+    // module's intermediates are plain localCheckpoint()s.
+    val root = Paths.get("src/main/scala/graft")
+    val banned = Seq(".checkpoint(", "setCheckpointDir(")
+    val files = Files.walk(root).iterator().asScala.toSeq
+      .map(root.relativize(_).toString)
+      .filter(f => f.endsWith(".scala") && f != "sources/Tables.scala")
+    assert(files.size > 20, s"source scan found only $files")
+    val hits = for (f <- files; l <- codeLines(f); b <- banned if l.contains(b))
+      yield s"$f: ${l.trim}"
+    assert(hits.isEmpty, s"durable checkpoint outside Tables: $hits")
+  }
+
+  /** The code lines of `src/main/scala/graft/<f>`, comments dropped. */
+  private def codeLines(f: String): Seq[String] =
+    Files.readAllLines(Paths.get("src/main/scala/graft", f))
+      .toArray(Array.empty[String]).toSeq
+      .map(_.replaceAll("//.*", ""))
+      .filterNot { l => val t = l.trim; t.startsWith("*") || t.startsWith("/*") }
 }
