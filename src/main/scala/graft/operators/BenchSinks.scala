@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import com.fasterxml.jackson.core.JsonFactory
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's JSON sinks (SURVEY.md §2.1 S5/S6) as distributed
   * Spark writes.
@@ -55,7 +57,10 @@ object BenchSinks {
     // setting, e.g. object-store credentials), shipped to executors
     val conf = new org.apache.spark.util.SerializableConfiguration(
       fact.sparkSession.sessionState.newHadoopConf())
+    // an explicit partition count: AQE would merge the small shuffle
+    // into one reduce task that creates every file one after another
     fact
+      .repartition(fact.sparkSession.sparkContext.defaultParallelism, col("pkg"), col("test"))
       .groupBy(col("pkg"), col("test"))
       .agg(to_json(series, Map("ignoreNullFields" -> "false")).as("body"))
       .select(col("pkg"), col("test"), col("body"))
@@ -102,15 +107,42 @@ object BenchSinks {
   }
 
   /** S6 (file_generator.go:192-208): the `test_names.json` catalog —
-    * `{pkg: [test...]}`. Single small file by contract, rows in pkg
-    * order: the catalog is one row per pkg, tiny at any scale, so one
-    * partition sorted in place writes it without the range-sampling
-    * job and extra exchange a global `orderBy` costs.
+    * `{pkg: [test...]}` — as `SeriesOps.catalog(fact)`'s rows, one JSON
+    * line each, in `<outDir>/part-00000.json`. The catalog is one row
+    * per pkg, tiny at any scale, so one job collects each partition's
+    * distinct (pkg, test) pairs, with no exchange, and the driver sorts
+    * them (Spark's string order) and writes the one file through
+    * [[graft.sources.HadoopFs.forPath]]. No output committer runs and
+    * no `_SUCCESS` is written; an existing `outDir` is deleted first,
+    * as `SaveMode.Overwrite` does. The lines are Jackson's, as Spark's
+    * JSON writer makes them (a null pkg drops its key).
     */
-  def writeCatalogJson(fact: DataFrame, outDir: String): Unit =
-    SeriesOps.catalogRows(fact)
-      .coalesce(1)
-      .sortWithinPartitions(col("pkg"))
-      .write.mode(SaveMode.Overwrite)
-      .json(outDir)
+  def writeCatalogJson(fact: DataFrame, outDir: String): Unit = {
+    val spark = fact.sparkSession
+    import spark.implicits._
+    val pairs = fact.select(col("pkg"), col("test")).as[(String, String)]
+      .mapPartitions(_.toSet.iterator).collect()
+    val utf8 = Ordering.by((s: String) => UTF8String.fromString(s))
+    val nullsFirst: Ordering[String] = Ordering.Option(utf8).on(Option(_))
+    val json = new java.io.StringWriter
+    val gen = new JsonFactory().createGenerator(json).setRootValueSeparator(null)
+    pairs.groupMap(_._1)(_._2).toSeq.sortBy(_._1)(nullsFirst)
+      .foreach { case (pkg, tests) =>
+        gen.writeStartObject()
+        if (pkg != null) gen.writeStringField("pkg", pkg)
+        gen.writeArrayFieldStart("tests")
+        tests.filter(_ != null).distinct.sorted(utf8).foreach(t => gen.writeString(t))
+        gen.writeEndArray()
+        gen.writeEndObject()
+        gen.flush()
+        json.write("\n")
+      }
+    gen.close()
+    val dir = new org.apache.hadoop.fs.Path(outDir)
+    val fs = graft.sources.HadoopFs.forPath(dir, spark.sessionState.newHadoopConf())
+    fs.delete(dir, true)
+    val out = fs.create(new org.apache.hadoop.fs.Path(dir, "part-00000.json"), false)
+    try out.write(json.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
 }

@@ -25,12 +25,9 @@ object SeriesOps {
     * client-side, list.js:22).
     */
   def catalog(fact: DataFrame): DataFrame =
-    catalogRows(fact).orderBy(col("pkg"))
-
-  /** [[catalog]]'s rows in no particular order. */
-  private[operators] def catalogRows(fact: DataFrame): DataFrame =
     fact.groupBy(col("pkg"))
       .agg(array_sort(collect_set(col("test"))).as("tests"))
+      .orderBy(col("pkg"))
 
   /** A4 (file_generator.go:210-224, dead code in the reference but part
     * of its declared surface): global distinct dates.

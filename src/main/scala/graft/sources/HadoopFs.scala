@@ -1,7 +1,12 @@
 package graft.sources
 
+import java.nio.file.Files
+import java.nio.file.attribute.BasicFileAttributes
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The Hadoop FileSystem that the stdout reader, the deploy sink and
@@ -40,18 +45,47 @@ object HadoopFs {
     } else fs
   }
 
-  /** The raw local FS with `setPermission` done in-process. Without
-    * Hadoop's native library `RawLocalFileSystem` sets a mode by forking
-    * `chmod`, and every `create` and every `mkdirs` sets one: about
-    * 5 ms per file, most of a deploy of small series files. This sets
-    * the same mode through `java.nio`; only a mode NIO cannot express
-    * (the sticky bit) takes Hadoop's own path.
+  /** The raw local FS with `setPermission` and directory listing done
+    * in-process. Without Hadoop's native library `RawLocalFileSystem`
+    * sets a mode by forking `chmod`, and every `create` and every
+    * `mkdirs` sets one: about 5 ms per file, most of a deploy of small
+    * series files. This sets the same mode through `java.nio`; only a
+    * mode NIO cannot express (the sticky bit) takes Hadoop's own path.
+    *
+    * `RawLocalFileSystem.listStatus` stats each entry of a directory
+    * several times over (exists, length, is-dir, two times). This reads
+    * each entry once, by one directory stream and one `readAttributes`,
+    * into a status with the same path, kind, length and times; like
+    * Hadoop's, it follows symlinks and skips an entry that cannot be
+    * stat'ed (a dangling link, a file deleted meanwhile). It does not
+    * read owner, group or mode (Hadoop's status forks `ls` for them
+    * when first asked), so those read as `FileStatus` defaults; the
+    * publish reads only path, kind and length. A file or a missing
+    * path takes Hadoop's own path.
     */
   private final class NioModeLocalFs extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit =
       if (permission.getStickyBit) super.setPermission(p, permission)
-      else java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath,
+      else Files.setPosixFilePermissions(pathToFile(p).toPath,
         java.nio.file.attribute.PosixFilePermissions.fromString(
           permission.toString))
+
+    override def listStatus(f: Path): Array[FileStatus] = {
+      val dir = pathToFile(f).toPath
+      if (!Files.isDirectory(dir)) return super.listStatus(f)
+      val blockSize = getDefaultBlockSize(f)
+      val entries = Files.newDirectoryStream(dir)
+      try entries.iterator().asScala.flatMap { e =>
+        val name = e.getFileName.toString
+        try {
+          val a = Files.readAttributes(e, classOf[BasicFileAttributes])
+          Some(new FileStatus(a.size, a.isDirectory, 1, blockSize,
+            a.lastModifiedTime.toMillis, a.lastAccessTime.toMillis, null, null, null,
+            new Path(pathToFile(new Path(f, new Path(null, null, name))).getPath)
+              .makeQualified(getUri, getWorkingDirectory)))
+        } catch { case _: java.io.IOException => None }
+      }.toArray
+      finally entries.close()
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BenchQueries, BenchSinks}
+import graft.operators.{BenchQueries, BenchSinks, SeriesOps}
 
 /** Sink round-trip (port of TestGenerateJSONFiles,
   * file_generator_test.go:75-93): the written JSON must carry the
@@ -142,10 +142,8 @@ class BenchSinksSpec extends SparkSpec {
   test("full sync-to-publish loop runs end-to-end over a non-local scheme (S1+S8)") {
     // The complete reference loop — raw stdout tree in, deployed
     // dashboard dir out — with EVERY hop on the second FS scheme:
-    // the source scan (S1 sync read), the Spark-committer catalog
-    // write (commit-protocol rename behavior, which the exact-layout
-    // sink's manual FS writes don't exercise),
-    // the exact-layout deploy write, and the asset copy (S8 publish).
+    // the source scan (S1 sync read), the catalog write, the
+    // exact-layout deploy write, and the asset copy (S8 publish).
     // graftfs:// resolves through core-site.xml exactly like an
     // object-store connector; file:// shortcuts never apply.
     val src = tempDir("test_e2e_scheme_src")
@@ -161,8 +159,7 @@ class BenchSinksSpec extends SparkSpec {
     assert(fact.count() == factLocal.count(),
       "scheme-read ingest must equal the file:// run")
 
-    // S6 catalog: Spark committer (temporary dir + rename) through the
-    // scheme
+    // S6 catalog: the driver's one-file write through the scheme
     BenchSinks.writeCatalogJson(fact, s"graftfs://$out/catalog")
     // S5 exact layout + S7 assets: manual FS writes through the scheme
     BenchSinks.writeSeriesJsonExact(fact, s"graftfs://$out/deploy")
@@ -181,7 +178,7 @@ class BenchSinksSpec extends SparkSpec {
     assert(new java.io.File(s"$out/deploy/sql/BenchmarkDup-8.json").isFile)
     assert(new String(java.nio.file.Files.readAllBytes(
       new java.io.File(s"$out/deploy/index.html").toPath)) == "dash-body")
-    // committer left no temporary turds behind
+    // no write left temporary output behind
     def walk(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).toSeq.flatten
         .flatMap(f => if (f.isDirectory) walk(f) else Seq(f))
@@ -239,15 +236,55 @@ class BenchSinksSpec extends SparkSpec {
 
   test("catalog JSON sink writes one pkg-ordered file without a global sort") {
     // a global orderBy + coalesce(1) cost 4 jobs (range sampling and an
-    // extra exchange) for a catalog of a few rows
+    // extra exchange) for a catalog of a few rows, a group-by and the
+    // committer's write 2; the driver writes it after one job
     val fact = BenchQueries.fact(spark) // checkpointed, like the publish op's
     val out = tempDir("test_sink_catalog_jobs")
     val jobs = jobsOf(BenchSinks.writeCatalogJson(fact, out))
-    assert(jobs < 4, s"catalog sink ran $jobs jobs")
-    val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
-    assert(parts.length == 1, s"expected one part file, got ${parts.map(_.getName).toSeq}")
-    val pkgs = spark.read.json(parts.head.getPath).select("pkg").collect().map(_.getString(0))
-    assert(pkgs.toSeq == Seq("sql", "sql/parser", "util/cache"))
+    assert(jobs == 1, s"catalog sink ran $jobs jobs")
+    val names = new java.io.File(out).list().toSeq.sorted
+    assert(names == Seq("part-00000.json"), s"expected one part file and no _SUCCESS, got $names")
+    val back = spark.read.json(s"$out/part-00000.json")
+    assert(back.collect().toSeq == SeriesOps.catalog(fact).collect().toSeq)
+    assert(back.select("pkg").collect().map(_.getString(0)).toSeq ==
+      Seq("sql", "sql/parser", "util/cache"))
+  }
+
+  test("catalog file is the bytes Spark's JSON writer makes of SeriesOps.catalog") {
+    import spark.implicits._
+    // names that need JSON escapes, non-ASCII names whose UTF-8 and
+    // UTF-16 orders disagree, and nulls on both columns
+    val fact = Seq(
+      ("sql", "Benchmark\uD83D\uDE00-8"), ("sql", "Benchmark\uFF21-8"), ("sql", "BenchmarkB-8"),
+      ("sql", "BenchmarkB-8"), ("sql", "Benchmark\"q\\\t\u0001-8"), ("sql", null),
+      ("kv", "BenchmarkPut-8"), (null, "BenchmarkOrphan-8"), ("\u00e9t\u00e9", "BenchmarkX-8"),
+      ("util/log", null))
+      .toDF("pkg", "test").repartition(3)
+    val (got, spark_) = (tempDir("test_sink_catalog_bytes"), tempDir("test_sink_catalog_spark"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(got, "stale.json"), "{}")
+    BenchSinks.writeCatalogJson(fact, got)
+    SeriesOps.catalog(fact).coalesce(1).write.mode("overwrite").json(spark_)
+    def body(dir: String) = {
+      val parts = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      assert(parts.length == 1, parts.toSeq)
+      new String(java.nio.file.Files.readAllBytes(parts.head.toPath), "UTF-8")
+    }
+    assert(new java.io.File(got).list().toSeq == Seq("part-00000.json"))
+    assert(body(got) == body(spark_))
+    assert(body(got).linesIterator.size == 5)
+  }
+
+  test("a fixture publish runs 4 jobs: ingest 1, series sink 2, catalog sink 1") {
+    import graft.sources.{BenchFixture, BenchIngest, Tables}
+    val out = tempDir("test_publish_jobs")
+    var fact: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf {
+      fact = BenchIngest.ingest(spark, BenchFixture.shared)
+      BenchSinks.writeSeriesJsonExact(fact, out)
+      BenchSinks.writeCatalogJson(fact, s"$out/test_names.json")
+    }
+    Tables.freeCheckpoint(fact)
+    assert(jobs == 4, s"publish ran $jobs jobs")
   }
 
   test("catalog JSON sink writes {pkg, tests} rows (S6)") {

@@ -43,6 +43,39 @@ class HadoopFsSpec extends SparkSpec {
     assert(mode(dir) == Integer.parseInt("1750", 8))
   }
 
+  test("file:// listStatus matches RawLocalFileSystem's on odd entries") {
+    val root = tempDir("graft_fs_list")
+    def write(rel: String, body: String): Unit = {
+      val p = Paths.get(root, rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, body)
+    }
+    write("d/a.test.stdout", "BenchmarkA-8")
+    write("d/nested/deeper/b.test.stdout", "BenchmarkB-8 \t 1 \t 2 ns/op")
+    write("d/.hidden", "h")
+    write("d/_tmp/x", "x")
+    write("d/empty", "")
+    write("d/colon:name", "c")
+    Files.createDirectories(Paths.get(root, "d/emptydir"))
+    Files.createSymbolicLink(Paths.get(root, "d/link-file"), Paths.get(root, "d/a.test.stdout"))
+    Files.createSymbolicLink(Paths.get(root, "d/link-dir"), Paths.get(root, "d/nested"))
+    Files.createSymbolicLink(Paths.get(root, "d/dangling"), Paths.get(root, "d/gone"))
+    val raw = new org.apache.hadoop.fs.RawLocalFileSystem
+    raw.initialize(java.net.URI.create("file:///"), conf)
+    val nio = HadoopFs.forPath(new Path(root), conf)
+    def listing(fs: org.apache.hadoop.fs.FileSystem, p: Path) =
+      fs.listStatus(p).map(s => (s.getPath.toString, s.isDirectory, s.getLen,
+        s.getModificationTime)).toSeq.sorted
+    for (dir <- Seq(s"$root/d", s"file://$root/d", s"$root/d/nested", s"$root/d/link-dir",
+                    s"$root/d/emptydir", s"$root/d/a.test.stdout", s"$root/d/link-file")) {
+      val p = new Path(dir)
+      assert(listing(nio, p) == listing(raw, p), dir)
+    }
+    // 10 entries, less the dangling link
+    assert(listing(nio, new Path(s"$root/d")).size == 9)
+    intercept[java.io.FileNotFoundException](nio.listStatus(new Path(s"$root/nope")))
+  }
+
   test("the publish sources open file systems only through HadoopFs.forPath") {
     // `getFileSystem` on file:// is the checksumming LocalFileSystem
     // (a `.crc` sidecar per file written) and `FileUtil.copy` takes

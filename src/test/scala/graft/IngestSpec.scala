@@ -134,6 +134,99 @@ class IngestSpec extends SparkSpec {
     assertSameAsTextSource(root, 4)
   }
 
+  /** The window form of `ingest`: parse every line, then A1 by a
+    * window over (file desc, line_no desc). */
+  private def oracle(root: String, packages: Seq[String]) =
+    BenchIngest.lastWriteWins(BenchIngest.parse(BenchIngest.rawLines(spark, root), packages))
+
+  /** Each side's rows, or the class of its error's root cause. */
+  private def outcome(df: => org.apache.spark.sql.DataFrame): Either[String, Seq[String]] =
+    try Right(df.collect().map(_.toString).toSeq.sorted)
+    catch { case e: Exception =>
+      Left(org.apache.commons.lang3.exception.ExceptionUtils.getRootCause(e).getClass.getName) }
+
+  private def assertSameAsOracle(root: String, packages: Seq[String], rows: Int): Unit = {
+    val got = BenchIngest.ingest(spark, root, packages)
+    val want = oracle(root, packages)
+    assert(got.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)))
+    val (g, w) = (outcome(got), outcome(want))
+    assert(g == w)
+    assert(g.map(_.size) == Right(rows), g)
+  }
+
+  test("ingest equals its window form on the fixture tree") {
+    assertSameAsOracle(BenchFixture.shared, BenchIngest.DefaultPackages, 6)
+  }
+
+  test("ingest equals its window form past 32 date dirs") {
+    val root = writeTree((0 until 40).flatMap { d =>
+      val day = f"${d % 28 + 1}%02d-${d / 28 + 1}%02d-2015"
+      Seq(s"$day/cockroach/kv/a.test.stdout" ->
+        s"BenchmarkPut-8 \t 10 \t $d ns/op\nBenchmarkGet-8 \t 1 \t 3 ns/op\nPASS",
+        s"$day/cockroach/kv/b.test.stdout" ->
+        s"BenchmarkPut-8 \t 10 \t ${d + 100} ns/op")
+    }: _*)
+    assertSameAsOracle(root, BenchIngest.DefaultPackages, 80)
+  }
+
+  /** Lines and layouts where the read-stage A1 could part from the
+    * window form. */
+  private lazy val edgeTree = writeTree(
+    // CRLF: every line keeps its `\r`
+    "01-01-2015/cockroach/sql/a.test.stdout" ->
+      "BenchmarkCrlf-8 \t 1 \t 10 ns/op\r\nBenchmarkCrlf-8 \t 1 \t 11 ns/op\r\nPASS\r\n",
+    // no tab: the whole line is the test name; padded and `\r`-ended names
+    "01-01-2015/cockroach/sql/b.test.stdout" -> Seq(
+      "BenchmarkNoTab-8 12 ns/op",
+      "BenchmarkPadded-8   \t 1 \t 13 ns/op",
+      "BenchmarkPadded-8\t 1 \t 14 ns/op",
+      "BenchmarkCr-8\r",
+      "BenchmarkCr-8 \r\t 1 \t 15 ns/op",
+      "BenchmarkCr-8 \t 1 \t 16 ns/op").mkString("\n"),
+    // twins: `Ａ` (U+FF21) sorts before `😀` in UTF-8, after it in UTF-16
+    "02-01-2015/cockroach/sql/\uFF21.test.stdout" -> "BenchmarkTwin-8 \t 1 \t 20 ns/op",
+    "02-01-2015/cockroach/sql/\uD83D\uDE00.test.stdout" -> "BenchmarkTwin-8 \t 1 \t 21 ns/op",
+    "02-01-2015/cockroach/util/cache/c.test.stdout" ->
+      "BenchmarkNested-8 \t 1 \t 30 ns/op\nBenchmarkNested-8 \t 1 \t 31 ns/op",
+    "02-01-2015/cockroach/nopkg/n.test.stdout" -> "BenchmarkUnknown-8 \t 1 \t 40 ns/op",
+    "not-a-date/cockroach/sql/x.test.stdout" -> "BenchmarkNoDate-8 \t 1 \t 50 ns/op",
+    "03-01-2015/cockroach/kv/f.test.stdout" ->
+      "BenchmarkOnlyFail-8 \t 1 \t 60 ns/op \t FAIL\n--- FAIL: BenchmarkOnlyFail-8")
+
+  test("ingest equals its window form on CRLF, untabbed, padded, twin and pruned files") {
+    // Crlf, NoTab, Padded (its two lines share a name), three Cr
+    // names (Java's `String.trim` would merge them), Twin, Nested
+    assertSameAsOracle(edgeTree, BenchIngest.DefaultPackages, 8)
+    val twin = BenchIngest.ingest(spark, edgeTree, Seq("sql"))
+      .filter("test = 'BenchmarkTwin-8'").select("ns_per_op").collect()
+    assert(twin.toSeq == Seq(Row(21L)), "the UTF-8-last twin must win")
+  }
+
+  test("ingest gives its window form's outcome on an impossible date dir") {
+    val root = writeTree(
+      "31-02-2015/cockroach/sql/a.test.stdout" -> "BenchmarkFeb-8 \t 1 \t 70 ns/op",
+      "01-03-2015/cockroach/sql/a.test.stdout" -> "BenchmarkMar-8 \t 1 \t 71 ns/op")
+    val got = outcome(BenchIngest.ingest(spark, root, Seq("sql")))
+    assert(got == outcome(oracle(root, Seq("sql"))), got)
+  }
+
+  test("ingest runs one job with no exchange") {
+    import org.apache.spark.sql.execution.QueryExecution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(s"$f: ${qe.executedPlan}")
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val jobs =
+      try jobsOf(BenchIngest.ingest(spark, BenchFixture.shared))
+      finally spark.listenerManager.unregister(listener)
+    assert(jobs == 1)
+    assert(plans.size == 1 && plans.peek.startsWith("localCheckpoint: "), plans)
+    assert(!plans.peek.contains("Exchange"), plans.peek)
+  }
+
   test("rawLines fails loudly on a missing root") {
     val missing = s"${tempDir("graft_missing")}/nope"
     intercept[java.io.FileNotFoundException](BenchIngest.rawLines(spark, missing))
