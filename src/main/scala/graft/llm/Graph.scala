@@ -721,39 +721,30 @@ object Graph {
   /** Exposed for the convergence spec (mirrors [[ccItersForSpec]]) so
     * the test always verifies the PRODUCTION iteration count. */
   private[graft] def kcoreItersForSpec: Int = KcoreIters
-  /** Exposed for the convergence spec (same contract as [[ccLabels]]):
-    * the alive-node set after `iters` peels. */
+  /** The alive-node sets before the first peel and after each of
+    * `iters` peels. The convergence spec reads the last set (same
+    * contract as [[ccLabels]]); [[kcore]] counts every set. */
   private[graft] def kcoreAlive(spark: SparkSession, dir: String,
-                                iters: Int): DataFrame = {
+                                iters: Int): Seq[DataFrame] = {
     import spark.implicits._
     val e = regionEdges(spark, dir).filter($"src" =!= $"dst")
-    var alive = e.select($"src".as("node")).distinct()
-    for (_ <- 1 to iters)
-      alive = e.join(alive.select($"node".as("sn")), $"src" === $"sn")
+    (1 to iters).scanLeft(e.select($"src".as("node")).distinct()) { (alive, _) =>
+      e.join(alive.select($"node".as("sn")), $"src" === $"sn")
         .join(alive.select($"node".as("dn")), $"dst" === $"dn")
         .groupBy($"src").agg(count(lit(1)).as("deg"))
         .filter($"deg" >= KcoreK)
         .select($"src".as("node")).localCheckpoint()
-    alive
+    }
   }
 
   def kcore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = regionEdges(spark, dir).filter($"src" =!= $"dst")
-    var alive = e.select($"src".as("node")).distinct()
-    def statsOf(iter: Int, a: DataFrame): DataFrame =
-      a.agg(count(lit(1)).as("n_nodes"))
-        .select(lit(iter.toLong).as("iter"), $"n_nodes")
-    var stats = statsOf(0, alive)
-    for (k <- 1 to KcoreIters) {
-      alive = e.join(alive.select($"node".as("sn")), $"src" === $"sn")
-        .join(alive.select($"node".as("dn")), $"dst" === $"dn")
-        .groupBy($"src").agg(count(lit(1)).as("deg"))
-        .filter($"deg" >= KcoreK)
-        .select($"src".as("node")).localCheckpoint()
-      stats = stats.unionByName(statsOf(k, alive))
-    }
-    stats.orderBy($"iter")
+    kcoreAlive(spark, dir, KcoreIters).zipWithIndex
+      .map { case (alive, iter) =>
+        alive.agg(count(lit(1)).as("n_nodes"))
+          .select(lit(iter.toLong).as("iter"), $"n_nodes") }
+      .reduce(_ unionByName _)
+      .orderBy($"iter")
   }
 
   val kcoreSql: String = {

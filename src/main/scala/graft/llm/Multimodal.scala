@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.types.DecimalType
@@ -12,22 +12,15 @@ import TextAnalysis.{h60, h60Sql}
   * columns with typed metadata structs travelling beside them. Since
   * no image/audio codecs exist in this environment, the decode step is
   * a DETERMINISTIC FAKE (clearly marked below) — the Spark-side
-  * contract (schema, batch iteration, partition behavior) is real and
-  * tested, and is exactly what a production decode-UDF would plug
-  * into.
+  * contract (schema, partition behavior) is real and tested, and is
+  * what a production decode-UDF would plug into.
   *
   * Scale notes: payload bytes stay columnar (parquet BINARY) and are
-  * never collected; decode runs partition-local via mapPartitions
-  * (the Scala analogue of mapInPandas batch UDFs); frame sampling is
-  * a generator (explode of a bounded sequence), so output size is
+  * never collected; decode is a narrow per-row projection; frame
+  * sampling is a generator (explode of a bounded sequence), so output size is
   * O(input * sample_rate) with no shuffle before the sink.
   */
 object Multimodal {
-
-  /** Typed decoded-media metadata (what a real decoder would emit). */
-  final case class MediaMeta(
-      doc_id: Long, n_bytes: Long, width: Long, height: Long,
-      channels: Long, format: String)
 
   // --------------------------------------------------------------------
   // llm_mm_metadata: binary payload + metadata extraction. The payload
@@ -164,32 +157,6 @@ object Multimodal {
        |  GREATEST(new_w - new_w % 16, 16) AS crop16_w,
        |  GREATEST(new_h - new_h % 16, 16) AS crop16_h
        |FROM r ORDER BY doc_id""".stripMargin
-
-  // --------------------------------------------------------------------
-  // decodeBatch: the partition-local batch "decoder" — the Scala
-  // analogue of a mapInPandas UDF. Iterates a partition's payloads in
-  // one pass and emits typed metadata. The body is a DETERMINISTIC
-  // FAKE of a codec (no image libs in this container); swap the two
-  // marked lines for a real decoder and nothing else changes. Covered
-  // by LlmSpec (not oracle-verified — mapPartitions is opaque to SQL).
-  def decodeMedia(spark: SparkSession, dir: String): Dataset[MediaMeta] = {
-    import spark.implicits._
-    Tables.documents(spark, dir)
-      .select($"doc_id".cast("long"), encode($"text", "utf-8").as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, bytes) =>
-          // -- FAKE decode: header-derived dims stand in for codec out --
-          md.reset()
-          val hex = md.digest(bytes).map("%02x".format(_)).mkString
-          val h = java.lang.Long.parseLong(hex.substring(0, 15), 16)
-          MediaMeta(id, bytes.length.toLong, h % 1600 + 320,
-            h % 840 + 240, h % 3 + 1,
-            Seq("jpeg", "png", "webp")((h % 3).toInt))
-        }
-      }
-  }
 
   // --------------------------------------------------------------------
   // llm_mm_audio: audio segmentation — interpret the payload as 16 kHz
@@ -464,7 +431,7 @@ object Multimodal {
   val mmAspectBucketsSql: String = {
     val rs = Seq("1:1" -> "1.0", "4:3" -> "(4.0 / 3.0)", "3:4" -> "0.75",
       "16:9" -> "(16.0 / 9.0)", "9:16" -> "0.5625")
-    val dcols = rs.map { case (n, r) => s"abs(aspect - $r)" }
+    val dcols = rs.map { case (_, r) => s"abs(aspect - $r)" }
     val bestE = dcols.mkString("LEAST(", ", ", ")")
     val caseE = rs.zip(dcols).map { case ((n, _), d) =>
       s"WHEN $d = $bestE THEN '$n'" }.mkString("\n    ")

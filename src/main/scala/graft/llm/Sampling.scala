@@ -111,7 +111,6 @@ object Sampling {
   // aggregable groupBy on source; everything after operates on the
   // source-cardinality table (tiny by definition of a mixture), so
   // the broadcast scalar joins cost nothing.
-  private val MixAlpha = 0.5 // temperature T = 1/α = 2
 
   private def mixtureOf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -232,31 +232,6 @@ object BenchQueries {
       .orderBy(col("date"))
   }
 
-  /** The same spine as a Spark 4 recursive CTE — kept as a tested
-    * capability (WITH RECURSIVE works end-to-end and matches DuckDB's
-    * semantics) but NOT the registered plan: recursion executes one
-    * sequential job per day of range, which is a scale-killer on long
-    * axes (measured 9.4 s for 74 days at sf0.1). EquivalenceSpec
-    * asserts it row-equals [[dateSpine]]. */
-  def dateSpineRecursive(spark: SparkSession, dir: String): DataFrame = {
-    fact(spark).createOrReplaceTempView("bench_fact")
-    spark.sql(
-      """WITH RECURSIVE bounds AS (
-        |  SELECT MIN(date) AS d0, MAX(date) AS d1 FROM bench_fact
-        |  WHERE pkg = 'sql' AND test = 'BenchmarkBank2_Cockroach-8'),
-        |spine(date) AS (
-        |  SELECT d0 FROM bounds
-        |  UNION ALL
-        |  SELECT date_add(spine.date, 1) FROM spine, bounds
-        |  WHERE spine.date < bounds.d1)
-        |SELECT s.date, f.ns_per_op
-        |FROM spine s
-        |LEFT JOIN (SELECT date, ns_per_op FROM bench_fact
-        |  WHERE pkg = 'sql' AND test = 'BenchmarkBank2_Cockroach-8') f
-        |  ON s.date = f.date
-        |ORDER BY s.date""".stripMargin)
-  }
-
   val dateSpineSql: String =
     s"""WITH RECURSIVE fct AS ($ingestGoldenSql),
        |bounds AS (
@@ -455,9 +430,8 @@ object BenchQueries {
     regressionFlagsOn(fact(spark))
 
   /** Core of [[regressionFlags]] over an arbitrary fact-shaped frame
-    * (pkg, test, date, ns_per_op) — separated so the streaming
-    * monitor ([[graft.streaming.StreamPipelines.alertingStream]]) can
-    * run the identical detector over its incrementally-merged sink. */
+    * (pkg, test, date, ns_per_op) — separated so `bench_alerts` runs
+    * the identical detector. */
   private[graft] def regressionFlagsOn(f: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("pkg"), col("test")).orderBy(col("date"))

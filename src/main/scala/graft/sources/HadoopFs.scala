@@ -57,7 +57,11 @@ object HadoopFs {
     * each entry once, by one directory stream and one `readAttributes`,
     * into a status with the same path, kind, length and times; like
     * Hadoop's, it follows symlinks and skips an entry that cannot be
-    * stat'ed (a dangling link, a file deleted meanwhile). It does not
+    * stat'ed (a dangling link, a file deleted meanwhile). It stats an
+    * entry by its decoded name, so a listed path is one this FS can
+    * open: where `sun.jnu.encoding` cannot encode a name (a non-ASCII
+    * name without a UTF-8 locale) that throws InvalidPathException,
+    * where Hadoop's listing drops the entry unseen. It does not
     * read owner, group or mode (Hadoop's status forks `ls` for them
     * when first asked), so those read as `FileStatus` defaults; the
     * publish reads only path, kind and length. A file or a missing
@@ -78,7 +82,7 @@ object HadoopFs {
       try entries.iterator().asScala.flatMap { e =>
         val name = e.getFileName.toString
         try {
-          val a = Files.readAttributes(e, classOf[BasicFileAttributes])
+          val a = Files.readAttributes(dir.resolve(name), classOf[BasicFileAttributes])
           Some(new FileStatus(a.size, a.isDirectory, 1, blockSize,
             a.lastModifiedTime.toMillis, a.lastAccessTime.toMillis, null, null, null,
             new Path(pathToFile(new Path(f, new Path(null, null, name))).getPath)

@@ -59,9 +59,8 @@ object Tables {
     * transients are rebuilt fresh by each invocation, and the
     * long-lived artifact family is pinned. The transients are the
     * query modules' plain `localCheckpoint()`s, in executor block
-    * storage in every cache mode: reliable mode covers [[artifact]]s
-    * only. Non-blocking: block removal proceeds async while the next
-    * query runs.
+    * storage like the [[artifact]]s. Non-blocking: block removal
+    * proceeds async while the next query runs.
     */
   def releaseTransients(spark: SparkSession): Unit = {
     val kept = entries.values.asScala.flatMap(_.ids).toSet
@@ -276,50 +275,26 @@ object Tables {
   private def stamped(spark: SparkSession, dir: String, suffix: String): String =
     s"$dir@${snapshot(spark, dir)}#$suffix"
 
-  private def cacheMode: Option[String] = sys.props.get("graft.tableCache")
-
   /** The derived artifact `name` of `dir`'s data (the bench fact, the
     * dedup class, shingle and band tables, graph edges, trained
     * codebooks): built once per (session, dir snapshot), its build time
     * logged, and every block the build persists pinned against
-    * [[releaseTransients]]. This is the one place that decides whether
-    * a table is written durably.
+    * [[releaseTransients]]. This is the one place that decides how a
+    * derived table is kept.
     *
-    * By default the result is `localCheckpoint`ed: executor block
-    * storage with TRUNCATED lineage, free on local[*] and the right
-    * warm-mode trade there. A build that already ends in a checkpoint
-    * (an iterative loop checkpoints per round) keeps it: that
-    * checkpoint IS the artifact.
-    *
-    * `-Dgraft.tableCache=reliable` writes every artifact with a
-    * RELIABLE `checkpoint` instead. The distinction only matters on a
-    * real cluster: a localCheckpointed artifact's blocks die with any
-    * executor that held them, and truncated lineage makes them
-    * UNRECOVERABLE mid-job, so an executor loss hours into a long warm
-    * pipeline kills it. The checkpoint dir defaults to the session's
-    * warehouse dir (any scheme, so an object-store warehouse gives
-    * durable artifacts). Once the durable copy exists, a build's own
-    * closing local checkpoint is freed rather than pinned. Reliable
-    * mode covers artifacts only: per-query intermediates stay
-    * `localCheckpoint()`s, and base TABLE scans never route through
-    * here (the source parquet is already durable). */
+    * The result is `localCheckpoint`ed: executor block storage with
+    * TRUNCATED lineage, free on local[*]. A build that already ends in
+    * a checkpoint (an iterative loop checkpoints per round) keeps it:
+    * that checkpoint IS the artifact. Every runner builds a `local[N]`
+    * session, where a lost block means a lost driver and with it the
+    * artifact map, so a durable copy would protect against nothing.
+    * Base TABLE scans never route through here (the source parquet is
+    * already durable). */
   def artifact(spark: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame =
     sessionCached(spark, stamped(spark, dir, name)) {
       val df = build
-      if (cacheMode.contains("reliable")) {
-        val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty)
-          sc.setCheckpointDir(
-            spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
-              + "/graft-checkpoints")
-        val durable = df.checkpoint()
-        // a nested artifact returned as is keeps its own pinned blocks
-        if (isCheckpoint(df) && !entries.values.asScala.exists(_.df eq df))
-          freeCheckpoint(df)
-        durable
-      } else if (isCheckpoint(df)) df
-      else df.localCheckpoint()
+      if (isCheckpoint(df)) df else df.localCheckpoint()
     }
 
   /** UNCOMPRESSED bytes per partition for a warm-mode checkpointed
@@ -413,9 +388,11 @@ object Tables {
     * parquet scan, so per-query column pruning and filter pushdown
     * still reach the source.
     *
-    * `-Dgraft.tableCache=checkpoint` additionally materializes the
-    * table via localCheckpoint — warm-data mode for repeated-query
-    * benchmarking (graft.Bench sets it). Deliberately NOT the default:
+    * `graft.tableCache` has two states. Unset (Verify), tables are raw
+    * scans. `-Dgraft.tableCache=checkpoint` additionally materializes
+    * the table via localCheckpoint — warm-data mode for repeated-query
+    * benchmarking (graft.Bench and the perfbench harness set it).
+    * Deliberately NOT the default:
     * a checkpointed table is all columns in block storage, which hides
     * scan pruning from plan audits and is the wrong trade for a
     * one-pass query over a 100 TB table.
@@ -451,7 +428,7 @@ object Tables {
       // set-compared. WarmRawParitySpec spot-checks warm-vs-raw result
       // hashes so a future order-sensitive query can't silently report
       // warm timings for different results.
-      if (cacheMode.contains("checkpoint")) {
+      if (sys.props.get("graft.tableCache").contains("checkpoint")) {
         val target = warmPartitions(spark, path)
         val scanParts = df.rdd.getNumPartitions
         (if (target > scanParts) df.repartition(target) else df)

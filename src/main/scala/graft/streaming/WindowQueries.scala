@@ -8,8 +8,7 @@ import graft.sources.Tables
 
 /** Event-time windowing over `events` in BATCH form — the exact same
   * window()/session_window() expressions Structured Streaming executes
-  * incrementally (StreamPipelines wires them to readStream/writeStream;
-  * batch form is what the DuckDB oracle can verify).
+  * incrementally; batch form is what the DuckDB oracle can verify.
   *
   * Timestamps are projected to epoch microseconds (integers) at the
   * output boundary so the oracle compare is exact, never tz/precision
@@ -317,11 +316,8 @@ object WindowQueries {
   // Streaming canonical example): in streaming form both sides are
   // streams, the time bound plus watermarks let the engine expire
   // join state (a view older than 10 min past the watermark can never
-  // match again). The streaming wiring of this exact shape is
-  // StreamPipelines.clickToPurchase (watermarks on both sides,
-  // exercised in StreamingSpec's interval-join test); batch form here
-  // is verbatim the same join condition, which is what the oracle can
-  // check.
+  // match again). Batch form here is verbatim the join condition a
+  // streaming run would use, which is what the oracle can check.
   //
   // Scale shape: an equi-join on user_id carrying the time predicate
   // as a secondary condition — one shuffle on the join key for each
@@ -356,10 +352,10 @@ object WindowQueries {
       |ORDER BY v.user_id, view_id, click_id""".stripMargin
 
   // --------------------------------------------------------------------
-  // st_dedup_first: the batch face of StreamPipelines.dedupStream —
-  // earliest event per (user_id, event_type), event_id as tie-break.
+  // st_dedup_first: the batch face of streaming dedup — earliest
+  // event per (user_id, event_type), event_id as tie-break.
   // Streaming keeps the FIRST arrival per key within the watermark
-  // (dropDuplicatesWithinWatermark, StreamingSpec); over a closed
+  // (dropDuplicatesWithinWatermark); over a closed
   // batch "first" means event-time minimum, which is what this
   // computes and the oracle hash-checks. Both engines order on
   // MICROSECOND time (Spark's timestamp grain): the oracle must not
@@ -564,14 +560,13 @@ object WindowQueries {
 
   // --------------------------------------------------------------------
   // st_static_enrich: stream-static enrichment join + running aggregate
-  // — the batch twin of StreamPipelines.enrichAggregate. A live event
+  // in batch form. A live event
   // stream joins a SLOWLY-CHANGING dimension (customer segments) that
   // is re-read per micro-batch on the static side; Structured Streaming
   // executes this as a broadcast join with NO streaming state for the
   // join itself (only the downstream aggregate is stateful) — the one
   // join flavor that is free at any stream rate. Batch form = the same
-  // broadcast join + groupBy, which is what the oracle verifies; the
-  // stream==batch agreement is spec-checked in StreamingSpec.
+  // broadcast join + groupBy, which is what the oracle verifies.
   def stStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val dim = Tables.customer(spark, dir)

@@ -232,6 +232,40 @@ class IngestSpec extends SparkSpec {
     intercept[java.io.FileNotFoundException](BenchIngest.rawLines(spark, missing))
   }
 
+  /** Exit code and output of [[IngestUnderLocale]] on `root`, in a
+    * child JVM started with `LC_ALL=C` and no other locale variable:
+    * its `sun.jnu.encoding` is then ASCII. */
+  private def ingestUnderCLocale(root: String): (Int, String) = {
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray(Array.empty[String]).filter(_.startsWith("--add-opens"))
+    val cmd = Seq(java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString) ++
+      opens ++ Seq("-Xmx512m", "-cp", sys.props("java.class.path"),
+        "graft.IngestUnderLocale", root)
+    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+    pb.environment().keySet().removeIf(k => k == "LANG" || k.startsWith("LC_"))
+    pb.environment().put("LC_ALL", "C")
+    val p = pb.start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+    (p.waitFor(), out)
+  }
+
+  test("without a UTF-8 locale, ingest of a non-ASCII name says how to start the JVM") {
+    val root = writeTree(
+      "01-01-2015/cockroach/sql/a.test.stdout" -> "BenchmarkA-8 \t 1 \t 5 ns/op",
+      "01-01-2015/cockroach/sql/\u00e9.test.stdout" -> "BenchmarkE-8 \t 1 \t 6 ns/op")
+    val (code, out) = ingestUnderCLocale(root)
+    assert(code != 0, out)
+    assert(out.contains("sun.jnu.encoding") && out.contains("LC_ALL=C.UTF-8"), out)
+  }
+
+  test("an all-ASCII tree ingests under the C locale") {
+    val root = writeTree(
+      "01-01-2015/cockroach/sql/a.test.stdout" -> "BenchmarkA-8 \t 1 \t 5 ns/op",
+      "02-01-2015/cockroach/sql/b.test.stdout" -> "BenchmarkB-8 \t 1 \t 6 ns/op")
+    val (code, out) = ingestUnderCLocale(root)
+    assert(code == 0 && out.contains("rows=2"), out)
+  }
+
   test("snapshot-stamped fact cache sees files added DEEP in the stdout tree") {
     import graft.sources.Tables
     // The live incremental-ingest shape: a new day's stdout lands
@@ -261,5 +295,16 @@ class IngestSpec extends SparkSpec {
       "BenchmarkDeepA-8 \t 1000 \t 400 ns/op".getBytes("UTF-8"))
     assert(fact().count() == 3,
       "new nested date dir did not re-key the session-cached fact")
+  }
+}
+
+/** Ingests the tree at `args(0)` in a local[1] session and prints
+  * `rows=<n>`: the child-JVM side of IngestSpec's locale tests. */
+object IngestUnderLocale {
+  def main(args: Array[String]): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+    try println(s"rows=${BenchIngest.ingest(spark, args(0)).count()}")
+    finally spark.stop()
   }
 }

@@ -70,24 +70,6 @@ class LlmSpec extends SparkSpec {
       s"two-level result diverged: got ${got.take(5)}... vs ${naive.take(5)}...")
   }
 
-  test("decodeMedia emits one typed row per document, deterministic") {
-    val ds = Multimodal.decodeMedia(spark, sf0001)
-    val n = spark.read.parquet(s"$sf0001/documents.parquet").count()
-    val rows = ds.collect()
-    assert(rows.length == n)
-    assert(rows.forall(m => m.width >= 320 && m.width < 1920))
-    assert(rows.forall(m => m.height >= 240 && m.height < 1080))
-    assert(rows.forall(m => Set("jpeg", "png", "webp")(m.format)))
-    // fake decode must agree with the SQL-side h60 derivation
-    val sqlSide = Multimodal.mmMetadata(spark, sf0001)
-      .select("doc_id", "width", "height", "format")
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-    rows.foreach { m =>
-      assert(sqlSide(m.doc_id) == ((m.width, m.height, m.format)),
-        s"doc ${m.doc_id}: mapPartitions decode != SQL decode")
-    }
-  }
-
   test("shingles clamp to empty for docs with fewer than 3 tokens") {
     // slice() throws on negative length — a 1-token doc must yield an
     // empty shingle set (like the oracle's range(1, len-1)), not crash
@@ -1295,7 +1277,7 @@ class LlmSpec extends SparkSpec {
     val ev = spark.read.parquet(s"$sf0001/events.parquet")
     val nUsers = ev.select("user_id").distinct().count()
     assert(rows.map(_._4).sum == nUsers, "segments must partition users")
-    rows.foreach { case (r, f, m, nu, tv) =>
+    rows.foreach { case (r, f, m, nu, _) =>
       assert(Seq(r, f, m).forall(s => s >= 1 && s <= 5),
         s"score out of range: ($r,$f,$m)")
       assert(nu >= 1, "empty segment must not be emitted")

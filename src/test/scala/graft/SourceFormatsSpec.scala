@@ -59,15 +59,6 @@ class SourceFormatsSpec extends SparkSpec {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
 
-  /** Files under the context's checkpoint dir (0 when none is set). */
-  private def checkpointFiles(): Int = {
-    def walk(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten
-        .flatMap(f => if (f.isDirectory) walk(f) else Seq(f))
-    spark.sparkContext.getCheckpointDir
-      .fold(0)(d => walk(new java.io.File(new java.net.URI(d).getPath)).size)
-  }
-
   test("artifact memoizes and supports nested builds") {
     import graft.sources.Tables
     // nested: an artifact build may itself resolve artifacts (the LSH
@@ -182,59 +173,6 @@ class SourceFormatsSpec extends SparkSpec {
       s"persisted after rounds: $fresh, result's checkpoint: " +
         checkpointRdds(out).map(_.id))
     assert(out.count() == 7)
-  }
-
-  test("reliable cache mode writes artifacts to disk and survives block loss") {
-    import graft.sources.Tables
-    // -Dgraft.tableCache=reliable:
-    // derived artifacts checkpoint to the reliable checkpoint FS
-    // instead of executor block storage, so on a real cluster an
-    // executor loss doesn't strand a warm pipeline mid-job. Local
-    // proof: the checkpoint files exist on disk, and after dropping
-    // every cached block the frame still answers from those files.
-    sys.props("graft.tableCache") = "reliable"
-    try {
-      val dir = tempDir("graft_artifact_reliable")
-      val df = Tables.artifact(spark, dir, "plain")(
-        spark.range(10).toDF("x").withColumn("y", col("x") * 2))
-      assert(spark.sparkContext.getCheckpointDir.isDefined,
-        "reliable mode must set a checkpoint dir")
-      assert(checkpointFiles() > 0, "no files under the checkpoint dir")
-      // simulate executor loss: unpersist every block behind the plan
-      def loseBlocks(d: org.apache.spark.sql.DataFrame): Unit =
-        checkpointRdds(d).foreach(_.unpersist(blocking = true))
-      loseBlocks(df)
-      assert(df.count() == 10, "reliable artifact unreadable after block loss")
-      // a build that already ends in a local checkpoint (an iterative
-      // loop) gets the durable copy too, not its executor blocks
-      var inner: org.apache.spark.sql.DataFrame = null
-      val loop = Tables.artifact(spark, dir, "loop") {
-        inner = spark.range(5).toDF("x").localCheckpoint(); inner
-      }
-      assert(!(loop eq inner), "reliable mode must re-checkpoint a checkpointed build")
-      // ... and frees the build's own checkpoint instead of pinning it
-      val innerId = checkpointRdds(inner).head.id
-      assert(!spark.sparkContext.getPersistentRDDs.keySet.contains(innerId),
-        s"the loop's local checkpoint (RDD $innerId) outlived its durable copy")
-      loseBlocks(inner)
-      loseBlocks(loop)
-      assert(loop.count() == 5, "reliable loop artifact unreadable after block loss")
-    } finally sys.props.remove("graft.tableCache")
-  }
-
-  test("reliable cache mode writes no file for a query's own intermediates") {
-    // Only Tables.artifact writes durably: a query's localCheckpoint()
-    // intermediates stay in executor blocks, so a repeat call, whose
-    // artifacts are already built, adds nothing to the checkpoint dir.
-    sys.props("graft.tableCache") = "reliable"
-    try {
-      val gains = SparkEntry.queries("llm_models_gains")
-      gains(spark, sf0001).count()
-      val before = checkpointFiles()
-      gains(spark, sf0001).count()
-      assert(checkpointFiles() == before,
-        s"second call wrote ${checkpointFiles() - before} checkpoint files")
-    } finally sys.props.remove("graft.tableCache")
   }
 
   test("snapshot token invalidates cached tables when the dir is rewritten") {

@@ -152,7 +152,7 @@ class WaveFiftyFiveSpec extends SparkSpec {
     val adj = scala.collection.mutable.Map[Long, Set[Long]]()
       .withDefaultValue(Set.empty)
     sup.foreach { case (a, b) => adj(a) = adj(a) + b; adj(b) = adj(b) + a }
-    val lccs = adj.toSeq.map { case (v, ns) =>
+    val lccs = adj.toSeq.map { case (_, ns) =>
       val d = ns.size
       if (d < 2) (false, 0.0)
       else {

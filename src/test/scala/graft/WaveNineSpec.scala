@@ -17,8 +17,8 @@ class WaveNineSpec extends SparkSpec {
     // still hash-matches across engines
     for (dir <- Seq(sf0001, "/root/testdata/sf0.01")) {
       val k = Graph.kcoreItersForSpec
-      val at = Graph.kcoreAlive(spark, dir, k)
-      val next = Graph.kcoreAlive(spark, dir, k + 1)
+      val at = Graph.kcoreAlive(spark, dir, k).last
+      val next = Graph.kcoreAlive(spark, dir, k + 1).last
       assert(at.exceptAll(next).isEmpty && next.exceptAll(at).isEmpty,
         s"kcore not converged after $k peels at $dir")
     }

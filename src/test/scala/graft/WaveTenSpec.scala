@@ -1311,7 +1311,7 @@ class WaveTenSpec extends SparkSpec {
       .select($"user_id", unix_micros($"ts").as("us"), $"event_type")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     val gap = 1800000000L
-    val sessions = evs.groupBy(_._1).toSeq.flatMap { case (u, xs) =>
+    val sessions = evs.groupBy(_._1).toSeq.flatMap { case (_, xs) =>
       val sorted = xs.sortBy(_._2)
       val buf = scala.collection.mutable.ArrayBuffer
         .empty[scala.collection.mutable.Set[String]]
