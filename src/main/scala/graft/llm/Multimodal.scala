@@ -17,8 +17,8 @@ import TextAnalysis.{h60, h60Sql}
   *
   * Scale notes: payload bytes stay columnar (parquet BINARY) and are
   * never collected; decode is a narrow per-row projection; frame
-  * sampling is a generator (explode of a bounded sequence), so output size is
-  * O(input * sample_rate) with no shuffle before the sink.
+  * sampling is a generator (explode of a bounded sequence), so output
+  * size is O(input * sample_rate) with no shuffle before the sink.
   */
 object Multimodal {
 

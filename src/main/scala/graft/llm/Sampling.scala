@@ -111,7 +111,6 @@ object Sampling {
   // aggregable groupBy on source; everything after operates on the
   // source-cardinality table (tiny by definition of a mixture), so
   // the broadcast scalar joins cost nothing.
-
   private def mixtureOf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // source-cardinality table with two consumers (total, scored) —

@@ -560,13 +560,13 @@ object WindowQueries {
 
   // --------------------------------------------------------------------
   // st_static_enrich: stream-static enrichment join + running aggregate
-  // in batch form. A live event
-  // stream joins a SLOWLY-CHANGING dimension (customer segments) that
-  // is re-read per micro-batch on the static side; Structured Streaming
-  // executes this as a broadcast join with NO streaming state for the
-  // join itself (only the downstream aggregate is stateful) — the one
-  // join flavor that is free at any stream rate. Batch form = the same
-  // broadcast join + groupBy, which is what the oracle verifies.
+  // in batch form. A live event stream joins a SLOWLY-CHANGING
+  // dimension (customer segments) that is re-read per micro-batch on
+  // the static side; Structured Streaming executes this as a broadcast
+  // join with NO streaming state for the join itself (only the
+  // downstream aggregate is stateful) — the one join flavor that is
+  // free at any stream rate. Batch form = the same broadcast join +
+  // groupBy, which is what the oracle verifies.
   def stStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val dim = Tables.customer(spark, dir)
