@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.sources.Tables
 import TextAnalysis.{h60, h60Sql}
 
@@ -180,6 +181,18 @@ object Dedup {
     Tables.artifact(spark, dir, "dd_pairExpansionCount") {
       withPairMult(repGrainFor(spark, dir)._2, repWeightsFor(spark, dir))
         .agg(coalesce(sum(col("mult")), lit(0L)).as("n"))
+    }.head().getLong(0)
+
+  /** EXACT within-class doc pair count Σ w(w−1)/2 over the class table
+    * — the duplication measure [[ddDecontaminate]] routes on. Unlike
+    * [[pairExpansionRows]] it counts a class whose shingles are all hot
+    * (df > [[MaxBucketDf]]), which has no kept shingle and so no intra
+    * row. One small aggregate over the class table, decided once per
+    * (session, dir) via the cached 1-row frame. */
+  private[graft] def intraClassPairs(spark: SparkSession, dir: String): Long =
+    Tables.artifact(spark, dir, "dd_intraPairCount") {
+      rawClassesFor(spark, dir)._1
+        .agg(coalesce(sum(expr("(w * (w - 1)) div 2")), lit(0L)).as("n"))
     }.head().getLong(0)
 
   /** Doc-pair source for a top-k-by-`metric` consumer (`metric` must
@@ -1076,24 +1089,24 @@ object Dedup {
     * 22-min board, all of it output rows). Under the documented
     * pipeline order — run llm_dd_exact first so near-dup generators
     * see canonical documents — the regime never arises, but prose is
-    * not a fence: above [[simhashFenceDocs]] documents (parquet
+    * not a fence: above [[SimhashFenceDocs]] documents (parquet
     * footer count, zero jobs — sf0.1 = 5k and the 16x fixture = 80k
     * never pay even the estimate) the EXACT output size is computed
     * from the distinct-value count table + banded value pairs (both
     * bounded by distinct simhash values, two small jobs) and the op
-    * fails fast past [[simhashMaxPairs]] with the pipeline pointer,
-    * the same fail-fast contract as ddEmbeddingNear's MaxAllPairsRows.
-    * SPARK_GRAFT_ALLOW_ALLPAIRS=1 overrides for deliberate runs; the
-    * system properties exist so the fence is testable without a
-    * 100k-doc fixture. */
-  private def simhashFenceDocs: Long =
-    sys.props.get("graft.dd.simhashFenceDocs").map(_.toLong)
-      .getOrElse(100000L)
-  private def simhashMaxPairs: Long =
-    sys.props.get("graft.dd.simhashMaxPairs").map(_.toLong)
-      .getOrElse(10000000L)
+    * fails fast past [[SimhashMaxPairs]] with the pipeline pointer,
+    * the same fail-fast contract as ddEmbeddingNear's MaxAllPairsRows. */
+  private val SimhashFenceDocs = 100000L
+  private val SimhashMaxPairs = 10000000L
 
-  def ddSimhashPairs(spark: SparkSession, dir: String): DataFrame = {
+  def ddSimhashPairs(spark: SparkSession, dir: String): DataFrame =
+    ddSimhashPairsFenced(spark, dir, SimhashFenceDocs, SimhashMaxPairs)
+
+  /** [[ddSimhashPairs]] with the fence's bounds as arguments, so a test
+    * can flip the fence without a 100k-doc fixture. */
+  private[graft] def ddSimhashPairsFenced(
+      spark: SparkSession, dir: String,
+      fenceDocs: Long, maxPairs: Long): DataFrame = {
     import spark.implicits._
     // Two-level: band/pair logic runs on DISTINCT simhash VALUES, then
     // value pairs expand back to doc pairs via equi-joins. Natural-text
@@ -1116,9 +1129,7 @@ object Dedup {
         expr("bit_count(int(a.simhash) ^ int(b.simhash))").as("hamming"))
       .filter($"hamming" <= 3)
       .distinct() // D²-scale, tiny
-    if (!sys.env.contains("SPARK_GRAFT_ALLOW_ALLPAIRS")
-        && Tables.parquetRowCount(spark, s"$dir/documents.parquet")
-          > simhashFenceDocs) {
+    if (Tables.parquetRowCount(spark, s"$dir/documents.parquet") > fenceDocs) {
       val vc = sh.groupBy($"simhash").agg(count(lit(1)).as("n"))
       val sameCnt = vc
         .agg(coalesce(sum(expr("n * (n - 1) div 2")), lit(0L)).as("s"))
@@ -1128,12 +1139,12 @@ object Dedup {
         .join(broadcast(vc.select($"simhash".as("vb"), $"n".as("nb"))), "vb")
         .agg(coalesce(sum($"na" * $"nb"), lit(0L)).as("s"))
         .head().getLong(0)
-      require(sameCnt + crossCnt <= simhashMaxPairs,
+      require(sameCnt + crossCnt <= maxPairs,
         s"llm_dd_simhash_pairs would emit ${sameCnt + crossCnt} near-dup" +
-          s" pairs (> $simhashMaxPairs): the declared output is the pair" +
+          s" pairs (> $maxPairs): the declared output is the pair" +
           " table and replica density grows it quadratically — run" +
           " llm_dd_exact first so near-dup generators see canonical" +
-          " documents, or set SPARK_GRAFT_ALLOW_ALLPAIRS=1")
+          " documents")
     }
     val cross = vpairs
       .join(sh.as("x"), $"x.simhash" === $"va")
@@ -1169,8 +1180,7 @@ object Dedup {
     * instead of silently launching an O(N²) job on a corpus-sized
     * input; the row count comes from the parquet footers (withNorm is
     * a pure projection of `embeddings`, so footer record counts are
-    * exact) — zero Spark jobs spent deciding. Override for deliberate
-    * large runs with SPARK_GRAFT_ALLOW_ALLPAIRS=1. */
+    * exact) — zero Spark jobs spent deciding. */
   val MaxAllPairsRows = 100000L
 
   /** Unsorted all-pairs survivors — split out so ddEmbeddingLshRecall
@@ -1180,13 +1190,11 @@ object Dedup {
       spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Similarity.withNorm(spark, dir).drop("label")
-    if (!sys.env.contains("SPARK_GRAFT_ALLOW_ALLPAIRS")) {
-      val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
-      require(n <= MaxAllPairsRows,
-        s"llm_dd_embedding_near is an all-pairs exact baseline (input has $n" +
-          s" rows > $MaxAllPairsRows); use ddEmbeddingLsh for the banded" +
-          " scale path, or set SPARK_GRAFT_ALLOW_ALLPAIRS=1")
-    }
+    val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
+    require(n <= MaxAllPairsRows,
+      s"llm_dd_embedding_near is an all-pairs exact baseline (input has $n" +
+        s" rows > $MaxAllPairsRows); use ddEmbeddingLsh for the banded" +
+        " scale path")
     // The cosine predicate lives IN the join condition, after the id
     // comparison: a trailing .filter gets pushed into the join ANDed
     // in front of the cheap id check, making vec_dot run for all N²
@@ -1782,8 +1790,8 @@ object Dedup {
 
   def ddDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Two regimes on the same size gate as ngramPairsFor (the r13
-    // pattern the r14/r15 judges endorsed):
+    // Two regimes on the ExpandCacheMaxRows bound of ngramPairsFor,
+    // measured as the exact within-class pair count:
     //   - low duplication (bench-SF shape): ONE corpus pass — scan,
     //     codegen shingle explode, broadcast join against the eval
     //     shingles, (doc, eval) partial agg. The rep-grain detour
@@ -1804,7 +1812,7 @@ object Dedup {
     //     SURVIVING class pairs expand to member pairs — the
     //     quadratic part of the job is exactly the declared output
     //     and no more.
-    if (pairExpansionRows(spark, dir) <= ExpandCacheMaxRows)
+    if (intraClassPairs(spark, dir) <= ExpandCacheMaxRows)
       return ddDecontaminateDocGrain(spark, dir)
     // A class can hold both eval (doc_id % 10 == 0) and train members,
     // so the class-pair table is keyed asymmetrically (rep_t, rep_e)
@@ -2739,7 +2747,6 @@ object Dedup {
   // one plan against the cached pair table.
   def ddQualityProp(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
     val pairs = ngramPairsFor(spark, dir).filter($"jaccard" >= 0.5)
     val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
       .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
@@ -2751,7 +2758,7 @@ object Dedup {
         .join(s.select($"doc_id".as("nb_id"), $"s".as("nb_s")),
           $"dst" === $"nb_id")
         .groupBy($"src".as("doc_id"))
-        .agg((sum($"nb_s".cast(DecimalType(18, 6))).cast("double")
+        .agg((Exact.sum($"nb_s", 18, 6)
           / count(lit(1))).as("nb"))
       s.join(nb, Seq("doc_id"), "left")
         .select($"doc_id",
@@ -2807,7 +2814,6 @@ object Dedup {
   // (1.0/size is one IEEE division — identical in both engines).
   def ddSoftWeights(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
     val w = ddCluster(spark, dir)
       .select($"doc_id",
         round(lit(1.0) / $"cluster_size", 6).as("weight"))
@@ -2816,8 +2822,7 @@ object Dedup {
       .join(w, "doc_id")
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
-        sum($"weight".cast(DecimalType(18, 6))).cast("double")
-          .as("eff_docs"))
+        Exact.sum($"weight", 18, 6).as("eff_docs"))
       .select($"source", $"n_docs",
         round($"eff_docs", 6).as("eff_docs"),
         round(lit(1.0) - $"eff_docs" / $"n_docs", 6).as("shrinkage"))
@@ -3009,9 +3014,9 @@ object Dedup {
       .crossJoin(tot)
       .groupBy($"status")
       .agg(count(lit(1)).as("n_docs"),
-        round(sum($"n_chars".cast("decimal(28,6)")).cast("double")
+        round(Exact.sum($"n_chars", 28, 6)
           / count(lit(1)), 6).as("mean_chars"),
-        round(sum($"n_words".cast("decimal(28,6)")).cast("double")
+        round(Exact.sum($"n_words", 28, 6)
           / count(lit(1)), 6).as("mean_words"),
         round(count(lit(1)).cast("double") / first($"n_total"), 6)
           .as("share"))
@@ -3299,14 +3304,12 @@ object Dedup {
       .agg(sum($"m".cast("decimal(38,0)")).as("s")).head().getDecimal(0)
     val nS = sameCnt +
       (if (crossDec == null) 0L else crossDec.longValueExact())
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val union = nM + nS - nBoth
     spark.createDataFrame(Seq((
       nM, nS, nBoth,
-      r6(if (union == 0L) 0.0 else nBoth.toDouble / union.toDouble),
-      r6(if (nM == 0L) 0.0 else nBoth.toDouble / nM.toDouble),
-      r6(if (nS == 0L) 0.0 else nBoth.toDouble / nS.toDouble))))
+      Exact.r6(if (union == 0L) 0.0 else nBoth.toDouble / union.toDouble),
+      Exact.r6(if (nM == 0L) 0.0 else nBoth.toDouble / nM.toDouble),
+      Exact.r6(if (nS == 0L) 0.0 else nBoth.toDouble / nS.toDouble))))
       .toDF("n_minhash", "n_simhash", "n_both", "jaccard",
         "containment_minhash", "containment_simhash")
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Exact
 import graft.sources.Tables
 
 /** Graph analytics over the customer↔supplier interaction graph derived
@@ -121,8 +122,7 @@ object Graph {
     for (_ <- 1 to Iters) {
       val contrib = e.join(ranks, $"src" === $"node")
         .groupBy($"dst")
-        .agg(sum(($"rank" / $"outdeg").cast("decimal(28,12)"))
-          .cast("double").as("mass"))
+        .agg(Exact.sum($"rank" / $"outdeg").as("mass"))
       ranks = contrib.crossJoin(totals)
         .select($"dst".as("node"),
           (lit(Teleport) / $"n_nodes" + lit(Damping) * $"mass").as("rank"))
@@ -203,7 +203,7 @@ object Graph {
         count(lit(1)).as("n_nodes"),
         sum($"outdeg").as("sum_degree"),
         max($"outdeg").as("max_degree"),
-        round(sum($"outdeg".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"outdeg")
           / count(lit(1)), 6).as("avg_degree"))
       .orderBy($"side", $"deg_bucket")
   }
@@ -604,9 +604,7 @@ object Graph {
   // shuffle of the (session-cached, materialized) edge list against
   // the node-cardinality label table — bucket edges by src at cluster
   // scale and only labels move.
-  private val CcIters = 6
-  /** Exposed for PlanSpec's linear-lineage guard. */
-  private[graft] def ccItersForSpec: Int = CcIters
+  private[graft] val CcIters = 6
 
   private def regionEdges(spark: SparkSession, dir: String): DataFrame =
     Tables.artifact(spark, dir, "graph_region_edges") {
@@ -717,10 +715,7 @@ object Graph {
   // cc-only device) are excluded: they would lift every node's degree
   // by one and shift the threshold.
   private val KcoreK = 12
-  private val KcoreIters = 5
-  /** Exposed for the convergence spec (mirrors [[ccItersForSpec]]) so
-    * the test always verifies the PRODUCTION iteration count. */
-  private[graft] def kcoreItersForSpec: Int = KcoreIters
+  private[graft] val KcoreIters = 5
   /** The alive-node sets before the first peel and after each of
     * `iters` peels. The convergence spec reads the last set (same
     * contract as [[ccLabels]]); [[kcore]] counts every set. */
@@ -960,7 +955,6 @@ object Graph {
   // DECIMAL(28,6) sums.
   def reciprocity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
     val sn = broadcast(Tables.supplier(spark, dir)
       .select($"s_suppkey", $"s_nationkey".as("sn")))
     val cn = broadcast(Tables.customer(spark, dir)
@@ -972,7 +966,7 @@ object Graph {
       .select($"sn", $"cn",
         ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev"))
       .groupBy($"sn", $"cn")
-      .agg(sum($"rev".cast(DecimalType(18, 6))).cast("double").as("w")).localCheckpoint()
+      .agg(Exact.sum($"rev", 18, 6).as("w")).localCheckpoint()
     val off = w.filter($"sn" =!= $"cn")
     val rec = off.join(
       broadcast(off.select($"sn".as("tn"), $"cn".as("tc"), $"w".as("wt"))),
@@ -984,12 +978,11 @@ object Graph {
       // WaveTenSpec's naive recomputation)
       .select($"w", least($"w", coalesce($"wt", lit(0.0))).as("wmin"))
       .agg(count(lit(1)).as("n_edges"),
-        sum($"w".cast(DecimalType(28, 6))).cast("double").as("tw"),
-        sum($"wmin".cast(DecimalType(28, 6))).cast("double").as("tmin"))
+        Exact.sum($"w", 28, 6).as("tw"),
+        Exact.sum($"wmin", 28, 6).as("tmin"))
     val dom = w.agg(
-      sum(when($"sn" === $"cn", $"w").otherwise(0.0)
-        .cast(DecimalType(28, 6))).cast("double").as("wdom"),
-      sum($"w".cast(DecimalType(28, 6))).cast("double").as("wall"),
+      Exact.sum(when($"sn" === $"cn", $"w").otherwise(0.0), 28, 6).as("wdom"),
+      Exact.sum($"w", 28, 6).as("wall"),
       countDistinct($"sn").as("n_nations"))
     rec.crossJoin(broadcast(dom))
       .select($"n_nations", $"n_edges",
@@ -1296,7 +1289,7 @@ object Graph {
       .groupBy($"side")
       .agg(sum($"c").as("n_nodes"), max($"dmin").as("d_min"),
         max($"d").as("d_max"),
-        round(sum(($"c" * $"d").cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"c" * $"d")
           / sum($"c"), 6).as("avg_degree"),
         round(lit(1.0) + sum($"c").cast("double")
           / sum($"t").cast("double"), 6).as("alpha"))
@@ -1617,9 +1610,7 @@ object Graph {
   // argmax via max(struct(cnt, −label)) — no per-node window, no
   // driver state); labels are referenced once per round, so lineage
   // stays linear in K (the cc self-union lesson).
-  private val LpaIters = 4
-  /** Exposed for the spec (mirrors [[ccItersForSpec]]). */
-  private[graft] def lpaItersForSpec: Int = LpaIters
+  private[graft] val LpaIters = 4
 
   /** Label table after `iters` synchronous majority rounds — exposed
     * so the spec can replay the dynamics on a hand-computed synthetic

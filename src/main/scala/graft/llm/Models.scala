@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Exact
 import graft.sources.Tables
 
 /** Distributed model fitting over corpus-scale features — the "train a
@@ -40,11 +41,9 @@ object Models {
     // carried on the base exactly for this consumer)
     val f = lrBase(spark, dir).select($"x1", $"x2", $"quality".as("y"))
 
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
 
     val m = f.agg(
-      dsum($"x1").as("sx1"), dsum($"x2").as("sx2"), dsum($"y").as("sy"),
+      Exact.sum($"x1").as("sx1"), Exact.sum($"x2").as("sx2"), Exact.sum($"y").as("sy"),
       count(lit(1)).as("n")).head()
     val n = m.getAs[Long]("n").toDouble
     val (mx1, mx2, my) =
@@ -52,12 +51,12 @@ object Models {
         m.getAs[Double]("sy") / n)
 
     val g = f.agg(
-      dsum(($"x1" - mx1) * ($"x1" - mx1)).as("s11"),
-      dsum(($"x1" - mx1) * ($"x2" - mx2)).as("s12"),
-      dsum(($"x2" - mx2) * ($"x2" - mx2)).as("s22"),
-      dsum(($"x1" - mx1) * ($"y" - my)).as("sy1"),
-      dsum(($"x2" - mx2) * ($"y" - my)).as("sy2"),
-      dsum(($"y" - my) * ($"y" - my)).as("syy")).head()
+      Exact.sum(($"x1" - mx1) * ($"x1" - mx1)).as("s11"),
+      Exact.sum(($"x1" - mx1) * ($"x2" - mx2)).as("s12"),
+      Exact.sum(($"x2" - mx2) * ($"x2" - mx2)).as("s22"),
+      Exact.sum(($"x1" - mx1) * ($"y" - my)).as("sy1"),
+      Exact.sum(($"x2" - mx2) * ($"y" - my)).as("sy2"),
+      Exact.sum(($"y" - my) * ($"y" - my)).as("syy")).head()
     val (s11, s12, s22) = (g.getAs[Double]("s11"), g.getAs[Double]("s12"),
       g.getAs[Double]("s22"))
     val (sy1, sy2, syy) = (g.getAs[Double]("sy1"), g.getAs[Double]("sy2"),
@@ -69,17 +68,17 @@ object Models {
     val b = my - w1 * mx1 - w2 * mx2
 
     val sse = f.agg(
-      dsum(($"y" - (lit(b) + lit(w1) * $"x1" + lit(w2) * $"x2"))
+      Exact.sum(($"y" - (lit(b) + lit(w1) * $"x1" + lit(w2) * $"x2"))
         * ($"y" - (lit(b) + lit(w1) * $"x1" + lit(w2) * $"x2"))).as("sse"))
       .head().getAs[Double]("sse")
     val r2 = 1.0 - sse / syy
 
     spark.createDataFrame(Seq(
       (math.round(n).toLong,
-        BigDecimal(w1).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(w2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(b).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(r2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+        Exact.r6(w1),
+        Exact.r6(w2),
+        Exact.r6(b),
+        Exact.r6(r2))))
       .toDF("n", "w_chars", "w_words", "intercept", "r2")
   }
 
@@ -157,8 +156,6 @@ object Models {
   private val LrEta = 1.0
   private val LrSteps = 3
 
-  private def dsum12(c: org.apache.spark.sql.Column) =
-    sum(c.cast("decimal(28,12)")).cast("double")
   private def sig(z: org.apache.spark.sql.Column) =
     lit(0.5) + lit(0.5) * z / (lit(1.0) + abs(z))
 
@@ -174,9 +171,9 @@ object Models {
     for (_ <- 1 to LrSteps) {
       val z = lit(b) + lit(w1) * col("x1") + lit(w2) * col("x2")
       val g = f.agg(
-        dsum12((sig(z) - col("y")) * col("x1")).as("g1"),
-        dsum12((sig(z) - col("y")) * col("x2")).as("g2"),
-        dsum12(sig(z) - col("y")).as("gb")).head()
+        Exact.sum((sig(z) - col("y")) * col("x1")).as("g1"),
+        Exact.sum((sig(z) - col("y")) * col("x2")).as("g2"),
+        Exact.sum(sig(z) - col("y")).as("gb")).head()
       w1 -= LrEta * g.getAs[Double]("g1") / n
       w2 -= LrEta * g.getAs[Double]("g2") / n
       b -= LrEta * g.getAs[Double]("gb") / n
@@ -238,24 +235,22 @@ object Models {
 
   def logreg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) = dsum12(c)
     val (f, w1, w2, b) = logregFit(spark, dir)
     val n = f.count().toDouble
 
     val zf = lit(b) + lit(w1) * $"x1" + lit(w2) * $"x2"
     val m = f.agg(
-      dsum($"y").as("n_pos"),
+      Exact.sum($"y").as("n_pos"),
       sum(when((zf >= 0.0) === ($"y" === 1.0), 1L).otherwise(0L))
         .as("n_correct")).head()
 
     spark.createDataFrame(Seq((
       math.round(n).toLong,
       math.round(m.getAs[Double]("n_pos")).toLong,
-      BigDecimal(w1).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(w2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(b).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(m.getAs[Long]("n_correct") / n)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+      Exact.r6(w1),
+      Exact.r6(w2),
+      Exact.r6(b),
+      Exact.r6(m.getAs[Long]("n_correct") / n))))
       .toDF("n", "n_pos", "w_chars", "w_words", "intercept", "accuracy")
   }
 
@@ -353,26 +348,24 @@ object Models {
         $"p", $"y")
       .groupBy($"bin")
       .agg(count(lit(1)).as("n"),
-        round(dsum12($"p") / count(lit(1)), 6).as("mean_pred"),
-        round(dsum12($"y") / count(lit(1)), 6).as("pos_rate"),
-        round(abs(dsum12($"p") / count(lit(1))
-          - dsum12($"y") / count(lit(1))), 6).as("gap"))
+        round(Exact.sum($"p") / count(lit(1)), 6).as("mean_pred"),
+        round(Exact.sum($"y") / count(lit(1)), 6).as("pos_rate"),
+        round(abs(Exact.sum($"p") / count(lit(1))
+          - Exact.sum($"y") / count(lit(1))), 6).as("gap"))
       .orderBy($"bin")
   }
 
   val calibrationSql: String = {
     val p = sigSql("w.b + w.w1 * f.x1 + w.w2 * f.x2")
-    def d12(e: String) =
-      s"CAST(SUM(CAST(($e) AS DECIMAL(28,12))) AS DOUBLE)"
     s"""WITH $logregChainSql,
        |s AS (
        |  SELECT LEAST(CAST(FLOOR($p * 10) AS INT), 9) AS bin,
        |    $p AS p, f.y AS y
        |  FROM f CROSS JOIN w3s w)
        |SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
-       |  ROUND(${d12("p")} / COUNT(*), 6) AS mean_pred,
-       |  ROUND(${d12("y")} / COUNT(*), 6) AS pos_rate,
-       |  ROUND(ABS(${d12("p")} / COUNT(*) - ${d12("y")} / COUNT(*)), 6)
+       |  ROUND(${Exact.sumSql("p")} / COUNT(*), 6) AS mean_pred,
+       |  ROUND(${Exact.sumSql("y")} / COUNT(*), 6) AS pos_rate,
+       |  ROUND(ABS(${Exact.sumSql("p")} / COUNT(*) - ${Exact.sumSql("y")} / COUNT(*)), 6)
        |    AS gap
        |FROM s GROUP BY bin ORDER BY bin""".stripMargin
   }
@@ -441,9 +434,8 @@ object Models {
       (2.0 * np.toDouble * nn.toDouble)
     spark.createDataFrame(Seq((
       np + nn, np, nn, agg.getAs[Long]("n_scores"),
-      BigDecimal(aucV).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(2.0 * aucV - 1.0)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+      Exact.r6(aucV),
+      Exact.r6(2.0 * aucV - 1.0))))
       .toDF("n", "n_pos", "n_neg", "n_scores", "auc", "gini")
   }
 
@@ -561,17 +553,15 @@ object Models {
     // over the checkpointed histogram — bounded-domain, no corpus cost
     val blocks = prBlocksFrom(hist, np)
     val a = blocks.agg(
-      sum($"term".cast("decimal(28,12)")).cast("double").as("ap"),
+      Exact.sum($"term").as("ap"),
       max($"f1").as("bf"), count(lit(1)).as("ns")).head()
     val thr = blocks.filter($"f1" === a.getAs[Double]("bf"))
       .agg(min($"p")).head().getDouble(0)
     spark.createDataFrame(Seq((
       np + nn, np, nn, a.getAs[Long]("ns"),
-      BigDecimal(a.getAs[Double]("ap"))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(a.getAs[Double]("bf"))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(thr).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+      Exact.r6(a.getAs[Double]("ap")),
+      Exact.r6(a.getAs[Double]("bf")),
+      Exact.r6(thr))))
       .toDF("n", "n_pos", "n_neg", "n_scores", "pr_auc", "best_f1",
         "best_f1_threshold")
   }
@@ -647,7 +637,7 @@ object Models {
     val scored = f.select(p.as("p"), $"y").localCheckpoint()
     val m = scored.agg(count(lit(1)).as("n"),
       sum(when($"y" === 1.0, 1L).otherwise(0L)).as("npos"),
-      dsum12(($"p" - $"y") * ($"p" - $"y")).as("sse")).head()
+      Exact.sum(($"p" - $"y") * ($"p" - $"y")).as("sse")).head()
     val n = m.getAs[Long]("n")
     if (n == 0L)
       return spark.createDataFrame(
@@ -658,43 +648,37 @@ object Models {
     val bs = m.getAs[Double]("sse") / n.toDouble
     val bins = scored
       .groupBy(least(floor($"p" * 10), lit(9)).cast("int").as("bin"))
-      .agg(count(lit(1)).as("nk"), dsum12($"p").as("sp"),
+      .agg(count(lit(1)).as("nk"), Exact.sum($"p").as("sp"),
         sum(when($"y" === 1.0, 1L).otherwise(0L)).as("pk"))
       .select($"nk".cast("double").as("nk"),
         ($"sp" / $"nk".cast("double")).as("pbar"),
         ($"pk".cast("double") / $"nk".cast("double")).as("okbar"))
     val t = bins.agg(
-      (sum(($"nk" * ($"pbar" - $"okbar") * ($"pbar" - $"okbar"))
-        .cast("decimal(28,12)")).cast("double") / n.toDouble).as("rel"),
-      (sum(($"nk" * ($"okbar" - obar) * ($"okbar" - obar))
-        .cast("decimal(28,12)")).cast("double") / n.toDouble).as("res"))
+      (Exact.sum($"nk" * ($"pbar" - $"okbar") * ($"pbar" - $"okbar")) / n.toDouble).as("rel"),
+      (Exact.sum($"nk" * ($"okbar" - obar) * ($"okbar" - obar)) / n.toDouble).as("res"))
       .head()
     val (rel, res) = (t.getAs[Double]("rel"), t.getAs[Double]("res"))
     val unc = obar * (1.0 - obar)
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     spark.createDataFrame(Seq((
-      n, m.getAs[Long]("npos"), r6(bs), r6(rel), r6(res), r6(unc),
-      r6(bs - (rel - res + unc)))))
+      n, m.getAs[Long]("npos"), Exact.r6(bs), Exact.r6(rel), Exact.r6(res), Exact.r6(unc),
+      Exact.r6(bs - (rel - res + unc)))))
       .toDF("n", "n_pos", "brier", "reliability", "resolution",
         "uncertainty", "decomp_gap")
   }
 
   val brierSql: String = {
     val p = sigSql("w.b + w.w1 * f.x1 + w.w2 * f.x2")
-    def d12(e: String) =
-      s"CAST(SUM(CAST(($e) AS DECIMAL(28,12))) AS DOUBLE)"
     s"""WITH $logregChainSql,
        |sc AS (SELECT $p AS p, f.y AS y FROM f CROSS JOIN w3s w),
        |m AS (
        |  SELECT COUNT(*) AS n,
        |    SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS npos,
-       |    ${d12("(p - y) * (p - y)")} AS sse
+       |    ${Exact.sumSql("(p - y) * (p - y)")} AS sse
        |  FROM sc),
        |g AS (
        |  SELECT LEAST(CAST(FLOOR(p * 10) AS INT), 9) AS bin,
        |    CAST(COUNT(*) AS DOUBLE) AS nk,
-       |    ${d12("p")} AS sp,
+       |    ${Exact.sumSql("p")} AS sp,
        |    SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS pk
        |  FROM sc GROUP BY 1),
        |k AS (
@@ -704,9 +688,9 @@ object Models {
        |  FROM g CROSS JOIN m),
        |t AS (
        |  SELECT
-       |    ${d12("nk * (pbar - okbar) * (pbar - okbar)")}
+       |    ${Exact.sumSql("nk * (pbar - okbar) * (pbar - okbar)")}
        |      / ANY_VALUE(n) AS rel,
-       |    ${d12("nk * (okbar - obar) * (okbar - obar)")}
+       |    ${Exact.sumSql("nk * (okbar - obar) * (okbar - obar)")}
        |      / ANY_VALUE(n) AS res,
        |    ANY_VALUE(sse) / ANY_VALUE(n) AS bs,
        |    ANY_VALUE(obar) * (1.0 - ANY_VALUE(obar)) AS unc,
@@ -753,8 +737,8 @@ object Models {
     val ksV = a.getAs[Double]("ks")
     val thr = diffs.filter($"diff" === ksV).agg(min($"p")).head().getDouble(0)
     spark.createDataFrame(Seq((np, nn, a.getAs[Long]("ns"),
-      BigDecimal(ksV).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(thr).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+      Exact.r6(ksV),
+      Exact.r6(thr))))
       .toDF("n_pos", "n_neg", "n_scores", "ks", "ks_threshold")
   }
 
@@ -820,17 +804,15 @@ object Models {
     val (tp, fp) = (m.getAs[Long]("tp"), m.getAs[Long]("fp"))
     val (fn, tn) = (np - tp, nn - fp)
     val n = np + nn
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val denom = math.sqrt((tp + fp).toDouble * (tp + fn).toDouble
       * (tn + fp).toDouble * (tn + fn).toDouble)
     val mcc = if (denom == 0.0) 0.0
       else (tp.toDouble * tn.toDouble - fp.toDouble * fn.toDouble) / denom
     spark.createDataFrame(Seq((
-      n, np, r6(thr), tp, fp, tn, fn,
-      r6(if (tp + fp == 0L) 0.0 else tp.toDouble / (tp + fp).toDouble),
-      r6(tp.toDouble / np.toDouble),
-      r6((tp + tn).toDouble / n.toDouble), r6(mcc))))
+      n, np, Exact.r6(thr), tp, fp, tn, fn,
+      Exact.r6(if (tp + fp == 0L) 0.0 else tp.toDouble / (tp + fp).toDouble),
+      Exact.r6(tp.toDouble / np.toDouble),
+      Exact.r6((tp + tn).toDouble / n.toDouble), Exact.r6(mcc))))
       .toDF("n", "n_pos", "threshold", "tp", "fp", "tn", "fn",
         "precision", "recall", "accuracy", "mcc")
   }
@@ -904,12 +886,10 @@ object Models {
     val bj = pts.agg(max($"j")).head().getDouble(0)
     val best = pts.filter($"j" === bj)
       .orderBy($"p".asc).limit(1).head()
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val (tpr, fpr) = (best.getAs[Double]("tpr"), best.getAs[Double]("fpr"))
     spark.createDataFrame(Seq((
-      np + nn, np, r6(best.getAs[Double]("p")), r6(tpr), r6(fpr),
-      r6(tpr - fpr), r6((tpr + (1.0 - fpr)) / 2.0))))
+      np + nn, np, Exact.r6(best.getAs[Double]("p")), Exact.r6(tpr), Exact.r6(fpr),
+      Exact.r6(tpr - fpr), Exact.r6((tpr + (1.0 - fpr)) / 2.0))))
       .toDF("n", "n_pos", "threshold", "tpr", "fpr", "youden_j",
         "balanced_acc")
   }
@@ -981,8 +961,6 @@ object Models {
         Seq.empty[(Long, Long, Double, Double, Double, Double)])
         .toDF("pct_train", "n_train", "accuracy", "w_chars", "w_words",
           "intercept")
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val rows = Seq(25L, 50L, 75L, 100L).flatMap { frac =>
       val tr = f.filter($"bucket" < frac)
       val nTr = tr.count()
@@ -993,7 +971,7 @@ object Models {
         val acc = f.agg(
           sum(when((zf >= 0.0) === ($"y" === 1.0), 1L).otherwise(0L))
             .as("ok")).head().getAs[Long]("ok").toDouble / nFull.toDouble
-        Some((frac, nTr, r6(acc), r6(w1), r6(w2), r6(b)))
+        Some((frac, nTr, Exact.r6(acc), Exact.r6(w1), Exact.r6(w2), Exact.r6(b)))
       }
     }
     spark.createDataFrame(rows)
@@ -1181,11 +1159,9 @@ object Models {
         val d = math.max(math.abs((npo - ngo).toDouble) - 1.0, 0.0)
         d * d / disc.toDouble
       }
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     spark.createDataFrame(Seq((n, nb, npo, ngo, nn,
-        r6((nb + npo).toDouble / n), r6((nb + ngo).toDouble / n),
-        r6(chi2), if (chi2 > 3.8416) 1L else 0L)))
+        Exact.r6((nb + npo).toDouble / n), Exact.r6((nb + ngo).toDouble / n),
+        Exact.r6(chi2), if (chi2 > 3.8416) 1L else 0L)))
       .toDF("n", "n_both", "n_probe_only", "n_gopher_only", "n_neither",
         "acc_probe", "acc_gopher", "chi2", "significant")
   }
@@ -1378,7 +1354,7 @@ object Models {
       .groupBy(floor($"p" * 10).cast("int").as("bin"))
       .agg(count(lit(1)).as("n"),
         sum($"y".cast("long")).as("obs_pos"),
-        sum($"p".cast(DecimalType(28, 12))).cast("double").as("exp_pos"))
+        Exact.sum($"p").as("exp_pos"))
     val terms = bins.select($"bin", $"n", $"obs_pos", $"exp_pos",
       (($"obs_pos".cast("double") - $"exp_pos")
         * ($"obs_pos".cast("double") - $"exp_pos")
@@ -1389,7 +1365,7 @@ object Models {
     // g < 3 (df < 1) leaves the test undefined → 'calibrated' by
     // convention (too few bins to reject). Oracle mirrors exactly.
     val tot = terms
-      .agg(sum($"term".cast(DecimalType(28, 12))).cast("double").as("hl"),
+      .agg(Exact.sum($"term").as("hl"),
         count(lit(1)).as("g"))
       .select($"hl", $"g",
         when($"g" - 2 === 1, 3.8415).when($"g" - 2 === 2, 5.9915)
@@ -1613,22 +1589,18 @@ object Models {
           .otherwise($"num".cast("double")
             / ($"np" * $"nn" * 2L).cast("double")).as("auc"))
       .collect().map(r => r.getDouble(1)).sorted
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def d12(x: Double) =
-      BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
     val bN = reps.length
     // double division AFTER the exact decimal fold — the same
     // (CAST(SUM(decimal) AS DOUBLE) / n) order the oracle runs
-    val mean = reps.map(d12).sum.toDouble / bN
+    val mean = reps.map(Exact.dec(_, 12)).sum.toDouble / bN
     val sd =
       if (bN <= 1) 0.0
       else math.sqrt(math.max(
-        reps.map(a => d12((a - mean) * (a - mean))).sum.toDouble
+        reps.map(a => Exact.dec((a - mean) * (a - mean), 12)).sum.toDouble
           / (bN - 1), 0.0))
-    spark.createDataFrame(Seq((bN.toLong, r6(mean), r6(sd),
-      r6(reps(math.ceil(0.05 * bN).toInt - 1)),
-      r6(reps(math.ceil(0.95 * bN).toInt - 1)))))
+    spark.createDataFrame(Seq((bN.toLong, Exact.r6(mean), Exact.r6(sd),
+      Exact.r6(reps(math.ceil(0.05 * bN).toInt - 1)),
+      Exact.r6(reps(math.ceil(0.95 * bN).toInt - 1)))))
       .toDF("n_reps", "boot_mean", "boot_sd", "boot_p5", "boot_p95")
   }
 
@@ -1897,10 +1869,9 @@ object Models {
         $"p", $"y")
       .groupBy($"bin")
       .agg(count(lit(1)).as("nb"),
-        dsum12($"p").as("sp"), dsum12($"y").as("sy"))
+        Exact.sum($"p").as("sp"), Exact.sum($"y").as("sy"))
     bins.agg(sum($"nb").as("n"), count(lit(1)).as("n_bins"),
-        sum(($"nb" * abs($"sp" / $"nb" - $"sy" / $"nb"))
-          .cast("decimal(28,12)")).cast("double").as("gsum"),
+        Exact.sum($"nb" * abs($"sp" / $"nb" - $"sy" / $"nb")).as("gsum"),
         max(abs($"sp" / $"nb" - $"sy" / $"nb")).as("mx"))
       .select($"n", $"n_bins",
         round($"gsum" / $"n", 6).as("ece"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Exact
 import graft.sources.Tables
 import TextAnalysis.{h60, h60Sql}
 
@@ -221,7 +222,7 @@ object Multimodal {
     val prompt = e.filter($"vec_id" < 4)
       .select(posexplode($"v").as(Seq("pos", "val")))
       .groupBy($"pos")
-      .agg((sum($"val".cast("decimal(28,12)")).cast("double")
+      .agg((Exact.sum($"val")
         / count(lit(1))).as("m"))
       .agg(expr("transform(array_sort(collect_list(struct(pos, m))), s -> s.m)")
         .as("pv"))
@@ -785,8 +786,7 @@ object Multimodal {
         countDistinct($"digest").as("nd"))
       .agg(count(lit(1)).as("n_videos"),
         sum($"nf").as("n_frames"),
-        round(sum((lit(1.0) - $"nd".cast("double") / $"nf")
-          .cast("decimal(28,12)")).cast("double") / count(lit(1)), 6)
+        round(Exact.sum(lit(1.0) - $"nd".cast("double") / $"nf") / count(lit(1)), 6)
           .as("mean_within_dup_frac"))
     val perDigest = frames.groupBy($"digest")
       .agg(countDistinct($"doc_id").as("ndocs"))
@@ -863,7 +863,7 @@ object Multimodal {
       .agg((sum($"cut") + 1L).as("n_scenes"), count(lit(1)).as("n_sampled"))
     scenes.groupBy($"n_scenes")
       .agg(count(lit(1)).as("n_videos"),
-        round(sum($"n_sampled".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"n_sampled")
           / count(lit(1)), 6).as("avg_sampled_frames"))
       .orderBy($"n_scenes")
   }

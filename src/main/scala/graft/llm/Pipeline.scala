@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.sources.Tables
 import TextAnalysis.{h60, h60Sql}
 
@@ -708,7 +709,7 @@ object Pipeline {
         .otherwise($"tokens".cast("double") / $"corpus_toks"))
       .withColumn("w", sqrt($"raw_share"))
     val wsum = shares
-      .agg(coalesce(sum($"w".cast("decimal(28,12)")).cast("double"), lit(0.0))
+      .agg(coalesce(Exact.sum($"w"), lit(0.0))
         .as("w_sum"))
     val share = when($"w_sum" === 0, lit(0.0)).otherwise($"w" / $"w_sum")
     val target = share * lit(EpochBudgetMult) * $"corpus_toks"
@@ -964,7 +965,6 @@ object Pipeline {
   // order-insensitive.
   def effTokens(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.DecimalType
     val toks = Tables.documents(spark, dir)
       .select($"doc_id", $"source",
         size(regexp_extract_all($"text",
@@ -978,8 +978,7 @@ object Pipeline {
       .agg(
         count(lit(1)).as("n_docs"),
         sum($"n_toks").as("n_tokens"),
-        sum(($"weight" * $"n_toks").cast(DecimalType(28, 12)))
-          .cast("double").as("eff_tokens"))
+        Exact.sum($"weight" * $"n_toks").as("eff_tokens"))
       .select($"source", $"n_docs", $"n_tokens",
         round($"eff_tokens", 6).as("eff_tokens"),
         round(lit(1.0) - $"eff_tokens" / $"n_tokens", 6)
@@ -1449,7 +1448,7 @@ object Pipeline {
     val docs = Tables.documents(spark, dir)
     val base = docs.agg(count(lit(1)).as("n_docs"),
       sum($"n_chars").cast("long").as("total_chars"),
-      (sum($"n_chars".cast("decimal(28,6)")).cast("double")
+      (Exact.sum($"n_chars", 28, 6)
         / count(lit(1))).as("mean_chars"))
     val nFp = docs
       .select(md5(lower(regexp_replace(trim($"text"), "\\s+", " "))).as("fp"))
@@ -1457,8 +1456,7 @@ object Pipeline {
     def gini(keyCol: String) = docs.groupBy(col(keyCol)).agg(count(lit(1)).as("c"))
       .agg(count(lit(1)).as(s"n_$keyCol"),
         sum($"c").as("tot"),
-        sum((($"c".cast("double") * $"c") .cast("double")).cast("decimal(28,2)"))
-          .cast("double").as("sumsq"))
+        Exact.sum(($"c".cast("double") * $"c").cast("double"), 28, 2).as("sumsq"))
       .select(col(s"n_$keyCol"),
         round(lit(1.0) - $"sumsq" / ($"tot".cast("double") * $"tot"), 6)
           .as(s"${keyCol}_gini"))
@@ -1614,15 +1612,13 @@ object Pipeline {
   private val QfMaxEpochs = 1.2
   def quotaFill(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column, s: Int = 6) =
-      sum(c.cast(s"decimal(28,$s)")).cast("double")
     val avail = Tables.documents(spark, dir)
       .select($"source",
         size(split(trim($"text"), "\\s+")).cast("long").as("tok"))
       .groupBy($"source").agg(sum($"tok").as("avail_tokens"))
     val w = avail.select($"source", $"avail_tokens",
       (h60($"source") % 7 + 1).cast("double").as("wt"))
-    val tot = broadcast(w.agg(dsum($"wt").as("sw"),
+    val tot = broadcast(w.agg(Exact.sum($"wt", 28, 6).as("sw"),
       sum($"avail_tokens").cast("double").as("ta")))
     val base = w.crossJoin(tot)
       .select($"source", $"avail_tokens",
@@ -1631,9 +1627,8 @@ object Pipeline {
         (lit(QfMaxEpochs) * $"avail_tokens").as("cap"))
       .withColumn("alloc0", $"t_share" * $"budget")
       .withColumn("fin0", least($"alloc0", $"cap"))
-    val g = broadcast(base.agg(dsum($"fin0").as("sfin0"),
-      dsum(when($"fin0" < $"cap", $"t_share").otherwise(lit(0.0)), 12)
-        .as("hs")))
+    val g = broadcast(base.agg(Exact.sum($"fin0", 28, 6).as("sfin0"),
+      Exact.sum(when($"fin0" < $"cap", $"t_share").otherwise(lit(0.0))).as("hs")))
     base.crossJoin(g)
       .withColumn("fin1",
         when($"fin0" < $"cap" && $"hs" > 0.0,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Exact
 import graft.sources.Tables
 import TextAnalysis.{h60, h60Sql}
 
@@ -274,8 +275,7 @@ object Sampling {
     val w = per.select($"source", $"n_h", $"sx", $"sxx",
       ($"n_h".cast("double") * sd).as("wh"), sd.as("sd"))
     val tot = w.agg(
-      coalesce(sum($"wh".cast("decimal(28,12)")).cast("double"), lit(0.0))
-        .as("wsum"),
+      coalesce(Exact.sum($"wh"), lit(0.0)).as("wsum"),
       coalesce(sum($"n_h"), lit(0L)).as("n_tot"))
     val share = when($"wsum" === 0,
         $"n_h".cast("double") / $"n_tot")
@@ -387,8 +387,7 @@ object Sampling {
     docB.join(broadcast(lr), "b")
       .groupBy($"doc_id", $"lang", $"source")
       .agg(sum($"n").as("n_toks"),
-        round(sum(($"n" * $"lr").cast("decimal(28,12)")).cast("double"), 6)
-          .as("dsir_weight"))
+        round(Exact.sum($"n" * $"lr"), 6).as("dsir_weight"))
       .orderBy($"dsir_weight".desc, $"doc_id".asc)
       .limit(DsirTopK)
       .withColumn("rank", row_number().over(w))
@@ -516,7 +515,7 @@ object Sampling {
       .select($"rep", $"n_chars", w.cast("long").as("w"))
       .groupBy($"rep")
       .agg(sum($"w").cast("long").as("n_eff"),
-        round(sum(($"w" * $"n_chars").cast("decimal(28,6)")).cast("double")
+        round(Exact.sum($"w" * $"n_chars", 28, 6)
           / sum($"w"), 6).as("mean_chars"))
       .orderBy($"rep")
   }
@@ -671,10 +670,8 @@ object Sampling {
     val perSrc = ps.crossJoin(tot)
       .select($"source", $"n_docs", $"n_total", w.as("w"))
     val ess = broadcast(perSrc.agg(
-      sum(($"n_docs" * $"w").cast(DecimalType(28, 12))).cast("double")
-        .as("sum_w"),
-      sum(($"n_docs" * $"w" * $"w").cast(DecimalType(28, 12))).cast("double")
-        .as("sum_w2")))
+      Exact.sum($"n_docs" * $"w").as("sum_w"),
+      Exact.sum($"n_docs" * $"w" * $"w").as("sum_w2")))
     perSrc.crossJoin(ess)
       .select($"source", $"n_docs", round($"w", 6).as("weight"),
         round(($"n_docs" * $"w") / $"sum_w", 6).as("weighted_share"),
@@ -738,10 +735,8 @@ object Sampling {
       .agg(
         sum(when($"raw" < lit(1.0) / $"clip" || $"raw" > $"clip", 1L)
           .otherwise(0L)).as("n_clipped"),
-        sum(($"n_docs" * $"w").cast(DecimalType(28, 12))).cast("double")
-          .as("sw"),
-        sum(($"n_docs" * $"w" * $"w").cast(DecimalType(28, 12)))
-          .cast("double").as("sw2"),
+        Exact.sum($"n_docs" * $"w").as("sw"),
+        Exact.sum($"n_docs" * $"w" * $"w").as("sw2"),
         max($"n_total").as("nt"))
       .select($"clip", $"n_clipped", round($"sw", 6).as("sum_w"),
         round(($"sw" * $"sw") / $"sw2", 2).as("ess"),
@@ -802,7 +797,7 @@ object Sampling {
           .as("w"))
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
-        sum($"w".cast(DecimalType(28, 12))).cast("double").as("eff"))
+        Exact.sum($"w").as("eff"))
       .select($"source", $"n_docs", round($"eff", 6).as("effective_docs"),
         round(lit(1.0) - $"eff" / $"n_docs".cast("double"), 6)
           .as("dedup_shrink"))
@@ -918,16 +913,14 @@ object Sampling {
   // sum.
   def sampleDeff(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     val q = TextAnalysis.taQuality(spark, dir).select($"doc_id", $"quality")
     val src = Tables.documents(spark, dir).select($"doc_id", $"source")
       .join(q, "doc_id")
       .groupBy($"source")
-      .agg(count(lit(1)).as("ns"), dsum($"quality").as("sy"),
-        dsum($"quality" * $"quality").as("syy"))
+      .agg(count(lit(1)).as("ns"), Exact.sum($"quality").as("sy"),
+        Exact.sum($"quality" * $"quality").as("syy"))
     val g = src.agg(sum($"ns").as("n"),
-      dsum($"sy").as("gy"), dsum($"syy").as("gyy")).head()
+      Exact.sum($"sy").as("gy"), Exact.sum($"syy").as("gyy")).head()
     val n = g.getAs[Long]("n")
     if (n == 0L)
       return spark.createDataFrame(
@@ -937,46 +930,40 @@ object Sampling {
     val ybar = g.getAs[Double]("gy") / n.toDouble
     val varTotal = g.getAs[Double]("gyy") / n.toDouble - ybar * ybar
     val t = src.agg(
-      (sum(($"syy" - $"sy" * $"sy" / $"ns".cast("double"))
-        .cast("decimal(28,12)")).cast("double") / n.toDouble).as("vw"),
-      (sum(($"ns".cast("double")
+      (Exact.sum($"syy" - $"sy" * $"sy" / $"ns".cast("double")) / n.toDouble).as("vw"),
+      (Exact.sum($"ns".cast("double")
         * ($"sy" / $"ns".cast("double") - ybar)
-        * ($"sy" / $"ns".cast("double") - ybar))
-        .cast("decimal(28,12)")).cast("double") / n.toDouble).as("vb"),
+        * ($"sy" / $"ns".cast("double") - ybar)) / n.toDouble).as("vb"),
       count(lit(1)).as("n_sources")).head()
     val (vw, vb) = (t.getAs[Double]("vw"), t.getAs[Double]("vb"))
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     spark.createDataFrame(Seq((
-      n, t.getAs[Long]("n_sources"), r6(varTotal), r6(vw), r6(vb),
-      r6(if (varTotal == 0.0) 1.0 else vw / varTotal),
-      r6(if (varTotal == 0.0) 0.0 else vb / varTotal))))
+      n, t.getAs[Long]("n_sources"), Exact.r6(varTotal), Exact.r6(vw), Exact.r6(vb),
+      Exact.r6(if (varTotal == 0.0) 1.0 else vw / varTotal),
+      Exact.r6(if (varTotal == 0.0) 0.0 else vb / varTotal))))
       .toDF("n", "n_sources", "var_total", "var_within", "var_between",
         "deff", "pct_explained")
   }
 
   val sampleDeffSql: String = {
-    def d12(e: String) =
-      s"CAST(SUM(CAST(($e) AS DECIMAL(28,12))) AS DOUBLE)"
     s"""WITH q AS (${TextAnalysis.taQualitySql}),
        |src AS (
        |  SELECT d.source, COUNT(*) AS ns,
-       |    ${d12("q.quality")} AS sy,
-       |    ${d12("q.quality * q.quality")} AS syy
+       |    ${Exact.sumSql("q.quality")} AS sy,
+       |    ${Exact.sumSql("q.quality * q.quality")} AS syy
        |  FROM documents d JOIN q ON d.doc_id = q.doc_id
        |  GROUP BY d.source),
        |g AS (
        |  SELECT CAST(SUM(ns) AS BIGINT) AS n,
-       |    ${d12("sy")} AS gy, ${d12("syy")} AS gyy,
+       |    ${Exact.sumSql("sy")} AS gy, ${Exact.sumSql("syy")} AS gyy,
        |    COUNT(*) AS n_sources
        |  FROM src),
        |m AS (
        |  SELECT g.n, g.n_sources,
        |    g.gy / g.n AS ybar,
        |    g.gyy / g.n - (g.gy / g.n) * (g.gy / g.n) AS var_total,
-       |    ${d12("src.syy - src.sy * src.sy / CAST(src.ns AS DOUBLE)")}
+       |    ${Exact.sumSql("src.syy - src.sy * src.sy / CAST(src.ns AS DOUBLE)")}
        |      / ANY_VALUE(g.n) AS vw,
-       |    ${d12("CAST(src.ns AS DOUBLE) * (src.sy / CAST(src.ns AS DOUBLE) - g.gy / g.n) * (src.sy / CAST(src.ns AS DOUBLE) - g.gy / g.n)")}
+       |    ${Exact.sumSql("CAST(src.ns AS DOUBLE) * (src.sy / CAST(src.ns AS DOUBLE) - g.gy / g.n) * (src.sy / CAST(src.ns AS DOUBLE) - g.gy / g.n)")}
        |      / ANY_VALUE(g.n) AS vb
        |  FROM src CROSS JOIN g
        |  GROUP BY g.n, g.n_sources, g.gy, g.gyy)
@@ -1007,16 +994,14 @@ object Sampling {
   // n₀ and allocations kept as exact doubles of integer-derived values.
   def sampleAllocVariance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     val q = TextAnalysis.taQuality(spark, dir).select($"doc_id", $"quality")
     val src = Tables.documents(spark, dir).select($"doc_id", $"source")
       .join(q, "doc_id")
       .groupBy($"source")
-      .agg(count(lit(1)).as("ns"), dsum($"quality").as("sy"),
-        dsum($"quality" * $"quality").as("syy")).localCheckpoint()
-    val g = src.agg(sum($"ns").as("n"), dsum($"sy").as("gy"),
-      dsum($"syy").as("gyy"), count(lit(1)).as("k")).head()
+      .agg(count(lit(1)).as("ns"), Exact.sum($"quality").as("sy"),
+        Exact.sum($"quality" * $"quality").as("syy")).localCheckpoint()
+    val g = src.agg(sum($"ns").as("n"), Exact.sum($"sy").as("gy"),
+      Exact.sum($"syy").as("gyy"), count(lit(1)).as("k")).head()
     val n = g.getAs[Long]("n")
     if (n < 10L)
       return spark.createDataFrame(Seq.empty[(String, Long, Double, Double)])
@@ -1033,42 +1018,36 @@ object Sampling {
       .select($"ns", $"vs", sqrt($"vs").as("sds"))
     val t = terms.agg(
       // proportional: Σ W_s²σ_s²/(n0·W_s) = Σ W_s·σ_s²/n0
-      dsum($"ns".cast("double") / n.toDouble * $"vs").as("propTerm"),
+      Exact.sum($"ns".cast("double") / n.toDouble * $"vs").as("propTerm"),
       // Neyman: (Σ W_s·σ_s)²/n0
-      dsum($"ns".cast("double") / n.toDouble * $"sds").as("neyTerm"),
+      Exact.sum($"ns".cast("double") / n.toDouble * $"sds").as("neyTerm"),
       // equal: Σ W_s²·σ_s²/(n0/K)
-      dsum(($"ns".cast("double") / n.toDouble)
+      Exact.sum(($"ns".cast("double") / n.toDouble)
         * ($"ns".cast("double") / n.toDouble) * $"vs").as("eqTerm")).head()
-    def r9(x: Double) =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val vSrs = varTotal / n0.toDouble
     val vProp = t.getAs[Double]("propTerm") / n0.toDouble
     val ney = t.getAs[Double]("neyTerm")
     val vNey = ney * ney / n0.toDouble
     val vEq = t.getAs[Double]("eqTerm") * k.toDouble / n0.toDouble
     spark.createDataFrame(Seq(
-      ("equal", n0, r9(vEq), r6(vSrs / vEq)),
-      ("neyman", n0, r9(vNey), r6(vSrs / vNey)),
-      ("proportional", n0, r9(vProp), r6(vSrs / vProp)),
-      ("srs", n0, r9(vSrs), r6(1.0))))
+      ("equal", n0, Exact.round(vEq, 9), Exact.r6(vSrs / vEq)),
+      ("neyman", n0, Exact.round(vNey, 9), Exact.r6(vSrs / vNey)),
+      ("proportional", n0, Exact.round(vProp, 9), Exact.r6(vSrs / vProp)),
+      ("srs", n0, Exact.round(vSrs, 9), Exact.r6(1.0))))
       .toDF("scheme", "n_budget", "var_mean", "rel_efficiency")
   }
 
   val sampleAllocVarianceSql: String = {
-    def d12(e: String) =
-      s"CAST(SUM(CAST(($e) AS DECIMAL(28,12))) AS DOUBLE)"
     s"""WITH q AS (${TextAnalysis.taQualitySql}),
        |src AS (
        |  SELECT d.source, COUNT(*) AS ns,
-       |    ${d12("q.quality")} AS sy,
-       |    ${d12("q.quality * q.quality")} AS syy
+       |    ${Exact.sumSql("q.quality")} AS sy,
+       |    ${Exact.sumSql("q.quality * q.quality")} AS syy
        |  FROM documents d JOIN q ON d.doc_id = q.doc_id
        |  GROUP BY d.source),
        |g AS (
        |  SELECT CAST(SUM(ns) AS BIGINT) AS n,
-       |    ${d12("sy")} AS gy, ${d12("syy")} AS gyy, COUNT(*) AS k
+       |    ${Exact.sumSql("sy")} AS gy, ${Exact.sumSql("syy")} AS gyy, COUNT(*) AS k
        |  FROM src),
        |terms AS (
        |  SELECT src.ns, g.n, g.k, g.gy, g.gyy,
@@ -1079,9 +1058,9 @@ object Sampling {
        |t AS (
        |  SELECT ANY_VALUE(n) AS n, ANY_VALUE(k) AS k,
        |    ANY_VALUE(gyy / n - (gy / n) * (gy / n)) AS var_total,
-       |    ${d12("CAST(ns AS DOUBLE) / CAST(n AS DOUBLE) * vs")} AS propTerm,
-       |    ${d12("CAST(ns AS DOUBLE) / CAST(n AS DOUBLE) * SQRT(vs)")} AS neyTerm,
-       |    ${d12("(CAST(ns AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(ns AS DOUBLE) / CAST(n AS DOUBLE)) * vs")} AS eqTerm
+       |    ${Exact.sumSql("CAST(ns AS DOUBLE) / CAST(n AS DOUBLE) * vs")} AS propTerm,
+       |    ${Exact.sumSql("CAST(ns AS DOUBLE) / CAST(n AS DOUBLE) * SQRT(vs)")} AS neyTerm,
+       |    ${Exact.sumSql("(CAST(ns AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(ns AS DOUBLE) / CAST(n AS DOUBLE)) * vs")} AS eqTerm
        |  FROM terms),
        |v AS (
        |  SELECT n // 10 AS n0,
@@ -1130,7 +1109,7 @@ object Sampling {
       .agg(sum($"n_chars".cast("long")).as("tw"),
         count(lit(1)).as("n_docs")).filter($"n_docs" > 0)
     val trueTot = q
-      .agg(sum($"quality".cast(DecimalType(28, 12))).cast("double")
+      .agg(Exact.sum($"quality")
         .as("y_true"))
     // k-row table, three consumers (est, se, final) — materialized so
     // the PPS bucketed-cumsum pass runs once
@@ -1144,7 +1123,7 @@ object Sampling {
     val est = s.agg(
       sum($"n_hits").as("n_draws"),
       count(lit(1)).as("n_sampled_docs"),
-      (sum(($"n_hits" * $"yp").cast(DecimalType(28, 12))).cast("double")
+      (Exact.sum($"n_hits" * $"yp")
         / PpsK).as("y_ht"))
       .filter($"n_sampled_docs" > 0)
     val se = s.crossJoin(broadcast(est))
@@ -1226,7 +1205,7 @@ object Sampling {
       1.0 -> ((p: C) => p))
     alphas.map { case (a, f) =>
       val t = base.select($"source", $"p", f($"p").as("s"))
-      val z = t.agg(sum($"s".cast(DecimalType(28, 12))).cast("double")
+      val z = t.agg(Exact.sum($"s")
         .as("z"))
       // the per-term weight quantizes to DECIMAL(28,12) BEFORE the
       // division, exactly as it enters the normalizer sum
@@ -1234,8 +1213,7 @@ object Sampling {
         .select($"source", $"p",
           ($"s".cast(DecimalType(28, 12)).cast("double") / $"z").as("q"))
       val ent = q.agg(
-        sum((-$"q" * log($"q")).cast(DecimalType(15, 9))).cast("double")
-          .as("ent"),
+        Exact.sum(-$"q" * log($"q"), 15, 9).as("ent"),
         max($"q").as("top"))
       q.crossJoin(broadcast(ent))
         .select(lit(a).as("alpha"), $"source",

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Exact
 import graft.sources.Tables
 import TextAnalysis.h60Sql
 
@@ -876,7 +877,7 @@ object Similarity {
   private[llm] def kmUpdate(assigned: DataFrame): DataFrame =
     assigned.select(col("cid"), posexplode(col("v")).as(Seq("pos", "val")))
       .groupBy(col("cid"), col("pos"))
-      .agg((sum(col("val").cast("decimal(28,12)")).cast("double")
+      .agg((Exact.sum(col("val"))
         / count(lit(1))).as("m"))
       .groupBy(col("cid"))
       .agg(expr("transform(array_sort(collect_list(struct(pos, m))), s -> s.m)")
@@ -1007,14 +1008,12 @@ object Similarity {
   // from the n·Σx²−(Σx)² form on DECIMAL(28,12) sums.
   def ssDimAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def d12(c: org.apache.spark.sql.Column) =
-      sum(c.cast(DecimalType(28, 12))).cast("double")
     val ex = Tables.embeddings(spark, dir)
       .select($"vec_id", posexplode($"embedding".cast("array<double>"))
         .as(Seq("dim", "x")))
     val stats = ex.groupBy($"dim")
-      .agg(count(lit(1)).as("n"), d12($"x").as("sx"),
-        d12($"x" * $"x").as("sxx"),
+      .agg(count(lit(1)).as("n"), Exact.sum($"x").as("sx"),
+        Exact.sum($"x" * $"x").as("sxx"),
         min($"x").as("mn"), max($"x").as("mx"))
       .select($"dim", $"n",
         ($"sx" / $"n").as("mean"),
@@ -1022,7 +1021,7 @@ object Similarity {
           / ($"n".cast("double") * $"n".cast("double"))).as("variance"),
         $"mn", $"mx").localCheckpoint()
     val tot = broadcast(stats.agg(
-      sum($"variance".cast(DecimalType(28, 12))).cast("double").as("tv")))
+      Exact.sum($"variance").as("tv")))
     stats.crossJoin(tot)
       .select($"dim", $"n", round($"mean", 6).as("mean"),
         round($"variance", 6).as("variance"),
@@ -1079,8 +1078,7 @@ object Similarity {
     val norms = Tables.embeddings(spark, dir)
       .select($"vec_id", explode($"embedding").as("x"))
       .groupBy($"vec_id")
-      .agg(sum(($"x".cast("double") * $"x".cast("double"))
-        .cast(DecimalType(28, 12))).cast("double").as("n2"))
+      .agg(Exact.sum($"x".cast("double") * $"x".cast("double")).as("n2"))
       .select(sqrt($"n2").as("norm"))
     norms.agg(
       count(lit(1)).as("n_vecs"),
@@ -1088,7 +1086,7 @@ object Similarity {
       sum(when(abs($"norm" - 1.0) <= 0.01, 1L).otherwise(0L))
         .as("n_near_unit"),
       round(min($"norm"), 6).as("min_norm"),
-      round(sum($"norm".cast(DecimalType(15, 9))).cast("double")
+      round(Exact.sum($"norm", 15, 9)
         / count(lit(1)), 6).as("mean_norm"),
       round(max($"norm"), 6).as("max_norm"))
   }
@@ -1177,9 +1175,8 @@ object Similarity {
     val ari = (sumComb.toDouble - expected) /
       ((aSum.toDouble + bSum.toDouble) / 2.0 - expected)
     spark.createDataFrame(Seq((n, nSame, sumComb, aSum, bSum,
-      BigDecimal(nSame.toDouble / n.toDouble)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-      BigDecimal(ari).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
+      Exact.r6(nSame.toDouble / n.toDouble),
+      Exact.r6(ari))))
       .toDF("n", "n_same", "sum_comb", "a_sum", "b_sum", "stay_frac", "ari")
   }
 
@@ -1370,10 +1367,10 @@ object Similarity {
           |  'cid', c.cid))).d2""".stripMargin).as("d2"))
     val stats = d2.groupBy($"s")
       .agg(count(lit(1)).as("n_vectors"),
-        sum($"d2".cast(DecimalType(28, 12))).cast("double").as("sd"),
+        Exact.sum($"d2").as("sd"),
         max($"d2").as("max_d2")).localCheckpoint()
     val tot = broadcast(stats.agg(
-      sum($"sd".cast(DecimalType(28, 12))).cast("double").as("td")))
+      Exact.sum($"sd").as("td")))
     stats.crossJoin(tot)
       .select($"s".cast("long").as("subspace"), $"n_vectors",
         round($"sd" / $"n_vectors", 6).as("mean_d2"),
@@ -1453,7 +1450,7 @@ object Similarity {
     val est = codeLong.join(broadcast(adc), Seq("s", "cid"))
       .filter($"vec_id" =!= $"q_id")
       .groupBy($"q_id", $"vec_id")
-      .agg(round(sum($"d2".cast("decimal(28,12)")).cast("double"), 6)
+      .agg(round(Exact.sum($"d2"), 6)
         .as("est_d2"))
     val w = Window.partitionBy($"q_id").orderBy($"est_d2".asc, $"vec_id".asc)
     est.withColumn("rank", row_number().over(w))
@@ -1516,7 +1513,7 @@ object Similarity {
           .select($"s", $"best.cid".as("cid"),
             posexplode($"sub").as(Seq("pos", "val")))
           .groupBy($"s", $"cid", $"pos")
-          .agg((sum($"val".cast("decimal(28,12)")).cast("double")
+          .agg((Exact.sum($"val")
             / count(lit(1))).as("m"))
           .groupBy($"s", $"cid")
           .agg(expr("transform(array_sort(collect_list(struct(pos, m))), x -> x.m)")
@@ -1573,7 +1570,7 @@ object Similarity {
     val est = codeLong.join(broadcast(adc), Seq("s", "cid"))
       .filter($"vec_id" =!= $"q_id")
       .groupBy($"q_id", $"vec_id")
-      .agg(round((sum($"dp".cast("decimal(28,12)")).cast("double")
+      .agg(round((Exact.sum($"dp")
         / (max($"qn") * max($"nrm"))), 6).as("est_cos"))
     val w = Window.partitionBy($"q_id").orderBy($"est_cos".desc, $"vec_id".asc)
     est.withColumn("rank", row_number().over(w))
@@ -1724,7 +1721,7 @@ object Similarity {
       .select($"q_id", $"vec_id", $"nrm", $"x.s".as("s"), $"x.cid".as("cid"))
     val est = candCodes.join(broadcast(adc), Seq("q_id", "s", "cid"))
       .groupBy($"q_id", $"vec_id")
-      .agg(round((sum($"dp".cast("decimal(28,12)")).cast("double")
+      .agg(round((Exact.sum($"dp")
         / (max($"qn") * max($"nrm"))), 6).as("est_cos"))
     val w = Window.partitionBy($"q_id").orderBy($"est_cos".desc, $"vec_id".asc)
     est.withColumn("rank", row_number().over(w))
@@ -1789,7 +1786,7 @@ object Similarity {
     // or the assign→update→assign chain re-runs twice
     val k = ssKmeans(spark, dir).localCheckpoint()
     val means = k.groupBy($"cid")
-      .agg((sum($"d2".cast("decimal(28,12)")).cast("double")
+      .agg((Exact.sum($"d2")
         / count(lit(1))).as("mean_d2"))
     k.join(broadcast(means), "cid")
       .select($"vec_id", $"cid", $"d2",
@@ -1876,13 +1873,13 @@ object Similarity {
       .select($"label", $"nrm", expr("transform(v, x -> x / nrm)").as("u"))
     val perLabel = u.groupBy($"label")
       .agg(count(lit(1)).as("n"),
-        sum($"nrm".cast("decimal(28,12)")).cast("double").as("snrm"))
+        Exact.sum($"nrm").as("snrm"))
     val gram = u
       .select($"label", posexplode($"u").as(Seq("pos", "x")))
       .groupBy($"label", $"pos")
-      .agg(sum($"x".cast("decimal(28,12)")).cast("double").as("s"))
+      .agg(Exact.sum($"x").as("s"))
       .groupBy($"label")
-      .agg(sum(($"s" * $"s").cast("decimal(28,12)")).cast("double").as("ss2"))
+      .agg(Exact.sum($"s" * $"s").as("ss2"))
     perLabel.join(gram, "label")
       .select($"label", $"n",
         round($"snrm" / $"n", 6).as("mean_norm"),
@@ -1932,7 +1929,7 @@ object Similarity {
       .select($"label", ($"vec_id" % 2).as("half"), posexplode($"v").as(Seq("pos", "x")))
       .groupBy($"label", $"half", $"pos")
       .agg(count(lit(1)).as("n"),
-        sum($"x".cast("decimal(28,12)")).cast("double").as("s"))
+        Exact.sum($"x").as("s"))
       .select($"label", $"half", $"pos", $"n", ($"s" / $"n").as("c"))
     val a = cent.filter($"half" === 0)
       .select($"label", $"pos", $"n".as("n_a"), $"c".as("ca"))
@@ -1941,9 +1938,9 @@ object Similarity {
     a.join(b, Seq("label", "pos"))
       .groupBy($"label")
       .agg(max($"n_a").as("n_a"), max($"n_b").as("n_b"),
-        sum(($"ca" * $"cb").cast("decimal(28,12)")).cast("double").as("dot"),
-        sum(($"ca" * $"ca").cast("decimal(28,12)")).cast("double").as("na2"),
-        sum(($"cb" * $"cb").cast("decimal(28,12)")).cast("double").as("nb2"))
+        Exact.sum($"ca" * $"cb").as("dot"),
+        Exact.sum($"ca" * $"ca").as("na2"),
+        Exact.sum($"cb" * $"cb").as("nb2"))
       .select($"label", $"n_a", $"n_b",
         round($"dot" / sqrt($"na2" * $"nb2"), 6).as("centroid_cosine"),
         round(sqrt($"nb2") / sqrt($"na2"), 6).as("norm_ratio"))
@@ -2019,8 +2016,7 @@ object Similarity {
       .agg(count(lit(1)).as("n"),
         round(min($"mn"), 9).as("dim_min"),
         round(max($"mx"), 9).as("dim_max"),
-        round(sum(abs($"x" - $"deq").cast("decimal(28,12)"))
-          .cast("double") / count(lit(1)), 9).as("mean_abs_err"),
+        round(Exact.sum(abs($"x" - $"deq")) / count(lit(1)), 9).as("mean_abs_err"),
         round(max(abs($"x" - $"deq")), 9).as("max_abs_err"))
       .select($"pos".cast("long").as("pos"), $"n", $"dim_min", $"dim_max",
         $"mean_abs_err", $"max_abs_err")
@@ -2333,12 +2329,10 @@ object Similarity {
             * ($"smj".cast("double") / $"n_vec")).as("cv"))
     def matvec(vd: DataFrame): DataFrame =
       c.join(vd, "j").groupBy($"i")
-        .agg(sum(($"cv" * $"vj").cast("decimal(28,12)"))
-          .cast("double").as("w"))
+        .agg(Exact.sum($"cv" * $"vj").as("w"))
     def normalize(w: DataFrame): DataFrame = {
       val l = w.agg(
-        sqrt(sum(($"w" * $"w").cast("decimal(28,12)")).cast("double"))
-          .as("l"))
+        sqrt(Exact.sum($"w" * $"w")).as("l"))
       w.crossJoin(l).select($"i".as("j"),
         when($"l" === 0, lit(0.0)).otherwise($"w" / $"l").as("vj"),
         $"l")
@@ -2864,7 +2858,7 @@ object Similarity {
         (coalesce($"rel", lit(0L)).cast("double")
           / log(($"pos" + 1).cast("double"))).as("term"))
     val g = terms.groupBy($"method", $"q_id")
-      .agg(sum($"term".cast("decimal(28,12)")).cast("double").as("dcg"),
+      .agg(Exact.sum($"term").as("dcg"),
         sum(when($"rel" > 0L, 1L).otherwise(0L)).as("n_rel"))
     val grid = exact.select($"q_id").distinct()
       .crossJoin(Seq("lsh_probe", "ivf_probe", "pq_adc_trained", "sq8_asym")
@@ -2950,7 +2944,7 @@ object Similarity {
         .as("bin"), $"cosine")
       .groupBy($"bin")
       .agg(count(lit(1)).as("n_pairs"),
-        round(sum($"cosine".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"cosine")
           / count(lit(1)), 6).as("mean_cosine"))
       .orderBy($"bin")
   }
@@ -3016,11 +3010,11 @@ object Similarity {
     // materialized so the corpus-scan rollup runs once
     val per = rows.groupBy($"cid")
       .agg(count(lit(1)).as("n"),
-        (sum($"a".cast(DecimalType(28, 12))).cast("double")
+        (Exact.sum($"a")
           / count(lit(1))).as("ma"),
-        sum($"s".cast(DecimalType(28, 12))).cast("double").as("ssum")).localCheckpoint()
+        Exact.sum($"s").as("ssum")).localCheckpoint()
     val glob = per.agg(
-      (sum($"ssum".cast(DecimalType(28, 12))).cast("double")
+      (Exact.sum($"ssum")
         / sum($"n")).as("gs"))
     per.crossJoin(broadcast(glob))
       .select($"cid", $"n", round($"ma", 6).as("mean_a"),

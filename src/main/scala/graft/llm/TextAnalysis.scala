@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.sources.Tables
 
 /** Text-analysis operators for a large-scale training-data pipeline,
@@ -350,7 +351,7 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
     val dl = docs.select($"doc_id", size(split($"text", " ")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
-      (sum($"dl".cast("decimal(28,6)")).cast("double")
+      (Exact.sum($"dl", 28, 6)
         / count(lit(1))).as("avgdl"))
     val tf = docs
       .select($"doc_id", explode(split($"text", " ")).as("term"))
@@ -735,7 +736,7 @@ object TextAnalysis {
       .agg(
         count(lit(1)).as("n_docs"),
         sum($"n_tokens".cast("long")).as("total_tokens"),
-        round(sum($"quality".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"quality")
           / count(lit(1)), 6).as("mean_quality"),
         sum(when($"quality" < 0.5, 1L).otherwise(0L)).as("n_low"))
       .withColumn("low_rate",
@@ -869,7 +870,7 @@ object TextAnalysis {
     toks.join(broadcast(probs), "term")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_toks"),
-        round(sum($"p".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"p")
           / count(lit(1)), 9).as("avg_p"))
       .orderBy($"doc_id")
   }
@@ -927,7 +928,7 @@ object TextAnalysis {
     bg.join(broadcast(probs), Seq("w1", "w2"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
-        round(sum($"p".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"p")
           / count(lit(1)), 9).as("avg_p"))
       .orderBy($"doc_id")
   }
@@ -998,7 +999,7 @@ object TextAnalysis {
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         sum($"backoff").as("n_backoff"),
-        round(sum($"p".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"p")
           / count(lit(1)), 9).as("avg_p"))
       .orderBy($"doc_id")
   }
@@ -1087,7 +1088,7 @@ object TextAnalysis {
         Seq("w1", "w2", "salt"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
-        round(sum($"p".cast("decimal(28,12)")).cast("double")
+        round(Exact.sum($"p")
           / count(lit(1)), 9).as("avg_p"))
       .orderBy($"doc_id")
   }
@@ -1454,8 +1455,7 @@ object TextAnalysis {
       .groupBy($"doc_id", $"bucket")
       .agg(count(lit(1)).as("cnt"))
     val nrm = bux.groupBy($"doc_id")
-      .agg(sqrt(sum(($"cnt" * $"cnt").cast("decimal(28,12)"))
-        .cast("double")).as("l2"))
+      .agg(sqrt(Exact.sum($"cnt" * $"cnt")).as("l2"))
     bux.join(nrm, "doc_id")
       .select($"doc_id", $"bucket", $"cnt",
         round($"cnt" / $"l2", 9).as("weight"))
@@ -2345,10 +2345,8 @@ object TextAnalysis {
     cats.groupBy($"facet")
       .agg(count(lit(1)).as("n_categories"),
         sum($"c").as("n_docs"),
-        sum(($"c".cast(DecimalType(38, 0)) * ($"c" - 1)).cast(DecimalType(38, 0)))
-          .cast("double").as("s2"),
-        sum(($"c".cast(DecimalType(38, 0)) * $"c").cast(DecimalType(38, 0)))
-          .cast("double").as("sq"))
+        Exact.sum($"c".cast(DecimalType(38, 0)) * ($"c" - 1), 38, 0).as("s2"),
+        Exact.sum($"c".cast(DecimalType(38, 0)) * $"c", 38, 0).as("sq"))
       .select($"facet", $"n_categories", $"n_docs",
         round(lit(1.0) - $"s2"
           / ($"n_docs".cast(DecimalType(38, 0))
@@ -2599,13 +2597,11 @@ object TextAnalysis {
     // c2 is the session-cached bigram-type artifact now (bounded by
     // observed bigram TYPES — replication-invariant in rows); it stays
     // pinned for its four sibling consumers, so no freeCheckpoint.
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     spark.createDataFrame(Seq((
       counts.getAs[Long]("n"), counts.getAs[Long]("types"),
       counts.getAs[Long]("prefixes"),
-      r6(hm), r6(hc), r6(hm - hc),
-      r6(if (hm == 0.0) 0.0 else 1.0 - hc / hm))))
+      Exact.r6(hm), Exact.r6(hc), Exact.r6(hm - hc),
+      Exact.r6(if (hm == 0.0) 0.0 else 1.0 - hc / hm))))
       .toDF("n_bigrams", "n_bigram_types", "n_prefix_types",
         "h_marginal", "h_conditional", "mutual_info", "redundancy")
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.sources.{BenchFixture, BenchIngest}
 
 /** Reference-surface queries (SURVEY.md §2) over the deterministic
@@ -288,8 +289,7 @@ object BenchQueries {
         min(col("key")).as("first_key"),
         max(col("key")).as("last_key"),
         sum(col("value.N")).as("sum_ns"),
-        round(sum(col("value.M").cast("decimal(18,6)")).cast("double"), 6)
-          .as("sum_mbs"))
+        round(Exact.sum(col("value.M"), 18, 6), 6).as("sum_mbs"))
       .orderBy(col("rel_path"))
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.Exact
 import graft.sources.Tables
 
 /** Scalar-function breadth (SURVEY.md §2.7: string / date / math /
@@ -181,8 +182,7 @@ object FunctionQueries {
       .join(broadcast(buckets), $"value" >= $"lo" && $"value" < $"hi")
       .groupBy($"bucket")
       .agg(count(lit(1)).as("n"),
-        sum($"value".cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-          .cast("double").as("sum_value"))
+        Exact.sum($"value", 18, 6).as("sum_value"))
       .orderBy($"bucket")
   }
 

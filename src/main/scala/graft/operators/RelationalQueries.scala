@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Exact
 import graft.sources.Tables
 
 /** Star-schema relational operators (SURVEY.md §2.7 coverage matrix):
@@ -12,27 +13,10 @@ import graft.sources.Tables
   * aggregation, rollup/cube/grouping-sets, windows, top-k per group,
   * set ops, pivot/unpivot. Every query is deterministic (total ordering,
   * exact decimal-summed doubles) so the driver's DuckDB hash-compare is
-  * stable.
-  *
-  * Determinism pattern for floating aggregation: per-row double
-  * arithmetic is bit-identical across engines (IEEE 754); we cast each
-  * row value to DECIMAL(18,s) (same nearest-decimal rounding in both
-  * engines), sum exactly in decimal, and cast the final sum back to
-  * double (one deterministic rounding). This removes the
-  * aggregation-order nondeterminism of double sums that would break a
-  * hash compare, at the cost of one decimal conversion per row.
-  * At 100 TB the same pattern holds: decimal sums still get map-side
-  * partial aggregation (Catalyst plans partial_sum/merge_sum).
+  * stable. Floating sums go through [[graft.functions.Exact.sum]]:
+  * money columns at DECIMAL(18,2), computed revenue at (18,6).
   */
 object RelationalQueries {
-
-  /** Exact double sum: cast to decimal, sum, cast back. */
-  private def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
-
-  /** SQL twin of [[dsum]] for the DuckDB oracle. */
-  private def dsumSql(expr: String, scale: Int = 2): String =
-    s"CAST(SUM(CAST(($expr) AS DECIMAL(18,$scale))) AS DOUBLE)"
 
   // --------------------------------------------------------------------
   // q01: filter + hash-agg. TPC-H Q1 pattern — the reference's
@@ -45,10 +29,10 @@ object RelationalQueries {
       .filter($"l_shipdate" <= lit(java.sql.Timestamp.valueOf("1998-09-02 00:00:00")))
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(
-        dsum($"l_quantity").as("sum_qty"),
-        dsum($"l_extendedprice").as("sum_base_price"),
-        dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6).as("sum_disc_price"),
-        dsum($"l_extendedprice" * (lit(1.0) - $"l_discount") * (lit(1.0) + $"l_tax"), 6).as("sum_charge"),
+        Exact.sum($"l_quantity", 18, 2).as("sum_qty"),
+        Exact.sum($"l_extendedprice", 18, 2).as("sum_base_price"),
+        Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 18, 6).as("sum_disc_price"),
+        Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount") * (lit(1.0) + $"l_tax"), 18, 6).as("sum_charge"),
         count(lit(1)).as("count_order"))
       .orderBy($"l_returnflag", $"l_linestatus")
   }
@@ -79,7 +63,7 @@ object RelationalQueries {
     import spark.implicits._
     val rev = Tables.lineitem(spark, dir)
       .groupBy($"l_returnflag", $"l_orderkey")
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6).as("revenue"))
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 18, 6).as("revenue"))
     val local = Window.partitionBy($"l_returnflag", $"salt")
       .orderBy($"revenue".desc, $"l_orderkey".asc)
     val w = Window.partitionBy($"l_returnflag")
@@ -96,7 +80,7 @@ object RelationalQueries {
   val q02Sql: String =
     s"""WITH rev AS (
        |  SELECT l_returnflag, l_orderkey,
-       |    ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS revenue
+       |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 18, 6)} AS revenue
        |  FROM lineitem GROUP BY l_returnflag, l_orderkey),
        |rk AS (
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY l_returnflag
@@ -138,7 +122,7 @@ object RelationalQueries {
 
   val q03Sql: String =
     s"""SELECT c_custkey, c_name,
-       |  ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS revenue,
+       |  ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 18, 6)} AS revenue,
        |  COUNT(*) AS n_items
        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        |JOIN customer ON o_custkey = c_custkey
@@ -156,15 +140,15 @@ object RelationalQueries {
     l.join(broadcast(p), $"l_partkey" === $"p_partkey")
       .groupBy($"p_brand")
       .agg(count(lit(1)).as("n_items"),
-           dsum($"l_quantity").as("sum_qty"),
-           dsum($"l_extendedprice").as("sum_price"))
+           Exact.sum($"l_quantity", 18, 2).as("sum_qty"),
+           Exact.sum($"l_extendedprice", 18, 2).as("sum_price"))
       .orderBy($"p_brand")
   }
 
   val q04Sql: String =
     s"""SELECT p_brand, COUNT(*) AS n_items,
-       |  ${dsumSql("l_quantity")} AS sum_qty,
-       |  ${dsumSql("l_extendedprice")} AS sum_price
+       |  ${Exact.sumSql("l_quantity", 18, 2)} AS sum_qty,
+       |  ${Exact.sumSql("l_extendedprice", 18, 2)} AS sum_price
        |FROM lineitem JOIN part ON l_partkey = p_partkey
        |GROUP BY p_brand ORDER BY p_brand""".stripMargin
 
@@ -214,7 +198,7 @@ object RelationalQueries {
     import spark.implicits._
     Tables.lineitem(spark, dir)
       .rollup($"l_returnflag", $"l_linestatus")
-      .agg(count(lit(1)).as("n"), dsum($"l_quantity").as("sum_qty"))
+      .agg(count(lit(1)).as("n"), Exact.sum($"l_quantity", 18, 2).as("sum_qty"))
       .select(
         coalesce($"l_returnflag", lit("ALL")).as("returnflag"),
         coalesce($"l_linestatus", lit("ALL")).as("linestatus"),
@@ -225,7 +209,7 @@ object RelationalQueries {
   val q07Sql: String =
     s"""SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
        |  COALESCE(l_linestatus, 'ALL') AS linestatus,
-       |  COUNT(*) AS n, ${dsumSql("l_quantity")} AS sum_qty
+       |  COUNT(*) AS n, ${Exact.sumSql("l_quantity", 18, 2)} AS sum_qty
        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
        |ORDER BY returnflag, linestatus""".stripMargin
 
@@ -235,7 +219,7 @@ object RelationalQueries {
     import spark.implicits._
     Tables.orders(spark, dir)
       .cube($"o_orderstatus", $"o_orderpriority")
-      .agg(count(lit(1)).as("n"), dsum($"o_totalprice").as("sum_price"))
+      .agg(count(lit(1)).as("n"), Exact.sum($"o_totalprice", 18, 2).as("sum_price"))
       .select(
         coalesce($"o_orderstatus", lit("ALL")).as(("orderstatus")),
         coalesce($"o_orderpriority", lit("ALL")).as("orderpriority"),
@@ -246,7 +230,7 @@ object RelationalQueries {
   val q08Sql: String =
     s"""SELECT COALESCE(o_orderstatus, 'ALL') AS orderstatus,
        |  COALESCE(o_orderpriority, 'ALL') AS orderpriority,
-       |  COUNT(*) AS n, ${dsumSql("o_totalprice")} AS sum_price
+       |  COUNT(*) AS n, ${Exact.sumSql("o_totalprice", 18, 2)} AS sum_price
        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
        |ORDER BY orderstatus, orderpriority""".stripMargin
 
@@ -301,7 +285,7 @@ object RelationalQueries {
     import spark.implicits._
     val daily = Tables.events(spark, dir)
       .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(dsum($"value", 6).as("total"))
+      .agg(Exact.sum($"value", 18, 6).as("total"))
     val w = Window.partitionBy($"event_type").orderBy($"day")
     daily
       .withColumn("prev_total", lag($"total", 1).over(w))
@@ -313,7 +297,7 @@ object RelationalQueries {
   val q11Sql: String =
     s"""WITH daily AS (
        |  SELECT event_type, CAST(ts AS DATE) AS day,
-       |    ${dsumSql("value", 6)} AS total
+       |    ${Exact.sumSql("value", 18, 6)} AS total
        |  FROM events GROUP BY event_type, CAST(ts AS DATE))
        |SELECT event_type, day, total,
        |  LAG(total, 1) OVER (PARTITION BY event_type ORDER BY day) AS prev_total,
@@ -352,8 +336,8 @@ object RelationalQueries {
     Tables.lineitem(spark, dir)
       .groupBy($"l_returnflag")
       .agg(
-        dsum($"l_quantity").as("sum_qty"),
-        dsum($"l_extendedprice").as("sum_price"),
+        Exact.sum($"l_quantity", 18, 2).as("sum_qty"),
+        Exact.sum($"l_extendedprice", 18, 2).as("sum_price"),
         count(lit(1)).cast("double").as("n_rows"))
       .select($"l_returnflag",
         expr("stack(3, 'sum_qty', sum_qty, 'sum_price', sum_price, 'n_rows', n_rows) AS (metric, val)"))
@@ -362,8 +346,8 @@ object RelationalQueries {
 
   val q13Sql: String =
     s"""WITH agg AS (
-       |  SELECT l_returnflag, ${dsumSql("l_quantity")} AS sum_qty,
-       |    ${dsumSql("l_extendedprice")} AS sum_price,
+       |  SELECT l_returnflag, ${Exact.sumSql("l_quantity", 18, 2)} AS sum_qty,
+       |    ${Exact.sumSql("l_extendedprice", 18, 2)} AS sum_price,
        |    CAST(COUNT(*) AS DOUBLE) AS n_rows
        |  FROM lineitem GROUP BY l_returnflag)
        |SELECT l_returnflag, metric, val FROM (
@@ -422,8 +406,7 @@ object RelationalQueries {
               .cast(DecimalType(18, 6)))
           .otherwise(lit(0).cast(DecimalType(18, 6))))
           .cast("double").as("promo_rev"),
-        dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
-          .as("total_rev"),
+        Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 18, 6).as("total_rev"),
         count(lit(1)).as("n_items"))
       .select($"ship_month",
         round(lit(100.0) * $"promo_rev" / $"total_rev", 6)
@@ -438,7 +421,7 @@ object RelationalQueries {
        |    CAST(SUM(CASE WHEN p_type = 'PROMO'
        |      THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))
        |      ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE) AS promo_rev,
-       |    ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS total_rev,
+       |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 18, 6)} AS total_rev,
        |    COUNT(*) AS n_items
        |  FROM lineitem JOIN part ON l_partkey = p_partkey
        |  GROUP BY 1)
@@ -463,12 +446,12 @@ object RelationalQueries {
     import spark.implicits._
     val l = Tables.lineitem(spark, dir)
     val thresholds = l.groupBy($"l_partkey".as("t_partkey"))
-      .agg((sum($"l_quantity".cast(DecimalType(18, 2))).cast("double")
+      .agg((Exact.sum($"l_quantity", 18, 2)
         / count(lit(1))).as("avg_qty"))
     l.join(thresholds, $"l_partkey" === $"t_partkey")
       .filter($"l_quantity" < lit(0.2) * $"avg_qty")
       .agg(
-        (dsum($"l_extendedprice") / lit(7.0)).as("avg_yearly"),
+        (Exact.sum($"l_extendedprice", 18, 2) / lit(7.0)).as("avg_yearly"),
         count(lit(1)).as("n_small_lines"),
         countDistinct($"l_partkey").as("n_parts"))
       .select(round($"avg_yearly", 6).as("avg_yearly"),
@@ -482,7 +465,7 @@ object RelationalQueries {
        |      AS avg_qty
        |  FROM lineitem GROUP BY 1)
        |SELECT
-       |  ROUND(${dsumSql("l_extendedprice")} / 7.0, 6) AS avg_yearly,
+       |  ROUND(${Exact.sumSql("l_extendedprice", 18, 2)} / 7.0, 6) AS avg_yearly,
        |  COUNT(*) AS n_small_lines,
        |  COUNT(DISTINCT l_partkey) AS n_parts
        |FROM lineitem JOIN t ON l_partkey = t_partkey
@@ -568,7 +551,7 @@ object RelationalQueries {
               .cast(DecimalType(18, 6)))
           .otherwise(lit(0).cast(DecimalType(18, 6))))
           .cast("double").as("nation_rev"),
-        dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+        Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 18, 6)
           .as("market_rev"),
         count(lit(1)).as("n_items"))
       .select($"order_year",
@@ -588,12 +571,12 @@ object RelationalQueries {
        |  ROUND(CAST(SUM(CASE WHEN supp_nation = 'NATION_0'
        |      THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))
        |      ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-       |    / ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)}, 6)
+       |    / ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 18, 6)}, 6)
        |    AS mkt_share,
        |  CAST(SUM(CASE WHEN supp_nation = 'NATION_0'
        |      THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))
        |      ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE) AS nation_rev,
-       |  ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS market_rev,
+       |  ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 18, 6)} AS market_rev,
        |  COUNT(*) AS n_items
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
@@ -686,7 +669,7 @@ object RelationalQueries {
     import spark.implicits._
     val big = Tables.lineitem(spark, dir)
       .groupBy($"l_orderkey")
-      .agg(dsum($"l_quantity").as("total_qty"))
+      .agg(Exact.sum($"l_quantity", 18, 2).as("total_qty"))
       .filter($"total_qty" > 150.0)
     Tables.orders(spark, dir)
       .join(big, $"o_orderkey" === $"l_orderkey")
@@ -699,9 +682,9 @@ object RelationalQueries {
 
   val q52Sql: String =
     s"""WITH big AS (
-       |  SELECT l_orderkey, ${dsumSql("l_quantity")} AS total_qty
+       |  SELECT l_orderkey, ${Exact.sumSql("l_quantity", 18, 2)} AS total_qty
        |  FROM lineitem GROUP BY 1
-       |  HAVING ${dsumSql("l_quantity")} > 150.0)
+       |  HAVING ${Exact.sumSql("l_quantity", 18, 2)} > 150.0)
        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
        |  total_qty
        |FROM orders
@@ -767,7 +750,7 @@ object RelationalQueries {
     import spark.implicits._
     val cust = Tables.customer(spark, dir)
     val avgBal = broadcast(cust.filter($"c_acctbal" > 0)
-      .agg((sum($"c_acctbal".cast(DecimalType(18, 2))).cast("double")
+      .agg((Exact.sum($"c_acctbal", 18, 2)
         / count(lit(1))).as("avg_bal")))
     val recent = Tables.orders(spark, dir)
       .filter($"o_orderdate" >= lit(java.sql.Timestamp.valueOf("2000-01-01 00:00:00")))
@@ -778,7 +761,7 @@ object RelationalQueries {
       .join(broadcast(Tables.nation(spark, dir)
         .select($"n_nationkey", $"n_name")), $"c_nationkey" === $"n_nationkey")
       .groupBy($"n_name".as("cust_nation"))
-      .agg(count(lit(1)).as("n_idle"), dsum($"c_acctbal").as("idle_capital"))
+      .agg(count(lit(1)).as("n_idle"), Exact.sum($"c_acctbal", 18, 2).as("idle_capital"))
       .orderBy($"cust_nation")
   }
 
@@ -788,7 +771,7 @@ object RelationalQueries {
        |    / COUNT(*) AS avg_bal
        |  FROM customer WHERE c_acctbal > 0)
        |SELECT n_name AS cust_nation, COUNT(*) AS n_idle,
-       |  ${dsumSql("c_acctbal")} AS idle_capital
+       |  ${Exact.sumSql("c_acctbal", 18, 2)} AS idle_capital
        |FROM customer, t
        |JOIN nation ON c_nationkey = n_nationkey
        |WHERE c_acctbal > avg_bal
@@ -822,14 +805,14 @@ object RelationalQueries {
       .join(broadcast(supp),
         $"l_suppkey" === $"s_suppkey" && $"c_nationkey" === $"s_nationkey")
       .groupBy($"n_name".as("nation"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 18, 6)
         .as("revenue"), count(lit(1)).as("n_lines"))
       .orderBy($"revenue".desc, $"nation")
   }
 
   val q55Sql: String =
     s"""SELECT n_name AS nation,
-       |  ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS revenue,
+       |  ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 18, 6)} AS revenue,
        |  COUNT(*) AS n_lines
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
@@ -869,7 +852,7 @@ object RelationalQueries {
         && $"cust_nation".isin("NATION_0", "NATION_1", "NATION_2", "NATION_3"))
       .groupBy($"supp_nation", $"cust_nation",
         year($"l_shipdate").cast("int").as("ship_year"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 18, 6)
         .as("revenue"), count(lit(1)).as("n_lines"))
       .orderBy($"supp_nation", $"cust_nation", $"ship_year")
   }
@@ -883,7 +866,7 @@ object RelationalQueries {
        |  JOIN nation ON s_nationkey = n_nationkey)
        |SELECT supp_nation, cust_nation,
        |  CAST(year(l_shipdate) AS INT) AS ship_year,
-       |  ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS revenue,
+       |  ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 18, 6)} AS revenue,
        |  COUNT(*) AS n_lines
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
@@ -915,8 +898,8 @@ object RelationalQueries {
       .join(broadcast(supp), $"l_suppkey" === $"s_suppkey")
       .join(Tables.orders(spark, dir), $"l_orderkey" === $"o_orderkey")
       .groupBy($"supp_nation", year($"o_orderdate").cast("int").as("o_year"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")
-          - $"p_retailprice" * $"l_quantity" * lit(0.1), 6).as("profit"),
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount")
+          - $"p_retailprice" * $"l_quantity" * lit(0.1), 18, 6).as("profit"),
         count(lit(1)).as("n_lines"))
       .orderBy($"supp_nation", $"o_year".desc)
   }
@@ -926,9 +909,9 @@ object RelationalQueries {
        |  SELECT s_suppkey, n_name AS supp_nation FROM supplier
        |  JOIN nation ON s_nationkey = n_nationkey)
        |SELECT supp_nation, CAST(year(o_orderdate) AS INT) AS o_year,
-       |  ${dsumSql(
+       |  ${Exact.sumSql(
         "l_extendedprice * (1.0 - l_discount) - p_retailprice * l_quantity * 0.1",
-        6)} AS profit,
+        18, 6)} AS profit,
        |  COUNT(*) AS n_lines
        |FROM lineitem
        |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%widget%'
@@ -955,7 +938,7 @@ object RelationalQueries {
           && $"o_orderdate" < lit(java.sql.Timestamp.valueOf("2001-01-01 00:00:00"))),
         $"l_orderkey" === $"o_orderkey")
       .groupBy($"o_custkey")
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 18, 6)
         .as("revenue"), count(lit(1)).as("n_returned"))
     rev
       .join(Tables.customer(spark, dir), $"o_custkey" === $"c_custkey")
@@ -970,7 +953,7 @@ object RelationalQueries {
   val q58Sql: String =
     s"""WITH rev AS (
        |  SELECT o_custkey,
-       |    ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS revenue,
+       |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 18, 6)} AS revenue,
        |    COUNT(*) AS n_returned
        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        |  WHERE l_returnflag = 'R'
@@ -1069,8 +1052,7 @@ object RelationalQueries {
           .as("share_pct"))
       .groupBy($"nation")
       .agg(count(lit(1)).as("n_suppliers"),
-        round(sum(($"share_pct" * $"share_pct").cast(DecimalType(18, 8)))
-          .cast("double"), 6).as("hhi"))
+        round(Exact.sum($"share_pct" * $"share_pct", 18, 8), 6).as("hhi"))
       .orderBy($"hhi".desc, $"nation")
   }
 
@@ -1176,7 +1158,7 @@ object RelationalQueries {
       .groupBy($"cohort_q", ($"q_idx" - $"cohort_q").as("quarters_since"))
       .agg(countDistinct($"o_custkey").as("n_active"),
         count(lit(1)).as("n_orders"),
-        dsum($"o_totalprice").as("revenue"))
+        Exact.sum($"o_totalprice", 18, 2).as("revenue"))
       .orderBy($"cohort_q", $"quarters_since")
   }
 
@@ -1191,7 +1173,7 @@ object RelationalQueries {
        |SELECT cohort_q, q_idx - cohort_q AS quarters_since,
        |  COUNT(DISTINCT o_custkey) AS n_active,
        |  COUNT(*) AS n_orders,
-       |  ${dsumSql("o_totalprice")} AS revenue
+       |  ${Exact.sumSql("o_totalprice", 18, 2)} AS revenue
        |FROM o JOIN fq ON o_custkey = fc_cust
        |GROUP BY 1, 2 ORDER BY cohort_q, quarters_since""".stripMargin
 
@@ -1471,8 +1453,7 @@ object RelationalQueries {
       .join(broadcast(tot), "segment")
       .groupBy($"segment")
       .agg(first($"n_gaps").as("n_gaps"),
-        round(sum(($"gap_days" * $"c").cast(DecimalType(28, 6)))
-          .cast("double") / first($"n_gaps"), 6).as("mean_gap"),
+        round(Exact.sum($"gap_days" * $"c", 28, 6) / first($"n_gaps"), 6).as("mean_gap"),
         min(when($"cum" * 2 >= $"n_gaps", $"gap_days")).as("median_gap"),
         min(when($"cum" * 10 >= $"n_gaps" * 9, $"gap_days")).as("p90_gap"))
       .orderBy($"segment")
@@ -1525,7 +1506,7 @@ object RelationalQueries {
     val cost = Tables.lineitem(spark, dir)
       .join(broadcast(supp.select($"s_suppkey".as("k"))), $"l_suppkey" === $"k")
       .groupBy($"l_partkey", $"l_suppkey")
-      .agg((dsum($"l_extendedprice", 6) / dsum($"l_quantity", 6))
+      .agg((Exact.sum($"l_extendedprice", 18, 6) / Exact.sum($"l_quantity", 18, 6))
         .as("unit_cost"))
     val w = Window.partitionBy($"l_partkey")
       .orderBy($"unit_cost", $"l_suppkey")
@@ -1550,7 +1531,7 @@ object RelationalQueries {
        |  WHERE r_name = 'EUROPE'),
        |cost AS (
        |  SELECT l_partkey, l_suppkey,
-       |    ${dsumSql("l_extendedprice", 6)} / ${dsumSql("l_quantity", 6)}
+       |    ${Exact.sumSql("l_extendedprice", 18, 6)} / ${Exact.sumSql("l_quantity", 18, 6)}
        |      AS unit_cost
        |  FROM lineitem JOIN supp ON l_suppkey = s_suppkey
        |  GROUP BY 1, 2),
@@ -1644,7 +1625,7 @@ object RelationalQueries {
     import spark.implicits._
     val cust = Tables.customer(spark, dir)
     val avgPos = broadcast(cust.filter($"c_acctbal" > 0.0)
-      .agg((dsum($"c_acctbal", 6) / count(lit(1))).as("avg_bal")))
+      .agg((Exact.sum($"c_acctbal", 18, 6) / count(lit(1))).as("avg_bal")))
     val active = Tables.orders(spark, dir)
       .filter($"o_orderdate" >= lit(java.sql.Timestamp.valueOf("2000-01-01 00:00:00")))
       .select($"o_custkey").distinct()
@@ -1656,18 +1637,18 @@ object RelationalQueries {
         .select($"n_nationkey", $"n_name")), $"c_nationkey" === $"n_nationkey")
       .groupBy($"n_name".as("nation"))
       .agg(count(lit(1)).as("n_custs"),
-        round(dsum($"c_acctbal", 6), 2).as("total_bal"))
+        round(Exact.sum($"c_acctbal", 18, 6), 2).as("total_bal"))
       .orderBy($"nation")
   }
 
   val q70Sql: String =
     s"""WITH avg_pos AS (
-       |  SELECT ${dsumSql("c_acctbal", 6)} / COUNT(*) AS avg_bal
+       |  SELECT ${Exact.sumSql("c_acctbal", 18, 6)} / COUNT(*) AS avg_bal
        |  FROM customer WHERE c_acctbal > 0),
        |active AS (SELECT DISTINCT o_custkey FROM orders
        |  WHERE o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
        |SELECT n_name AS nation, CAST(COUNT(*) AS BIGINT) AS n_custs,
-       |  ROUND(${dsumSql("c_acctbal", 6)}, 2) AS total_bal
+       |  ROUND(${Exact.sumSql("c_acctbal", 18, 6)}, 2) AS total_bal
        |FROM customer CROSS JOIN avg_pos
        |JOIN nation ON c_nationkey = n_nationkey
        |WHERE c_acctbal > avg_bal
@@ -1704,8 +1685,7 @@ object RelationalQueries {
       .join(broadcast(tot), "priority")
       .groupBy($"priority")
       .agg(first($"n_lines").as("n_lines"),
-        round(sum(($"lag_days" * $"c").cast(DecimalType(28, 6)))
-          .cast("double") / first($"n_lines"), 6).as("mean_lag"),
+        round(Exact.sum($"lag_days" * $"c", 28, 6) / first($"n_lines"), 6).as("mean_lag"),
         min(when($"cum" * 2 >= $"n_lines", $"lag_days")).as("median_lag"),
         min(when($"cum" * 20 >= $"n_lines" * 19, $"lag_days")).as("p95_lag"))
       .orderBy($"priority")
@@ -1746,10 +1726,10 @@ object RelationalQueries {
     val cut = lit(java.sql.Timestamp.valueOf("1998-01-01 00:00:00"))
     val o = Tables.orders(spark, dir)
     val early = o.filter($"o_orderdate" < cut)
-      .groupBy($"o_custkey").agg(dsum($"o_totalprice").as("early_rev"))
+      .groupBy($"o_custkey").agg(Exact.sum($"o_totalprice", 18, 2).as("early_rev"))
     val late = o.filter($"o_orderdate" >= cut)
       .groupBy($"o_custkey".as("lk"))
-      .agg(dsum($"o_totalprice").as("late_rev"))
+      .agg(Exact.sum($"o_totalprice", 18, 2).as("late_rev"))
     // ONE materialization job: the checkpointed customer-grain join
     // feeds the rank helper AND the grand totals (the decile column is
     // irrelevant to the sums), so the decile table is referenced once.
@@ -1760,12 +1740,12 @@ object RelationalQueries {
       .localCheckpoint()
     val deciled = BucketedRank.ntileDesc(joined, "early_rev", "o_custkey", 10, "decile")
     val totals = broadcast(joined.agg(
-      sum($"early_rev".cast(DecimalType(28, 6))).cast("double").as("te"),
-      sum($"late_rev".cast(DecimalType(28, 6))).cast("double").as("tl")))
+      Exact.sum($"early_rev", 28, 6).as("te"),
+      Exact.sum($"late_rev", 28, 6).as("tl")))
     val perDecile = deciled.groupBy($"decile")
       .agg(count(lit(1)).as("n_custs"),
-        sum($"early_rev".cast(DecimalType(28, 6))).cast("double").as("de"),
-        sum($"late_rev".cast(DecimalType(28, 6))).cast("double").as("dl"))
+        Exact.sum($"early_rev", 28, 6).as("de"),
+        Exact.sum($"late_rev", 28, 6).as("dl"))
     val wCum = Window.orderBy($"decile")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     perDecile.crossJoin(totals)
@@ -1780,11 +1760,11 @@ object RelationalQueries {
 
   val q72Sql: String =
     s"""WITH e AS (
-       |  SELECT o_custkey, ${dsumSql("o_totalprice")} AS early_rev
+       |  SELECT o_custkey, ${Exact.sumSql("o_totalprice", 18, 2)} AS early_rev
        |  FROM orders WHERE o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
        |  GROUP BY 1),
        |l AS (
-       |  SELECT o_custkey AS lk, ${dsumSql("o_totalprice")} AS late_rev
+       |  SELECT o_custkey AS lk, ${Exact.sumSql("o_totalprice", 18, 2)} AS late_rev
        |  FROM orders WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
        |  GROUP BY 1),
        |d AS (
@@ -1825,13 +1805,13 @@ object RelationalQueries {
       .join(broadcast(Tables.supplier(spark, dir)
         .select($"s_suppkey", $"s_nationkey")), $"l_suppkey" === $"s_suppkey")
       .groupBy($"s_nationkey".as("ek"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 18, 6)
         .as("export_rev"))
     val imports = Tables.orders(spark, dir)
       .join(broadcast(Tables.customer(spark, dir)
         .select($"c_custkey", $"c_nationkey")), $"o_custkey" === $"c_custkey")
       .groupBy($"c_nationkey".as("ik"))
-      .agg(dsum($"o_totalprice").as("import_val"))
+      .agg(Exact.sum($"o_totalprice", 18, 2).as("import_val"))
     exports.join(imports, $"ek" === $"ik", "full_outer")
       .join(broadcast(nat), coalesce($"ek", $"ik") === $"n_nationkey")
       .select($"n_name".as("nation"),
@@ -1848,10 +1828,10 @@ object RelationalQueries {
   val q73Sql: String =
     s"""WITH ex AS (
        |  SELECT s_nationkey AS ek,
-       |    ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS export_rev
+       |    ${Exact.sumSql("l_extendedprice * (1.0 - l_discount)", 18, 6)} AS export_rev
        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey GROUP BY 1),
        |im AS (
-       |  SELECT c_nationkey AS ik, ${dsumSql("o_totalprice")} AS import_val
+       |  SELECT c_nationkey AS ik, ${Exact.sumSql("o_totalprice", 18, 2)} AS import_val
        |  FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1)
        |SELECT n_name AS nation,
        |  ROUND(COALESCE(export_rev, 0.0), 2) AS export_rev,
@@ -1880,16 +1860,16 @@ object RelationalQueries {
     import spark.implicits._
     val pp = Tables.lineitem(spark, dir)
       .groupBy(year($"l_shipdate").as("yr"), $"l_partkey")
-      .agg(dsum($"l_extendedprice", 6).as("sp"),
-        dsum($"l_quantity", 6).as("sq"))
+      .agg(Exact.sum($"l_extendedprice", 18, 6).as("sp"),
+        Exact.sum($"l_quantity", 18, 6).as("sq"))
       .select($"yr", $"l_partkey", ($"sp" / $"sq").as("p"), $"sq").localCheckpoint()
     val base = pp.filter($"yr" === 1995)
       .select($"l_partkey".as("bk"), $"p".as("p0"), $"sq".as("q0"))
     pp.join(base, $"l_partkey" === $"bk")
       .groupBy($"yr")
       .agg(count(lit(1)).as("n_parts"),
-        round(sum(($"p" * $"q0").cast(DecimalType(28, 6))).cast("double")
-          / sum(($"p0" * $"q0").cast(DecimalType(28, 6))).cast("double"),
+        round(Exact.sum($"p" * $"q0", 28, 6)
+          / Exact.sum($"p0" * $"q0", 28, 6),
           6).as("price_index"))
       .orderBy($"yr")
   }
@@ -1930,19 +1910,19 @@ object RelationalQueries {
     import spark.implicits._
     val pp = Tables.lineitem(spark, dir)
       .groupBy(year($"l_shipdate").as("yr"), $"l_partkey")
-      .agg(dsum($"l_extendedprice", 6).as("sp"),
-        dsum($"l_quantity", 6).as("sq"))
+      .agg(Exact.sum($"l_extendedprice", 18, 6).as("sp"),
+        Exact.sum($"l_quantity", 18, 6).as("sq"))
       .select($"yr", $"l_partkey", ($"sp" / $"sq").as("p"), $"sq").localCheckpoint()
     val base = pp.filter($"yr" === 1995)
       .select($"l_partkey".as("bk"), $"p".as("p0"), $"sq".as("q0"))
     pp.join(base, $"l_partkey" === $"bk")
       .groupBy($"yr")
       .agg(count(lit(1)).as("n_parts"),
-        (sum(($"p" * $"sq").cast(DecimalType(28, 6))).cast("double")
-          / sum(($"p0" * $"sq").cast(DecimalType(28, 6))).cast("double"))
+        (Exact.sum($"p" * $"sq", 28, 6)
+          / Exact.sum($"p0" * $"sq", 28, 6))
           .as("pa"),
-        (sum(($"p" * $"q0").cast(DecimalType(28, 6))).cast("double")
-          / sum(($"p0" * $"q0").cast(DecimalType(28, 6))).cast("double"))
+        (Exact.sum($"p" * $"q0", 28, 6)
+          / Exact.sum($"p0" * $"q0", 28, 6))
           .as("la"))
       .select($"yr", $"n_parts",
         round($"pa", 6).as("paasche_index"),
@@ -2089,16 +2069,16 @@ object RelationalQueries {
     import spark.implicits._
     val cells = Tables.lineitem(spark, dir)
       .groupBy(year($"l_shipdate").as("yr"), month($"l_shipdate").as("mo"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 18, 6)
         .as("rev")).localCheckpoint()
     val ym = cells.groupBy($"yr")
-      .agg((sum($"rev".cast(DecimalType(28, 12))).cast("double")
+      .agg((Exact.sum($"rev")
         / count(lit(1))).as("ymean"))
     cells.join(broadcast(ym), "yr")
       .select($"mo", ($"rev" / $"ymean").as("ratio"))
       .groupBy($"mo")
       .agg(count(lit(1)).as("n_years"),
-        round(sum($"ratio".cast(DecimalType(28, 12))).cast("double")
+        round(Exact.sum($"ratio")
           / count(lit(1)), 6).as("seasonal_index"))
       .orderBy($"mo")
   }
@@ -2141,7 +2121,7 @@ object RelationalQueries {
     val cells = Tables.lineitem(spark, dir)
       .groupBy(year($"l_shipdate").as("yr"),
         ((month($"l_shipdate") + 2) / 3).cast("int").as("qtr"))
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 6)
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 18, 6)
         .as("rev"), count(lit(1)).as("n_lines"))
     val w = Window.orderBy($"yr", $"qtr")
     cells
@@ -2244,10 +2224,10 @@ object RelationalQueries {
       .groupBy(year($"l_shipdate").as("yr"))
       .agg(count(lit(1)).as("n_lines"),
         sum(when($"l_discount" > 0.0, 1L).otherwise(0L)).as("n_discounted"),
-        dsum($"l_discount" * $"l_quantity", 6).as("sdq"),
-        dsum($"l_quantity", 6).as("sq"),
-        dsum($"l_extendedprice" * $"l_discount", 6).as("foregone"),
-        dsum($"l_extendedprice", 6).as("gross"))
+        Exact.sum($"l_discount" * $"l_quantity", 18, 6).as("sdq"),
+        Exact.sum($"l_quantity", 18, 6).as("sq"),
+        Exact.sum($"l_extendedprice" * $"l_discount", 18, 6).as("foregone"),
+        Exact.sum($"l_extendedprice", 18, 6).as("gross"))
       .select($"yr", $"n_lines", $"n_discounted",
         round($"n_discounted".cast("double") / $"n_lines", 6)
           .as("discounted_share"),
@@ -2388,8 +2368,6 @@ object RelationalQueries {
   // ORDER BY runs on the RAW cv with partkey tie-break.
   def q83PriceDispersion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     // Deliberately NOT the q69 single-shuffle cascade (repartition on
     // l_partkey before both groupBys): that form loses map-side partial
     // aggregation and ships raw fact rows — measured 19% slower at 16×.
@@ -2402,10 +2380,10 @@ object RelationalQueries {
         ($"l_extendedprice".cast("double") / $"l_quantity".cast("double"))
           .as("up"))
       .groupBy($"l_partkey", $"l_suppkey")
-      .agg((dsum($"up") / count(lit(1))).as("sp"))
+      .agg((Exact.sum($"up") / count(lit(1))).as("sp"))
     val stats = supp.groupBy($"l_partkey")
       .agg(count(lit(1)).as("n_suppliers"),
-        dsum($"sp").as("s1"), dsum($"sp" * $"sp").as("s2"))
+        Exact.sum($"sp").as("s1"), Exact.sum($"sp" * $"sp").as("s2"))
       .filter($"n_suppliers" >= 3)
       .select($"l_partkey", $"n_suppliers",
         ($"s1" / $"n_suppliers").as("mean_price"),
@@ -2504,7 +2482,7 @@ object RelationalQueries {
           * ($"n_obs".cast("double") - $"n" * $"exp_share")
           / ($"n" * $"exp_share")).as("term"))
     val chi2 = terms
-      .agg(sum($"term".cast(DecimalType(28, 12))).cast("double").as("chi2"))
+      .agg(Exact.sum($"term").as("chi2"))
     terms.crossJoin(broadcast(chi2))
       .select($"digit", $"n_obs",
         round($"n_obs".cast("double") / $"n", 6).as("obs_share"),
@@ -2574,11 +2552,9 @@ object RelationalQueries {
   // report gini = 0, never NaN.
   def q85Gini(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     val rev = Tables.lineitem(spark, dir)
       .groupBy($"l_suppkey")
-      .agg(dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev"))
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev"))
     val dim = Tables.supplier(spark, dir)
       .select($"s_suppkey", $"s_nationkey")
       .join(Tables.nation(spark, dir)
@@ -2590,8 +2566,8 @@ object RelationalQueries {
         Window.partitionBy($"nation").orderBy($"rev", $"l_suppkey")))
     ranked.groupBy($"nation")
       .agg(count(lit(1)).as("n_suppliers"),
-        dsum($"rev").as("tot"),
-        dsum($"i" * $"rev").as("wsum"))
+        Exact.sum($"rev").as("tot"),
+        Exact.sum($"i" * $"rev").as("wsum"))
       .select($"nation", $"n_suppliers",
         round($"tot", 2).as("total_revenue"),
         round(when($"tot" <= 0.0, 0.0)
@@ -2658,8 +2634,6 @@ object RelationalQueries {
   private[graft] def q86MomentTable(spark: SparkSession,
                                     dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     Tables.lineitem(spark, dir)
       .select($"l_orderkey", $"l_shipdate")
       .join(Tables.orders(spark, dir)
@@ -2668,17 +2642,15 @@ object RelationalQueries {
       .select($"o_orderpriority".as("priority"),
         datediff($"l_shipdate", $"o_orderdate").cast("double").as("y"))
       .groupBy($"priority")
-      .agg(count(lit(1)).as("n"), dsum($"y").as("s1"),
-        dsum($"y" * $"y").as("s2"))
+      .agg(count(lit(1)).as("n"), Exact.sum($"y").as("s1"),
+        Exact.sum($"y" * $"y").as("s2"))
   }
 
   def q86Anova(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val g = q86MomentTable(spark, dir).localCheckpoint()
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     val tot = g.agg(sum($"n").as("nt"), count(lit(1)).as("k"),
-      dsum($"s1").as("t1"), dsum($"s2").as("t2")).filter($"k" >= 2)
+      Exact.sum($"s1").as("t1"), Exact.sum($"s2").as("t2")).filter($"k" >= 2)
     val x = g.crossJoin(broadcast(tot))
       .select($"priority", $"n", $"s1", $"s2", $"nt", $"k", $"t1", $"t2",
         // per-group between-SS term n_g·(ȳ_g − ȳ)², moment form
@@ -2686,8 +2658,8 @@ object RelationalQueries {
           * $"n").as("ssb_term"),
         ($"s2" - $"s1" * $"s1" / $"n").as("ssw_term"))
     val f = x.agg(
-      sum($"ssb_term".cast(DecimalType(28, 12))).cast("double").as("ssb"),
-      sum($"ssw_term".cast(DecimalType(28, 12))).cast("double").as("ssw"),
+      Exact.sum($"ssb_term").as("ssb"),
+      Exact.sum($"ssw_term").as("ssw"),
       max($"nt").as("nt2"), max($"k").as("k2"))
       .select($"ssb", $"ssw",
         when($"ssw" <= 0.0 || $"k2" <= 1 || $"nt2" <= $"k2", 0.0)
@@ -2853,8 +2825,6 @@ object RelationalQueries {
   // revenue DECIMAL-routed; ordered by bucket.
   def q88RepeatBusiness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     // collapse the fact to (order, supplier) grain BEFORE the orders
     // join (custkey is functionally dependent on orderkey, so the
     // values are identical) — the join then ships the collapsed table,
@@ -2863,12 +2833,12 @@ object RelationalQueries {
       .select($"l_orderkey", $"l_suppkey",
         ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev"))
       .groupBy($"l_orderkey", $"l_suppkey")
-      .agg(dsum($"rev").as("orev"))
+      .agg(Exact.sum($"rev").as("orev"))
     val pairs = osRev
       .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
         $"l_orderkey" === $"o_orderkey")
       .groupBy($"o_custkey", $"l_suppkey")
-      .agg(count(lit(1)).as("n_orders"), dsum($"orev").as("prev"))
+      .agg(count(lit(1)).as("n_orders"), Exact.sum($"orev").as("prev"))
     val bucketed = pairs.select(
       when($"n_orders" <= 3, $"n_orders")
         .otherwise(expr(
@@ -2879,7 +2849,7 @@ object RelationalQueries {
     // so the fact cascade runs once
     val hist = bucketed.groupBy($"depth_bucket")
       .agg(count(lit(1)).as("n_pairs"), sum($"n_orders").as("n_orders"),
-        dsum($"prev").as("rev")).localCheckpoint()
+        Exact.sum($"prev").as("rev")).localCheckpoint()
     val tot = hist.agg(sum($"n_pairs").as("np"),
       sum(when($"depth_bucket" >= 2, $"n_pairs").otherwise(0L))
         .as("nrep")).filter($"np" > 0)
@@ -2943,11 +2913,9 @@ object RelationalQueries {
   // exact timestamp arithmetic; totals DECIMAL-routed, round 2.
   def q89SalesOpportunity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,12)")).cast("double")
     val cust = Tables.customer(spark, dir)
     val avgBal = cust.filter($"c_acctbal" > 0.0)
-      .agg((dsum($"c_acctbal") / count(lit(1))).as("ab"))
+      .agg((Exact.sum($"c_acctbal") / count(lit(1))).as("ab"))
       .filter($"ab".isNotNull)
     val orders = Tables.orders(spark, dir)
     val cut = orders.agg(max($"o_orderdate").as("mx"))
@@ -2966,7 +2934,7 @@ object RelationalQueries {
         $"c_nationkey" === $"n_nationkey")
       .groupBy($"nation")
       .agg(count(lit(1)).as("n_customers"),
-        round(dsum($"c_acctbal"), 2).as("idle_balance"))
+        round(Exact.sum($"c_acctbal"), 2).as("idle_balance"))
       .orderBy($"nation")
   }
 
@@ -3053,9 +3021,7 @@ object RelationalQueries {
         && $"l_discount" >= 0.05 && $"l_discount" <= 0.07
         && $"l_quantity" < 24.0)
       .agg(count(lit(1)).as("n_lines"),
-        round(sum(($"l_extendedprice" * $"l_discount")
-          .cast(DecimalType(28, 12))).cast("double"), 2)
-          .as("promo_revenue"))
+        round(Exact.sum($"l_extendedprice" * $"l_discount"), 2).as("promo_revenue"))
   }
 
   val q92Sql: String =
@@ -3085,7 +3051,6 @@ object RelationalQueries {
   // differently across engines at larger SFs.
   def q93PartValueConcentration(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def d28(c: Column) = sum(c.cast(DecimalType(28, 12))).cast("double")
     val asiaNations = Tables.nation(spark, dir)
       .join(Tables.region(spark, dir).filter($"r_name" === "ASIA"),
         $"n_regionkey" === $"r_regionkey")
@@ -3096,9 +3061,9 @@ object RelationalQueries {
     val byPart = Tables.lineitem(spark, dir)
       .join(broadcast(asiaSupp), $"l_suppkey" === $"s_suppkey", "left_semi")
       .groupBy($"l_partkey")
-      .agg(d28($"l_extendedprice" * (lit(1.0) - $"l_discount"))
+      .agg(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount"))
         .as("value")).localCheckpoint()
-    val tot = byPart.agg(d28($"value").as("total")).filter($"total" > 0.0)
+    val tot = byPart.agg(Exact.sum($"value").as("total")).filter($"total" > 0.0)
     byPart.crossJoin(broadcast(tot))
       .filter($"value" > $"total" * 0.001)
       .select($"l_partkey".as("partkey"),
@@ -3200,8 +3165,7 @@ object RelationalQueries {
               && $"l_quantity" >= 20.0 && $"l_quantity" <= 30.0)))
       .groupBy($"p_brand".as("band"))
       .agg(count(lit(1)).as("n_lines"),
-        round(sum(($"l_extendedprice" * (lit(1.0) - $"l_discount"))
-          .cast(DecimalType(28, 12))).cast("double"), 2).as("revenue"))
+        round(Exact.sum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 2).as("revenue"))
       .orderBy($"band")
   }
 
@@ -3248,8 +3212,7 @@ object RelationalQueries {
     val dom = lead.groupBy($"l_suppkey")
       .agg(count(lit(1)).as("n_lead_parts"),
         sum($"qty").cast("double").as("lead_qty"),
-        (sum(($"qty" / $"total_qty").cast(DecimalType(15, 9)))
-          .cast("double") / count(lit(1))).as("mean_share"))
+        (Exact.sum($"qty" / $"total_qty", 15, 9) / count(lit(1))).as("mean_share"))
     dom.join(broadcast(Tables.supplier(spark, dir)
           .join(Tables.nation(spark, dir),
             $"s_nationkey" === $"n_nationkey")
@@ -3532,34 +3495,33 @@ object RelationalQueries {
   // DECIMAL-routed revenue; total ordering by nation.
   def q100NationTradeBalance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def d28(c: Column) = sum(c.cast(DecimalType(28, 12))).cast("double")
     val rev = ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev")
     val nations = broadcast(Tables.nation(spark, dir)
       .select($"n_nationkey", $"n_name"))
     val earned = Tables.lineitem(spark, dir)
       .select($"l_suppkey", rev)
-      .groupBy($"l_suppkey").agg(d28($"rev").as("srev"))
+      .groupBy($"l_suppkey").agg(Exact.sum($"rev").as("srev"))
       .join(broadcast(Tables.supplier(spark, dir)
         .select($"s_suppkey", $"s_nationkey")), $"l_suppkey" === $"s_suppkey")
       .groupBy($"s_nationkey".as("nk"))
-      .agg(sum($"srev".cast(DecimalType(28, 12))).cast("double")
+      .agg(Exact.sum($"srev")
         .as("earned"))
     val spent = Tables.lineitem(spark, dir)
       .select($"l_orderkey", rev)
-      .groupBy($"l_orderkey").agg(d28($"rev").as("orev"))
+      .groupBy($"l_orderkey").agg(Exact.sum($"rev").as("orev"))
       .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
         $"l_orderkey" === $"o_orderkey")
       .join(broadcast(Tables.customer(spark, dir)
         .select($"c_custkey", $"c_nationkey")), $"o_custkey" === $"c_custkey")
       .groupBy($"c_nationkey".as("nk2"))
-      .agg(sum($"orev".cast(DecimalType(28, 12))).cast("double")
+      .agg(Exact.sum($"orev")
         .as("spent"))
     val aligned = earned.join(spent, $"nk" === $"nk2", "full_outer")
       .select(coalesce($"nk", $"nk2").as("nk"),
         coalesce($"earned", lit(0.0)).as("earned"),
         coalesce($"spent", lit(0.0)).as("spent"))
     val tot = aligned.agg(
-      sum($"earned".cast(DecimalType(28, 12))).cast("double").as("world"))
+      Exact.sum($"earned").as("world"))
       .filter($"world" > 0.0)
     aligned.join(nations, $"nk" === $"n_nationkey")
       .crossJoin(broadcast(tot))

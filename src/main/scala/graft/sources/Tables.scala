@@ -424,10 +424,10 @@ object Tables {
       // INVARIANT (load-bearing, per the r13 advice): warm mode may
       // present any partitioning/row order to a query, so every
       // registry query must be partition-order-insensitive — sums are
-      // DECIMAL-routed or order-free, outputs fully ordered or
-      // set-compared. WarmRawParitySpec spot-checks warm-vs-raw result
-      // hashes so a future order-sensitive query can't silently report
-      // warm timings for different results.
+      // DECIMAL-routed (graft.functions.Exact) or order-free, outputs
+      // fully ordered or set-compared. WarmRawParitySpec spot-checks
+      // warm-vs-raw result hashes so a future order-sensitive query
+      // can't silently report warm timings for different results.
       if (sys.props.get("graft.tableCache").contains("checkpoint")) {
         val target = warmPartitions(spark, path)
         val scanParts = df.rdd.getNumPartitions

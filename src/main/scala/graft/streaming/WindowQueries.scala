@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Exact
 import graft.sources.Tables
 
 /** Event-time windowing over `events` in BATCH form — the exact same
@@ -18,7 +19,7 @@ import graft.sources.Tables
 object WindowQueries {
 
   private def sumVal = round(
-    sum(col("value").cast(DecimalType(18, 6))).cast("double"), 6)
+    Exact.sum(col("value"), 18, 6), 6)
 
   // --------------------------------------------------------------------
   // st_tumbling: 1-hour tumbling windows per event_type.
@@ -506,7 +507,7 @@ object WindowQueries {
     val per = ev.groupBy($"user_id")
       .agg(max(unix_micros($"ts")).as("last_us"),
         count(lit(1)).as("freq"),
-        sum($"value".cast(DecimalType(18, 6))).cast("double").as("money"))
+        Exact.sum($"value", 18, 6).as("money"))
       .crossJoin(mx)
       .withColumn("rec_us", $"corpus_max_us" - $"last_us")
     val cuts = per.agg(
@@ -524,8 +525,7 @@ object WindowQueries {
         score($"money", "mc").as("m_score"))
       .groupBy($"r_score", $"f_score", $"m_score")
       .agg(count(lit(1)).as("n_users"),
-        round(sum($"money".cast(DecimalType(18, 6))).cast("double"), 6)
-          .as("total_value"))
+        round(Exact.sum($"money", 18, 6), 6).as("total_value"))
       .orderBy($"r_score", $"f_score", $"m_score")
   }
 
@@ -772,7 +772,6 @@ object WindowQueries {
       .agg((sum($"n").cast("double") / count(lit(1))).as("mu"),
         count(lit(1)).as("nh"))
     val w = Window.partitionBy($"event_type").orderBy($"h_us")
-    def dsum(c: Column) = sum(c.cast(DecimalType(28, 12))).cast("double")
     val dev = grid.join(broadcast(mu), "event_type")
       .select($"event_type", $"h_us", $"nh",
         ($"n".cast("double") - $"mu").as("d"))
@@ -781,9 +780,9 @@ object WindowQueries {
       .withColumn("d12", lag($"d", 12).over(w))
       .withColumn("d24", lag($"d", 24).over(w))
     dev.groupBy($"event_type")
-      .agg(max($"nh").as("nh"), dsum($"d" * $"d").as("den"),
-        dsum($"d" * $"d1").as("n1"), dsum($"d" * $"d6").as("n6"),
-        dsum($"d" * $"d12").as("n12"), dsum($"d" * $"d24").as("n24"))
+      .agg(max($"nh").as("nh"), Exact.sum($"d" * $"d").as("den"),
+        Exact.sum($"d" * $"d1").as("n1"), Exact.sum($"d" * $"d6").as("n6"),
+        Exact.sum($"d" * $"d12").as("n12"), Exact.sum($"d" * $"d24").as("n24"))
       .select($"event_type", $"nh", $"den",
         expr("stack(4, 1, n1, 6, n6, 12, n12, 24, n24) AS (lag, num)"))
       .select($"event_type", $"lag".cast("long").as("lag"),
@@ -1020,12 +1019,12 @@ object WindowQueries {
         $"value")
       .groupBy($"d")
       .agg(count(lit(1)).as("n_events"),
-        (sum($"value".cast(DecimalType(28, 12))).cast("double")
+        (Exact.sum($"value")
           / count(lit(1))).as("m")).localCheckpoint()
     val g = broadcast(daily.agg(
       count(lit(1)).as("nd"),
-      sum($"m".cast(DecimalType(28, 12))).cast("double").as("sm"),
-      sum(($"m" * $"m").cast(DecimalType(28, 12))).cast("double").as("smm")))
+      Exact.sum($"m").as("sm"),
+      Exact.sum($"m" * $"m").as("smm")))
     val w = Window.orderBy($"d")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily.crossJoin(g)

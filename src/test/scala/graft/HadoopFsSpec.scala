@@ -101,11 +101,4 @@ class HadoopFsSpec extends SparkSpec {
       yield s"$f: ${l.trim}"
     assert(hits.isEmpty, s"durable checkpoint outside Tables: $hits")
   }
-
-  /** The code lines of `src/main/scala/graft/<f>`, comments dropped. */
-  private def codeLines(f: String): Seq[String] =
-    Files.readAllLines(Paths.get("src/main/scala/graft", f))
-      .toArray(Array.empty[String]).toSeq
-      .map(_.replaceAll("//.*", ""))
-      .filterNot { l => val t = l.trim; t.startsWith("*") || t.startsWith("/*") }
 }

@@ -84,12 +84,11 @@ class LlmSpec extends SparkSpec {
 
   test("decontaminate rep-grain regime equals the doc-grain reference") {
     // Replica-dense fixture that flips the ExpandCacheMaxRows gate:
-    // 9 classes x 1000 copies gives pairExpansionRows >= 9 * C(1000,2)
-    // ~ 4.5M > 4M, so ddDecontaminate takes the rep-grain path while
+    // 9 classes x 1000 copies gives 9 * C(1000,2) ~ 4.5M within-class
+    // pairs > 4M, so ddDecontaminate takes the rep-grain path while
     // the doc-grain form stays the semantic reference. Class sizes
     // stay <= MaxBucketDf so each class keeps its unique shingles
-    // (an all-hot fixture reads pairExpansionRows = 0 — the gate
-    // proxy rides the ngram candidate machinery). Ids are
+    // (the all-hot case is the next test). Ids are
     // base*100000 + k so every class holds BOTH eval (k % 10 == 0)
     // and train members — the rep_t == rep_e diagonal (identical text
     // leaked into eval) is exercised, not just cross-class overlap.
@@ -104,7 +103,7 @@ class LlmSpec extends SparkSpec {
       b <- texts.indices; k <- 0 until 1000
     } yield (b * 100000L + k, texts(b))
     rows.toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
-    assert(Dedup.pairExpansionRows(spark, tmp) > 4000000L,
+    assert(Dedup.intraClassPairs(spark, tmp) > 4000000L,
       "fixture must sit above the materialization gate")
     val got = Dedup.ddDecontaminate(spark, tmp)
     val ref = Dedup.ddDecontaminateDocGrain(spark, tmp)
@@ -118,30 +117,43 @@ class LlmSpec extends SparkSpec {
     assert(n == 9L * 100 * 900, s"expected the 9 diagonals only: $n rows")
   }
 
+  test("decontaminate takes the rep-grain route when every shingle is hot") {
+    // 3,000 copies of one text: C(3000,2) ~ 4.5M within-class pairs >
+    // 4M, and every shingle's df (3,000) exceeds MaxBucketDf, so the
+    // class keeps no shingle and the hot-shingle proxy
+    // pairExpansionRows reads 0 — a gate on it would stay doc-grain.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_decon_hot").toString
+    (0 until 3000).map(k => (k.toLong, "alpha beta gamma delta epsilon zeta"))
+      .toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
+    assert(Dedup.pairExpansionRows(spark, tmp) == 0L)
+    val got = Dedup.ddDecontaminate(spark, tmp)
+    // the rep-grain form reads only the class artifacts; the doc-grain
+    // form scans the documents table
+    val scans = got.queryExecution.optimizedPlan.collectLeaves()
+      .filter(_.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation])
+    assert(scans.isEmpty, s"expected the rep-grain route, got scans $scans")
+    val ref = Dedup.ddDecontaminateDocGrain(spark, tmp)
+    assert(got.except(ref).isEmpty && ref.except(got).isEmpty,
+      "rep-grain decontaminate must equal the doc-grain reference")
+    // every train copy (doc_id % 10 != 0) flags every eval copy
+    assert(got.count() == 2700L * 300, "expected every train x eval pair")
+  }
+
   test("simhash pairs fence fails fast on replica-dense output, passes under it") {
-    // Thresholds dropped via system properties so the fence is
-    // testable without a 100k-doc fixture; cleared in finally so no
-    // other test inherits them.
+    // Bounds passed to the fenced form so the fence is testable
+    // without a 100k-doc fixture.
     val tmp = java.nio.file.Files.createTempDirectory("graft_sh_fence").toString
     val rows = for { b <- 0 until 5; k <- 0 until 40 }
       yield (b * 1000L + k, s"text number $b with some shared words $b")
     rows.toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
-    try {
-      sys.props("graft.dd.simhashFenceDocs") = "100"
-      sys.props("graft.dd.simhashMaxPairs") = "1000"
-      // 5 classes x C(40,2) = 3900 same-hash pairs > 1000: must refuse
-      val e = intercept[IllegalArgumentException] {
-        Dedup.ddSimhashPairs(spark, tmp).count()
-      }
-      assert(e.getMessage.contains("llm_dd_exact"),
-        s"fence message must point at the pipeline order: ${e.getMessage}")
-      // raising the cap clears the fence and the op completes
-      sys.props("graft.dd.simhashMaxPairs") = "100000"
-      assert(Dedup.ddSimhashPairs(spark, tmp).count() >= 3900L)
-    } finally {
-      sys.props -= "graft.dd.simhashFenceDocs"
-      sys.props -= "graft.dd.simhashMaxPairs"
+    // 5 classes x C(40,2) = 3900 same-hash pairs > 1000: must refuse
+    val e = intercept[IllegalArgumentException] {
+      Dedup.ddSimhashPairsFenced(spark, tmp, 100L, 1000L).count()
     }
+    assert(e.getMessage.contains("llm_dd_exact"),
+      s"fence message must point at the pipeline order: ${e.getMessage}")
+    // raising the cap clears the fence and the op completes
+    assert(Dedup.ddSimhashPairsFenced(spark, tmp, 100L, 100000L).count() >= 3900L)
   }
 
   test("decontamination flags planted n-gram overlap above threshold only") {

@@ -1116,8 +1116,8 @@ class PlanSpec extends SparkSpec {
     // 6 propagation iterations + the initial label derivation read the
     // materialized edge table; a self-union regression would double
     // reads per iteration (2^k growth)
-    assert(edgeReads <= graft.llm.Graph.ccItersForSpec + 1,
-      s"expected <=${graft.llm.Graph.ccItersForSpec + 1} edge reads, " +
+    assert(edgeReads <= graft.llm.Graph.CcIters + 1,
+      s"expected <=${graft.llm.Graph.CcIters + 1} edge reads, " +
         s"got $edgeReads:\n" + plan.take(900))
   }
 

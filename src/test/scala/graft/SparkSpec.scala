@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local session for all suites (one JVM-wide session; suites
   * run sequentially under sbt's forked test JVM).
@@ -16,6 +17,14 @@ trait SparkSpec extends AnyFunSuite {
     sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d))
     d.getPath
   }
+
+  /** The lines of `src/main/scala/graft/<f>` with comments blanked, so
+    * an index is still a line number. */
+  def codeLines(f: String): Seq[String] =
+    java.nio.file.Files.readAllLines(java.nio.file.Paths.get("src/main/scala/graft", f))
+      .asScala.toSeq
+      .map(_.replaceAll("//.*", ""))
+      .map { l => val t = l.trim; if (t.startsWith("*") || t.startsWith("/*")) "" else l }
 
   /** How many Spark jobs `body` starts. */
   def jobsOf(body: => Unit): Int = {

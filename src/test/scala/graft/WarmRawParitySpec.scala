@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 /** Warm-mode (checkpointed-table) results must equal raw-scan results.
@@ -13,7 +16,8 @@ import org.apache.spark.sql.functions._
   * spec makes the invariant checked rather than assumed: a sample of
   * queries across families runs in both modes and must collect
   * identical rows, so a future order-sensitive query can't silently
-  * report warm timings for different results.
+  * report warm timings for different results. The sums' policy has one
+  * owner, [[graft.functions.Exact]], and a source scan keeps it there.
   *
   * Mechanics: table and artifact keys are dir-stamped, not
   * mode-stamped, so the warm pass reads a COPY of the fixture dir —
@@ -35,7 +39,6 @@ class WarmRawParitySpec extends SparkSpec {
   /** releaseScope only evicts the session cache; the fixture copies
     * are plain temp dirs that would otherwise leak per test run. */
   private def deleteRecursively(dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get(dir)
     if (java.nio.file.Files.exists(root))
       java.nio.file.Files.walk(root).iterator().asScala.toSeq
@@ -73,6 +76,30 @@ class WarmRawParitySpec extends SparkSpec {
       graft.sources.Tables.releaseScope(spark, warmDir)
       deleteRecursively(warmDir)
     }
+  }
+
+  test("exact arithmetic is spelled only in graft.functions.Exact") {
+    // A module that defines its own DECIMAL-routed sum or 6-place
+    // rounding can drift from the policy this spec and the oracle rest
+    // on; it calls Exact.sum / Exact.sumSql / Exact.r6 instead.
+    val root = Paths.get("src/main/scala/graft")
+    val files = Files.walk(root).iterator().asScala.toSeq
+      .map(root.relativize(_).toString)
+      .filter(f => f.endsWith(".scala") && f != "functions/Exact.scala")
+    assert(files.size > 20, s"source scan found only $files")
+    val decSum = """\bsum\(.*\.cast\((DecimalType\(|s?"decimal\().*\)\)\.cast\("double"\)""".r
+    val decSumSql = """CAST\(SUM\(CAST\(.* AS DECIMAL\(""".r
+    val hits = for {
+      f <- files
+      ls = codeLines(f)
+      (l, i) <- ls.zipWithIndex
+      // a definition's body may start on the next line
+      body = if (l.trim.endsWith("=")) l + ls.lift(i + 1).getOrElse("") else l
+      if l.contains("setScale(6") || decSum.findFirstIn(l).isDefined ||
+        ("""\bdef \w+""".r.findFirstIn(l).isDefined &&
+          decSumSql.findFirstIn(body).isDefined)
+    } yield s"$f:${i + 1}: ${l.trim}"
+    assert(hits.isEmpty, s"exact arithmetic outside graft.functions.Exact: $hits")
   }
 
   test("warm partition target is size-aware: dims stay narrow, big single-file tables widen") {

@@ -29,7 +29,7 @@ class WaveEightSpec extends SparkSpec {
     // assert labels(k) == labels(k+1) explicitly — on the spec SF and
     // on the SF the driver's verify gate runs
     for (dir <- Seq(sf0001, "/root/testdata/sf0.01")) {
-      val k = Graph.ccItersForSpec
+      val k = Graph.CcIters
       val at = Graph.ccLabels(spark, dir, k)
       val next = Graph.ccLabels(spark, dir, k + 1)
       assert(at.exceptAll(next).isEmpty && next.exceptAll(at).isEmpty,

@@ -16,7 +16,7 @@ class WaveNineSpec extends SparkSpec {
     // cascade outruns KcoreIters would ship a non-core result that
     // still hash-matches across engines
     for (dir <- Seq(sf0001, "/root/testdata/sf0.01")) {
-      val k = Graph.kcoreItersForSpec
+      val k = Graph.KcoreIters
       val at = Graph.kcoreAlive(spark, dir, k).last
       val next = Graph.kcoreAlive(spark, dir, k + 1).last
       assert(at.exceptAll(next).isEmpty && next.exceptAll(at).isEmpty,

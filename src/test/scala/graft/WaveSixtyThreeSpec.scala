@@ -91,7 +91,7 @@ class WaveSixtyThreeSpec extends SparkSpec {
     val edges = (und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
       ++ nodes.map(n => (n, n))).toDF("src", "dst")
     val labels = graft.llm.Graph
-      .lpaLabelsOn(edges, graft.llm.Graph.lpaItersForSpec)
+      .lpaLabelsOn(edges, graft.llm.Graph.LpaIters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Seq(1L, 2L, 3L).forall(labels(_) == 1L),
       s"triangle one must carry label 1: $labels")
